@@ -27,17 +27,13 @@ from bgpexplorer_spark.sources.tables import load_table
 SparkQuery = Callable[[SparkSession, str], DataFrame]
 
 QUERIES: dict[str, SparkQuery] = {}
-# values are SQL strings, or zero-arg callables resolved by all_oracles()
-# at ASK time — for oracles whose constants must track the active fixture
-# (e.g. the adaptive hyperplane count derives from the embeddings row
-# count; a hard-coded plane count only matches fixtures ≤ ~1280 vectors)
-ORACLES: dict[str, str | Callable[[], str]] = {}
+# DuckDB oracle SQL per query name
+ORACLES: dict[str, str] = {}
 
-def q(name: str, sql: str | Callable[[], str] | None):
+def q(name: str, sql: str):
     def deco(fn: SparkQuery) -> SparkQuery:
         QUERIES[name] = fn
-        if sql is not None:
-            ORACLES[name] = sql
+        ORACLES[name] = sql
         return fn
 
     return deco
@@ -554,125 +550,6 @@ def j4_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-# ---------------------------------------------------------------------------
-# Headline analytics (bench queries)
-# ---------------------------------------------------------------------------
-
-@q(
-    "q1_pricing_summary",
-    """
-    SELECT l_returnflag, l_linestatus,
-           round(sum(l_quantity), 2) AS sum_qty,
-           round(sum(l_extendedprice), 2) AS sum_base_price,
-           round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
-           round(sum(l_extendedprice * (1 - l_discount) * (1 + l_tax)), 2) AS sum_charge,
-           round(avg(l_quantity), 4) AS avg_qty,
-           round(avg(l_extendedprice), 4) AS avg_price,
-           round(avg(l_discount), 4) AS avg_disc,
-           count(*) AS count_order
-    FROM lineitem
-    WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-    GROUP BY l_returnflag, l_linestatus
-    """,
-)
-def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q1 shape — the O6-style heavy aggregate; whole-stage-codegen
-    hot path."""
-    li = load_table(spark, sf_dir, "lineitem")
-    disc = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return (
-        li.filter(F.col("l_shipdate") <= F.lit("1998-09-02 00:00:00"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
-            F.round(F.sum(disc), 2).alias("sum_disc_price"),
-            F.round(F.sum(disc * (1 + F.col("l_tax"))), 2).alias("sum_charge"),
-            F.round(F.avg("l_quantity"), 4).alias("avg_qty"),
-            F.round(F.avg("l_extendedprice"), 4).alias("avg_price"),
-            F.round(F.avg("l_discount"), 4).alias("avg_disc"),
-            F.count(F.lit(1)).alias("count_order"),
-        )
-    )
-
-@q(
-    "q3_shipping_priority",
-    """
-    SELECT o.o_orderkey,
-           round(sum(l.l_extendedprice * (1 - l.l_discount)), 2) AS revenue,
-           o.o_orderdate
-    FROM customer c
-    JOIN orders o ON c.c_custkey = o.o_custkey
-    JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-    WHERE c.c_mktsegment = 'BUILDING'
-    GROUP BY o.o_orderkey, o.o_orderdate
-    ORDER BY revenue DESC, o_orderkey LIMIT 20
-    """,
-)
-def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q3 shape — selective dim filter + fact join + top-k."""
-    c = load_table(spark, sf_dir, "customer")
-    o = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    # broadcast the filtered dim chain: without the hint the optimizer
-    # broadcasts LINEITEM (its file is under the 10 MB auto threshold) —
-    # backwards at any real scale, and slower even at sf0.1
-    co = F.broadcast(
-        c.filter(F.col("c_mktsegment") == "BUILDING").join(o, c.c_custkey == o.o_custkey)
-    )
-    return (
-        co.join(li, li.l_orderkey == co.o_orderkey)
-        .groupBy("o_orderkey", "o_orderdate")
-        .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue")
-        )
-        .orderBy(F.col("revenue").desc(), F.col("o_orderkey"))
-        .limit(20)
-        .select("o_orderkey", "revenue", "o_orderdate")
-    )
-
-@q(
-    "q5_revenue_by_nation",
-    """
-    SELECT n.n_name AS nation,
-           round(sum(l.l_extendedprice * (1 - l.l_discount)), 2) AS revenue
-    FROM lineitem l
-    JOIN orders o ON l.l_orderkey = o.o_orderkey
-    JOIN customer c ON o.o_custkey = c.c_custkey
-    JOIN nation n ON c.c_nationkey = n.n_nationkey
-    JOIN region r ON n.n_regionkey = r.r_regionkey
-    WHERE r.r_name = 'ASIA'
-    GROUP BY n.n_name
-    """,
-)
-def q5_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q5 shape — multi-way star join with broadcast dims."""
-    li = load_table(spark, sf_dir, "lineitem")
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer")
-    n = load_table(spark, sf_dir, "nation")
-    r = load_table(spark, sf_dir, "region")
-    # resolve the dim chain first (customer -> nation -> region-filtered)
-    # and broadcast it once against the fact join — the facts (lineitem,
-    # orders) never enter a broadcast build
-    cdim = F.broadcast(
-        c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .join(F.broadcast(r.filter(F.col("r_name") == "ASIA")), n.n_regionkey == r.r_regionkey)
-        .select("c_custkey", "n_name")
-    )
-    return (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(cdim, o.o_custkey == cdim.c_custkey)
-        .groupBy(F.col("n_name").alias("nation"))
-        .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue")
-        )
-    )
-
 @q(
     "sessionize_events",
     """
@@ -775,764 +652,8 @@ def all_queries() -> dict[str, SparkQuery]:
     return dict(QUERIES)
 
 def all_oracles() -> dict[str, str]:
-    """DuckDB oracle SQL per query, in stable declaration order. Lazy
-    (callable) oracles resolve HERE, against the fixture dir named by
-    ``SPARK_GRAFT_SF001_DIR`` (default the driver's sf0.01) — so a
-    selfcheck pointed at any fixture gets oracle constants derived from
-    that fixture, not ones baked for the default's size."""
-    return {
-        n: (ORACLES[n]() if callable(ORACLES[n]) else ORACLES[n])
-        for n in QUERIES
-        if n in ORACLES
-    }
-
-# ---------------------------------------------------------------------------
-# LLM-data-pipeline operators (BASELINE.json north star) on documents /
-# embeddings. The portable 32-bit hash (first 8 md5 hex chars) is computed
-# identically by Spark (conv) and DuckDB (unrolled hex-digit arithmetic).
-# ---------------------------------------------------------------------------
-
-def _duck_hash32(col: str) -> str:
-    terms = " + ".join(
-        f"(strpos('0123456789abcdef', substring(md5({col}), {p}, 1)) - 1) * {16 ** (8 - p)}"
-        for p in range(1, 9)
-    )
-    return f"CAST({terms} AS BIGINT)"
-
-# tokenization shared by the text oracles: split on whitespace, drop empties
-_DUCK_TOKENS = "list_filter(string_split_regex({col}, '\\s+'), x -> x <> '')"
-
-def _duck_tokens(col: str) -> str:
-    return _DUCK_TOKENS.format(col=col)
-
-@q(
-    "dedup_exact",
-    """
-    SELECT doc_id, content_hash,
-           min(doc_id) OVER (PARTITION BY content_hash) AS canonical_id,
-           count(*) OVER (PARTITION BY content_hash) AS group_size
-    FROM (SELECT doc_id, md5(text) AS content_hash FROM documents)
-    """,
-)
-def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact dedup by content hash (operators/dedup.exact_dedup)."""
-    from bgpexplorer_spark.operators.dedup import exact_dedup
-
-    docs = load_table(spark, sf_dir, "documents")
-    return exact_dedup(docs, "doc_id")
-
-@q(
-    "text_fingerprint",
-    f"""
-    SELECT doc_id,
-           md5(array_to_string(list_sort(list_distinct(
-               {_duck_tokens('lower(text)')})), ' ')) AS fp
-    FROM documents
-    """,
-)
-def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Document fingerprint: md5 of sorted distinct lowercase token set
-    (operators/text.fingerprint)."""
-    from bgpexplorer_spark.operators.text import fingerprint
-
-    docs = load_table(spark, sf_dir, "documents")
-    return docs.select("doc_id", fingerprint(F.col("text")).alias("fp"))
-
-def _rolling_fp_sql() -> str:
-    from bgpexplorer_spark.operators.text import ROLLING_P
-
-    h = _duck_hash32("t")
-    return f"""
-    SELECT doc_id,
-           list_reduce(
-               list_prepend(CAST(0 AS BIGINT), [{h} for t in {_duck_tokens('text')}]),
-               (a, b) -> (a * 31 + b) % {ROLLING_P}
-           ) AS rfp
-    FROM documents
-    """
-
-@q("text_rolling_fingerprint", _rolling_fp_sql())
-def text_rolling_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Order-sensitive rolling-hash document fingerprint
-    (operators/text.rolling_fingerprint) — the oracle folds the same
-    per-token portable hash with list_reduce."""
-    from bgpexplorer_spark.operators.text import rolling_fingerprint
-
-    docs = load_table(spark, sf_dir, "documents")
-    return docs.select("doc_id", rolling_fingerprint(F.col("text")).alias("rfp"))
-
-@q(
-    "text_tokens",
-    f"""
-    SELECT doc_id,
-           len({_duck_tokens('text')}) AS n_ws_tokens,
-           len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]')) AS n_bpe_tokens
-    FROM documents
-    """,
-)
-def text_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token counting: whitespace + BPE-ish regex (operators/text)."""
-    from bgpexplorer_spark.operators.text import token_count_bpe, token_count_ws
-
-    docs = load_table(spark, sf_dir, "documents")
-    return docs.select(
-        "doc_id",
-        token_count_ws(F.col("text")).alias("n_ws_tokens"),
-        token_count_bpe(F.col("text")).alias("n_bpe_tokens"),
-    )
-
-def _duck_marker_hits(col: str, words: tuple[str, ...]) -> str:
-    padded = f"(' ' || lower({col}) || ' ')"
-    return " + ".join(f"(len(string_split({padded}, ' {w} ')) - 1)" for w in words)
-
-def _langid_sql() -> str:
-    from bgpexplorer_spark.operators.text import LANG_PROFILES
-
-    scores = {
-        lang: _duck_marker_hits("text", ws) for lang, ws in LANG_PROFILES.items()
-    }
-    score_cols = ", ".join(f"({sql}) AS s_{lang}" for lang, sql in scores.items())
-    best = "greatest(" + ", ".join(f"s_{lang}" for lang in scores) + ")"
-    case = " ".join(
-        f"WHEN s_{lang} = best AND best > 0 THEN '{lang}'" for lang in scores
-    )
-    return f"""
-    SELECT doc_id, lang AS declared_lang,
-           CASE {case} ELSE 'und' END AS detected_lang
-    FROM (SELECT doc_id, lang, {best} AS best, s_en, s_de, s_fr, s_es
-          FROM (SELECT doc_id, lang, {score_cols} FROM documents))
-    """
-
-@q("text_langid", _langid_sql())
-def text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Marker-word-profile language ID (operators/text.langid) vs the
-    declared lang column."""
-    from bgpexplorer_spark.operators.text import langid
-
-    docs = load_table(spark, sf_dir, "documents")
-    return docs.select(
-        "doc_id",
-        F.col("lang").alias("declared_lang"),
-        langid(F.col("text")).alias("detected_lang"),
-    )
-
-@q(
-    "text_quality",
-    f"""
-    SELECT doc_id,
-           length(text) AS q_chars,
-           len({_duck_tokens('text')}) AS q_tokens,
-           round(length(text) / greatest(len({_duck_tokens('text')}), 1), 4) AS q_avg_token_len,
-           round(len(regexp_extract_all(text, '[^\\w\\s]')) / greatest(length(text), 1), 4) AS q_punct_ratio,
-           round(({_duck_marker_hits('text', ('the', 'a', 'of', 'and', 'is'))})
-                 / greatest(len({_duck_tokens('text')}), 1), 4) AS q_stopword_ratio
-    FROM documents
-    """,
-)
-def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quality scoring: length/punct/stopword ratios
-    (operators/text.quality_features)."""
-    from bgpexplorer_spark.operators.text import quality_features
-
-    docs = load_table(spark, sf_dir, "documents")
-    return quality_features(docs.select("doc_id", "text")).drop("text")
-
-def _clean_corpus_sql() -> str:
-    """The composed training-data cleaning pipeline as one oracle."""
-    from bgpexplorer_spark.operators.text import LANG_PROFILES
-
-    scores = {
-        lang: _duck_marker_hits("text", ws) for lang, ws in LANG_PROFILES.items()
-    }
-    score_cols = ", ".join(f"({sql}) AS s_{lang}" for lang, sql in scores.items())
-    best = "greatest(" + ", ".join(f"s_{lang}" for lang in scores) + ")"
-    case = " ".join(
-        f"WHEN s_{lang} = best AND best > 0 THEN '{lang}'" for lang in scores
-    )
-    return f"""
-    WITH langs AS (
-        SELECT doc_id, lang,
-               CASE {case} ELSE 'und' END AS detected
-        FROM (SELECT doc_id, lang, {best} AS best, s_en, s_de, s_fr, s_es
-              FROM (SELECT doc_id, lang, text, {score_cols} FROM documents))
-    ),
-    quality AS (
-        SELECT doc_id,
-               len({_duck_tokens('text')}) AS q_tokens,
-               round(len(regexp_extract_all(text, '[^\\w\\s]'))
-                     / greatest(length(text), 1), 4) AS q_punct
-        FROM documents
-    ),
-    canon AS (
-        SELECT doc_id, min(doc_id) OVER (PARTITION BY md5(text)) AS canonical
-        FROM documents
-    )
-    SELECT d.doc_id
-    FROM documents d
-    JOIN langs l ON l.doc_id = d.doc_id
-    JOIN quality q ON q.doc_id = d.doc_id
-    JOIN canon c ON c.doc_id = d.doc_id
-    WHERE q.q_tokens >= 10
-      AND q.q_punct <= 0.1
-      AND l.detected = l.lang
-      AND c.canonical = d.doc_id
-    """
-
-@q("pipeline_clean_corpus", _clean_corpus_sql())
-def pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The composed LLM training-data cleaning pipeline in ONE plan:
-    quality gates (token count, punctuation ratio) ∧ language agreement
-    (detected == declared) ∧ exact-dedup keep-list (canonical doc per
-    content hash) — each stage is the oracle-checked operator, composed
-    the way a real corpus pipeline runs them. Catalyst fuses the three
-    dims into one scan + one hash-partition pass."""
-    from bgpexplorer_spark.operators.dedup import exact_dedup
-    from bgpexplorer_spark.operators.text import langid, quality_features
-
-    docs = load_table(spark, sf_dir, "documents")
-    q = quality_features(docs.select("doc_id", "text"))
-    lang_ok = docs.select(
-        "doc_id", (langid(F.col("text")) == F.col("lang")).alias("_lang_ok")
-    )
-    keep = exact_dedup(docs, "doc_id").select(
-        "doc_id", (F.col("doc_id") == F.col("canonical_id")).alias("_canon")
-    )
-    return (
-        docs.select("doc_id")
-        .join(q.filter((F.col("q_tokens") >= 10) & (F.col("q_punct_ratio") <= 0.1)), "doc_id", "left_semi")
-        .join(lang_ok.filter("_lang_ok"), "doc_id", "left_semi")
-        .join(keep.filter("_canon"), "doc_id", "left_semi")
-    )
-
-def _simhash_sql() -> str:
-    h = _duck_hash32("t")
-    bit_sums = ", ".join(
-        f"sum(CASE WHEN (CAST(floor(h / {2 ** b}) AS BIGINT) % 2) = 1 THEN 1 ELSE -1 END) AS b{b}"
-        for b in range(32)
-    )
-    assemble = " + ".join(f"CASE WHEN b{b} > 0 THEN {2 ** b} ELSE 0 END" for b in range(32))
-    return f"""
-    SELECT doc_id, CAST({assemble} AS BIGINT) AS simhash
-    FROM (
-        SELECT doc_id, {bit_sums}
-        FROM (
-            SELECT doc_id, {h} AS h
-            FROM (SELECT doc_id, unnest({_duck_tokens('text')}) AS t FROM documents)
-        )
-        GROUP BY doc_id
-    )
-    """
-
-def _simhash_pairs_sql(max_hamming: int = 3) -> str:
-    bands = " UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band, "
-        f"CAST(floor(simhash / {256 ** b}) AS BIGINT) % 256 AS key FROM sigs"
-        for b in range(4)
-    )
-    return f"""
-    WITH sigs AS ({_simhash_sql()}),
-    bands AS ({bands}),
-    cand AS (
-        SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        FROM bands a JOIN bands b ON a.band = b.band AND a.key = b.key
-                                 AND a.doc_id < b.doc_id
-    )
-    SELECT c.id_a, c.id_b,
-           CAST(bit_count(xor(sa.simhash, sb.simhash)) AS INTEGER) AS hamming
-    FROM cand c
-    JOIN sigs sa ON sa.doc_id = c.id_a
-    JOIN sigs sb ON sb.doc_id = c.id_b
-    WHERE bit_count(xor(sa.simhash, sb.simhash)) <= {max_hamming}
-    """
-
-@q("dedup_simhash_pairs", _simhash_pairs_sql())
-def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash banded near-dup pairs (hamming ≤ 3 via byte-band
-    bucket-joins + exact verification —
-    operators/dedup.simhash_candidate_pairs); the oracle replicates the
-    banding and the bit_count check. Pinned to the 32-bit signature the
-    oracle replicates; the operator's default is the at-scale 60-bit
-    form (`dedup_simhash60_pairs` covers it)."""
-    from bgpexplorer_spark.operators.dedup import simhash_candidate_pairs
-    from bgpexplorer_spark.sources.tables import fan_out
-
-    docs = fan_out(load_table(spark, sf_dir, "documents"), spark, key="doc_id")
-    return simhash_candidate_pairs(docs, "doc_id", max_hamming=3, bits=32)
-
-@q("dedup_simhash", _simhash_sql())
-def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """32-bit SimHash fingerprint (operators/dedup.simhash32)."""
-    from bgpexplorer_spark.operators.dedup import simhash32
-    from bgpexplorer_spark.sources.tables import fan_out
-
-    # fan_out: the token explode + md5 + 32 conditional sums are the
-    # CPU-dense stage; serial on the 1-split local parquet
-    docs = fan_out(load_table(spark, sf_dir, "documents"), spark, key="doc_id", min_bytes=4 << 20)
-    return simhash32(docs, "doc_id")
-
-def _duck_hash60(col: str) -> str:
-    terms = " + ".join(
-        f"(strpos('0123456789abcdef', substring(md5({col}), {p}, 1)) - 1) * {16 ** (15 - p)}"
-        for p in range(1, 16)
-    )
-    return f"CAST({terms} AS BIGINT)"
-
-def _simhash60_sql() -> str:
-    # bitwise ops, NOT floor(h / 2^b): DuckDB's `/` is double division
-    # and a 60-bit h loses low bits above 2^53
-    h = _duck_hash60("t")
-    bit_sums = ", ".join(
-        f"sum(CASE WHEN ((h >> {b}) & 1) = 1 THEN 1 ELSE -1 END) AS b{b}"
-        for b in range(60)
-    )
-    assemble = " + ".join(
-        f"CASE WHEN b{b} > 0 THEN CAST({2 ** b} AS BIGINT) ELSE CAST(0 AS BIGINT) END"
-        for b in range(60)
-    )
-    return f"""
-    SELECT doc_id, CAST({assemble} AS BIGINT) AS simhash
-    FROM (
-        SELECT doc_id, {bit_sums}
-        FROM (
-            SELECT doc_id, {h} AS h
-            FROM (SELECT doc_id, unnest({_duck_tokens('text')}) AS t FROM documents)
-        )
-        GROUP BY doc_id
-    )
-    """
-
-def _simhash60_pairs_sql(max_hamming: int = 3) -> str:
-    bands = " UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band, "
-        f"(simhash >> {15 * b}) & 32767 AS key FROM sigs"
-        for b in range(4)
-    )
-    return f"""
-    WITH sigs AS ({_simhash60_sql()}),
-    bands AS ({bands}),
-    cand AS (
-        SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        FROM bands a JOIN bands b ON a.band = b.band AND a.key = b.key
-                                 AND a.doc_id < b.doc_id
-    )
-    SELECT c.id_a, c.id_b,
-           CAST(bit_count(xor(sa.simhash, sb.simhash)) AS INTEGER) AS hamming
-    FROM cand c
-    JOIN sigs sa ON sa.doc_id = c.id_a
-    JOIN sigs sb ON sb.doc_id = c.id_b
-    WHERE bit_count(xor(sa.simhash, sb.simhash)) <= {max_hamming}
-    """
-
-@q("dedup_simhash60_pairs", _simhash60_pairs_sql())
-def dedup_simhash60_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """AT-SCALE SimHash near-dup pairs: 60-bit signature, AND-OR
-    banding (6×10-bit sub-bands, C(6,3) 30-bit combination keys, verify
-    inline in the join — same hamming ≤ 3 completeness, bucket
-    occupancy immune to the correlated-bit skew that makes narrow
-    single-band keys quadratic) — operators/dedup.simhash60_candidate_pairs.
-    The oracle replicates the 60-bit md5-prefix hash and the majority
-    vote, and generates candidates with its own (single-band pigeonhole)
-    complete banding — both constructions are complete for hamming ≤ 3,
-    so the verified result sets are identical."""
-    from bgpexplorer_spark.operators.dedup import simhash60_candidate_pairs
-    from bgpexplorer_spark.sources.tables import fan_out
-
-    docs = fan_out(load_table(spark, sf_dir, "documents"), spark, key="doc_id")
-    return simhash60_candidate_pairs(docs, "doc_id", max_hamming=3)
-
-def _minhash_sql(k: int = 16, bands: int = 4) -> str:
-    from bgpexplorer_spark.operators.dedup import MINHASH_P, _minhash_params
-
-    params = _minhash_params(k)
-    h = _duck_hash32("sh")
-    mins = ", ".join(
-        f"min((h * {a} + {b}) % {MINHASH_P}) AS m{i}" for i, (a, b) in enumerate(params)
-    )
-    rpb = k // bands
-    band_rows = " UNION ALL ".join(
-        f"SELECT doc_id, {bnd} AS band, md5("
-        + " || ',' || ".join(f"CAST(m{bnd * rpb + r} AS VARCHAR)" for r in range(rpb))
-        + ") AS bucket FROM sigs"
-        for bnd in range(bands)
-    )
-    return f"""
-    WITH toks AS (
-        SELECT doc_id, unnest(list_distinct(
-            [l[i] || ' ' || l[i+1] || ' ' || l[i+2] for i in range(1, len(l) - 1)]
-        )) AS sh
-        FROM (SELECT doc_id, {_duck_tokens('text')} AS l FROM documents)
-    ),
-    hashes AS (SELECT doc_id, {h} AS h FROM toks),
-    sigs AS (SELECT doc_id, {mins} FROM hashes GROUP BY doc_id)
-    SELECT * FROM ({band_rows})
-    """
-
-@q("dedup_minhash_lsh", _minhash_sql())
-def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash signature + LSH banding: one row per (doc, band) with the
-    band-bucket hash (operators/dedup.minhash_signatures + lsh_buckets);
-    docs sharing a bucket are near-dup candidates."""
-    from bgpexplorer_spark.operators.dedup import lsh_buckets, minhash_signatures
-    from bgpexplorer_spark.sources.tables import fan_out
-
-    # shingle explode + md5 + 16 min-aggs is CPU-dense: fan the scan out
-    # to all cores when the local file arrives as one unsplittable split
-    docs = fan_out(load_table(spark, sf_dir, "documents"), spark, key="doc_id")
-    sig = minhash_signatures(docs, "doc_id", k=16, n=3)
-    return lsh_buckets(sig, "doc_id", bands=4, k=16)
-
-@q(
-    "dedup_ngram_jaccard",
-    """
-    WITH sh AS (
-        SELECT doc_id, unnest(list_distinct(
-            [l[i] || ' ' || l[i+1] || ' ' || l[i+2] for i in range(1, len(l) - 1)]
-        )) AS s
-        FROM (SELECT doc_id, list_filter(string_split_regex(text, '\\s+'), x -> x <> '') AS l
-              FROM documents)
-    ),
-    sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-    shared AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS c
-        FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-        GROUP BY a.doc_id, b.doc_id
-    )
-    SELECT id_a, id_b,
-           round(c / (na.n + nb.n - c), 4) AS jaccard
-    FROM shared
-    JOIN sizes na ON na.doc_id = id_a
-    JOIN sizes nb ON nb.doc_id = id_b
-    WHERE round(c / (na.n + nb.n - c), 4) >= 0.35
-    """,
-)
-def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact trigram-shingle Jaccard pairs ≥ 0.35
-    (operators/dedup.ngram_jaccard_pairs)."""
-    from bgpexplorer_spark.operators.dedup import ngram_jaccard_pairs
-
-    docs = load_table(spark, sf_dir, "documents")
-    return ngram_jaccard_pairs(docs, "doc_id", n=3, threshold=0.35)
-
-def _lsh_pair_ctes(k: int = 16, bands: int = 4, max_bucket: int | None = None) -> str:
-    """Shared CTE chain replicating the composed LSH→exact-verify path:
-    trigram shingles → MinHash sigs → banded buckets → candidate pairs →
-    per-candidate intersection counts. The oracle applies the SAME
-    banding, so the probabilistic recall of LSH is part of the verified
-    contract, not a fudge. With ``max_bucket`` the oracle also
-    replicates the mega-bucket shed (memberships of buckets holding
-    more than that many docs dropped before the candidate join) — the
-    operators/dedup.lsh_buckets knob as a verified contract."""
-    from bgpexplorer_spark.operators.dedup import MINHASH_P, _minhash_params
-
-    params = _minhash_params(k)
-    h = _duck_hash32("sh")
-    mins = ", ".join(
-        f"min((h * {a} + {b}) % {MINHASH_P}) AS m{i}" for i, (a, b) in enumerate(params)
-    )
-    rpb = k // bands
-    band_rows = " UNION ALL ".join(
-        f"SELECT doc_id, {bnd} AS band, md5("
-        + " || ',' || ".join(f"CAST(m{bnd * rpb + r} AS VARCHAR)" for r in range(rpb))
-        + ") AS bucket FROM sigs"
-        for bnd in range(bands)
-    )
-    if max_bucket is None:
-        bk = f"bk AS ({band_rows})"
-    else:
-        bk = f"""bk_all AS ({band_rows}),
-    bk AS (
-        SELECT doc_id, band, bucket FROM (
-            SELECT doc_id, band, bucket,
-                   count(*) OVER (PARTITION BY band, bucket) AS occ
-            FROM bk_all
-        ) WHERE occ <= {max_bucket}
-    )"""
-    return f"""toks AS (
-        SELECT doc_id, unnest(list_distinct(
-            [l[i] || ' ' || l[i+1] || ' ' || l[i+2] for i in range(1, len(l) - 1)]
-        )) AS sh
-        FROM (SELECT doc_id, {_duck_tokens('text')} AS l FROM documents)
-    ),
-    hashes AS (SELECT doc_id, {h} AS h FROM toks),
-    sigs AS (SELECT doc_id, {mins} FROM hashes GROUP BY doc_id),
-    {bk},
-    cand AS (
-        SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        FROM bk a JOIN bk b ON a.band = b.band AND a.bucket = b.bucket
-                           AND a.doc_id < b.doc_id
-    ),
-    sizes AS (SELECT doc_id, count(*) AS n FROM toks GROUP BY doc_id),
-    shared AS (
-        SELECT c.id_a, c.id_b, count(*) AS cnt
-        FROM cand c
-        JOIN toks a ON a.doc_id = c.id_a
-        JOIN toks b ON b.doc_id = c.id_b AND b.sh = a.sh
-        GROUP BY c.id_a, c.id_b
-    )"""
-
-def _lsh_verified_sql(threshold: float = 0.35) -> str:
-    return f"""
-    WITH {_lsh_pair_ctes()}
-    SELECT id_a, id_b, round(cnt / (na.n + nb.n - cnt), 4) AS jaccard
-    FROM shared
-    JOIN sizes na ON na.doc_id = id_a
-    JOIN sizes nb ON nb.doc_id = id_b
-    WHERE round(cnt / (na.n + nb.n - cnt), 4) >= {threshold}
-    """
-
-@q("dedup_lsh_verified", _lsh_verified_sql())
-def dedup_lsh_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The composed scale path (operators/dedup.neardup_pairs): MinHash+LSH
-    candidates → exact trigram-Jaccard verification of candidates only —
-    no all-pairs stage anywhere in the plan."""
-    from bgpexplorer_spark.operators.dedup import neardup_pairs
-    from bgpexplorer_spark.sources.tables import fan_out
-
-    docs = fan_out(load_table(spark, sf_dir, "documents"), spark, key="doc_id")
-    return neardup_pairs(docs, "doc_id", n=3, threshold=0.35, k=16, bands=4)
-
-def _lsh_capped_sql(threshold: float = 0.35, max_bucket: int = 2) -> str:
-    return f"""
-    WITH {_lsh_pair_ctes(max_bucket=max_bucket)}
-    SELECT id_a, id_b, round(cnt / (na.n + nb.n - cnt), 4) AS jaccard
-    FROM shared
-    JOIN sizes na ON na.doc_id = id_a
-    JOIN sizes nb ON nb.doc_id = id_b
-    WHERE round(cnt / (na.n + nb.n - cnt), 4) >= {threshold}
-    """
-
-@q("dedup_lsh_capped", _lsh_capped_sql())
-def dedup_lsh_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The mega-bucket shed as a VERIFIED contract: the composed
-    LSH→verify path with `max_bucket=2` — band-bucket memberships above
-    the occupancy cap dropped BEFORE the candidate self-join
-    (operators/dedup.neardup_pairs(max_bucket=...), the production
-    lever that bounds candidate volume at buckets × cap² on
-    low-diversity corpora; measured sf10: 11.1 s vs ~112 s exact at
-    999/1000 pairs). The oracle replicates the occupancy filter with a
-    count window over the identical band rows, so the recall trade is
-    part of the verified contract, not a fudge — the sf0.01 fixture has
-    six occupancy-3 buckets, so the cap demonstrably bites (the result
-    differs from dedup_lsh_verified)."""
-    from bgpexplorer_spark.operators.dedup import neardup_pairs
-    from bgpexplorer_spark.sources.tables import fan_out
-
-    docs = fan_out(load_table(spark, sf_dir, "documents"), spark, key="doc_id")
-    return neardup_pairs(
-        docs, "doc_id", n=3, threshold=0.35, k=16, bands=4, max_bucket=2
-    )
-
-def _incremental_dedup_sql(k: int = 16, bands: int = 4) -> str:
-    """Oracle for the cross-run incremental check: docs with
-    doc_id % 3 <> 0 are 'yesterday's corpus' whose index exists; the
-    % 3 = 0 batch is flagged against it with the SAME minhash/banding
-    the index builder uses."""
-    from bgpexplorer_spark.operators.dedup import MINHASH_P, _minhash_params
-
-    params = _minhash_params(k)
-    h = _duck_hash32("sh")
-    mins = ", ".join(
-        f"min((h * {a} + {b}) % {MINHASH_P}) AS m{i}"
-        for i, (a, b) in enumerate(params)
-    )
-    rpb = k // bands
-    band_rows = " UNION ALL ".join(
-        f"SELECT doc_id, {bnd} AS band, md5("
-        + " || ',' || ".join(f"CAST(m{bnd * rpb + r} AS VARCHAR)" for r in range(rpb))
-        + ") AS bucket FROM sigs"
-        for bnd in range(bands)
-    )
-    return f"""
-    WITH toks AS (
-        SELECT doc_id, unnest(list_distinct(
-            [l[i] || ' ' || l[i+1] || ' ' || l[i+2] for i in range(1, len(l) - 1)]
-        )) AS sh
-        FROM (SELECT doc_id, {_duck_tokens('text')} AS l FROM documents)
-    ),
-    hashes AS (SELECT doc_id, {h} AS h FROM toks),
-    sigs AS (SELECT doc_id, {mins} FROM hashes GROUP BY doc_id),
-    buckets AS ({band_rows}),
-    corpus_b AS (
-        SELECT DISTINCT band, bucket FROM buckets WHERE doc_id % 3 <> 0
-    ),
-    near AS (
-        SELECT DISTINCT b.doc_id FROM buckets b
-        JOIN corpus_b c USING (band, bucket)
-        WHERE b.doc_id % 3 = 0
-    ),
-    corpus_h AS (
-        SELECT DISTINCT md5(text) AS content_hash FROM documents
-        WHERE doc_id % 3 <> 0
-    )
-    SELECT d.doc_id, md5(d.text) AS content_hash,
-           (ch.content_hash IS NOT NULL) AS exact_dup,
-           (nr.doc_id IS NOT NULL) AS near_dup,
-           (ch.content_hash IS NULL AND nr.doc_id IS NULL) AS keep
-    FROM documents d
-    LEFT JOIN corpus_h ch ON md5(d.text) = ch.content_hash
-    LEFT JOIN near nr ON d.doc_id = nr.doc_id
-    WHERE d.doc_id % 3 = 0
-    """
-
-@q("dedup_incremental", _incremental_dedup_sql())
-def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental (cross-run) dedup: build yesterday's corpus index
-    (operators/dedup.dedup_index — exact hashes + LSH band-buckets in
-    one narrow mergeable table), then flag today's batch against it
-    (incremental_dedup) without re-reading the old corpus."""
-    from bgpexplorer_spark.operators.dedup import dedup_index, incremental_dedup
-    from bgpexplorer_spark.sources.tables import fan_out
-
-    docs = fan_out(load_table(spark, sf_dir, "documents"), spark, key="doc_id")
-    corpus = docs.filter(F.col("doc_id") % 3 != 0)
-    batch = docs.filter(F.col("doc_id") % 3 == 0)
-    idx = dedup_index(corpus, "doc_id", k=16, n=3, bands=4)
-    return incremental_dedup(batch, idx, "doc_id", k=16, n=3, bands=4)
-
-# the LSH→verify→transitive-closure chain shared by the component
-# keep-list and cluster-size-histogram oracles
-_CC_CTES = f"""{_lsh_pair_ctes()},
-    pairs AS (
-        SELECT id_a, id_b
-        FROM shared
-        JOIN sizes na ON na.doc_id = id_a
-        JOIN sizes nb ON nb.doc_id = id_b
-        WHERE round(cnt / (na.n + nb.n - cnt), 4) >= 0.5
-    ),
-    edges AS (
-        SELECT id_a AS a, id_b AS b FROM pairs
-        UNION
-        SELECT id_b AS a, id_a AS b FROM pairs
-    ),
-    reach(a, b) AS (
-        SELECT a, b FROM edges
-        UNION
-        SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a
-    ),
-    comp AS (SELECT a AS doc_id, least(a, min(b)) AS component FROM reach GROUP BY a),
-    assign AS (
-        SELECT d.doc_id, coalesce(c.component, d.doc_id) AS component
-        FROM documents d LEFT JOIN comp c ON c.doc_id = d.doc_id
-    )"""
-
-_CC_ORACLE = f"""
-    WITH RECURSIVE {_CC_CTES}
-    SELECT doc_id, component, component = doc_id AS is_canonical
-    FROM assign
-    """
-
-@q("dedup_components", _CC_ORACLE)
-def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup clustering through the FULL scale pipeline: MinHash+LSH
-    candidates → exact trigram-Jaccard ≥ 0.5 verification of candidates
-    only (operators/dedup.neardup_pairs) → connected components. Output
-    is the dedup keep-list: every document with its component id (= min
-    doc_id reachable) and whether it is the canonical keeper. The oracle
-    replicates the banding AND the closure (recursive CTE), so LSH recall
-    is part of the verified contract.
-
-    Clustering variant: min-label propagation — near-dup graphs are
-    star-like (diameter 2-3), where min-label converges in 2-3 rounds
-    and measured 2x faster than the alternating-star form (1.2 s vs
-    2.2 s at sf0.1 on the same materialized edge list). The O(log² n)
-    star variant remains oracle-verified as `dedup_components_star` —
-    use it for deep/chainy graphs."""
-    return _dedup_components_impl(spark, sf_dir, star=False)
-
-@q("dedup_components_star", _CC_ORACLE)
-def dedup_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same pipeline with alternating large-star/small-star clustering
-    (Kiveris et al., O(log² n) rounds) — the deep-graph scale path,
-    property-tested equal to min-label and oracle-verified here."""
-    return _dedup_components_impl(spark, sf_dir, star=True)
-
-def _dedup_components_impl(spark: SparkSession, sf_dir: str, star: bool) -> DataFrame:
-    from bgpexplorer_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-        neardup_pairs,
-    )
-    from bgpexplorer_spark.sources.tables import fan_out
-
-    cc = connected_components_star if star else connected_components
-    docs = fan_out(load_table(spark, sf_dir, "documents"), spark, key="doc_id")
-    pairs = neardup_pairs(docs, "doc_id", n=3, threshold=0.5, k=16, bands=4)
-    comp = cc(pairs).withColumnRenamed("node", "doc_id")
-    # the serving join reads the plain table — fan_out's round-robin
-    # repartition helps only the shingle-explode build above, and would
-    # otherwise put a needless exchange in every downstream action
-    return (
-        load_table(spark, sf_dir, "documents").select("doc_id")
-        .join(comp, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("component", "doc_id").alias("component"),
-            (F.coalesce("component", "doc_id") == F.col("doc_id")).alias("is_canonical"),
-        )
-    )
-
-_COSINE_TOPK_ORACLE = """
-    SELECT e.vec_id,
-           round(list_sum([a[i] * qv[i] for i in range(1, 65)]) /
-                 (sqrt(list_sum([a[i] * a[i] for i in range(1, 65)])) *
-                  sqrt(list_sum([qv[i] * qv[i] for i in range(1, 65)]))), 4)
-               + 0.0 AS cos_sim
-    FROM (SELECT vec_id, embedding::DOUBLE[] AS a FROM embeddings) e
-    CROSS JOIN (SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = 0) q
-    ORDER BY cos_sim DESC, vec_id LIMIT 10
-"""
-
-@q("sim_cosine_topk", _COSINE_TOPK_ORACLE)
-def sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force cosine top-10 vs the vec_id=0 query vector
-    (operators/similarity.cosine_topk)."""
-    from bgpexplorer_spark.operators.similarity import cosine_topk
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    qv = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
-    return cosine_topk(emb, qv, k=10)
-
-@q("sim_gemm_topk", _COSINE_TOPK_ORACLE)
-def sim_gemm_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact brute-force cosine top-10 via Arrow-batched numpy GEMM
-    (operators/similarity.cosine_topk_gemm) — the at-scale exact path:
-    one BLAS matvec per Arrow batch, per-batch top-k pruning under the
-    final sort order, then a k-row TakeOrdered. Same oracle as
-    sim_cosine_topk (identical result contract, different execution)."""
-    from bgpexplorer_spark.operators.similarity import cosine_topk_gemm
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    qv = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
-    return cosine_topk_gemm(emb, qv, k=10)
-
-def _lsh_bucket_sql(n_planes: int = 8) -> str:
-    # coefficient formula mirrors similarity._plane_coef EXACTLY
-    # (Knuth scramble mod 97, j-period 97 — see its docstring for the
-    # period-7 aliasing the first construction had)
-    projs = []
-    for j in range(n_planes):
-        proj = (
-            f"list_sum([a[i+1] * CAST((i + {64 * j}) * 2654435761 % 97 - 48"
-            f" AS DOUBLE) for i in range(0, 64)])"
-        )
-        projs.append(f"CASE WHEN {proj} >= 0 THEN {2 ** j} ELSE 0 END")
-    bucket = " + ".join(projs)
-    return f"""
-    SELECT vec_id, CAST({bucket} AS BIGINT) AS bucket
-    FROM (SELECT vec_id, embedding::DOUBLE[] AS a FROM embeddings)
-    """
-
-@q("sim_lsh_buckets", _lsh_bucket_sql())
-def sim_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hyperplane-LSH bucket id per embedding
-    (operators/similarity.hyperplane_bucket) — the ANN scale path."""
-    from bgpexplorer_spark.operators.similarity import hyperplane_bucket
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    return emb.select(
-        "vec_id",
-        hyperplane_bucket(F.col("embedding").cast("array<double>"), 8, 64).alias("bucket"),
-    )
+    """DuckDB oracle SQL per query, in stable declaration order."""
+    return dict(ORACLES)
 
 # ---------------------------------------------------------------------------
 # Remaining F/C/U/J-series operator IDs on derived data
@@ -2073,149 +1194,6 @@ def f_mdt_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return df.filter(matches("10.0.0.0/8", "ipv4mdt")).select("event_id")
 
-# Multimodal — REAL image decode through the Arrow mapInPandas path. The
-# payloads are binary PPM images whose pixel bytes are pure formulas of
-# doc_id, so DuckDB can recompute width/height/mean analytically while
-# Spark actually parses the bytes (operators/multimodal.decode_pnm via
-# decode_media mode='auto'). A decode bug (header walk, stride, channel
-# order, mean) breaks the hash.
-_MM_ORACLE = """
-    SELECT doc_id, 'ppm' AS decoder,
-           CAST(4 + doc_id % 8 AS INTEGER) AS width,
-           CAST(3 + doc_id % 5 AS INTEGER) AS height,
-           CAST(3 AS INTEGER) AS channels,
-           CAST(length('P6' || chr(10) || CAST(4 + doc_id % 8 AS VARCHAR)
-                       || ' ' || CAST(3 + doc_id % 5 AS VARCHAR)
-                       || chr(10) || '255' || chr(10))
-                + (4 + doc_id % 8) * (3 + doc_id % 5) * 3 AS BIGINT) AS n_bytes,
-           round(list_avg([
-               (doc_id * 31 + k) % 256
-               for k in generate_series(0, (4 + doc_id % 8) * (3 + doc_id % 5) * 3 - 1)
-           ]), 4) AS mean_byte
-    FROM documents
-"""
-
-@q("multimodal_decode", _MM_ORACLE)
-def multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal decode, REAL bytes end-to-end: deterministic PPM images
-    (pixel k = (doc_id*31+k) % 256) built per document, decoded by the
-    dependency-free numpy decoder inside Arrow-batched mapInPandas
-    (operators/multimodal.decode_media)."""
-    import numpy as np
-
-    from bgpexplorer_spark.operators.multimodal import (
-        MEDIA_SCHEMA, decode_media, encode_ppm,
-    )
-
-    ids = [
-        r["doc_id"]
-        for r in load_table(spark, sf_dir, "documents").select("doc_id").collect()
-    ]
-    rows = []
-    for d in ids:
-        w, h = 4 + d % 8, 3 + d % 5
-        px = (
-            (d * 31 + np.arange(w * h * 3)) % 256
-        ).astype(np.uint8).reshape(h, w, 3)
-        rows.append((int(d), "image", bytearray(encode_ppm(px)), None))
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    dec = decode_media(media)
-    return dec.select(
-        F.col("media_id").alias("doc_id"), "decoder",
-        "width", "height", "channels", "n_bytes", "mean_byte",
-    )
-
-# Multimodal — REAL compressed-image decode: baseline JPEG through the
-# pure-numpy T.81 codec (operators/jpeg.py). The fixtures are grayscale
-# images uniform within each 8x8 block (value = (doc_id*17 + by*7 +
-# bx*13) % 256): at quality=100 every block's only nonzero coefficient is
-# an integer DC with quantizer step 1, so Huffman decode + IDCT recover
-# the pixels EXACTLY and DuckDB can recompute the decoded mean
-# analytically — while Spark actually walks JFIF markers, Huffman tables,
-# DC prediction chains, and the entropy-coded segment.
-_JPEG_ORACLE = """
-    SELECT doc_id, 'jpeg' AS decoder,
-           CAST(4 + doc_id % 8 AS INTEGER) AS width,
-           CAST(6 + doc_id % 6 AS INTEGER) AS height,
-           CAST(1 AS INTEGER) AS channels,
-           round(list_avg([
-               (doc_id * 17
-                + ((k // (4 + doc_id % 8)) // 8) * 7
-                + ((k % (4 + doc_id % 8)) // 8) * 13) % 256
-               for k in generate_series(
-                   0, (4 + doc_id % 8) * (6 + doc_id % 6) - 1)
-           ]), 4) AS mean_byte
-    FROM documents
-"""
-
-@q("multimodal_decode_jpeg", _JPEG_ORACLE)
-def multimodal_decode_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Real JPEG decode end-to-end (decoder='jpeg'): deterministic
-    baseline JFIF payloads built by the in-package encoder, decoded
-    distributed inside Arrow-batched mapInPandas."""
-    import numpy as np
-
-    from bgpexplorer_spark.operators.jpeg import encode_jpeg
-    from bgpexplorer_spark.operators.multimodal import MEDIA_SCHEMA, decode_media
-
-    ids = [
-        r["doc_id"]
-        for r in load_table(spark, sf_dir, "documents").select("doc_id").collect()
-    ]
-    rows = []
-    for d in ids:
-        w, h = 4 + d % 8, 6 + d % 6
-        yy, xx = np.mgrid[0:h, 0:w]
-        px = ((d * 17 + (yy // 8) * 7 + (xx // 8) * 13) % 256).astype(np.uint8)
-        rows.append((int(d), "image", bytearray(encode_jpeg(px, quality=100)), None))
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    return decode_media(media).select(
-        F.col("media_id").alias("doc_id"), "decoder",
-        "width", "height", "channels", "mean_byte",
-    )
-
-# Multimodal — REAL PNG decode (stdlib zlib inflate + scanline
-# unfiltering in operators/png.py). PNG is lossless, so the decoded
-# pixels equal the fixture formula exactly and DuckDB recomputes the
-# mean analytically while Spark actually inflates and unfilters.
-_PNG_ORACLE = """
-    SELECT doc_id, 'png' AS decoder,
-           CAST(5 + doc_id % 6 AS INTEGER) AS width,
-           CAST(4 + doc_id % 4 AS INTEGER) AS height,
-           CAST(3 AS INTEGER) AS channels,
-           round(list_avg([
-               (doc_id * 13 + k * 5) % 256
-               for k in generate_series(
-                   0, (5 + doc_id % 6) * (4 + doc_id % 4) * 3 - 1)
-           ]), 4) AS mean_byte
-    FROM documents
-"""
-
-@q("multimodal_decode_png", _PNG_ORACLE)
-def multimodal_decode_png(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Real PNG decode end-to-end (decoder='png'): deterministic RGB
-    fixtures (pixel k = (doc_id*13 + k*5) % 256) built by the in-package
-    encoder, inflated + unfiltered distributed inside mapInPandas."""
-    import numpy as np
-
-    from bgpexplorer_spark.operators.multimodal import MEDIA_SCHEMA, decode_media
-    from bgpexplorer_spark.operators.png import encode_png
-
-    ids = [
-        r["doc_id"]
-        for r in load_table(spark, sf_dir, "documents").select("doc_id").collect()
-    ]
-    rows = []
-    for d in ids:
-        w, h = 5 + d % 6, 4 + d % 4
-        px = ((d * 13 + np.arange(w * h * 3) * 5) % 256).astype(np.uint8)
-        rows.append((int(d), "image", encode_png(px.reshape(h, w, 3)), None))
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    return decode_media(media).select(
-        F.col("media_id").alias("doc_id"), "decoder",
-        "width", "height", "channels", "mean_byte",
-    )
-
 # S2 — BMP (RFC 7854) capture decode → build_history. Same analytic-oracle
 # strategy as s1: Spark parses real BMP frames (per-peer headers + Route
 # Monitoring BGP UPDATEs); DuckDB recomputes the expected rows from the
@@ -2614,8 +1592,7 @@ def _derived_updates_history(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Oracle upgrades for previously engine-test-only operator IDs:
-# F3 (nh:), F10 (+/- polarity), C3/C5 (codecs), C6 (time bucket),
-# embedding near-dup (LLM extension)
+# F3 (nh:), F10 (+/- polarity), C3/C5 (codecs), C6 (time bucket)
 # ---------------------------------------------------------------------------
 
 @q(
@@ -2737,77 +1714,6 @@ def c6_time_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("bucket")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-
-def _neardup_sql(threshold: float = 0.1) -> str:
-    cos = (
-        "list_sum([x.a[i] * y.a[i] for i in range(1, 65)]) / "
-        "(sqrt(list_sum([x.a[i] * x.a[i] for i in range(1, 65)])) * "
-        "sqrt(list_sum([y.a[i] * y.a[i] for i in range(1, 65)])))"
-    )
-    return f"""
-    WITH b AS ({_lsh_bucket_sql()}),
-         v AS (SELECT vec_id, embedding::DOUBLE[] AS a FROM embeddings)
-    SELECT x.vec_id AS id_a, y.vec_id AS id_b, round({cos}, 4) AS cos_sim
-    FROM (SELECT v.vec_id, v.a, b.bucket FROM v JOIN b USING (vec_id)) x
-    JOIN (SELECT v.vec_id, v.a, b.bucket FROM v JOIN b USING (vec_id)) y
-      ON x.bucket = y.bucket AND x.vec_id < y.vec_id
-    WHERE round({cos}, 4) >= {threshold}
-    """
-
-@q("sim_embedding_neardup", _neardup_sql())
-def sim_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-dup pairs, cosine evaluated only within
-    hyperplane-LSH buckets (operators/similarity.embedding_neardup_pairs)."""
-    from bgpexplorer_spark.operators.similarity import embedding_neardup_pairs
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    return embedding_neardup_pairs(emb, threshold=0.1)
-
-def _ivf_sql(k: int = 10, nprobe: int = 2, n_centroids: int = 8) -> str:
-    def cos(a: str, b: str) -> str:
-        return (
-            f"(list_sum([{a}[i] * {b}[i] for i in range(1, 65)]) / "
-            f"(sqrt(list_sum([{a}[i] * {a}[i] for i in range(1, 65)])) * "
-            f"sqrt(list_sum([{b}[i] * {b}[i] for i in range(1, 65)]))))"
-        )
-
-    return f"""
-    WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS a FROM embeddings),
-    c AS (SELECT vec_id AS cid, a AS cvec FROM v WHERE vec_id < {n_centroids}),
-    qv AS (SELECT a AS q FROM v WHERE vec_id = 0),
-    probes AS (
-        SELECT cid FROM c, qv ORDER BY {cos('cvec', 'q')} DESC, cid LIMIT {nprobe}
-    ),
-    assigned AS (
-        SELECT vec_id, cid FROM (
-            SELECT v.vec_id, c.cid,
-                   row_number() OVER (
-                       PARTITION BY v.vec_id
-                       ORDER BY {cos('a', 'cvec')} DESC, c.cid DESC) AS rk
-            FROM v CROSS JOIN c
-        ) WHERE rk = 1
-    )
-    SELECT v.vec_id, round({cos('a', 'q')}, 4) + 0.0 AS cos_sim
-    FROM v JOIN assigned USING (vec_id), qv
-    WHERE assigned.cid IN (SELECT cid FROM probes)
-    ORDER BY cos_sim DESC, vec_id LIMIT {k}
-    """
-
-@q("sim_ivf_topk", _ivf_sql())
-def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN top-10: deterministic coarse centroids, nprobe=2 inverted
-    lists, exact cosine within (operators/similarity.ivf_topk) — the
-    partition-prunable scale path next to hyperplane LSH. The assignment
-    (the IVF index) is built once and persisted, as it would be at rest —
-    queries pay probe + in-list scoring, not corpus re-quantization."""
-    from bgpexplorer_spark.operators.similarity import (
-        ivf_assign, ivf_centroids, ivf_topk,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    qv = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
-    assigned = ivf_assign(emb, ivf_centroids(emb, 8)).persist()
-    return ivf_topk(emb, qv, k=10, nprobe=2, n_centroids=8, assigned=assigned)
 
 # ---------------------------------------------------------------------------
 # AN-series: BGP time-series analytics (operators/analytics) — RIB time
@@ -2988,75 +1894,6 @@ def an_prefix_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_flips",
         "n_sessions",
     )
-
-# ---------------------------------------------------------------------------
-# PIPE-series: training-data pipeline operators (operators/pipeline) —
-# deterministic stratified sampling + sequence packing.
-# ---------------------------------------------------------------------------
-
-_SAMPLE_FRACTIONS = {"en": 0.3, "zh": 1.0, "de": 0.75}
-
-@q(
-    "pipe_stratified_sample",
-    f"""
-    SELECT doc_id, lang FROM (
-        SELECT doc_id, lang,
-               {_duck_hash32("CAST(doc_id AS VARCHAR)")} / 4294967296.0 AS u,
-               CASE lang WHEN 'en' THEN 0.3 WHEN 'zh' THEN 1.0
-                         WHEN 'de' THEN 0.75 ELSE 0.5 END AS f
-        FROM documents
-    ) WHERE u < f
-    """,
-)
-def pipe_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic per-language Bernoulli sampling
-    (operators/pipeline.stratified_sample): keep 30% of English, all of
-    Chinese, 75% of German, 50% elsewhere — a pure hash filter,
-    reproducible across runs and monotone in the fraction."""
-    from bgpexplorer_spark.operators.pipeline import stratified_sample
-
-    docs = load_table(spark, sf_dir, "documents")
-    return stratified_sample(
-        docs, "lang", _SAMPLE_FRACTIONS, "doc_id", default_fraction=0.5
-    ).select("doc_id", "lang")
-
-@q(
-    "pipe_pack_sequences",
-    f"""
-    WITH t AS (
-        SELECT doc_id,
-               CAST({_duck_hash32("CAST(doc_id AS VARCHAR)")} % 8 AS INTEGER)
-                   AS shard,
-               CAST(len({_duck_tokens('text')}) AS BIGINT) AS n_tokens
-        FROM documents
-    ),
-    s AS (
-        SELECT *,
-               CAST(COALESCE(SUM(n_tokens) OVER (
-                   PARTITION BY shard ORDER BY doc_id
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                   AS BIGINT) AS start_offset
-        FROM t
-    )
-    SELECT doc_id, shard, n_tokens, start_offset,
-           CAST(floor(start_offset / 512.0) AS BIGINT) AS chunk_first,
-           CAST(floor((start_offset + greatest(n_tokens, 1) - 1) / 512.0)
-                AS BIGINT) AS chunk_last,
-           CAST(floor((start_offset + greatest(n_tokens, 1) - 1) / 512.0)
-                - floor(start_offset / 512.0) + 1 AS BIGINT) AS n_chunks
-    FROM s
-    """,
-)
-def pipe_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Concatenate-then-chunk packing plan
-    (operators/pipeline.pack_sequences): documents hash-sharded 8 ways,
-    laid end-to-end per shard in id order, cut every 512 tokens; each
-    document reports its shard, token offset and chunk span. One
-    running-sum window per shard — shard count IS the parallelism."""
-    from bgpexplorer_spark.operators.pipeline import pack_sequences
-
-    docs = load_table(spark, sf_dir, "documents")
-    return pack_sequences(docs, 512, n_shards=8)
 
 @q(
     "s2_bmp_lifecycle",
@@ -3412,34 +2249,6 @@ def an_customer_cone(spark: SparkSession, sf_dir: str) -> DataFrame:
     return customer_cone(rels)
 
 @q(
-    "pipe_mixture_stats",
-    f"""
-    WITH per AS (
-        SELECT lang AS stratum, count(*) AS n_docs,
-               CAST(SUM(len({_duck_tokens('text')})) AS BIGINT) AS n_tokens
-        FROM documents GROUP BY 1
-    ),
-    tot AS (
-        SELECT CAST(SUM(n_docs) AS BIGINT) AS td,
-               CAST(SUM(n_tokens) AS BIGINT) AS tt
-        FROM per
-    )
-    SELECT stratum, n_docs, n_tokens,
-           round(n_docs / td, 6) AS doc_share,
-           round(n_tokens / tt, 6) AS token_share
-    FROM per, tot
-    """,
-)
-def pipe_mixture_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dataset mixture report (operators/pipeline.mixture_stats): per-lang
-    document/token totals and shares — the numbers a training-mix designer
-    weights against."""
-    from bgpexplorer_spark.operators.pipeline import mixture_stats
-
-    docs = load_table(spark, sf_dir, "documents")
-    return mixture_stats(docs, "lang")
-
-@q(
     "s1_mrt_state_changes",
     """
     SELECT '10.255.1.' || CAST(i % 6 AS VARCHAR) AS peer_addr,
@@ -3487,76 +2296,6 @@ def s1_mrt_state_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
         "old_state", "new_state",
     )
 
-def _ivf_kmeans_sql(k: int = 8, iters: int = 2, dim: int = 64) -> str:
-    """Two Lloyd iterations in closed-form SQL: argmax-cosine assignment
-    (ties to the highest cid, = Spark's max(struct)) then element-wise
-    cluster means; empty clusters keep their previous centroid."""
-
-    def cos(a: str, b: str) -> str:
-        return (
-            f"(list_sum([{a}[i] * {b}[i] for i in range(1, {dim + 1})]) / "
-            f"(sqrt(list_sum([{a}[i] * {a}[i] for i in range(1, {dim + 1})])) * "
-            f"sqrt(list_sum([{b}[i] * {b}[i] for i in range(1, {dim + 1})]))))"
-        )
-
-    ctes = [
-        f"v AS (SELECT vec_id, embedding::DOUBLE[] AS a FROM embeddings)",
-        f"c0 AS (SELECT vec_id AS cid, a AS cvec FROM v WHERE vec_id < {k})",
-    ]
-    prev = "c0"
-    for it in range(1, iters + 1):
-        ctes.append(
-            f"""a{it} AS (
-        SELECT vec_id, cid FROM (
-            SELECT v.vec_id, c.cid,
-                   row_number() OVER (PARTITION BY v.vec_id
-                       ORDER BY {cos('v.a', 'c.cvec')} DESC, c.cid DESC) AS rk
-            FROM v CROSS JOIN {prev} c
-        ) WHERE rk = 1
-    )"""
-        )
-        ctes.append(
-            f"""m{it} AS (
-        SELECT a{it}.cid, t.i AS pos, avg(v.a[t.i]) AS m
-        FROM a{it} JOIN v USING (vec_id) CROSS JOIN range(1, {dim + 1}) t(i)
-        GROUP BY 1, 2
-    )"""
-        )
-        ctes.append(
-            f"""c{it} AS (
-        SELECT cid, list(m ORDER BY pos) AS cvec FROM m{it} GROUP BY cid
-        UNION ALL
-        SELECT cid, cvec FROM {prev}
-        WHERE cid NOT IN (SELECT DISTINCT cid FROM m{it})
-    )"""
-        )
-        prev = f"c{it}"
-    body = ",\n    ".join(ctes)
-    return f"""
-    WITH {body}
-    SELECT cid, CAST(t.i AS BIGINT) AS pos, round(cvec[t.i], 5) AS val
-    FROM {prev} CROSS JOIN range(1, {dim + 1}) t(i)
-    """
-
-@q("sim_ivf_kmeans", _ivf_kmeans_sql())
-def sim_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF quantizer training (operators/similarity.ivf_refine): two Lloyd
-    iterations — map-side literal-centroid assignment, element-wise
-    cluster means via posexplode + combinable aggregates — verified
-    against the same iterations unrolled in SQL. Measured on the driver
-    embeddings: avg max-cosine 0.189 -> 0.242 -> 0.256 over two rounds."""
-    from bgpexplorer_spark.operators.similarity import ivf_centroids, ivf_refine
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    c = ivf_refine(emb, ivf_centroids(emb, 8), iters=2)
-    return c.select(
-        "cid", F.posexplode("cvec").alias("pos0", "val")
-    ).select(
-        "cid",
-        (F.col("pos0") + 1).cast("bigint").alias("pos"),
-        F.round("val", 5).alias("val"),
-    )
-
 @q(
     "st_prefix_churn",
     f"""
@@ -3601,34 +2340,6 @@ def st_prefix_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("window.start").alias("win_start"),
         "updates",
         "withdraws",
-    )
-
-@q(
-    "dedup_containment",
-    f"""
-    WITH {_lsh_pair_ctes()}
-    SELECT id_a, id_b, round(cnt / least(na.n, nb.n), 4) AS containment
-    FROM shared
-    JOIN sizes na ON na.doc_id = id_a
-    JOIN sizes nb ON nb.doc_id = id_b
-    WHERE round(cnt / least(na.n, nb.n), 4) >= 0.6
-    """,
-)
-def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Asymmetric containment dedup (operators/dedup.ngram_containment_pairs):
-    |A∩B| / min(|A|,|B|) over trigram shingles through the composed
-    LSH-candidate path — catches a short document embedded in a long one,
-    which symmetric Jaccard misses."""
-    from bgpexplorer_spark.operators.dedup import (
-        minhash_candidate_ids, ngram_containment_pairs, shingle_df,
-    )
-    from bgpexplorer_spark.sources.tables import fan_out
-
-    docs = fan_out(load_table(spark, sf_dir, "documents"), spark, key="doc_id")
-    sh = shingle_df(docs, "doc_id", "text", 3).persist()
-    cand = minhash_candidate_ids(docs, "doc_id", k=16, n=3, bands=4, shingles=sh)
-    return ngram_containment_pairs(
-        docs, "doc_id", n=3, threshold=0.6, candidates=cand, shingles=sh
     )
 
 @q(
@@ -3800,171 +2511,6 @@ def s5_td1_rib_dump(spark: SparkSession, sf_dir: str) -> DataFrame:
         "nexthop_v4",
     )
 
-# ---------------------------------------------------------------------------
-# Gopher-style repetition signals + train/eval decontamination — the two
-# repetition/contamination checks every public large-scale text pipeline
-# runs (Rae et al. 2021 §A1.1; GPT-3 appendix C). The documents are
-# single-line, so the line-level features run on a deterministic
-# multi-line view (tokens re-joined in 5-token lines) built identically
-# on both engines.
-# ---------------------------------------------------------------------------
-
-_REP_LINES = 5
-
-_REPETITION_ORACLE = f"""
-    WITH d AS (
-        SELECT doc_id, {_duck_tokens('text')} AS toks FROM documents
-    ),
-    m AS (
-        SELECT doc_id, toks,
-               list_transform(
-                   generate_series(1, greatest(CAST(ceil(len(toks) / {_REP_LINES}.0) AS INTEGER), 1)),
-                   i -> array_to_string(list_slice(toks, (i-1)*{_REP_LINES}+1, (i-1)*{_REP_LINES}+{_REP_LINES}), ' ')
-               ) AS lines
-        FROM d
-    ),
-    t AS (
-        SELECT doc_id, toks, lines, array_to_string(lines, chr(10)) AS text,
-               list_transform(generate_series(1, len(toks)-1),
-                              i -> toks[i] || ' ' || toks[i+1]) AS g2,
-               list_transform(generate_series(1, len(toks)-2),
-                              i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]) AS g3
-        FROM m
-    )
-    SELECT doc_id,
-           len(lines) AS r_lines,
-           round(1 - len(list_distinct(lines)) / len(lines), 4) AS r_dup_line_frac,
-           round(coalesce(list_sum(list_transform(
-                     list_filter(lines, l -> len(list_filter(lines, x -> x = l)) > 1),
-                     l -> strlen(l))), 0)
-                 / greatest(coalesce(list_sum(list_transform(lines, l -> strlen(l))), 0), 1),
-                 4) AS r_dup_line_char_frac,
-           round(coalesce(list_max(list_transform(list_distinct(g2),
-                     g -> len(list_filter(g2, x -> x = g)) * strlen(g))), 0)
-                 / greatest(strlen(text), 1), 4) AS r_top2gram_char_frac,
-           round(coalesce(list_sum(list_transform(
-                     list_filter(g3, g -> len(list_filter(g3, x -> x = g)) > 1),
-                     g -> strlen(g))), 0)
-                 / greatest(strlen(text), 1), 4) AS r_dup3gram_char_frac
-    FROM t
-"""
-
-@q("text_repetition", _REPETITION_ORACLE)
-def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher repetition signals (operators/text.repetition_features)
-    over the 5-token-line view of each document: duplicate-line
-    fractions, heaviest-2-gram char mass, duplicated-3-gram char
-    fraction — all per-doc Column algebra, zero shuffles."""
-    from bgpexplorer_spark.operators.text import repetition_features, tokens
-
-    docs = load_table(spark, sf_dir, "documents")
-    toks = tokens(F.col("text"))
-    nl = F.greatest(
-        F.ceil(F.size(toks) / F.lit(float(_REP_LINES))).cast("int"), F.lit(1)
-    )
-    ml = F.concat_ws(
-        "\n",
-        F.transform(
-            F.sequence(F.lit(1), nl),
-            lambda i: F.concat_ws(
-                " ", F.slice(toks, (i - 1) * _REP_LINES + 1, _REP_LINES)
-            ),
-        ),
-    )
-    staged = docs.select("doc_id", ml.alias("text"))
-    return repetition_features(staged, "text").select(
-        "doc_id", "r_lines", "r_dup_line_frac", "r_dup_line_char_frac",
-        "r_top2gram_char_frac", "r_dup3gram_char_frac",
-    )
-
-_DECONTAM_N = 4
-
-_DECONTAM_ORACLE = f"""
-    WITH d AS (
-        SELECT doc_id, {_duck_tokens('text')} AS toks FROM documents
-    ),
-    sh AS (
-        SELECT doc_id,
-               unnest(list_transform(generate_series(1, len(toks) - {_DECONTAM_N - 1}),
-                   i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] || ' ' || toks[i+3])) AS g
-        FROM d
-    ),
-    ev AS (SELECT DISTINCT g FROM sh WHERE doc_id % 17 = 0),
-    hit AS (
-        SELECT DISTINCT sh.doc_id FROM sh JOIN ev USING (g)
-        WHERE sh.doc_id % 17 <> 0
-    )
-    SELECT d.doc_id, (hit.doc_id IS NOT NULL) AS contaminated
-    FROM d LEFT JOIN hit ON hit.doc_id = d.doc_id
-    WHERE d.doc_id % 17 <> 0
-"""
-
-@q("pipe_decontaminate", _DECONTAM_ORACLE)
-def pipe_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Train/eval n-gram decontamination (pipeline.decontaminate): eval
-    set = doc_id % 17 == 0, train = the rest; a train doc is
-    contaminated iff it shares any word 4-gram with the eval set. The
-    eval shingles broadcast; membership is a map-side LEFT SEMI join."""
-    from bgpexplorer_spark.operators.pipeline import decontaminate
-
-    docs = load_table(spark, sf_dir, "documents")
-    train = docs.filter(F.col("doc_id") % 17 != 0)
-    ev = docs.filter(F.col("doc_id") % 17 == 0)
-    return decontaminate(train, ev, n=_DECONTAM_N)
-
-# Multimodal — REAL GIF frame extraction: per-document animated GIFs
-# (2 frames, 4-color grayscale palette, pixel index k of frame f =
-# (doc_id + k + f) % 4, palette j = (doc_id*7 + j*11) % 256) decoded by
-# the pure-Python LZW walk; DuckDB recomputes geometry, delays, and the
-# decoded-raster means analytically.
-_GIF_ORACLE = """
-    SELECT doc_id, f AS frame_idx,
-           CAST(4 + doc_id % 5 AS INTEGER) AS width,
-           CAST(3 + doc_id % 3 AS INTEGER) AS height,
-           CAST(10 * (1 + doc_id % 3) AS INTEGER) AS delay_ms,
-           round(list_avg([
-               (doc_id * 7 + ((doc_id + k + f) % 4) * 11) % 256
-               for k in generate_series(
-                   0, (4 + doc_id % 5) * (3 + doc_id % 3) - 1)
-           ]), 4) AS mean_byte
-    FROM documents, (SELECT unnest([0, 1]) AS f)
-"""
-
-@q("multimodal_gif_frames", _GIF_ORACLE)
-def multimodal_gif_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Real animated-GIF frame sampling end-to-end (operators/gif
-    .gif_frames): deterministic 2-frame fixtures built by the in-package
-    encoder, LZW-decoded distributed inside mapInPandas — one row per
-    frame with geometry, delay, and the decoded raster mean."""
-    import numpy as np
-
-    from bgpexplorer_spark.operators.gif import encode_gif, gif_frames
-    from bgpexplorer_spark.operators.multimodal import MEDIA_SCHEMA
-
-    ids = [
-        r["doc_id"]
-        for r in load_table(spark, sf_dir, "documents").select("doc_id").collect()
-    ]
-    rows = []
-    for d in ids:
-        w, h = 4 + d % 5, 3 + d % 3
-        pal = np.stack(
-            [np.full(3, (d * 7 + j * 11) % 256) for j in range(4)]
-        ).astype(np.uint8)
-        frames = [
-            ((d + np.arange(w * h) + f) % 4).astype(np.uint8).reshape(h, w)
-            for f in range(2)
-        ]
-        delay = 10 * (1 + d % 3)
-        rows.append(
-            (int(d), "video", encode_gif(frames, pal, delays_ms=[delay] * 2), None)
-        )
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    return gif_frames(media).select(
-        F.col("media_id").alias("doc_id"), "frame_idx",
-        "width", "height", "delay_ms", "mean_byte",
-    )
-
 # Bogon-ASN detection — private/reserved/documentation ASNs in the AS
 # path (RFC 6996/7607/6793/5398/7300). Paths are derived with injected
 # offenders so the oracle has a closed form.
@@ -4110,80 +2656,6 @@ def an_martian_prefixes(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = routes.select("event_id", addr.alias("addr_v4"))
     return martian_prefixes(df).select("event_id", "martian")
 
-# TF-IDF keyword extraction — per-document top-k terms with smoothed
-# idf; the oracle replicates tokenization, the df aggregate, and the
-# deterministic (score desc, term asc) top-k.
-@q(
-    "text_tfidf",
-    f"""
-    WITH toks AS (
-        SELECT doc_id, unnest({_duck_tokens('lower(text)')}) AS term
-        FROM documents
-    ),
-    tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY doc_id, term),
-    n AS (SELECT count(*) AS n_docs FROM documents),
-    dfreq AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-    scored AS (
-        SELECT tf.doc_id, tf.term, tf.tf, dfreq.df,
-               round(tf.tf * ln((n.n_docs + 1) / (dfreq.df + 1.0)), 4) AS score
-        FROM tf, n JOIN dfreq ON tf.term = dfreq.term
-    ),
-    ranked AS (
-        SELECT *, row_number() OVER (PARTITION BY doc_id
-                                     ORDER BY score DESC, term ASC) AS rank
-        FROM scored
-    )
-    SELECT doc_id, term, tf, df, score, CAST(rank AS INTEGER) AS rank
-    FROM ranked WHERE rank <= 5
-    """,
-)
-def text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document top-5 keywords by smoothed tf-idf
-    (operators/text.tfidf_topk): one explode, one df aggregate broadcast
-    back, one per-doc top-k window."""
-    from bgpexplorer_spark.operators.text import tfidf_topk
-
-    docs = load_table(spark, sf_dir, "documents")
-    return tfidf_topk(docs, k=5)
-
-# CCNet-style LM quality scoring — add-one-smoothed character-trigram
-# negative log-likelihood, trained on the corpus itself; the oracle
-# replicates trigram extraction, the model scalars, and the smoothing.
-@q(
-    "text_charlm",
-    """
-    WITH d AS (SELECT doc_id, lower(text) AS t FROM documents),
-    tris AS (
-        SELECT doc_id,
-               unnest(list_transform(generate_series(1, strlen(t) - 2),
-                                     i -> substr(t, i, 3))) AS tri
-        FROM d WHERE strlen(t) >= 3
-    ),
-    counts AS (SELECT tri, count(*) AS cnt FROM tris GROUP BY tri),
-    model AS (SELECT sum(cnt) AS total, count(*) AS vocab FROM counts)
-    SELECT tr.doc_id, count(*) AS n_tris,
-           round(-avg(ln((coalesce(c.cnt, 0) + 1) / (m.total + m.vocab * 1.0))),
-                 4) AS nll
-    FROM tris tr LEFT JOIN counts c USING (tri) CROSS JOIN model m
-    GROUP BY tr.doc_id
-    """,
-)
-def text_charlm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LM quality scoring (operators/text.charlm_nll, the CCNet recipe
-    shape): per-document character-trigram NLL against corpus-trained
-    add-one-smoothed statistics — broadcast model join, one per-doc
-    aggregate."""
-    from bgpexplorer_spark.operators.text import charlm_nll
-    from bgpexplorer_spark.sources.tables import fan_out
-
-    # fan_out: the char-split + trigram explode is the CPU-dense stage,
-    # serial on the 1-split local parquet (same gate as dedup_simhash)
-    docs = fan_out(
-        load_table(spark, sf_dir, "documents"), spark,
-        key="doc_id", min_bytes=4 << 20,
-    )
-    return charlm_nll(docs)
-
 
 # RFC 2439 route-flap damping over the origin-history fixture: each
 # withdrawal adds a penalty decayed to the evaluation instant; the
@@ -4227,402 +2699,6 @@ def an_flap_damping(spark: SparkSession, sf_dir: str) -> DataFrame:
     hist = _origins_history(spark, sf_dir)
     return flap_damping(hist, _DAMP_AT_MS, half_life_sec=3600.0).select(
         "nlri_str", "n_flaps", "penalty", "suppressed", "reusable"
-    )
-
-# The flagship cleaning pipeline with the SCALE dedup path: the same
-# quality/language gates composed with the NEAR-dup keep-list
-# (LSH candidates → exact-Jaccard verify → connected components →
-# min-doc_id canonical keeper) instead of the exact-hash one.
-def _clean_corpus_neardup_sql() -> str:
-    base = _clean_corpus_sql()
-    exact_canon = """canon AS (
-        SELECT doc_id, min(doc_id) OVER (PARTITION BY md5(text)) AS canonical
-        FROM documents
-    )"""
-    near_canon = f"""canon AS (
-        SELECT doc_id, component AS canonical
-        FROM ({_CC_ORACLE})
-    )"""
-    assert exact_canon in base
-    return base.replace(exact_canon, near_canon)
-
-@q("pipeline_clean_corpus_neardup", _clean_corpus_neardup_sql())
-def pipeline_clean_corpus_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """pipeline_clean_corpus with the near-dup keep-list: quality gates ∧
-    language agreement ∧ component-canonical keeper from the composed
-    MinHash-LSH → exact-Jaccard → connected-components path (the 100 TB
-    dedup shape, not the exact-hash shortcut)."""
-    from bgpexplorer_spark.operators.text import langid, quality_features
-
-    docs = load_table(spark, sf_dir, "documents")
-    q_feats = quality_features(docs.select("doc_id", "text"))
-    lang_ok = docs.select(
-        "doc_id", (langid(F.col("text")) == F.col("lang")).alias("_lang_ok")
-    )
-    comp = _dedup_components_impl(spark, sf_dir, star=False)
-    keep = comp.filter(F.col("is_canonical")).select("doc_id")
-    return (
-        docs.select("doc_id")
-        .join(
-            q_feats.filter(
-                (F.col("q_tokens") >= 10) & (F.col("q_punct_ratio") <= 0.1)
-            ),
-            "doc_id",
-            "left_semi",
-        )
-        .join(lang_ok.filter("_lang_ok"), "doc_id", "left_semi")
-        .join(keep, "doc_id", "left_semi")
-    )
-
-@q("multimodal_decode_jpeg_progressive", _JPEG_ORACLE)
-def multimodal_decode_jpeg_progressive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The same block-uniform q100 fixtures as multimodal_decode_jpeg,
-    encoded PROGRESSIVE (SOF2 spectral selection + successive
-    approximation): the multi-scan decode path must recover the pixels
-    exactly, so the one analytic oracle covers both JPEG modes."""
-    import numpy as np
-
-    from bgpexplorer_spark.operators.jpeg import encode_jpeg_progressive
-    from bgpexplorer_spark.operators.multimodal import MEDIA_SCHEMA, decode_media
-
-    ids = [
-        r["doc_id"]
-        for r in load_table(spark, sf_dir, "documents").select("doc_id").collect()
-    ]
-    rows = []
-    for d in ids:
-        w, h = 4 + d % 8, 6 + d % 6
-        yy, xx = np.mgrid[0:h, 0:w]
-        px = ((d * 17 + (yy // 8) * 7 + (xx // 8) * 13) % 256).astype(np.uint8)
-        rows.append(
-            (int(d), "image", bytearray(encode_jpeg_progressive(px, quality=100)), None)
-        )
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    return decode_media(media).select(
-        F.col("media_id").alias("doc_id"), "decoder",
-        "width", "height", "channels", "mean_byte",
-    )
-
-# Multimodal — REAL TIFF decode (uncompressed baseline, stdlib struct
-# IFD walk): lossless, so the analytic oracle recomputes decoded means
-# exactly; fixtures alternate byte order and strip layout so both IFD
-# paths decode.
-_TIFF_ORACLE = """
-    SELECT doc_id, 'tiff' AS decoder,
-           CAST(5 + doc_id % 7 AS INTEGER) AS width,
-           CAST(4 + doc_id % 5 AS INTEGER) AS height,
-           CAST(3 AS INTEGER) AS channels,
-           round(list_avg([
-               (doc_id * 11 + k * 3) % 256
-               for k in generate_series(
-                   0, (5 + doc_id % 7) * (4 + doc_id % 5) * 3 - 1)
-           ]), 4) AS mean_byte
-    FROM documents
-"""
-
-@q("multimodal_decode_tiff", _TIFF_ORACLE)
-def multimodal_decode_tiff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Real TIFF decode end-to-end (decoder='tiff'): deterministic RGB
-    fixtures (pixel k = (doc_id*11 + k*3) % 256) cycling through
-    big-endian, multi-strip, PackBits, and LZW(+predictor) layouts —
-    all lossless, so the analytic pixel oracle covers every profile —
-    decoded distributed inside mapInPandas."""
-    import numpy as np
-
-    from bgpexplorer_spark.operators.multimodal import MEDIA_SCHEMA, decode_media
-    from bgpexplorer_spark.operators.tiff import encode_tiff
-
-    ids = [
-        r["doc_id"]
-        for r in load_table(spark, sf_dir, "documents").select("doc_id").collect()
-    ]
-    rows = []
-    for d in ids:
-        w, h = 5 + d % 7, 4 + d % 5
-        px = ((d * 11 + np.arange(w * h * 3) * 3) % 256).astype(np.uint8)
-        rows.append(
-            (
-                int(d), "image",
-                encode_tiff(
-                    px.reshape(h, w, 3), big_endian=bool(d % 2),
-                    rows_per_strip=2 if d % 3 == 0 else None,
-                    compression=("none", "packbits", "lzw")[d % 3],
-                    predictor=(d % 6 == 2),  # lzw + horizontal predictor
-                ),
-                None,
-            )
-        )
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    return decode_media(media).select(
-        F.col("media_id").alias("doc_id"), "decoder",
-        "width", "height", "channels", "mean_byte",
-    )
-
-# Multimodal — REAL MPEG audio metadata decode (operators/mp3.py):
-# sample rate / channels / exact duration from the 4-byte frame headers.
-# The fixtures are deterministic frame sequences (silent payloads) whose
-# sample rate, channel mode, and frame count are formulas of doc_id, and
-# every fifth doc is VBR (per-frame bitrate varies — frame DURATION
-# doesn't, so the analytic oracle is unchanged while Spark actually walks
-# a different byte layout). Layer III MPEG1: 1152 samples per frame.
-_MP3_ORACLE = """
-    SELECT doc_id, 'mp3-meta' AS decoder,
-           CAST(CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 2 END AS INTEGER)
-               AS channels,
-           CAST(CASE doc_id % 3 WHEN 0 THEN 44100 WHEN 1 THEN 48000
-                ELSE 32000 END AS INTEGER) AS sample_rate,
-           CAST(round((5 + doc_id % 7) * 1152.0 * 1000
-                / (CASE doc_id % 3 WHEN 0 THEN 44100 WHEN 1 THEN 48000
-                   ELSE 32000 END), 0) AS INTEGER) AS duration_ms
-    FROM documents
-"""
-
-@q("multimodal_decode_mp3", _MP3_ORACLE)
-def multimodal_decode_mp3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Real MPEG-audio metadata decode end-to-end (decoder='mp3-meta'):
-    deterministic frame sequences built by the in-package encoder —
-    CBR and VBR mixes, mono/stereo, three sample rates — walked
-    frame-by-frame inside Arrow-batched mapInPandas."""
-    from bgpexplorer_spark.operators.mp3 import encode_mp3
-    from bgpexplorer_spark.operators.multimodal import MEDIA_SCHEMA, decode_media
-
-    ids = [
-        r["doc_id"]
-        for r in load_table(spark, sf_dir, "documents").select("doc_id").collect()
-    ]
-    rows = []
-    for d in ids:
-        n = 5 + d % 7
-        vbr = [1 + (d + i) % 14 for i in range(n)] if d % 5 == 0 else None
-        rows.append(
-            (
-                int(d), "audio",
-                encode_mp3(
-                    n_frames=n, rate_idx=d % 3, mono=(d % 2 == 0),
-                    bitrate_seq=vbr,
-                ),
-                None,
-            )
-        )
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    return decode_media(media).select(
-        F.col("media_id").alias("doc_id"), "decoder",
-        "channels", "sample_rate", "duration_ms",
-    )
-
-def _semantic_dedup_sql(threshold: float = 0.4, k: int = 8) -> str:
-    def cos(a: str, b: str) -> str:
-        return (
-            f"(list_sum([{a}[i] * {b}[i] for i in range(1, 65)]) / "
-            f"(sqrt(list_sum([{a}[i] * {a}[i] for i in range(1, 65)])) * "
-            f"sqrt(list_sum([{b}[i] * {b}[i] for i in range(1, 65)]))))"
-        )
-
-    return f"""
-    WITH RECURSIVE
-    v AS (SELECT vec_id, embedding::DOUBLE[] AS a FROM embeddings),
-    c AS (SELECT vec_id AS cid, a AS cvec FROM v WHERE vec_id < {k}),
-    asg AS (
-        SELECT vec_id, cid FROM (
-            SELECT v.vec_id, c.cid,
-                   row_number() OVER (
-                       PARTITION BY v.vec_id
-                       ORDER BY {cos('a', 'cvec')} DESC, c.cid DESC) AS rk
-            FROM v CROSS JOIN c
-        ) WHERE rk = 1
-    ),
-    w AS (SELECT v.vec_id, v.a, asg.cid FROM v JOIN asg USING (vec_id)),
-    pairs AS (
-        SELECT x.vec_id AS id_a, y.vec_id AS id_b
-        FROM w x JOIN w y ON x.cid = y.cid AND x.vec_id < y.vec_id
-        WHERE round({cos('x.a', 'y.a')}, 4) >= {threshold}
-    ),
-    edges AS (
-        SELECT id_a AS a, id_b AS b FROM pairs
-        UNION
-        SELECT id_b AS a, id_a AS b FROM pairs
-    ),
-    reach(a, b) AS (
-        SELECT a, b FROM edges
-        UNION
-        SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a
-    ),
-    comp AS (SELECT a AS vec_id, least(a, min(b)) AS component
-             FROM reach GROUP BY a)
-    SELECT w.vec_id, w.cid,
-           coalesce(comp.component, w.vec_id) AS component,
-           coalesce(comp.component, w.vec_id) = w.vec_id AS is_kept
-    FROM w LEFT JOIN comp USING (vec_id)
-    """
-
-@q("sim_semantic_dedup", _semantic_dedup_sql())
-def sim_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup (Abbas et al. 2023) end-to-end
-    (operators/similarity.semantic_dedup): literal-centroid cluster
-    assignment (pure projection, no shuffle) → intra-cluster cosine
-    pairs (one shuffle on cid, bounded per cell — never corpus-wide) →
-    transitive duplicate-group closure → min-id keeper per group. The
-    oracle unrolls the same quantizer and closes groups with a recursive
-    CTE, so cluster assignment, pair recall, AND the closure are all
-    verified."""
-    from bgpexplorer_spark.operators.similarity import semantic_dedup
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    return semantic_dedup(emb, threshold=0.4, n_clusters=8)
-
-def _dsir_sql(n_buckets: int = 256) -> str:
-    h = _duck_hash32("g")
-    grams = "unnest(l || [l[i] || ' ' || l[i+1] for i in range(1, len(l))]) AS g"
-    return f"""
-    WITH
-    lt AS (SELECT doc_id, {_duck_tokens('text')} AS l FROM documents),
-    rg AS (SELECT doc_id, {grams} FROM lt),
-    rb AS (SELECT doc_id, {h} % {n_buckets} AS b FROM rg),
-    tb AS (SELECT {h} % {n_buckets} AS b FROM (
-               SELECT {grams} FROM lt WHERE doc_id % 10 = 0)),
-    tc AS (SELECT b, count(*) AS tcnt FROM tb GROUP BY b),
-    rc AS (SELECT b, count(*) AS rcnt FROM rb GROUP BY b),
-    td AS (SELECT count(*) + {n_buckets}.0 AS tden FROM tb),
-    rd AS (SELECT count(*) + {n_buckets}.0 AS rden FROM rb)
-    SELECT rb.doc_id, CAST(count(*) AS BIGINT) AS n_grams,
-           round(sum(ln((coalesce(tc.tcnt, 0) + 1.0) / td.tden)
-                     - ln((coalesce(rc.rcnt, 0) + 1.0) / rd.rden)), 4)
-               + 0.0 AS log_weight
-    FROM rb LEFT JOIN tc ON tc.b = rb.b
-            LEFT JOIN rc ON rc.b = rb.b, td, rd
-    GROUP BY rb.doc_id
-    """
-
-@q("pipe_dsir_weights", _dsir_sql())
-def pipe_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DSIR importance weights end-to-end
-    (operators/pipeline.dsir_weights, Xie et al. 2023): hashed
-    unigram+bigram bucket models for a target slice (doc_id % 10 = 0)
-    vs the raw corpus, per-doc summed log-likelihood ratio. Both models
-    are fixed-size (n_buckets) map-side aggregates; the ratio table is
-    broadcast. The oracle rebuilds both models and the per-doc sum in
-    SQL with the same portable md5 hash."""
-    from bgpexplorer_spark.operators.pipeline import dsir_weights
-    from bgpexplorer_spark.sources.tables import fan_out
-
-    # per-gram md5 hashing is CPU-dense: fan the unsplittable local
-    # parquet out so the explode runs on every core (no-op on a cluster)
-    docs = fan_out(load_table(spark, sf_dir, "documents"), spark, key="doc_id")
-    return dsir_weights(docs, docs.filter(F.col("doc_id") % 10 == 0))
-
-def _gumbel_sql(k: int = 50) -> str:
-    h = _duck_hash32("CAST(doc_id AS VARCHAR)")
-    return f"""
-    SELECT doc_id, log_weight,
-           round(log_weight
-                 - ln(-ln(({h} + 0.5) / 4294967296.0)), 4) AS gumbel_key
-    FROM ({_dsir_sql()}) dsir
-    ORDER BY gumbel_key DESC, doc_id
-    LIMIT {k}
-    """
-
-@q("pipe_dsir_resample", _gumbel_sql())
-def pipe_dsir_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DSIR selection end-to-end: importance weights → deterministic
-    Gumbel-top-k resampling (operators/pipeline.gumbel_topk_resample,
-    Kool et al. 2019) — sample-without-replacement ∝ exp(weight), with
-    the Gumbel variate derived from the portable id hash so every rerun
-    selects the same rows. One projection + one TakeOrdered."""
-    from bgpexplorer_spark.operators.pipeline import (
-        dsir_weights,
-        gumbel_topk_resample,
-    )
-    from bgpexplorer_spark.sources.tables import fan_out
-
-    docs = fan_out(load_table(spark, sf_dir, "documents"), spark, key="doc_id")
-    w = dsir_weights(docs, docs.filter(F.col("doc_id") % 10 == 0))
-    return gumbel_topk_resample(w.drop("n_grams"), k=50)
-
-def _dup_span_sql(k: int = 8) -> str:
-    # k-token windows as strings; duplication = same window text in >= 2
-    # docs (the hash is injective enough at this scale and both sides
-    # hash identically, so grouping by the md5-derived int matches)
-    h = _duck_hash32("w")
-    return f"""
-    WITH lt AS (SELECT doc_id, {_duck_tokens('text')} AS l FROM documents),
-    wins AS (
-        SELECT doc_id, {h} AS wh FROM (
-            SELECT doc_id,
-                   unnest([array_to_string(l[i:i+{k - 1}], ' ')
-                           for i in range(1, len(l) - {k - 2})]) AS w
-            FROM lt WHERE len(l) >= {k}
-        )
-    ),
-    cnt AS (SELECT wh, count(DISTINCT doc_id) AS docs FROM wins GROUP BY wh),
-    per AS (
-        SELECT wins.doc_id,
-               CAST(count(*) AS BIGINT) AS n_windows,
-               CAST(sum(CASE WHEN cnt.docs >= 2 THEN 1 ELSE 0 END) AS BIGINT)
-                   AS n_dup_windows
-        FROM wins JOIN cnt USING (wh) GROUP BY wins.doc_id
-    )
-    SELECT d.doc_id,
-           coalesce(per.n_windows, 0) AS n_windows,
-           coalesce(per.n_dup_windows, 0) AS n_dup_windows,
-           round(coalesce(per.n_dup_windows / per.n_windows, 0.0), 4)
-               AS dup_frac
-    FROM documents d LEFT JOIN per ON per.doc_id = d.doc_id
-    """
-
-@q("text_dup_spans", _dup_span_sql())
-def text_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact-substring duplication signal end-to-end
-    (operators/text.duplicate_span_stats, Lee et al. 2021 ExactSubstr):
-    every 8-token window hashed, windows shared across documents counted
-    per doc. One explode + one hash-keyed count-distinct + one join
-    back — the shingle-pipeline cost class. The oracle rebuilds the
-    windows with a list comprehension and the same portable hash."""
-    from bgpexplorer_spark.operators.text import duplicate_span_stats
-    from bgpexplorer_spark.sources.tables import fan_out
-
-    docs = fan_out(load_table(spark, sf_dir, "documents"), spark, key="doc_id")
-    return duplicate_span_stats(docs, k=8)
-
-# Multimodal — REAL ISO-BMFF (MP4) metadata decode (operators/mp4.py):
-# duration / display dimensions / frame count from the moov box tree.
-# Fixture fields are formulas of doc_id, so the oracle is analytic while
-# Spark actually walks nested boxes and 16.16 fixed-point fields.
-_MP4_ORACLE = """
-    SELECT doc_id, 'mp4-meta' AS decoder,
-           CAST(32 + (doc_id % 5) * 16 AS INTEGER) AS width,
-           CAST(24 + (doc_id % 3) * 8 AS INTEGER) AS height,
-           CAST(1000 + (doc_id % 10) * 500 AS INTEGER) AS duration_ms
-    FROM documents
-"""
-
-@q("multimodal_decode_mp4", _MP4_ORACLE)
-def multimodal_decode_mp4(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Real MP4 metadata decode end-to-end (decoder='mp4-meta'):
-    deterministic ISO-BMFF fixtures built by the in-package encoder,
-    box-walked inside Arrow-batched mapInPandas."""
-    from bgpexplorer_spark.operators.mp4 import encode_mp4
-    from bgpexplorer_spark.operators.multimodal import MEDIA_SCHEMA, decode_media
-
-    ids = [
-        r["doc_id"]
-        for r in load_table(spark, sf_dir, "documents").select("doc_id").collect()
-    ]
-    rows = [
-        (
-            int(d), "video",
-            encode_mp4(
-                duration_ms=1000 + (d % 10) * 500,
-                width=32 + (d % 5) * 16, height=24 + (d % 3) * 8,
-                n_samples=24 + d % 50,
-            ),
-            None,
-        )
-        for d in ids
-    ]
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    return decode_media(media).select(
-        F.col("media_id").alias("doc_id"), "decoder",
-        "width", "height", "duration_ms",
     )
 
 # S1 — the full multiprotocol family matrix decoded from REAL wire bytes:
@@ -5065,149 +3141,6 @@ def an_aggregatable(spark: SparkSession, sf_dir: str) -> DataFrame:
     hist = _origins_history(spark, sf_dir)
     return aggregatable_prefixes(current_state(hist))
 
-@q(
-    "text_vocab_stats",
-    f"""
-    WITH tok AS (
-        SELECT doc_id, unnest({_duck_tokens('text')}) AS token
-        FROM documents
-    )
-    SELECT token,
-           CAST(count(*) AS BIGINT) AS n_occurrences,
-           CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs
-    FROM tok GROUP BY token
-    ORDER BY n_occurrences DESC, token
-    LIMIT 50
-    """,
-)
-def text_vocab_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Vocabulary statistics (operators/text.vocab_stats): top-50 tokens
-    by corpus count with document frequency — explode + one aggregate +
-    deterministic top-k."""
-    from bgpexplorer_spark.operators.text import vocab_stats
-    from bgpexplorer_spark.sources.tables import fan_out
-
-    docs = fan_out(load_table(spark, sf_dir, "documents"), spark, key="doc_id")
-    return vocab_stats(docs, k=50)
-
-# Quality-bucket mix report over the charlm score: the charlm CTEs give
-# per-doc NLL; bucket = 1 + (10 * docs_below) // total in pure integer
-# arithmetic (ties share a bucket; engines agree exactly).
-@q(
-    "pipe_quality_buckets",
-    """
-    WITH d AS (SELECT doc_id, lower(text) AS t FROM documents),
-    tris AS (
-        SELECT doc_id,
-               unnest(list_transform(generate_series(1, strlen(t) - 2),
-                                     i -> substr(t, i, 3))) AS tri
-        FROM d WHERE strlen(t) >= 3
-    ),
-    counts AS (SELECT tri, count(*) AS cnt FROM tris GROUP BY tri),
-    model AS (SELECT sum(cnt) AS total, count(*) AS vocab FROM counts),
-    scores AS (
-        SELECT tr.doc_id,
-               round(-avg(ln((coalesce(c.cnt, 0) + 1)
-                             / (m.total + m.vocab * 1.0))), 4) AS nll
-        FROM tris tr LEFT JOIN counts c USING (tri) CROSS JOIN model m
-        GROUP BY tr.doc_id
-    ),
-    hist AS (SELECT nll, count(*) AS c FROM scores GROUP BY nll),
-    tot AS (SELECT CAST(sum(c) AS BIGINT) AS t FROM hist),
-    cum AS (
-        SELECT nll,
-               CAST(coalesce(sum(c) OVER (ORDER BY nll
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                   AS BIGINT) AS below
-        FROM hist
-    ),
-    mp AS (SELECT nll, CAST(1 + (10 * below) // t AS INTEGER) AS bucket
-           FROM cum, tot)
-    SELECT mp.bucket,
-           CAST(count(*) AS BIGINT) AS n_docs,
-           round(count(*) / (SELECT t * 1.0 FROM tot), 6) AS doc_share,
-           round(min(s.nll), 4) AS score_min,
-           round(max(s.nll), 4) AS score_max
-    FROM scores s JOIN mp ON s.nll = mp.nll
-    GROUP BY mp.bucket
-    """,
-)
-def pipe_quality_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quality-bucket mix report (operators/pipeline.quality_buckets)
-    over the charlm NLL score: integer-arithmetic quantile buckets
-    (no global sort window), broadcast assignment, one rollup."""
-    from bgpexplorer_spark.operators.pipeline import quality_buckets
-    from bgpexplorer_spark.operators.text import charlm_nll
-    from bgpexplorer_spark.sources.tables import fan_out
-
-    # fan_out: the charlm trigram explode is the CPU-dense stage, serial
-    # on the 1-split local parquet (same gate as text_charlm)
-    docs = fan_out(
-        load_table(spark, sf_dir, "documents"), spark,
-        key="doc_id", min_bytes=4 << 20,
-    )
-    scored = charlm_nll(docs).select("doc_id", "nll")
-    return quality_buckets(scored)
-
-# Contamination measurement: eval slice = every 25th doc's first 12
-# tokens (guaranteed overlap with its source doc), probed against the
-# full corpus' distinct shingle set.
-@q(
-    "pipe_contamination_report",
-    f"""
-    WITH ev AS (
-        SELECT doc_id,
-               array_to_string(({_duck_tokens('text')})[1:12], ' ') AS text
-        FROM documents WHERE doc_id % 25 = 0
-    ),
-    evl AS (SELECT doc_id, {_duck_tokens('text')} AS l FROM ev),
-    evg AS (
-        SELECT doc_id,
-               unnest([array_to_string(l[i:i+7], ' ')
-                       for i in range(1, len(l) - 6)]) AS g
-        FROM evl WHERE len(l) >= 8
-    ),
-    trl AS (SELECT {_duck_tokens('text')} AS l FROM documents),
-    trg AS (
-        SELECT DISTINCT unnest([array_to_string(l[i:i+7], ' ')
-                                for i in range(1, len(l) - 6)]) AS g
-        FROM trl WHERE len(l) >= 8
-    ),
-    per AS (
-        SELECT evg.doc_id,
-               CAST(count(*) AS BIGINT) AS n_shingles,
-               CAST(sum(CASE WHEN trg.g IS NOT NULL THEN 1 ELSE 0 END)
-                    AS BIGINT) AS n_overlapping
-        FROM evg LEFT JOIN trg ON evg.g = trg.g
-        GROUP BY evg.doc_id
-    )
-    SELECT ev.doc_id,
-           coalesce(per.n_shingles, 0) AS n_shingles,
-           coalesce(per.n_overlapping, 0) AS n_overlapping,
-           round(coalesce(per.n_overlapping / per.n_shingles, 0.0), 4)
-               AS overlap_frac
-    FROM ev LEFT JOIN per ON per.doc_id = ev.doc_id
-    """,
-)
-def pipe_contamination_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-eval-doc contamination measurement
-    (operators/pipeline.contamination_report): 8-gram overlap fractions
-    against the corpus' distinct shingle set — the report published
-    before decontamination drops anything."""
-    from bgpexplorer_spark.operators.pipeline import contamination_report
-    from bgpexplorer_spark.operators.text import tokens
-    from bgpexplorer_spark.sources.tables import fan_out
-
-    docs = fan_out(load_table(spark, sf_dir, "documents"), spark, key="doc_id")
-    ev = (
-        docs.filter(F.col("doc_id") % 25 == 0)
-        .select(
-            "doc_id",
-            F.concat_ws(" ", F.slice(tokens(F.col("text")), 1, 12)).alias("text"),
-        )
-    )
-    return contamination_report(docs, ev, n=8)
-
 # AS-path loop detection over derived paths: every 11th event carries a
 # true loop (a1, 999, a1), every 4th-but-not-11th consecutive prepending
 # (a1, 300, 300 — NOT a loop), the rest are clean.
@@ -5267,311 +3200,6 @@ def an_aspath_loops(spark: SparkSession, sf_dir: str) -> DataFrame:
         "nlri_str",
         F.concat_ws(",", "compressed_path").alias("compressed_path"),
         F.concat_ws(",", "looped_asns").alias("looped_asns"),
-    )
-
-# --- Corpus-cleaning rule sets (C4 / Gopher), PII scrub, paragraph dedup ---
-# The documents fixture is single-line word soup, so the line/paragraph
-# queries derive structure deterministically on BOTH sides first: ' merge '
-# becomes a sentence break, ' join ' a paragraph break, and every 7th doc
-# gets a 'javascript' marker injected — non-degenerate rule splits without
-# inventing new input data.
-
-_C4_ORACLE = """
-    WITH d AS (
-        SELECT doc_id,
-               replace(CASE WHEN doc_id % 7 = 0
-                            THEN replace(text, ' spark ', ' javascript ')
-                            ELSE text END,
-                       ' merge ', '.' || chr(10)) AS t
-        FROM documents
-    ), l AS (
-        SELECT doc_id, string_split(t, chr(10)) AS lines FROM d
-    ), k AS (
-        SELECT doc_id, lines,
-               list_filter(lines, x ->
-                   regexp_matches(x, '[.!?"'']\\s*$')
-                   AND len(list_filter(string_split_regex(trim(x), '\\s+'),
-                                       w -> w <> '')) >= 5
-                   AND NOT contains(lower(x), 'javascript')
-                   AND NOT contains(lower(x), 'lorem ipsum')
-                   AND NOT contains(lower(x), '{')) AS kept
-        FROM l
-    )
-    SELECT doc_id, coalesce(array_to_string(kept, chr(10)), '') AS c4_text,
-           CAST(len(lines) AS INT) AS c4_lines,
-           CAST(len(kept) AS INT) AS c4_kept,
-           len(kept) >= 3 AS c4_keep
-    FROM k
-"""
-
-@q("pipe_c4_clean", _C4_ORACLE)
-def pipe_c4_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C4 line-filtering rules (Raffel et al. 2020 §2.2) over derived
-    multi-line documents: terminal punctuation, ≥5 words, no
-    javascript / lorem-ipsum / brace marker, ≥3 surviving lines per doc
-    (operators/text.c4_clean). Pure per-row Column algebra — the 100 TB
-    plan is one codegen'd scan, no shuffle."""
-    from bgpexplorer_spark.operators.text import c4_clean
-
-    docs = load_table(spark, sf_dir, "documents")
-    base = F.when(
-        F.col("doc_id") % 7 == 0,
-        F.replace(F.col("text"), F.lit(" spark "), F.lit(" javascript ")),
-    ).otherwise(F.col("text"))
-    derived = docs.select(
-        "doc_id", F.replace(base, F.lit(" merge "), F.lit(".\n")).alias("text")
-    )
-    return c4_clean(derived).select(
-        "doc_id", "c4_text", "c4_lines", "c4_kept", "c4_keep"
-    )
-
-def _gopher_sql() -> str:
-    from bgpexplorer_spark.operators.text import STOPWORDS
-
-    stop = _duck_marker_hits("text", STOPWORDS)
-    return f"""
-    WITH m AS (
-        SELECT doc_id,
-               len(toks) AS n, greatest(len(toks), 1) AS n1,
-               coalesce(list_sum(list_transform(toks, w -> length(w))), 0) AS sum_len,
-               len(list_filter(toks, w -> regexp_matches(w, '[A-Za-z]'))) AS n_alpha,
-               n_sym, n_stop
-        FROM (
-            SELECT doc_id, {_duck_tokens('text')} AS toks,
-                   len(regexp_extract_all(text, '#|\\.\\.\\.|…')) AS n_sym,
-                   ({stop}) AS n_stop
-            FROM documents
-        )
-    )
-    SELECT doc_id,
-           CAST(n AS INT) AS g_words,
-           round(sum_len / n1, 4) AS g_mean_word_len,
-           round(n_sym / n1, 4) AS g_symbol_ratio,
-           round(n_alpha / n1, 4) AS g_alpha_ratio,
-           CAST(n_stop AS BIGINT) AS g_stop_words,
-           n >= 50 AND n <= 100000 AS g_ok_words,
-           (sum_len / n1) >= 3 AND (sum_len / n1) <= 10 AS g_ok_mean_len,
-           (n_sym / n1) <= 0.1 AS g_ok_symbols,
-           (n_alpha / n1) >= 0.8 AS g_ok_alpha,
-           n_stop >= 2 AS g_ok_stop,
-           (n >= 50 AND n <= 100000) AND ((sum_len / n1) >= 3 AND (sum_len / n1) <= 10)
-               AND ((n_sym / n1) <= 0.1) AND ((n_alpha / n1) >= 0.8)
-               AND (n_stop >= 2) AS gopher_keep
-    FROM m
-    """
-
-@q("text_gopher_rules", _gopher_sql())
-def text_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher document-shape quality gates (Rae et al. 2021, table A1)
-    with the measured ratios kept in the output so thresholds can be
-    re-swept without rescanning (operators/text.gopher_rules). Map-only,
-    zero shuffles."""
-    from bgpexplorer_spark.operators.text import gopher_rules
-
-    docs = load_table(spark, sf_dir, "documents")
-    return gopher_rules(docs.select("doc_id", "text")).drop("text")
-
-def _pii_sql() -> str:
-    from bgpexplorer_spark.operators.text import PII_PATTERNS
-
-    # DuckDB string literals are raw (no backslash processing), so the
-    # Java-regex pattern strings drop in verbatim
-    em_e, ip_e, ph_e = (p for p, _ in PII_PATTERNS)
-    return f"""
-    WITH d AS (
-        SELECT doc_id,
-               text || ' reach user' || CAST(doc_id AS VARCHAR)
-                    || '@mail.example.com from 10.'
-                    || CAST(doc_id % 200 AS VARCHAR) || '.0.'
-                    || CAST(1 + doc_id % 250 AS VARCHAR)
-                    || ' call 555-01' || CAST(10 + doc_id % 90 AS VARCHAR)
-                    || '-' || CAST(1000 + doc_id % 9000 AS VARCHAR) AS t
-        FROM documents
-    ), s AS (
-        SELECT doc_id, t,
-               regexp_replace(t, '{em_e}', '<EMAIL>', 'g') AS t1
-        FROM d
-    ), s2 AS (
-        SELECT doc_id, t, t1,
-               regexp_replace(t1, '{ip_e}', '<IP>', 'g') AS t2
-        FROM s
-    )
-    SELECT doc_id,
-           regexp_replace(t2, '{ph_e}', '<PHONE>', 'g') AS scrubbed,
-           CAST(len(regexp_extract_all(t, '{em_e}')) AS INT) AS n_email,
-           CAST(len(regexp_extract_all(t1, '{ip_e}')) AS INT) AS n_ip,
-           CAST(len(regexp_extract_all(t2, '{ph_e}')) AS INT) AS n_phone
-    FROM s2
-    """
-
-@q("text_pii_scrub", _pii_sql())
-def text_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PII scrubbing (operators/text.pii_scrub/pii_counts): emails,
-    dotted-quad IPs, phone-shaped digit runs masked in a fixed order —
-    verified on documents with deterministic PII appended so every class
-    fires. regexp_replace chain, map-only."""
-    from bgpexplorer_spark.operators.text import pii_counts, pii_scrub
-
-    docs = load_table(spark, sf_dir, "documents")
-    t = F.concat(
-        F.col("text"), F.lit(" reach user"), F.col("doc_id").cast("string"),
-        F.lit("@mail.example.com from 10."),
-        (F.col("doc_id") % 200).cast("string"), F.lit(".0."),
-        (F.col("doc_id") % 250 + 1).cast("string"),
-        F.lit(" call 555-01"), (F.col("doc_id") % 90 + 10).cast("string"),
-        F.lit("-"), (F.col("doc_id") % 9000 + 1000).cast("string"),
-    )
-    c = pii_counts(t)
-    return docs.select(
-        "doc_id",
-        pii_scrub(t).alias("scrubbed"),
-        c.getField("email").alias("n_email"),
-        c.getField("ip").alias("n_ip"),
-        c.getField("phone").alias("n_phone"),
-    )
-
-_PARA_DEDUP_ORACLE = """
-    WITH d AS (
-        SELECT doc_id,
-               CASE WHEN doc_id % 37 = 0 THEN NULL
-                    WHEN doc_id % 41 = 0 THEN '   '
-                    ELSE replace(text, ' join ', chr(10) || chr(10)) END
-                   AS text
-        FROM documents
-    ), f AS (
-        SELECT doc_id,
-               list_filter(
-                   string_split_regex(text, '\\n\\n+'),
-                   p -> trim(p) <> '') AS ps
-        FROM d
-    ), e AS (
-        SELECT doc_id,
-               unnest(ps) AS para,
-               unnest(generate_series(1, len(ps))) AS idx
-        FROM f
-    ), r AS (
-        SELECT doc_id, para,
-               row_number() OVER (PARTITION BY md5(trim(para))
-                                  ORDER BY doc_id, idx) AS rnk
-        FROM e
-    ), agg AS (
-        SELECT doc_id,
-               CAST(sum(CASE WHEN rnk = 1 THEN 1 ELSE 0 END) AS BIGINT)
-                   AS n_kept,
-               CAST(sum(CASE WHEN rnk = 1 THEN length(para) ELSE 0 END)
-                   AS BIGINT) AS kept_chars
-        FROM r GROUP BY doc_id
-    )
-    SELECT f.doc_id,
-           CAST(coalesce(len(f.ps), 0) AS BIGINT) AS n_paras,
-           coalesce(agg.n_kept, 0) AS n_kept,
-           coalesce(agg.kept_chars, 0) AS kept_chars
-    FROM f LEFT JOIN agg USING (doc_id)
-"""
-
-@q("dedup_paragraphs", _PARA_DEDUP_ORACLE)
-def dedup_paragraphs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Paragraph-level exact dedup (operators/dedup.paragraph_dedup):
-    corpus-wide keep-first over md5(paragraph) with a deterministic
-    (doc_id, index) winner — boilerplate that repeats across documents
-    is removed without near-dup machinery. Plan shape: two partial
-    aggregates (per-hash struct-min winner, per-doc size totals) met by
-    one doc-sized null-safe join — no window, no full-explode shuffle
-    (one winner candidate per distinct hash per task crosses the wire).
-    The derivation blanks every 37th doc to NULL and every 41st to
-    whitespace so the zero-paragraph contract (every document gets a
-    row, n_paras 0) is exercised, not just promised."""
-    from bgpexplorer_spark.operators.dedup import paragraph_dedup
-
-    docs = load_table(spark, sf_dir, "documents")
-    derived = docs.select(
-        "doc_id",
-        F.when(F.col("doc_id") % 37 == 0, F.lit(None).cast("string"))
-        .when(F.col("doc_id") % 41 == 0, F.lit("   "))
-        .otherwise(
-            F.replace(F.col("text"), F.lit(" join "), F.lit("\n\n"))
-        )
-        .alias("text"),
-    )
-    return paragraph_dedup(derived)
-
-_TEMP_MIX_ORACLE = f"""
-    WITH per AS (
-        SELECT source AS stratum,
-               CAST(count(*) AS BIGINT) AS n_docs,
-               CAST(sum(len({_duck_tokens('text')})) AS BIGINT) AS n_tokens
-        FROM documents GROUP BY source
-    ), sh AS (
-        SELECT stratum, n_docs, n_tokens,
-               round(n_tokens / (SELECT sum(n_tokens) FROM per), 6)
-                   AS token_share
-        FROM per
-    ), p AS (
-        SELECT *, power(token_share, 0.5) AS _p FROM sh
-    )
-    SELECT stratum, n_docs, n_tokens, token_share,
-           round(_p / (SELECT sum(_p) FROM p), 6) AS sample_weight,
-           CAST(round(_p / (SELECT sum(_p) FROM p) * 1000000) AS BIGINT)
-               AS token_allocation,
-           round(CAST(round(_p / (SELECT sum(_p) FROM p) * 1000000) AS BIGINT)
-                 / greatest(n_tokens, 1), 4) AS epochs
-    FROM p
-"""
-
-_UNIMAX_ORACLE = f"""
-    WITH per AS (
-        SELECT lang AS stratum,
-               CAST(count(*) AS BIGINT) AS n_docs,
-               CAST(sum(len({_duck_tokens('text')})) AS BIGINT) AS n_tokens
-        FROM documents GROUP BY lang
-    ), t AS (
-        -- 2.0 alone is DECIMAL in DuckDB; keep everything DOUBLE like Spark
-        SELECT *, n_tokens * CAST(2.0 AS DOUBLE) AS cap FROM per
-    ), r AS (
-        SELECT *,
-               row_number() OVER (ORDER BY cap, stratum) AS rn,
-               coalesce(sum(cap) OVER (ORDER BY cap, stratum
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                   AS cum_excl,
-               count(*) OVER () AS n
-        FROM t
-    ), c AS (
-        SELECT *, (CAST(30000.0 AS DOUBLE) - cum_excl) / (n - rn + 1) AS cand
-        FROM r
-    ), l AS (
-        SELECT min_by(cand, rn) AS line FROM c WHERE cap >= cand
-    )
-    SELECT stratum, n_docs, n_tokens, round(cap, 4) AS cap,
-           round(least(cap, coalesce(line, cap)), 4) AS allocation,
-           round(least(cap, coalesce(line, cap)) / greatest(n_tokens, 1), 4)
-               AS epochs,
-           round(least(cap, coalesce(line, cap)) / CAST(30000.0 AS DOUBLE), 6)
-               AS sample_weight
-    FROM c CROSS JOIN l
-"""
-
-@q("pipe_unimax_allocation", _UNIMAX_ORACLE)
-def pipe_unimax_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """UniMax budget allocation per language (Chung et al. 2023
-    water-filling: uniform waterline capped at max_epochs passes per
-    stratum — operators/pipeline.unimax_allocation). The oracle
-    replicates the prefix-sum closed form with the same window order."""
-    from bgpexplorer_spark.operators.pipeline import unimax_allocation
-
-    docs = load_table(spark, sf_dir, "documents")
-    return unimax_allocation(docs, "lang", token_budget=30_000, max_epochs=2.0)
-
-@q("pipe_temperature_mixture", _TEMP_MIX_ORACLE)
-def pipe_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Temperature-scaled mixture sampling weights (mT5/XLM-R rule:
-    P(s) ∝ token_share^(1/T), T=2) with a 1M-token budget's per-source
-    allocation and implied epochs (operators/pipeline.temperature_mixture).
-    One stratum aggregate + strata-sized arithmetic."""
-    from bgpexplorer_spark.operators.pipeline import temperature_mixture
-
-    docs = load_table(spark, sf_dir, "documents")
-    return temperature_mixture(
-        docs, "source", temperature=2.0, token_budget=1_000_000
     )
 
 @q(
@@ -5681,299 +3309,6 @@ def an_prefix_visibility(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("user_id") % 4).cast("int").alias("session_id"),
     )
     return prefix_visibility(state)
-
-def _span_removal_sql(k: int = 8) -> str:
-    h = _duck_hash32("w")
-    return f"""
-    WITH lt AS (SELECT doc_id, {_duck_tokens('text')} AS l FROM documents),
-    wins AS (
-        SELECT doc_id, i, {h} AS wh FROM (
-            SELECT doc_id,
-                   unnest([array_to_string(l[i:i+{k - 1}], ' ')
-                           for i in range(1, len(l) - {k - 2})]) AS w,
-                   unnest(range(1, len(l) - {k - 2})) AS i
-            FROM lt WHERE len(l) >= {k}
-        )
-    ),
-    dups AS (
-        SELECT doc_id, i FROM (
-            SELECT doc_id, i,
-                   row_number() OVER (PARTITION BY wh
-                                      ORDER BY doc_id, i) AS rn
-            FROM wins
-        ) WHERE rn > 1
-    ),
-    st AS (SELECT doc_id, list(i) AS starts FROM dups GROUP BY doc_id)
-    SELECT lt.doc_id,
-           coalesce(array_to_string(
-               [l[j] for j in range(1, len(l) + 1)
-                if len(list_filter(coalesce(starts, []),
-                                   s -> s <= j AND j < s + {k})) = 0],
-               ' '), '') AS clean_text,
-           CAST(len(l) AS INT) AS n_tokens,
-           CAST(len(l) - len(
-               [l[j] for j in range(1, len(l) + 1)
-                if len(list_filter(coalesce(starts, []),
-                                   s -> s <= j AND j < s + {k})) = 0]
-           ) AS INT) AS n_removed
-    FROM lt LEFT JOIN st ON lt.doc_id = st.doc_id
-    """
-
-@q("text_span_removal", _span_removal_sql())
-def text_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ExactSubstr span removal (operators/text.remove_duplicate_spans):
-    later copies of any duplicated 8-token window are cut, the globally
-    first occurrence survives — the corpus-editing action on the
-    text_dup_spans signal. Window explode + one hash-keyed row_number
-    + per-doc rebuild."""
-    from bgpexplorer_spark.operators.text import remove_duplicate_spans
-
-    docs = load_table(spark, sf_dir, "documents")
-    return remove_duplicate_spans(docs)
-
-_KEEP_BEST_ORACLE = f"""
-    WITH RECURSIVE {_lsh_pair_ctes()},
-    pairs AS (
-        SELECT id_a, id_b
-        FROM shared
-        JOIN sizes na ON na.doc_id = id_a
-        JOIN sizes nb ON nb.doc_id = id_b
-        WHERE round(cnt / (na.n + nb.n - cnt), 4) >= 0.5
-    ),
-    edges AS (
-        SELECT id_a AS a, id_b AS b FROM pairs
-        UNION
-        SELECT id_b AS a, id_a AS b FROM pairs
-    ),
-    reach(a, b) AS (
-        SELECT a, b FROM edges
-        UNION
-        SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a
-    ),
-    comp AS (SELECT a AS doc_id, least(a, min(b)) AS component FROM reach GROUP BY a),
-    allc AS (
-        SELECT d.doc_id, coalesce(c.component, d.doc_id) AS component, d.n_chars
-        FROM documents d LEFT JOIN comp c ON c.doc_id = d.doc_id
-    ),
-    k AS (
-        SELECT component, doc_id AS keeper_id FROM (
-            SELECT component, doc_id,
-                   row_number() OVER (PARTITION BY component
-                                      ORDER BY n_chars DESC, doc_id ASC) AS rn
-            FROM allc
-        ) WHERE rn = 1
-    )
-    SELECT a.doc_id, a.component, k.keeper_id,
-           a.doc_id = k.keeper_id AS keep
-    FROM allc a JOIN k USING (component)
-"""
-
-@q("dedup_keep_best", _KEEP_BEST_ORACLE)
-def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quality-aware near-dup keeper (operators/dedup.keep_best): the
-    same LSH → verify → components pipeline as dedup_components, but
-    each group keeps its HIGHEST-quality member (n_chars as the score
-    proxy; ties → lowest id) instead of min-id — the keep-the-best-copy
-    policy production dedup ships."""
-    from bgpexplorer_spark.operators.dedup import (
-        connected_components,
-        keep_best,
-        neardup_pairs,
-    )
-    from bgpexplorer_spark.sources.tables import fan_out
-
-    docs = load_table(spark, sf_dir, "documents")
-    pairs = neardup_pairs(
-        fan_out(docs, spark, key="doc_id"), "doc_id", n=3, threshold=0.5, k=16, bands=4
-    )
-    comp = connected_components(pairs)
-    allc = (
-        docs.select(F.col("doc_id").alias("node"))
-        .join(comp, "node", "left")
-        .withColumn("component", F.coalesce("component", F.col("node")))
-    )
-    return keep_best(
-        allc, docs.select("doc_id", F.col("n_chars").alias("score"))
-    )
-
-
-_SOURCE_STATS_ORACLE = f"""
-    SELECT source,
-           count(*) AS n_docs,
-           CAST(sum(len({_duck_tokens('text')})) AS BIGINT) AS n_tokens,
-           round(avg(len({_duck_tokens('text')})), 2) AS avg_tokens,
-           round(1 - count(DISTINCT md5(text)) / count(*), 4) AS dup_frac,
-           round(avg(round(len(regexp_extract_all(text, '[^\\w\\s]'))
-                           / greatest(length(text), 1), 4)), 4)
-               AS avg_punct_ratio
-    FROM documents GROUP BY source
-"""
-
-@q("pipe_source_stats", _SOURCE_STATS_ORACLE)
-def pipe_source_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Domain-level curation signals (operators/pipeline.source_stats):
-    per-source doc/token counts, exact-dup fraction, quality ratios."""
-    from bgpexplorer_spark.operators.pipeline import source_stats
-
-    return source_stats(load_table(spark, sf_dir, "documents"))
-
-@q(
-    "pipe_source_filter",
-    f"""
-    WITH st AS (
-        SELECT source, avg(len({_duck_tokens('text')})) AS avg_tok
-        FROM documents GROUP BY source
-    )
-    SELECT d.doc_id, d.source
-    FROM documents d JOIN st ON d.source = st.source
-    WHERE round(st.avg_tok, 2) >= 53
-    """,
-)
-def pipe_source_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Domain-level filtering (operators/pipeline.filter_sources): keep
-    every document of every source whose mean token count clears the
-    bar — the broadcast keep-list path."""
-    from bgpexplorer_spark.operators.pipeline import filter_sources
-
-    docs = load_table(spark, sf_dir, "documents")
-    return filter_sources(docs, min_avg_tokens=53).select("doc_id", "source")
-
-
-_BM25_ORACLE = f"""
-    WITH dl AS (
-        SELECT doc_id, len({_duck_tokens('text')}) AS dl FROM documents
-    ),
-    corpus AS (SELECT count(*) AS n_docs, avg(dl) AS avgdl FROM dl),
-    tf AS (
-        SELECT doc_id, term, count(*) AS tf
-        FROM (SELECT doc_id, unnest({_duck_tokens('text')}) AS term
-              FROM documents)
-        WHERE term IN ('spark', 'window', 'hash')
-        GROUP BY doc_id, term
-    ),
-    dft AS (SELECT term, count(*) AS df_t FROM tf GROUP BY term),
-    contrib AS (
-        SELECT tf.doc_id,
-               round(ln(1.0 + (c.n_docs - d.df_t + 0.5) / (d.df_t + 0.5))
-                     * tf.tf * 2.2
-                     / (tf.tf + 1.2 * (0.25 + 0.75 * dl.dl / c.avgdl)), 6)
-                   AS c
-        FROM tf JOIN dft d USING (term) JOIN dl USING (doc_id), corpus c
-    )
-    SELECT doc_id, round(sum(c), 4) AS score
-    FROM contrib GROUP BY doc_id
-    ORDER BY score DESC, doc_id LIMIT 10
-"""
-
-@q("text_bm25_topk", _BM25_ORACLE)
-def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BM25 ranked retrieval (operators/text.bm25_topk) for the query
-    {spark, window, hash}: in-array map-side term filter with the doc
-    length riding the surviving rows (the tf aggregate is the ONLY
-    corpus-keyed shuffle — no corpus-sized dl join), broadcast df/avgdl,
-    TakeOrdered top-10."""
-    from bgpexplorer_spark.operators.text import bm25_topk
-    from bgpexplorer_spark.sources.tables import fan_out
-
-    # fan_out: the map-side term filter + tf scoring tokenize every doc
-    # — the serial stage on a 1-split local parquet
-    docs = fan_out(load_table(spark, sf_dir, "documents"), spark, key="doc_id", min_bytes=4 << 20)
-    return bm25_topk(docs, ["spark", "window", "hash"], k=10)
-
-
-# Hybrid RRF oracle: both branch oracles verbatim as subqueries (their
-# LIMIT 10 IS the fusion pool), explicit ranks, fused score in DOUBLE
-# (bare 1.0 is DECIMAL in DuckDB).
-_HYBRID_RRF_ORACLE = f"""
-    WITH lex AS (
-        SELECT doc_id AS id,
-               CAST(row_number() OVER (ORDER BY score DESC, doc_id)
-                    AS INTEGER) AS rl
-        FROM ({_BM25_ORACLE}) b
-    ),
-    den AS (
-        SELECT vec_id AS id,
-               CAST(row_number() OVER (ORDER BY cos_sim DESC, vec_id)
-                    AS INTEGER) AS rd
-        FROM ({_COSINE_TOPK_ORACLE}) c
-    ),
-    f AS (
-        SELECT coalesce(l.id, d.id) AS doc_id, l.rl, d.rd
-        FROM lex l FULL OUTER JOIN den d ON l.id = d.id
-    )
-    SELECT doc_id,
-           round(coalesce(CAST(1.0 AS DOUBLE) / (60 + rl), 0)
-                 + coalesce(CAST(1.0 AS DOUBLE) / (60 + rd), 0), 6)
-               AS rrf_score,
-           rl AS lexical_rank, rd AS dense_rank
-    FROM f
-    ORDER BY rrf_score DESC, doc_id LIMIT 10
-"""
-
-@q("pipe_hybrid_rrf", _HYBRID_RRF_ORACLE)
-def pipe_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hybrid retrieval — Reciprocal Rank Fusion of the BM25 lexical
-    top-10 and the dense cosine top-10 (operators/pipeline.
-    hybrid_rrf_topk; Cormack 2009, the standard RAG retrieval pattern);
-    doc_id and vec_id are aligned in the driver tables. The oracle fuses
-    the two branch oracles verbatim."""
-    from bgpexplorer_spark.operators.pipeline import hybrid_rrf_topk
-
-    docs = load_table(spark, sf_dir, "documents")
-    emb = load_table(spark, sf_dir, "embeddings")
-    qv = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
-    return hybrid_rrf_topk(
-        docs, emb, ["spark", "window", "hash"], qv, k=10, pool=10
-    )
-
-_PQ_ORACLE = """
-    WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS a FROM embeddings),
-    ss AS (SELECT unnest(range(0, 4)) AS s),
-    sub AS (
-        SELECT vec_id, s, a[s*16 + 1 : s*16 + 16] AS sv FROM e, ss
-    ),
-    cb AS (SELECT s, vec_id AS code, sv AS cv FROM sub WHERE vec_id < 8),
-    dists AS (
-        SELECT t.vec_id, t.s, c.code,
-               list_sum([ (t.sv[i] - c.cv[i]) * (t.sv[i] - c.cv[i])
-                          for i in range(1, 17) ]) AS d
-        FROM sub t JOIN cb c USING (s)
-    ),
-    assigned AS (
-        SELECT vec_id, s, code FROM (
-            SELECT *, row_number() OVER (PARTITION BY vec_id, s
-                                         ORDER BY d, code) AS rn
-            FROM dists
-        ) WHERE rn = 1
-    ),
-    qsub AS (SELECT s, sv AS qsv FROM sub WHERE vec_id = 0),
-    adc AS (
-        SELECT a.vec_id,
-               round(list_sum([ (q.qsv[i] - c.cv[i]) * (q.qsv[i] - c.cv[i])
-                                for i in range(1, 17) ]), 6) AS pd
-        FROM assigned a
-        JOIN cb c ON a.s = c.s AND a.code = c.code
-        JOIN qsub q ON q.s = a.s
-    )
-    SELECT vec_id, round(sum(pd), 4) AS approx_dist
-    FROM adc GROUP BY vec_id
-    ORDER BY approx_dist, vec_id LIMIT 10
-"""
-
-@q("sim_pq_topk", _PQ_ORACLE)
-def sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Product-quantization ADC search (operators/similarity.pq_encode +
-    pq_topk): 64-dim vectors → 4 sub-codes from deterministic 8-entry
-    codebooks, per-query literal distance LUT, top-10 by approximate L2
-    vs the vec_id=0 query."""
-    from bgpexplorer_spark.operators.similarity import pq_topk
-    from bgpexplorer_spark.sources.tables import fan_out
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    qv = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
-    # fan_out: the timed region re-encodes (argmin HOF per subvector) —
-    # serial on the 1-split local scan, embarrassingly parallel fanned
-    return pq_topk(fan_out(emb, spark, key="vec_id", min_bytes=512 << 10), qv, k=10, m=4, codes=8, dim=64)
 
 
 @q(
@@ -6160,108 +3495,6 @@ def an_peer_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     st = current_state(_origins_history(spark, sf_dir))
     return peer_agreement(st)
-
-
-@q(
-    "pipe_deterministic_shuffle",
-    """
-    SELECT doc_id, md5('ep1:' || CAST(doc_id AS VARCHAR)) AS rank,
-           CAST(CAST((
-               (strpos('0123456789abcdef', substring(md5('ep1:' || CAST(doc_id AS VARCHAR)), 1, 1)) - 1) * 268435456 +
-               (strpos('0123456789abcdef', substring(md5('ep1:' || CAST(doc_id AS VARCHAR)), 2, 1)) - 1) * 16777216 +
-               (strpos('0123456789abcdef', substring(md5('ep1:' || CAST(doc_id AS VARCHAR)), 3, 1)) - 1) * 1048576 +
-               (strpos('0123456789abcdef', substring(md5('ep1:' || CAST(doc_id AS VARCHAR)), 4, 1)) - 1) * 65536 +
-               (strpos('0123456789abcdef', substring(md5('ep1:' || CAST(doc_id AS VARCHAR)), 5, 1)) - 1) * 4096 +
-               (strpos('0123456789abcdef', substring(md5('ep1:' || CAST(doc_id AS VARCHAR)), 6, 1)) - 1) * 256 +
-               (strpos('0123456789abcdef', substring(md5('ep1:' || CAST(doc_id AS VARCHAR)), 7, 1)) - 1) * 16 +
-               (strpos('0123456789abcdef', substring(md5('ep1:' || CAST(doc_id AS VARCHAR)), 8, 1)) - 1)
-           ) AS BIGINT) % 16 AS INTEGER) AS shard
-    FROM documents
-    """,
-)
-def pipe_deterministic_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Reproducible epoch ordering
-    (operators/pipeline.deterministic_shuffle): salt-keyed md5 rank +
-    shard assignment, pure projection."""
-    from bgpexplorer_spark.operators.pipeline import deterministic_shuffle
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    return deterministic_shuffle(docs, "doc_id", salt="ep1", n_shards=16)
-
-
-def _ivfpq_sql(k: int = 10, nprobe: int = 2, n_centroids: int = 8) -> str:
-    def cos(a: str, b: str) -> str:
-        return (
-            f"(list_sum([{a}[i] * {b}[i] for i in range(1, 65)]) / "
-            f"(sqrt(list_sum([{a}[i] * {a}[i] for i in range(1, 65)])) * "
-            f"sqrt(list_sum([{b}[i] * {b}[i] for i in range(1, 65)]))))"
-        )
-
-    return f"""
-    WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS a FROM embeddings),
-    c AS (SELECT vec_id AS cid, a AS cvec FROM v WHERE vec_id < {n_centroids}),
-    qv AS (SELECT a AS q FROM v WHERE vec_id = 0),
-    probes AS (
-        SELECT cid FROM c, qv ORDER BY {cos('cvec', 'q')} DESC, cid LIMIT {nprobe}
-    ),
-    ivf AS (
-        SELECT vec_id, cid FROM (
-            SELECT v.vec_id, c.cid,
-                   row_number() OVER (
-                       PARTITION BY v.vec_id
-                       ORDER BY {cos('a', 'cvec')} DESC, c.cid DESC) AS rk
-            FROM v CROSS JOIN c
-        ) WHERE rk = 1
-    ),
-    ss AS (SELECT unnest(range(0, 4)) AS s),
-    sub AS (SELECT vec_id, s, a[s*16 + 1 : s*16 + 16] AS sv FROM v, ss),
-    cb AS (SELECT s, vec_id AS code, sv AS cv FROM sub WHERE vec_id < 8),
-    dists AS (
-        SELECT t.vec_id, t.s, c.code,
-               list_sum([ (t.sv[i] - c.cv[i]) * (t.sv[i] - c.cv[i])
-                          for i in range(1, 17) ]) AS d
-        FROM sub t JOIN cb c USING (s)
-    ),
-    pq_assigned AS (
-        SELECT vec_id, s, code FROM (
-            SELECT *, row_number() OVER (PARTITION BY vec_id, s
-                                         ORDER BY d, code) AS rn
-            FROM dists
-        ) WHERE rn = 1
-    ),
-    qsub AS (SELECT s, sv AS qsv FROM sub WHERE vec_id = 0),
-    adc AS (
-        SELECT a.vec_id,
-               round(list_sum([ (q.qsv[i] - c.cv[i]) * (q.qsv[i] - c.cv[i])
-                                for i in range(1, 17) ]), 6) AS pd
-        FROM pq_assigned a
-        JOIN cb c ON a.s = c.s AND a.code = c.code
-        JOIN qsub q ON q.s = a.s
-        WHERE a.vec_id IN (SELECT vec_id FROM ivf
-                           WHERE cid IN (SELECT cid FROM probes))
-    )
-    SELECT vec_id, round(sum(pd), 4) AS approx_dist
-    FROM adc GROUP BY vec_id
-    ORDER BY approx_dist, vec_id LIMIT {k}
-    """
-
-@q("sim_ivfpq_topk", _ivfpq_sql())
-def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-PQ composition (operators/similarity.ivfpq_topk): nprobe
-    coarse cells, ADC over the probed cells' PQ codes only — the
-    FAISS-scale configuration, both index tables persisted."""
-    from bgpexplorer_spark.operators.similarity import (
-        ivf_assign, ivf_centroids, ivfpq_topk, pq_codebooks, pq_encode,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    qv = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
-    assigned = ivf_assign(emb, ivf_centroids(emb, 8)).persist()
-    encoded = pq_encode(emb, pq_codebooks(emb, 4, 8, 64)).persist()
-    return ivfpq_topk(
-        emb, qv, k=10, nprobe=2, n_centroids=8, m=4, codes=8, dim=64,
-        assigned=assigned, encoded=encoded,
-    )
 
 
 @q(
@@ -6477,97 +3710,6 @@ def an_origin_footprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return origin_footprint(current_state(_origins_history(spark, sf_dir)))
 
-@q(
-    "pipe_corpus_report",
-    f"""
-    WITH per AS (
-        SELECT md5(text) AS h, len({_duck_tokens('text')}) AS nt,
-               length(text) AS nc, lang
-        FROM documents
-    ),
-    totals AS (
-        SELECT count(*) AS n_docs,
-               CAST(sum(nt) AS BIGINT) AS n_tokens,
-               CAST(sum(nc) AS BIGINT) AS n_chars,
-               round(1 - count(DISTINCT h) / count(*), 4) AS dup_frac,
-               CAST(min(nt) AS INTEGER) AS min_tokens,
-               round(avg(nt), 2) AS avg_tokens,
-               CAST(max(nt) AS INTEGER) AS max_tokens
-        FROM per
-    ),
-    top AS (
-        SELECT lang AS top_lang, count(*) AS c
-        FROM per GROUP BY lang ORDER BY c DESC, lang LIMIT 1
-    )
-    SELECT t.*, top.top_lang, round(top.c / t.n_docs, 4) AS top_lang_share
-    FROM totals t, top
-    """,
-)
-def pipe_corpus_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dataset-card summary (operators/pipeline.corpus_report): one-row
-    doc/token/char totals, dup fraction, length stats, dominant lang."""
-    from bgpexplorer_spark.operators.pipeline import corpus_report
-
-    return corpus_report(load_table(spark, sf_dir, "documents"))
-
-
-def _fuzzy_decon_sql(k: int = 16, bands: int = 4) -> str:
-    """Roles-swapped incremental oracle: doc_id % 11 = 0 plays the eval
-    benchmark, the rest is the training corpus being cleaned."""
-    from bgpexplorer_spark.operators.dedup import MINHASH_P, _minhash_params
-
-    params = _minhash_params(k)
-    h = _duck_hash32("sh")
-    mins = ", ".join(
-        f"min((h * {a} + {b}) % {MINHASH_P}) AS m{i}"
-        for i, (a, b) in enumerate(params)
-    )
-    rpb = k // bands
-    band_rows = " UNION ALL ".join(
-        f"SELECT doc_id, {bnd} AS band, md5("
-        + " || ',' || ".join(f"CAST(m{bnd * rpb + r} AS VARCHAR)" for r in range(rpb))
-        + ") AS bucket FROM sigs"
-        for bnd in range(bands)
-    )
-    return f"""
-    WITH toks AS (
-        SELECT doc_id, unnest(list_distinct(
-            [l[i] || ' ' || l[i+1] || ' ' || l[i+2] for i in range(1, len(l) - 1)]
-        )) AS sh
-        FROM (SELECT doc_id, {_duck_tokens('text')} AS l FROM documents)
-    ),
-    hashes AS (SELECT doc_id, {h} AS h FROM toks),
-    sigs AS (SELECT doc_id, {mins} FROM hashes GROUP BY doc_id),
-    buckets AS ({band_rows}),
-    eval_b AS (SELECT DISTINCT band, bucket FROM buckets WHERE doc_id % 11 = 0),
-    near AS (
-        SELECT DISTINCT b.doc_id FROM buckets b
-        JOIN eval_b e USING (band, bucket)
-        WHERE b.doc_id % 11 <> 0
-    ),
-    eval_h AS (SELECT DISTINCT md5(text) AS h FROM documents WHERE doc_id % 11 = 0)
-    SELECT d.doc_id,
-           (eh.h IS NOT NULL) AS exact_hit,
-           (nr.doc_id IS NOT NULL) AS near_hit,
-           (eh.h IS NULL AND nr.doc_id IS NULL) AS keep
-    FROM documents d
-    LEFT JOIN eval_h eh ON md5(d.text) = eh.h
-    LEFT JOIN near nr ON d.doc_id = nr.doc_id
-    WHERE d.doc_id % 11 <> 0
-    """
-
-@q("pipe_decontaminate_fuzzy", _fuzzy_decon_sql())
-def pipe_decontaminate_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fuzzy decontamination (operators/pipeline.decontaminate_fuzzy):
-    the corpus flagged against the eval split's exact+LSH index."""
-    from bgpexplorer_spark.operators.pipeline import decontaminate_fuzzy
-    from bgpexplorer_spark.sources.tables import fan_out
-
-    docs = fan_out(load_table(spark, sf_dir, "documents"), spark, key="doc_id")
-    ev = docs.filter(F.col("doc_id") % 11 == 0)
-    corpus = docs.filter(F.col("doc_id") % 11 != 0)
-    return decontaminate_fuzzy(corpus, ev, k=16, n=3, bands=4)
-
 
 # v6 martian fixture: event_id % 8 picks the RFC 6890 block (7 = clean
 # global space, filtered out); the address embeds user/event offset
@@ -6726,118 +3868,6 @@ def an_deaggregation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @q(
-    "pipe_chunk_documents",
-    """
-    WITH ch AS (
-        SELECT doc_id, text,
-               CAST(s AS INTEGER) AS chunk_start,
-               CAST((s - 1) / 160 AS INTEGER) AS chunk_idx
-        FROM documents,
-             LATERAL unnest(range(1, greatest(length(text), 1) + 1, 160))
-                 AS t(s)
-    )
-    SELECT doc_id, chunk_idx, chunk_start,
-           substr(text, chunk_start, 200) AS chunk_text,
-           CAST(count(*) OVER (PARTITION BY doc_id) AS INTEGER) AS n_chunks
-    FROM ch
-    """,
-)
-def pipe_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RAG-prep chunker (operators/pipeline.chunk_documents): fixed-size
-    overlapping character chunks with provenance offsets; pure map."""
-    from bgpexplorer_spark.operators.pipeline import chunk_documents
-
-    docs = load_table(spark, sf_dir, "documents")
-    return chunk_documents(docs, size=200, overlap=40)
-
-
-@q(
-    "text_normalize",
-    r"""
-    WITH noisy AS (
-        SELECT doc_id,
-               ' ' || substr(text, 1, 40) || chr(9) || chr(9) || 'x'
-                   || chr(7) || repeat(chr(10), 4)
-                   || substr(text, 41, length(text)) || '  ' AS raw
-        FROM documents
-    )
-    SELECT doc_id,
-           trim(regexp_replace(regexp_replace(regexp_replace(
-               regexp_replace(raw,
-                   '[\x00-\x08\x0B\x0C\x0E-\x1F\x7F]', '', 'g'),
-                   '[ \t]+', ' ', 'g'),
-                   ' ?\n ?', chr(10), 'g'),
-                   '\n{3,}', chr(10) || chr(10), 'g')) AS clean
-    FROM noisy
-    """,
-)
-def text_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pre-tokenization normalization (operators/text.normalize_text):
-    control-char strip + whitespace collapse + paragraph squeeze, run
-    over a deterministically-dirtied copy of the corpus so the oracle
-    exercises every rule (the shipped text is already clean)."""
-    from bgpexplorer_spark.operators.text import normalize_text
-
-    docs = load_table(spark, sf_dir, "documents")
-    tail = F.expr("substring(text, 41, length(text))")
-    noisy = F.concat(
-        F.lit(" "), F.substring(F.col("text"), 1, 40),
-        F.lit("\t\tx\x07\n\n\n\n"), tail, F.lit("  "),
-    )
-    return docs.select("doc_id", normalize_text(noisy).alias("clean"))
-
-
-# ---------------------------------------------------------------------------
-# Round-6 additions: model-based quality filtering, perceptual image
-# dedup, audio feature extraction, sub-prefix hijack + convergence
-# analytics.
-# ---------------------------------------------------------------------------
-
-_CLS_BUCKETS = 256
-
-
-def _classifier_sql() -> str:
-    h = _duck_hash32("t")
-    w = f"((({h} % {_CLS_BUCKETS}) * 2654435761) % 1000003) / 1000003.0 - 0.5"
-    toks = _duck_tokens("lower(text)")
-    return f"""
-    SELECT doc_id,
-           round(margin, 4) + 0.0 AS margin,
-           margin > 0 AS keep
-    FROM (
-        SELECT doc_id,
-               0.01 + list_reduce(
-                   list_prepend(CAST(0 AS DOUBLE), [{w} for t in {toks}]),
-                   (a, b) -> a + b
-               ) / greatest(len({toks}), 1) AS margin
-        FROM documents
-    )
-    """
-
-
-@q("pipe_quality_classifier", _classifier_sql())
-def pipe_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Model-based quality filter (operators/text.hashed_classifier_margin):
-    a trained linear classifier over hashed bag-of-words applied as ONE
-    literal lookup table + token fold — the fasttext/CCNet filtering
-    stage, fully JVM-side. The oracle replays the identical fold (same
-    token order, same double arithmetic) so the margins match exactly."""
-    from bgpexplorer_spark.operators.text import (
-        classifier_weights, hashed_classifier_margin,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    margin = hashed_classifier_margin(
-        F.col("text"), classifier_weights(_CLS_BUCKETS), bias=0.01
-    )
-    return docs.select(
-        "doc_id",
-        (F.round(margin, 4) + F.lit(0.0)).alias("margin"),
-        (margin > 0).alias("keep"),
-    )
-
-
-@q(
     "an_subprefix_hijack",
     f"""
     WITH {_ORIGIN_HIST_CTES},
@@ -6931,681 +3961,6 @@ def an_convergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     return convergence_report(hist, gap_sec=300)
 
 
-# Perceptual image hash — 16x16 grayscale PGM fixtures whose pixels are a
-# pure formula of doc_id: base = ((doc_id%20)*9 + 3k) % 240 plus a
-# per-doc uniform brightness shift doc_id%5. aHash thresholds at the
-# image mean, so the shift cancels and docs sharing doc_id%20 land in
-# one perceptual group while their md5s all differ — exactly the
-# near-dup class byte hashing misses. All means are integer sums / 4 or
-# /256 (exact in float64), so DuckDB recomputes the bits analytically.
-_PHASH_CELL = (
-    "(p[((b // 8) * 2) * 16 + (b % 8) * 2 + 1]"
-    " + p[((b // 8) * 2) * 16 + (b % 8) * 2 + 2]"
-    " + p[((b // 8) * 2 + 1) * 16 + (b % 8) * 2 + 1]"
-    " + p[((b // 8) * 2 + 1) * 16 + (b % 8) * 2 + 2]) / 4.0"
-)
-
-def _phash_media(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The Spark twin of _PHASH_HASH_CTES's pixel formula: one 16x16 PGM
-    per document, base ((doc_id%20)*9 + 3k) % 240 plus the doc_id%5
-    brightness shift — shared by both perceptual-hash queries."""
-    from bgpexplorer_spark.operators.multimodal import MEDIA_SCHEMA
-
-    ids = [
-        r["doc_id"]
-        for r in load_table(spark, sf_dir, "documents").select("doc_id").collect()
-    ]
-    rows = []
-    for d in ids:
-        px = bytes(((d % 20) * 9 + 3 * k) % 240 + d % 5 for k in range(256))
-        rows.append((int(d), "image", b"P5\n16 16\n255\n" + px, None))
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-
-# px: the shared analytic 16x16 pixel recomputation; g/h: the aHash
-# bits on top of it (shared by the fingerprint and near-dup oracles)
-_PHASH_PX_CTE = """px AS (
-        SELECT doc_id,
-               [ ((doc_id % 20) * 9 + 3 * k) % 240 + doc_id % 5
-                 for k in generate_series(0, 255) ] AS p
-        FROM documents
-    )"""
-
-_PHASH_HASH_CTES = f"""{_PHASH_PX_CTE},
-    g AS (SELECT doc_id, p, list_sum(p) / 256.0 AS gmean FROM px),
-    h AS (
-        SELECT doc_id,
-               array_to_string([
-                   CASE WHEN {_PHASH_CELL} > gmean THEN '1' ELSE '0' END
-                   for b in generate_series(0, 63)], '') AS ahash
-        FROM g
-    )"""
-
-_PHASH_ORACLE = f"""
-    WITH {_PHASH_HASH_CTES}
-    SELECT doc_id, ahash,
-           CAST(list_reduce(
-               list_prepend(0, [CASE WHEN substring(ahash, i, 1) = '1'
-                                     THEN 1 ELSE 0 END
-                                for i in generate_series(1, 16)]),
-               (a, b) -> a * 2 + b) AS INTEGER) AS band,
-           min(doc_id) OVER (PARTITION BY ahash) AS canonical_id,
-           count(*) OVER (PARTITION BY ahash) AS group_size
-    FROM h
-"""
-
-
-@q("multimodal_image_phash", _PHASH_ORACLE)
-def multimodal_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Perceptual image dedup (operators/multimodal.ahash_media): REAL
-    PGM decode → grayscale → 8x8 block means → threshold-at-mean bits,
-    then exact grouping on the 64-bit pattern. Brightness-shifted copies
-    hash identically; the oracle recomputes every bit analytically."""
-    from bgpexplorer_spark.operators.multimodal import ahash_media
-
-    media = _phash_media(spark, sf_dir)
-    h = ahash_media(media, grid=8)
-    w = Window.partitionBy("ahash")
-    return h.select(
-        F.col("media_id").alias("doc_id"), "ahash", "band",
-        F.min("media_id").over(w).alias("canonical_id"),
-        F.count(F.lit(1)).over(w).alias("group_size"),
-    )
-
-
-# Audio energy hash oracle: 64 equal frames over the analytic samples,
-# integer-exact mean-square per frame (16-bit squares sum < 2^53), the
-# DOUBLE median (both engines average the middle pair) as threshold.
-_AUDIO_HASH_ORACLE = """
-    WITH s AS (
-        SELECT doc_id,
-               [ ((doc_id * 37 + k * 97) % 2049) - 1024
-                 for k in generate_series(0, 800 + (doc_id % 5) * 100 - 1)
-               ] AS smp
-        FROM documents
-    ),
-    f AS (SELECT doc_id, smp, len(smp) // 64 AS flen FROM s),
-    e AS (
-        SELECT doc_id,
-               [ list_sum([CAST(smp[b * flen + j] * smp[b * flen + j]
-                                AS DOUBLE)
-                           for j in generate_series(1, flen)]) / flen
-                 for b in generate_series(0, 63) ] AS ms
-        FROM f
-    ),
-    m AS (SELECT doc_id, ms, list_aggregate(ms, 'median') AS med FROM e),
-    h AS (
-        SELECT doc_id,
-               array_to_string(
-                   [CASE WHEN ms[b] > med THEN '1' ELSE '0' END
-                    for b in generate_series(1, 64)], '') AS ahash
-        FROM m
-    )
-    SELECT doc_id, ahash,
-           CAST(list_reduce(
-               list_prepend(0, [CASE WHEN substring(ahash, i, 1) = '1'
-                                     THEN 1 ELSE 0 END
-                                for i in generate_series(1, 16)]),
-               (a, b) -> a * 2 + b) AS INTEGER) AS band,
-           min(doc_id) OVER (PARTITION BY ahash) AS canonical_id,
-           count(*) OVER (PARTITION BY ahash) AS group_size
-    FROM h
-"""
-
-@q("multimodal_audio_hash", _AUDIO_HASH_ORACLE)
-def multimodal_audio_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gain-invariant audio fingerprint
-    (operators/multimodal.audio_energy_hash): REAL WAV decode → mono →
-    64 frame mean-square energies → strict-> median threshold, grouped
-    on the 64-bit pattern; the oracle recomputes every frame energy and
-    bit analytically over the same sample formulas."""
-    from bgpexplorer_spark.operators.multimodal import audio_energy_hash
-
-    media = _audio_media(spark, sf_dir)
-    h = audio_energy_hash(media, frames=64)
-    w = Window.partitionBy("ahash")
-    return h.select(
-        F.col("media_id").alias("doc_id"), "ahash", "band",
-        F.min("media_id").over(w).alias("canonical_id"),
-        F.count(F.lit(1)).over(w).alias("group_size"),
-    )
-
-# DCT pHash oracle: the full orthonormal 16x16 DCT-II recomputed in SQL
-# over the same analytic pixels — coefficient (u=b//8, v=b%8) pairs u
-# with the pixel row y=k//16 and v with the column x=k%16; both engines
-# round coefficients to 6 decimals before the AC-median threshold so the
-# ~1e-13 summation-order noise between BLAS and the sequential list_sum
-# can never flip a bit.
-_DCT_PHASH_ORACLE = f"""
-    WITH {_PHASH_PX_CTE},
-    c AS (
-        SELECT doc_id,
-               [ round(
-                   (CASE WHEN (b // 8) = 0 THEN sqrt(1.0/16)
-                         ELSE sqrt(2.0/16) END) *
-                   (CASE WHEN (b % 8) = 0 THEN sqrt(1.0/16)
-                         ELSE sqrt(2.0/16) END) *
-                   list_sum([ p[k + 1]
-                              * cos(pi() * (2 * (k // 16) + 1) * (b // 8) / 32.0)
-                              * cos(pi() * (2 * (k % 16) + 1) * (b % 8) / 32.0)
-                              for k in generate_series(0, 255) ]), 6)
-                 for b in generate_series(0, 63) ] AS v
-        FROM px
-    ),
-    m AS (SELECT doc_id, v,
-                 list_aggregate(v[2:], 'median') AS med FROM c),
-    h AS (
-        SELECT doc_id,
-               '1' || array_to_string(
-                   [CASE WHEN v[b + 1] > med THEN '1' ELSE '0' END
-                    for b in generate_series(1, 63)], '') AS phash
-        FROM m
-    )
-    SELECT doc_id, phash,
-           CAST(list_reduce(
-               list_prepend(0, [CASE WHEN substring(phash, i, 1) = '1'
-                                     THEN 1 ELSE 0 END
-                                for i in generate_series(1, 16)]),
-               (a, b) -> a * 2 + b) AS INTEGER) AS band,
-           min(doc_id) OVER (PARTITION BY phash) AS canonical_id,
-           count(*) OVER (PARTITION BY phash) AS group_size
-    FROM h
-"""
-
-@q("multimodal_dct_phash", _DCT_PHASH_ORACLE)
-def multimodal_dct_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DCT perceptual hash (operators/multimodal.dct_phash_media —
-    classic pHash): real PGM decode → grayscale → orthonormal 16x16
-    DCT-II → top-left 8x8 block → strict-> AC-median threshold (constant
-    DC slot), then exact grouping on the 64-bit pattern. The oracle
-    recomputes every DCT coefficient and bit analytically in SQL."""
-    from bgpexplorer_spark.operators.multimodal import dct_phash_media
-
-    media = _phash_media(spark, sf_dir)
-    h = dct_phash_media(media, dct_grid=16, out=8)
-    w = Window.partitionBy("ahash")
-    return h.select(
-        F.col("media_id").alias("doc_id"),
-        F.col("ahash").alias("phash"),
-        "band",
-        F.min("media_id").over(w).alias("canonical_id"),
-        F.count(F.lit(1)).over(w).alias("group_size"),
-    )
-
-# Audio features — 8 kHz mono 16-bit WAV fixtures, samples
-# s_k = ((doc_id*37 + k*97) % 2049) - 1024 over n = 800 + (doc_id%5)*100
-# frames: sums of squares stay integer-valued in float64 (exact), so the
-# RMS/ZCR are bit-reproducible analytically.
-_AUDIO_ORACLE = """
-    WITH s AS (
-        SELECT doc_id,
-               [ ((doc_id * 37 + k * 97) % 2049) - 1024
-                 for k in generate_series(0, 800 + (doc_id % 5) * 100 - 1)
-               ] AS smp
-        FROM documents
-    )
-    SELECT doc_id,
-           CAST(8000 AS INTEGER) AS sample_rate,
-           CAST(1 AS INTEGER) AS channels,
-           CAST(len(smp) AS BIGINT) AS n_samples,
-           CAST(len(smp) * 1000 // 8000 AS INTEGER) AS duration_ms,
-           round(sqrt(list_sum([CAST(x * x AS DOUBLE) for x in smp])
-                      / len(smp)), 4) AS rms,
-           CAST(list_max([abs(x) for x in smp]) AS INTEGER) AS peak,
-           CAST(len([k for k in generate_series(1, len(smp) - 1)
-                     if (smp[k] >= 0) <> (smp[k + 1] >= 0)]) AS BIGINT)
-               AS zero_crossings
-    FROM s
-"""
-
-
-def _audio_media(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The Spark twin of the audio oracles' sample formula: one 8 kHz
-    mono 16-bit WAV per document, s_k = ((doc_id*37 + k*97) % 2049) -
-    1024 over n = 800 + (doc_id%5)*100 samples — shared by the
-    feature-extract and fingerprint queries."""
-    import io as _io
-    import wave as _wave
-
-    import numpy as np
-
-    from bgpexplorer_spark.operators.multimodal import MEDIA_SCHEMA
-
-    ids = [
-        r["doc_id"]
-        for r in load_table(spark, sf_dir, "documents").select("doc_id").collect()
-    ]
-    rows = []
-    for d in ids:
-        n = 800 + (d % 5) * 100
-        smp = ((d * 37 + np.arange(n) * 97) % 2049 - 1024).astype(np.int16)
-        buf = _io.BytesIO()
-        with _wave.open(buf, "wb") as f:
-            f.setnchannels(1)
-            f.setsampwidth(2)
-            f.setframerate(8000)
-            f.writeframes(smp.tobytes())
-        rows.append((int(d), "audio", buf.getvalue(), None))
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-
-@q("multimodal_audio_features", _AUDIO_ORACLE)
-def multimodal_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audio feature extraction (operators/multimodal.audio_features):
-    REAL RIFF/WAVE decode through the stdlib wave module inside Arrow
-    batches → RMS / peak / zero-crossing-rate per clip, the
-    feature-extract stage of an audio training pipeline."""
-    from bgpexplorer_spark.operators.multimodal import audio_features
-
-    media = _audio_media(spark, sf_dir)
-    return audio_features(media).select(
-        F.col("media_id").alias("doc_id"), "sample_rate", "channels",
-        "n_samples", "duration_ms", "rms", "peak", "zero_crossings",
-    )
-
-
-def _knn_graph_sql(k: int = 5, n_planes: int = 6) -> str:
-    return f"""
-    WITH b AS ({_lsh_bucket_sql(n_planes)}),
-    v AS (SELECT vec_id, embedding::DOUBLE[] AS a FROM embeddings),
-    pairs AS (
-        SELECT x.vec_id AS src, y.vec_id AS dst,
-               round(
-                   list_sum([va.a[i+1] * vb.a[i+1] for i in range(0, 64)])
-                   / (sqrt(list_sum([va.a[i+1] * va.a[i+1]
-                                     for i in range(0, 64)]))
-                      * sqrt(list_sum([vb.a[i+1] * vb.a[i+1]
-                                       for i in range(0, 64)]))),
-                   4) + 0.0 AS cos_sim
-        FROM b x JOIN b y ON x.bucket = y.bucket AND x.vec_id <> y.vec_id
-        JOIN v va ON va.vec_id = x.vec_id
-        JOIN v vb ON vb.vec_id = y.vec_id
-    )
-    SELECT src, dst, cos_sim, rank FROM (
-        SELECT src, dst, cos_sim,
-               CAST(row_number() OVER (PARTITION BY src
-                    ORDER BY cos_sim DESC, dst) AS INTEGER) AS rank
-        FROM pairs
-    ) WHERE rank <= {k}
-    """
-
-
-@q("sim_knn_graph", _knn_graph_sql())
-def sim_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Approximate k-NN graph (operators/similarity.knn_graph): LSH
-    bucket equi-join candidates → exact cosine → per-source top-k — the
-    SemDeDup/diversity-sampling building block. The oracle replays the
-    same buckets, cosines, and round-before-rank tie order."""
-    from bgpexplorer_spark.operators.similarity import knn_graph
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    return knn_graph(emb, k=5, n_planes=6)
-
-
-def _knn_capped_sql(k: int = 5, n_planes: int = 6, max_bucket: int = 20) -> str:
-    return f"""
-    WITH b_all AS ({_lsh_bucket_sql(n_planes)}),
-    b AS (
-        SELECT vec_id, bucket FROM b_all
-        WHERE bucket IN (SELECT bucket FROM b_all
-                         GROUP BY bucket HAVING count(*) <= {max_bucket})
-    ),
-    v AS (SELECT vec_id, embedding::DOUBLE[] AS a FROM embeddings),
-    pairs AS (
-        SELECT x.vec_id AS src, y.vec_id AS dst,
-               round(
-                   list_sum([va.a[i+1] * vb.a[i+1] for i in range(0, 64)])
-                   / (sqrt(list_sum([va.a[i+1] * va.a[i+1]
-                                     for i in range(0, 64)]))
-                      * sqrt(list_sum([vb.a[i+1] * vb.a[i+1]
-                                       for i in range(0, 64)]))),
-                   4) + 0.0 AS cos_sim
-        FROM b x JOIN b y ON x.bucket = y.bucket AND x.vec_id <> y.vec_id
-        JOIN v va ON va.vec_id = x.vec_id
-        JOIN v vb ON vb.vec_id = y.vec_id
-    )
-    SELECT src, dst, cos_sim, rank FROM (
-        SELECT src, dst, cos_sim,
-               CAST(row_number() OVER (PARTITION BY src
-                    ORDER BY cos_sim DESC, dst) AS INTEGER) AS rank
-        FROM pairs
-    ) WHERE rank <= {k}
-    """
-
-
-_EMB_COUNT_CACHE: dict[str, int] = {}
-
-
-def _emb_count(spark: SparkSession, sf_dir: str) -> int:
-    """Embeddings row count, cached per sf_dir: the adaptive-planes
-    choice needs it at query-BUILD time, and bench invokes each builder
-    twice — without the cache every invocation pays an extra full-table
-    scan inside the timed section (r10 review)."""
-    if sf_dir not in _EMB_COUNT_CACHE:
-        _EMB_COUNT_CACHE[sf_dir] = load_table(spark, sf_dir, "embeddings").count()
-    return _EMB_COUNT_CACHE[sf_dir]
-
-
-def _adaptive_planes(n_vecs: int, cap: int = 20, floor_planes: int = 6) -> int:
-    """The production hyperplane-count recipe: bucket count must TRACK
-    the corpus (2^planes ≈ n/cap, i.e. planes = ceil(log2(n/cap))) or a
-    fixed cap sheds everything as the corpus grows — at 50k vectors over
-    a fixed 2^6 space every bucket is over-cap and the capped graph
-    degenerates to near-empty (measured at sf1: 6 surviving rows),
-    while UNCAPPED the same fixed space is quadratic (277 s, ratio 128,
-    the one superlinear flag in the first r10 bench). At the sf0.01
-    oracle fixture (500 vecs) this resolves to the floor of 6 planes —
-    exactly the constant the DuckDB oracle replays — so correctness
-    verification is unchanged while the bench exercises the scaling
-    recipe."""
-    import math
-
-    return max(floor_planes, math.ceil(math.log2(max(n_vecs, 1) / cap)))
-
-
-def _fixture_planes() -> int:
-    """Plane count for the LAZY knn oracles, derived from the embeddings
-    row count of the fixture dir the oracle will run against
-    (``SPARK_GRAFT_SF001_DIR``, default the driver's sf0.01) via the
-    SAME _adaptive_planes recipe the Spark builders use — so the oracle
-    and engine agree for ANY fixture size, not just ones that resolve to
-    the 6-plane floor (r10 review: a hard-coded 6 made a big-fixture
-    selfcheck fail by construction and look like an engine bug). The
-    count is a parquet-footer read — no Spark, no scan."""
-    import os
-
-    import pyarrow.parquet as pq
-
-    sf_dir = os.environ.get("SPARK_GRAFT_SF001_DIR", "/root/testdata/sf0.01")
-    n = pq.ParquetFile(f"{sf_dir}/embeddings.parquet").metadata.num_rows
-    return _adaptive_planes(n)
-
-
-@q("sim_knn_capped", lambda: _knn_capped_sql(n_planes=_fixture_planes()))
-def sim_knn_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The embedding-side mega-bucket shed as a VERIFIED contract
-    (operators/similarity.knn_graph(max_bucket=…) →
-    _shed_mega_buckets): real embedding spaces are anisotropic — sign
-    patterns correlate, so hyperplane-bucket occupancy is far more
-    skewed than the 2^planes uniform ideal, and a mega-bucket's
-    in-bucket self-join grows quadratically in its size. The cap
-    bounds the candidate join at buckets × cap² via the same
-    broadcast-anti-join shape as dedup.lsh_buckets(max_bucket=…); shed
-    vectors join the documented no-edge residue (re-runnable through
-    cosine_topk). The oracle replicates the occupancy filter over the
-    identical bucket rows, and at sf0.01 the cap demonstrably bites
-    (7 of 59 buckets exceed 20 docs, top occupancy 46), so the recall
-    trade is part of the verified contract — the result differs from
-    sim_knn_graph."""
-    from bgpexplorer_spark.operators.similarity import knn_graph
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    n = _emb_count(spark, sf_dir)
-    return knn_graph(
-        emb, k=5, n_planes=_adaptive_planes(n), max_bucket=20, approx_n=n,
-    )
-
-
-def _knn_density_sql(k: int = 5, n_planes: int = 6, max_bucket: int = 20) -> str:
-    # composes the capped-graph oracle verbatim — ONE source of truth
-    # for the shed/cosine/rank chain (r10 review: a duplicated CTE body
-    # would silently diverge on the next tweak)
-    return f"""
-    WITH g AS ({_knn_capped_sql(k, n_planes, max_bucket)})
-    SELECT src AS vec_id, CAST(count(*) AS INTEGER) AS k_found,
-           floor((10.0 * sum(CAST(round(cos_sim * 10000) AS BIGINT))
-                  / count(*) + 5.0) / 10.0) / 10000.0 AS density
-    FROM g GROUP BY src
-    """
-
-
-@q("sim_knn_density", lambda: _knn_density_sql(n_planes=_fixture_planes()))
-def sim_knn_density(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-vector kNN-density outlier score
-    (operators/similarity.knn_density): mean cosine to the ≤5
-    approximate nearest neighbors from the CAPPED LSH kNN graph — the
-    signal SemDeDup-style curation thresholds on (low density =
-    outlier/junk; within a dup cluster, LOW-density members are the
-    diverse representatives to keep). The mean is exact integer
-    arithmetic on the 1e4-scaled rounded cosines with explicit half-up
-    flooring, so Spark's HALF_UP and DuckDB's half-even rounding modes
-    cannot diverge on grid-halfway means. Runs over the
-    max_bucket-shed graph — the production shape: the first r10 bench
-    of the UNCAPPED form measured 277 s / ratio 127.8 at sf1 (50k
-    vectors over 2^6 buckets is all mega-buckets — the in-bucket
-    self-join is quadratic), while the capped form is bounded at
-    buckets × cap²; the oracle replicates the occupancy filter."""
-    from bgpexplorer_spark.operators.similarity import knn_density
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    n = _emb_count(spark, sf_dir)
-    return knn_density(
-        emb, k=5, n_planes=_adaptive_planes(n), max_bucket=20, approx_n=n,
-    )
-
-
-def _knn_complete_sql(
-    k: int = 5, n_planes: int = 6, max_bucket: int = 20, n_probe: int = 64
-) -> str:
-    # composes the capped-graph oracle verbatim (ONE source of truth for
-    # the shed/cosine/rank chain), then replays the residue fallback:
-    # brute-force cosine against the n_probe lowest-id vectors, top-k,
-    # the same exact-integer half-up mean, 0-defaults for unscorable rows
-    return f"""
-    WITH g AS ({_knn_capped_sql(k, n_planes, max_bucket)}),
-    dens AS (
-        SELECT src AS vec_id, CAST(count(*) AS INTEGER) AS k_found,
-               floor((10.0 * sum(CAST(round(cos_sim * 10000) AS BIGINT))
-                      / count(*) + 5.0) / 10.0) / 10000.0 AS density
-        FROM g GROUP BY src
-    ),
-    v AS (SELECT vec_id, embedding::DOUBLE[] AS a FROM embeddings),
-    residue AS (
-        SELECT vec_id, a FROM v
-        WHERE vec_id NOT IN (SELECT vec_id FROM dens)
-    ),
-    probe AS (SELECT vec_id AS pid, a AS pa FROM v WHERE vec_id < {n_probe}),
-    rpairs AS (
-        SELECT r.vec_id AS src, p.pid AS dst,
-               round(
-                   list_sum([r.a[i+1] * p.pa[i+1] for i in range(0, 64)])
-                   / (sqrt(list_sum([r.a[i+1] * r.a[i+1]
-                                     for i in range(0, 64)]))
-                      * sqrt(list_sum([p.pa[i+1] * p.pa[i+1]
-                                       for i in range(0, 64)]))),
-                   4) AS cos_sim
-        FROM residue r JOIN probe p ON r.vec_id <> p.pid
-    ),
-    rtop AS (
-        SELECT src, cos_sim FROM (
-            SELECT src, cos_sim,
-                   row_number() OVER (PARTITION BY src
-                        ORDER BY cos_sim DESC, dst) AS rk
-            FROM rpairs
-        ) WHERE rk <= {k}
-    ),
-    rdens AS (
-        SELECT src AS vec_id, CAST(count(*) AS INTEGER) AS k_found,
-               floor((10.0 * sum(CAST(round(cos_sim * 10000) AS BIGINT))
-                      / count(*) + 5.0) / 10.0) / 10000.0 AS density
-        FROM rtop GROUP BY src
-    )
-    SELECT vec_id, k_found, density, FALSE AS residue FROM dens
-    UNION ALL
-    SELECT r.vec_id,
-           CAST(coalesce(d.k_found, 0) AS INTEGER) AS k_found,
-           coalesce(d.density, 0.0) AS density,
-           TRUE AS residue
-    FROM residue r LEFT JOIN rdens d USING (vec_id)
-    """
-
-
-@q("sim_knn_complete", lambda: _knn_complete_sql(n_planes=_fixture_planes()))
-def sim_knn_complete(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Guaranteed-coverage kNN density
-    (operators/similarity.knn_density_complete): every embedding gets
-    exactly one row — bucket-mates scored by the capped LSH graph, the
-    no-edge residue (singleton + shed buckets) scored by the bounded
-    brute-force probe fallback (knn_residue_scores: merge-pinned anti
-    join, LITERAL-bounded broadcast probe set, hoisted norms). At 100 TB
-    the residue of a capped adaptive-plane index is exactly the outlier
-    set a curation pipeline most wants scored, so the fallback is code
-    + contract, not a documented default (r10 review). The oracle
-    replays the capped graph verbatim, then the residue probe chain."""
-    from bgpexplorer_spark.operators.similarity import knn_density_complete
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    n = _emb_count(spark, sf_dir)
-    return knn_density_complete(
-        emb, k=5, n_planes=_adaptive_planes(n), max_bucket=20, approx_n=n,
-    )
-
-
-def _cluster_sample_sql(n_per_cluster: int = 10, n_centroids: int = 8) -> str:
-    def cos(a: str, b: str) -> str:
-        return (
-            f"(list_sum([{a}[i] * {b}[i] for i in range(1, 65)]) / "
-            f"(sqrt(list_sum([{a}[i] * {a}[i] for i in range(1, 65)])) * "
-            f"sqrt(list_sum([{b}[i] * {b}[i] for i in range(1, 65)]))))"
-        )
-
-    u = _duck_hash32("CAST(vec_id AS VARCHAR)")
-    return f"""
-    WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS a FROM embeddings),
-    c AS (SELECT vec_id AS cid, a AS cvec FROM v WHERE vec_id < {n_centroids}),
-    assigned AS (
-        SELECT vec_id, cid FROM (
-            SELECT v.vec_id, c.cid,
-                   row_number() OVER (
-                       PARTITION BY v.vec_id
-                       ORDER BY {cos('a', 'cvec')} DESC, c.cid DESC) AS rk
-            FROM v CROSS JOIN c
-        ) WHERE rk = 1
-    ),
-    drawn AS (
-        SELECT vec_id, cid, {u} / 4294967296.0 AS u FROM assigned
-    )
-    SELECT vec_id, cid, rank FROM (
-        SELECT vec_id, cid,
-               CAST(row_number() OVER (PARTITION BY cid
-                    ORDER BY u, vec_id) AS INTEGER) AS rank
-        FROM drawn
-    ) WHERE rank <= {n_per_cluster}
-    """
-
-
-@q("pipe_cluster_sample", _cluster_sample_sql())
-def pipe_cluster_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cluster-balanced diversity sampling
-    (operators/pipeline.cluster_sample): assign every embedding to its
-    max-cosine coarse centroid (the shuffle-free literal-codebook
-    ivf_assign), keep the 10 lowest deterministic-uniform draws per
-    cluster — head-heavy topics contribute at most n rows, tail
-    clusters survive whole. The oracle replays the identical
-    assignment tiebreak (highest cid), hash draw, and rank order, so
-    the exact sample membership is the verified contract."""
-    from bgpexplorer_spark.operators.pipeline import cluster_sample
-    from bgpexplorer_spark.operators.similarity import ivf_centroids
-    from bgpexplorer_spark.sources.tables import fan_out
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    # fan_out the assignment side (see sim_cluster_purity)
-    return cluster_sample(fan_out(emb, spark, key="vec_id", min_bytes=4 << 20), ivf_centroids(emb, 8), n_per_cluster=10)
-
-
-_NOVELTY_SQL = f"""
-    WITH toks AS (
-        SELECT doc_id, unnest(list_distinct(
-            [l[i] || ' ' || l[i+1] || ' ' || l[i+2] for i in range(1, len(l) - 1)]
-        )) AS sh
-        FROM (SELECT doc_id, {_duck_tokens('text')} AS l FROM documents)
-    ),
-    first AS (SELECT sh, min(doc_id) AS f FROM toks GROUP BY sh),
-    per AS (
-        SELECT t.doc_id, count(*) AS n_shingles,
-               sum(CASE WHEN fi.f = t.doc_id THEN 1 ELSE 0 END) AS n_novel
-        FROM toks t JOIN first fi USING (sh) GROUP BY t.doc_id
-    )
-    SELECT d.doc_id,
-           CAST(coalesce(p.n_shingles, 0) AS BIGINT) AS n_shingles,
-           CAST(coalesce(p.n_novel, 0) AS BIGINT) AS n_novel,
-           coalesce(floor((p.n_novel * 100000.0 / greatest(p.n_shingles, 1)
-                           + 5.0) / 10.0) / 10000.0, 0.0) AS novelty
-    FROM documents d LEFT JOIN per p USING (doc_id)
-"""
-
-
-@q("dedup_novelty", _NOVELTY_SQL)
-def dedup_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document trigram novelty (operators/dedup.novelty_scores):
-    the fraction of a document's distinct trigram shingles whose
-    earliest corpus occurrence is this document — the contribution
-    signal a dataset builder reports for a new snapshot (aggregate
-    view of pairwise near-dup). One shared shingle explode, a
-    vocabulary-sized first-occurrence aggregate (merge-hinted: the
-    never-broadcast corpus-frame rule), one join back, one per-doc
-    aggregate; the ratio is exact integer half-up flooring on the
-    1e-4 grid so engine rounding modes cannot diverge."""
-    from bgpexplorer_spark.operators.dedup import novelty_scores
-    from bgpexplorer_spark.sources.tables import fan_out
-
-    docs = fan_out(load_table(spark, sf_dir, "documents"), spark, key="doc_id")
-    return novelty_scores(docs, "doc_id", n=3)
-
-
-def _proto_prune_sql(keep_frac: float = 0.5, n_centroids: int = 8) -> str:
-    def cos(a: str, b: str) -> str:
-        return (
-            f"(list_sum([{a}[i] * {b}[i] for i in range(1, 65)]) / "
-            f"(sqrt(list_sum([{a}[i] * {a}[i] for i in range(1, 65)])) * "
-            f"sqrt(list_sum([{b}[i] * {b}[i] for i in range(1, 65)]))))"
-        )
-
-    return f"""
-    WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS a FROM embeddings),
-    c AS (SELECT vec_id AS cid, a AS cvec FROM v WHERE vec_id < {n_centroids}),
-    assigned AS (
-        SELECT vec_id, cid FROM (
-            SELECT v.vec_id, c.cid,
-                   row_number() OVER (
-                       PARTITION BY v.vec_id
-                       ORDER BY {cos('a', 'cvec')} DESC, c.cid DESC) AS rk
-            FROM v CROSS JOIN c
-        ) WHERE rk = 1
-    ),
-    scored AS (
-        SELECT v.vec_id, assigned.cid,
-               round({cos('a', 'cvec')}, 4) + 0.0 AS proto_score
-        FROM v JOIN assigned USING (vec_id)
-        JOIN c ON c.cid = assigned.cid
-    ),
-    r AS (
-        SELECT vec_id, cid, proto_score,
-               CAST(row_number() OVER (PARTITION BY cid
-                    ORDER BY proto_score, vec_id) AS INTEGER) AS rank,
-               count(*) OVER (PARTITION BY cid) AS n_c
-        FROM scored
-    )
-    SELECT vec_id, cid, proto_score, rank,
-           rank <= ceil({keep_frac} * n_c) AS kept
-    FROM r
-    """
-
-
-@q("pipe_prototype_prune", _proto_prune_sql())
-def pipe_prototype_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SSL-prototype dataset pruning (operators/similarity.prototype_prune,
-    Sorscher et al. 2022): nearest-centroid prototypicality score +
-    per-cluster hardest-first keep quota — assignment is the shuffle-free
-    literal-centroid projection, quota one window on the cluster key."""
-    from bgpexplorer_spark.operators.similarity import (
-        ivf_centroids, prototype_prune,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    return prototype_prune(emb, ivf_centroids(emb, 8), keep_frac=0.5)
-
-
 @q(
     "an_path_inflation",
     f"""
@@ -7654,37 +4009,6 @@ def an_path_inflation(spark: SparkSession, sf_dir: str) -> DataFrame:
         path.alias("aspath_flat"),
     )
     return path_inflation(st)
-
-
-@q(
-    "text_bpe_pairs",
-    f"""
-    WITH words AS (
-        SELECT w, count(*) AS wc FROM (
-            SELECT unnest({_duck_tokens('lower(text)')}) AS w FROM documents
-        ) GROUP BY w
-    ),
-    pairs AS (
-        SELECT substring(w, i, 1) AS sym_a, substring(w, i + 1, 1) AS sym_b,
-               wc
-        FROM words, unnest(
-            CASE WHEN length(w) >= 2
-                 THEN [x for x in generate_series(1, length(w) - 1)]
-                 ELSE [] END) AS t(i)
-    )
-    SELECT sym_a, sym_b, CAST(sum(wc) AS BIGINT) AS n
-    FROM pairs GROUP BY sym_a, sym_b
-    ORDER BY n DESC, sym_a, sym_b LIMIT 50
-    """,
-)
-def text_bpe_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BPE merge statistic (operators/text.bpe_pair_counts): adjacent
-    char-pair frequencies over the word-frequency table, top-50 — the
-    per-round count of tokenizer training, corpus touched once."""
-    from bgpexplorer_spark.operators.text import bpe_pair_counts
-
-    docs = load_table(spark, sf_dir, "documents")
-    return bpe_pair_counts(docs, k=50)
 
 
 # Shared v6 derivation (the o5 v6 word arithmetic): announced prefixes
@@ -7807,228 +4131,6 @@ def an_deaggregation_v6(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @q(
-    "text_entropy",
-    """
-    WITH chars AS (
-        SELECT doc_id,
-               unnest([substring(text, i, 1)
-                       for i in generate_series(1, length(text))]) AS ch
-        FROM documents WHERE length(text) > 0
-    ),
-    counts AS (SELECT doc_id, ch, count(*) AS cnt FROM chars GROUP BY 1, 2),
-    per AS (
-        SELECT doc_id,
-               CAST(sum(cnt) AS BIGINT) AS n_chars,
-               count(*) AS n_distinct,
-               list(cnt ORDER BY ch) AS hist
-        FROM counts GROUP BY doc_id
-    )
-    SELECT doc_id, n_chars, n_distinct,
-           round(-list_reduce(
-               list_prepend(CAST(0 AS DOUBLE),
-                   [(CAST(c AS DOUBLE) / n_chars)
-                     * ln(CAST(c AS DOUBLE) / n_chars) for c in hist]),
-               (a, b) -> a + b), 4) AS entropy
-    FROM per
-    """,
-)
-def text_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Character-entropy quality signal (operators/text.char_entropy):
-    Shannon entropy over each document's char histogram, folded in
-    sorted-character order on both engines so the float sum matches
-    bit-for-bit."""
-    from bgpexplorer_spark.operators.text import char_entropy
-
-    docs = load_table(spark, sf_dir, "documents")
-    return char_entropy(docs)
-
-
-@q(
-    "multimodal_phash_neardup",
-    f"""
-    WITH {_PHASH_HASH_CTES},
-    pairs AS (
-        SELECT DISTINCT x.doc_id AS id_a, y.doc_id AS id_b,
-               x.ahash AS ha, y.ahash AS hb
-        FROM h x JOIN h y ON x.doc_id < y.doc_id AND (
-               substring(x.ahash, 1, 16) = substring(y.ahash, 1, 16)
-            OR substring(x.ahash, 17, 16) = substring(y.ahash, 17, 16)
-            OR substring(x.ahash, 33, 16) = substring(y.ahash, 33, 16)
-            OR substring(x.ahash, 49, 16) = substring(y.ahash, 49, 16))
-    ),
-    scored AS (
-        SELECT id_a, id_b,
-               CAST(len([i for i in generate_series(1, 64)
-                         if substring(ha, i, 1) <> substring(hb, i, 1)])
-                    AS INTEGER) AS hamming
-        FROM pairs
-    )
-    SELECT id_a, id_b, hamming FROM scored WHERE hamming <= 3
-    """,
-)
-def multimodal_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Perceptual image near-dup pairs
-    (operators/multimodal.phash_neardup_pairs): real PGM decode → aHash →
-    pigeonhole 16-bit band joins → exact bit_count(XOR) Hamming verify,
-    complete for distance ≤ 3 — the image analog of SimHash dedup, over
-    the same brightness-shifted fixture groups as multimodal_image_phash."""
-    from bgpexplorer_spark.operators.multimodal import (
-        ahash_media, phash_neardup_pairs,
-    )
-
-    media = _phash_media(spark, sf_dir)
-    h = ahash_media(media, grid=8).select(
-        F.col("media_id").alias("doc_id"), "ahash"
-    )
-    return phash_neardup_pairs(h, max_hamming=3, id_col="doc_id").select(
-        "id_a", "id_b", "hamming"
-    )
-
-
-# one sweep list shared by the oracle and the Spark harness so the two
-# sides can never drift; the pair-pass floor is min() of it
-_SWEEP_THRESHOLDS = (0.2, 0.35, 0.5, 0.8)
-
-
-def _dedup_sweep_sql(thresholds=_SWEEP_THRESHOLDS) -> str:
-    tlist = ", ".join(f"CAST({t} AS DOUBLE)" for t in thresholds)
-    return f"""
-    WITH {_lsh_pair_ctes()},
-    pr AS (
-        SELECT id_a, id_b, round(cnt / (na.n + nb.n - cnt), 4) AS j
-        FROM shared
-        JOIN sizes na ON na.doc_id = id_a
-        JOIN sizes nb ON nb.doc_id = id_b
-        WHERE round(cnt / (na.n + nb.n - cnt), 4) >= {min(thresholds)}
-    ),
-    ts AS (SELECT unnest([{tlist}]) AS threshold),
-    np AS (
-        SELECT threshold, count(*) AS n_pairs
-        FROM ts, pr WHERE pr.j >= ts.threshold GROUP BY 1
-    ),
-    nd AS (
-        SELECT threshold, count(DISTINCT id) AS n_docs
-        FROM ts, (SELECT id_a AS id, j FROM pr
-                  UNION ALL SELECT id_b AS id, j FROM pr) u
-        WHERE u.j >= ts.threshold GROUP BY 1
-    )
-    SELECT ts.threshold,
-           coalesce(np.n_pairs, 0) AS n_pairs,
-           coalesce(nd.n_docs, 0) AS n_docs
-    FROM ts LEFT JOIN np USING (threshold) LEFT JOIN nd USING (threshold)
-    """
-
-
-@q("dedup_threshold_sweep", _dedup_sweep_sql())
-def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dedup sizing sweep (operators/dedup.dedup_sweep): the
-    LSH-verified pair pass runs ONCE at the loosest candidate threshold,
-    then every sweep point is a conditional aggregate over that pair
-    table — (threshold, surviving pairs, documents touched)."""
-    from bgpexplorer_spark.operators.dedup import dedup_sweep, neardup_pairs
-    from bgpexplorer_spark.sources.tables import fan_out
-
-    docs = fan_out(load_table(spark, sf_dir, "documents"), spark, key="doc_id")
-    pairs = neardup_pairs(
-        docs, "doc_id", n=3, threshold=min(_SWEEP_THRESHOLDS), k=16, bands=4
-    )
-    return dedup_sweep(pairs, list(_SWEEP_THRESHOLDS))
-
-
-@q(
-    "dedup_cluster_sizes",
-    f"""
-    WITH RECURSIVE {_CC_CTES},
-    csize AS (SELECT component, count(*) AS cluster_size
-              FROM assign GROUP BY component)
-    SELECT cluster_size,
-           count(*) AS n_clusters,
-           CAST(cluster_size * count(*) AS BIGINT) AS n_docs
-    FROM csize GROUP BY cluster_size
-    """,
-)
-def dedup_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Duplicate-cluster size distribution
-    (operators/dedup.cluster_size_histogram) over the full
-    LSH→verify→connected-components keep-list — the boilerplate-family
-    diagnostic every dedup run reads first."""
-    from bgpexplorer_spark.operators.dedup import cluster_size_histogram
-
-    comps = _dedup_components_impl(spark, sf_dir, star=False).select(
-        "doc_id", "component"
-    )
-    return cluster_size_histogram(comps)
-
-
-_EXIF_ORACLE = """
-    SELECT doc_id,
-           CASE WHEN doc_id % 11 = 0 THEN NULL
-                ELSE 'Maker' || CAST(doc_id % 7 AS VARCHAR) END AS make,
-           CASE WHEN doc_id % 11 = 0 THEN NULL
-                ELSE 'M-' || CAST(doc_id % 4 AS VARCHAR) END AS model,
-           CAST(CASE WHEN doc_id % 11 = 0 THEN NULL
-                ELSE 1 + doc_id % 8 END AS INTEGER) AS orientation,
-           CASE WHEN doc_id % 11 = 0 THEN NULL
-                ELSE '2024:01:01 00:00:'
-                     || lpad(CAST(doc_id % 60 AS VARCHAR), 2, '0')
-           END AS datetime,
-           CAST(CASE WHEN doc_id % 11 = 0 THEN NULL ELSE 1 END
-                AS BIGINT) AS exposure_num,
-           CAST(CASE WHEN doc_id % 11 = 0 THEN NULL
-                ELSE 30 + doc_id % 100 END AS BIGINT) AS exposure_den,
-           CAST(CASE WHEN doc_id % 11 = 0 THEN NULL
-                ELSE 100 + (doc_id % 8) * 50 END AS INTEGER) AS iso,
-           CAST(CASE WHEN doc_id % 11 = 0 THEN NULL
-                ELSE 4 + doc_id % 8 END AS BIGINT) AS pixel_x,
-           CAST(CASE WHEN doc_id % 11 = 0 THEN NULL
-                ELSE 6 + doc_id % 6 END AS BIGINT) AS pixel_y
-    FROM documents
-"""
-
-
-@q("multimodal_exif", _EXIF_ORACLE)
-def multimodal_exif(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXIF extraction (operators/multimodal.exif_metadata): REAL JPEG
-    marker scan → APP1 TIFF IFD walk, alternating little/big-endian
-    fixtures built by the in-package APP1 encoder; every 11th payload
-    carries no EXIF and must emit NULLs."""
-    import numpy as np
-
-    from bgpexplorer_spark.operators.exif import build_exif_app1, splice_app1
-    from bgpexplorer_spark.operators.jpeg import encode_jpeg
-    from bgpexplorer_spark.operators.multimodal import MEDIA_SCHEMA, exif_metadata
-
-    ids = [
-        r["doc_id"]
-        for r in load_table(spark, sf_dir, "documents").select("doc_id").collect()
-    ]
-    base = encode_jpeg(np.zeros((4, 4), np.uint8), quality=100)
-    rows = []
-    for d in ids:
-        if d % 11 == 0:
-            rows.append((int(d), "image", base, None))
-            continue
-        app1 = build_exif_app1(
-            make=f"Maker{d % 7}",
-            model=f"M-{d % 4}",
-            orientation=1 + d % 8,
-            datetime=f"2024:01:01 00:00:{d % 60:02d}",
-            exposure=(1, 30 + d % 100),
-            iso=100 + (d % 8) * 50,
-            pixel_x=4 + d % 8,
-            pixel_y=6 + d % 6,
-            big_endian=bool(d % 2),
-        )
-        rows.append((int(d), "image", splice_app1(base, app1), None))
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    return exif_metadata(media).select(
-        F.col("media_id").alias("doc_id"), "make", "model", "orientation",
-        "datetime", "exposure_num", "exposure_den", "iso",
-        "pixel_x", "pixel_y",
-    )
-
-
-@q(
     "an_route_uptime",
     f"""
     WITH {_ORIGIN_HIST_CTES},
@@ -8099,66 +4201,6 @@ def an_top_flappers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     hist = _origins_history(spark, sf_dir)
     return top_flappers(hist, k=20).select("nlri_str", "n_events", "n_flips")
-
-
-# --- MIPS retrieval + spectral embedding prep (r8) --------------------------
-
-@q(
-    "sim_mips_topk",
-    """
-    WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS a FROM embeddings),
-    q AS (SELECT a AS qa FROM e WHERE vec_id = 0)
-    SELECT vec_id,
-           round(list_sum([a[i] * qa[i] for i in range(1, 65)]), 4)
-               + 0.0 AS inner_product
-    FROM e, q
-    ORDER BY inner_product DESC, vec_id LIMIT 10
-    """,
-)
-def sim_mips_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Maximum-inner-product top-10 (operators/similarity.mips_topk) vs
-    the vec_id=0 query — dual-encoder retrieval scoring (unnormalized
-    dot). One scan + TakeOrdered; the at-scale path is the
-    norm-augmentation reduction to cosine ANN (similarity.mips_augment,
-    property-tested equivalent)."""
-    from bgpexplorer_spark.operators.similarity import mips_topk
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    qv = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
-    return mips_topk(emb, qv, k=10)
-
-
-@q(
-    "pipe_embedding_gram",
-    """
-    WITH e AS (SELECT embedding::DOUBLE[] AS a FROM embeddings),
-    ij AS (
-        SELECT ii.i AS i, jj.j AS j
-        FROM (SELECT unnest(range(0, 64)) AS i) ii,
-             (SELECT unnest(range(0, 64)) AS j) jj
-        WHERE ii.i <= jj.j
-    )
-    SELECT i, j,
-           -- + 0.0 canonicalizes IEEE negative zero after rounding
-           round(sum(a[i + 1] * a[j + 1]), 3) + 0.0 AS val
-    FROM e, ij
-    GROUP BY i, j
-    """,
-)
-def pipe_embedding_gram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed Gram matrix XᵀX in long form
-    (operators/similarity.gram_matrix) — the one-pass reduction PCA /
-    whitening / ZCA start from (similarity.pca_fit eigendecomposes the
-    collected dim² result driver-side). Each Arrow batch contributes one
-    BLAS partial product; the only shuffle is O(batches × dim²) rows,
-    independent of corpus size."""
-    from bgpexplorer_spark.operators.similarity import gram_matrix
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    g = gram_matrix(emb, dim=64)
-    return g.select(
-        "i", "j", (F.round("val", 3) + F.lit(0.0)).alias("val")
-    )
 
 
 @q(
@@ -8381,163 +4423,6 @@ def an_roa_delta_v6(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# BPE application: a fixed, closure-ordered merges table (every rule using
-# a merged token ranks AFTER the rule that created it — the precondition
-# text.bpe_encode documents). Rules 1/11 ('t a' vs 'a t') deliberately
-# compete so the rank-priority path is exercised, and the 'table'/'data'
-# chains exercise multi-step merges over the fixture vocabulary.
-BPE_MERGES = [
-    "t a", "ta b", "tab l", "tabl e",          # -> table
-    "s c", "sc a", "sca n",                    # -> scan
-    "e r", "o w", "r ow",                      # -> row
-    "a t", "d at", "dat a",                    # -> data ('t a' preempts)
-    "o r", "s t", "f a", "fa st",              # -> fast
-    "v a", "l u", "va lu", "valu e",           # -> value
-    "i n", "w in", "d ow", "win dow",          # -> window
-    "q u", "e y", "k ey",                      # -> key
-]
-
-_BPE_MERGES_SQL = "[" + ", ".join(f"'{m}'" for m in BPE_MERGES) + "]"
-
-_BPE_ENCODE_ORACLE = f"""
-    WITH RECURSIVE d AS (
-        SELECT doc_id, {_duck_tokens('lower(text)')} AS ws FROM documents
-    ), w0 AS (
-        SELECT DISTINCT unnest(ws) AS word FROM d
-    ), enc AS (
-        SELECT word,
-               list_transform(range(1, length(word) + 1), i -> word[i])
-                   AS syms,
-               0 AS step
-        FROM w0
-        UNION ALL
-        SELECT word,
-               syms[1:p-1] || [syms[p] || syms[p+1]] || syms[p+2:],
-               step + 1
-        FROM (
-            SELECT word, syms, step,
-                   list_position(pr, list_min(list_filter(pr, x -> x > 0)))
-                       AS p
-            FROM (
-                SELECT word, syms, step,
-                       list_transform(range(1, len(syms)),
-                           i -> list_position({_BPE_MERGES_SQL},
-                                              syms[i] || ' ' || syms[i+1]))
-                           AS pr
-                FROM enc) t1) t2
-        WHERE p IS NOT NULL AND p > 0
-    ), final AS (
-        SELECT word, syms FROM enc
-        QUALIFY row_number() OVER (PARTITION BY word ORDER BY step DESC) = 1
-    ), docw AS (
-        SELECT doc_id,
-               unnest(ws) AS word,
-               unnest(generate_series(1, len(ws))) AS idx
-        FROM d
-    ), joined AS (
-        SELECT docw.doc_id, docw.idx, f.syms
-        FROM docw JOIN final f USING (word)
-    )
-    SELECT d.doc_id,
-           CAST(coalesce(sum(len(j.syms)), 0) AS BIGINT) AS n_tokens,
-           coalesce(string_agg(array_to_string(j.syms, ' '), ' '
-                               ORDER BY j.idx), '') AS tokens
-    FROM d LEFT JOIN joined j ON d.doc_id = j.doc_id
-    GROUP BY d.doc_id
-"""
-
-
-@q("text_bpe_encode", _BPE_ENCODE_ORACLE)
-def text_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BPE merge-table APPLICATION at corpus scale (text.bpe_encode —
-    the encode stage bpe_pair_counts trains for): the O(L²) merge fold
-    runs once per DISTINCT word (vocabulary-sized), encoded words join
-    back on the word key, and one doc-keyed sorted-collect_list
-    aggregate reassembles document order — the corpus is scanned once
-    and never re-tokenized per repeated word. No UDFs, no driver loop;
-    the oracle replays the identical leftmost-best-pair loop as a
-    DuckDB recursive CTE."""
-    from bgpexplorer_spark.operators.text import bpe_encode
-    from bgpexplorer_spark.sources.tables import fan_out
-
-    # fan_out: the corpus-side tokenization/explode is the serial stage
-    # on a 1-split local parquet (cpu/wall ~1.0 measured at sf1)
-    docs = fan_out(load_table(spark, sf_dir, "documents"), spark, key="doc_id", min_bytes=4 << 20)
-    out = bpe_encode(docs, BPE_MERGES)
-    return out.select(
-        "doc_id",
-        "n_tokens",
-        F.concat_ws(" ", "tokens").alias("tokens"),
-    )
-
-
-_FERTILITY_SQL = f"""
-    WITH RECURSIVE d AS (
-        SELECT doc_id, lang, {_duck_tokens('lower(text)')} AS ws FROM documents
-    ), w0 AS (
-        SELECT DISTINCT unnest(ws) AS word FROM d
-    ), enc AS (
-        SELECT word,
-               list_transform(range(1, length(word) + 1), i -> word[i])
-                   AS syms,
-               0 AS step
-        FROM w0
-        UNION ALL
-        SELECT word,
-               syms[1:p-1] || [syms[p] || syms[p+1]] || syms[p+2:],
-               step + 1
-        FROM (
-            SELECT word, syms, step,
-                   list_position(pr, list_min(list_filter(pr, x -> x > 0)))
-                       AS p
-            FROM (
-                SELECT word, syms, step,
-                       list_transform(range(1, len(syms)),
-                           i -> list_position({_BPE_MERGES_SQL},
-                                              syms[i] || ' ' || syms[i+1]))
-                           AS pr
-                FROM enc) t1) t2
-        WHERE p IS NOT NULL AND p > 0
-    ), final AS (
-        SELECT word, syms FROM enc
-        QUALIFY row_number() OVER (PARTITION BY word ORDER BY step DESC) = 1
-    ), docw AS (
-        SELECT doc_id, unnest(ws) AS word FROM d
-    ), per AS (
-        SELECT docw.doc_id, sum(len(f.syms)) AS n_tokens
-        FROM docw JOIN final f USING (word)
-        GROUP BY docw.doc_id
-    )
-    SELECT d.lang,
-           CAST(count(*) AS BIGINT) AS n_docs,
-           CAST(coalesce(sum(len(d.ws)), 0) AS BIGINT) AS n_words,
-           CAST(coalesce(sum(p.n_tokens), 0) AS BIGINT) AS n_tokens,
-           floor((coalesce(sum(p.n_tokens), 0) * 100000.0
-                  / greatest(coalesce(sum(len(d.ws)), 0), 1) + 5.0) / 10.0)
-               / 10000.0 AS fertility
-    FROM d LEFT JOIN per p USING (doc_id)
-    GROUP BY d.lang
-"""
-
-
-@q("text_bpe_fertility", _FERTILITY_SQL)
-def text_bpe_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tokenizer fertility by language (text.bpe_fertility): tokens per
-    whitespace word under the trained BPE_MERGES table, aggregated per
-    lang — THE tokenizer-quality metric mixture builders weight token
-    budgets with. Composes the bpe_encode fold (vocab-side, oracle =
-    the same recursive CTE) with one shuffle-pinned corpus join and a
-    group-keyed aggregate; the ratio is exact integer half-up flooring
-    on the 1e-4 grid."""
-    from bgpexplorer_spark.operators.text import bpe_fertility
-    from bgpexplorer_spark.sources.tables import fan_out
-
-    # fan_out: the corpus-side regex pre-tokenization is the serial
-    # stage on a 1-split local parquet (cpu/wall ~1.0 measured at sf1)
-    docs = fan_out(load_table(spark, sf_dir, "documents"), spark, key="doc_id", min_bytes=4 << 20)
-    return bpe_fertility(docs, BPE_MERGES, group_col="lang")
-
-
 _ASOF_SERVED_CACHE: dict[str, str] = {}
 
 
@@ -8593,1025 +4478,4 @@ def o9_rib_asof_served(spark: SparkSession, sf_dir: str) -> DataFrame:
         "addr_v4",
         "prefixlen",
         origin_as(F.col("aspath_flat")).alias("origin_as"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# r11 additions: quantizer/clustering diagnostics + JL projection +
-# lexical-diversity quality signals.
-# ---------------------------------------------------------------------------
-
-def _cluster_purity_sql(n_centroids: int = 8) -> str:
-    def cos(a: str, b: str) -> str:
-        return (
-            f"(list_sum([{a}[i] * {b}[i] for i in range(1, 65)]) / "
-            f"(sqrt(list_sum([{a}[i] * {a}[i] for i in range(1, 65)])) * "
-            f"sqrt(list_sum([{b}[i] * {b}[i] for i in range(1, 65)]))))"
-        )
-
-    return f"""
-    WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS a, label FROM embeddings),
-    c AS (SELECT vec_id AS cid, a AS cvec FROM v WHERE vec_id < {n_centroids}),
-    assigned AS (
-        SELECT vec_id, cid, label FROM (
-            SELECT v.vec_id, c.cid, v.label,
-                   row_number() OVER (
-                       PARTITION BY v.vec_id
-                       ORDER BY {cos('a', 'cvec')} DESC, c.cid DESC) AS rk
-            FROM v CROSS JOIN c
-        ) WHERE rk = 1
-    ),
-    per AS (SELECT cid, label, count(*) AS nl FROM assigned GROUP BY cid, label),
-    tot AS (SELECT cid, sum(nl) AS n FROM per GROUP BY cid)
-    SELECT cid, CAST(n AS BIGINT) AS n, label AS majority_label,
-           CAST(nl AS BIGINT) AS n_majority,
-           floor((nl * 100000.0 / n + 5.0) / 10.0) / 10000.0 AS purity
-    FROM (
-        SELECT p.cid, p.label, p.nl, t.n,
-               row_number() OVER (PARTITION BY p.cid
-                    ORDER BY p.nl DESC, p.label) AS rk
-        FROM per p JOIN tot t USING (cid)
-    ) WHERE rk = 1
-    """
-
-
-@q("sim_cluster_purity", _cluster_purity_sql())
-def sim_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-cell label purity of the coarse quantizer
-    (operators/similarity.cluster_purity): every vector assigned to its
-    max-cosine centroid (shuffle-free literal-codebook ivf_assign, the
-    ground-truth label riding the projection — no corpus join), then
-    one (cid,label) aggregate + a cells×labels majority argmax. The
-    diagnostic a curation pipeline reads before trusting cluster-level
-    decisions (cluster_sample/prototype_prune/SemDeDup cells). Purity
-    is exact integer half-up on the 1e-4 grid; majority ties break to
-    the lowest label; the oracle replays the assignment tiebreak
-    (highest cid) and both windows."""
-    from bgpexplorer_spark.operators.similarity import cluster_purity, ivf_centroids
-    from bgpexplorer_spark.sources.tables import fan_out
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    # fan_out the ASSIGNMENT side only (8 literal cosines per row, the
-    # CPU-dense stage); the centroid collect stays on the pruned scan
-    return cluster_purity(fan_out(emb, spark, key="vec_id", min_bytes=4 << 20), ivf_centroids(emb, 8))
-
-
-_PQ_DISTORTION_SQL = """
-    WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS a FROM embeddings),
-    ss AS (SELECT unnest(range(0, 4)) AS s),
-    sub AS (
-        SELECT vec_id, s, a[s*16 + 1 : s*16 + 16] AS sv FROM e, ss
-    ),
-    cb AS (SELECT s, vec_id AS code, sv AS cv FROM sub WHERE vec_id < 8),
-    dists AS (
-        SELECT t.vec_id, t.s,
-               list_sum([ (t.sv[i] - c.cv[i]) * (t.sv[i] - c.cv[i])
-                          for i in range(1, 17) ]) AS d
-        FROM sub t JOIN cb c USING (s)
-    ),
-    best AS (
-        SELECT vec_id, s, round(min(d), 4) AS dist
-        FROM dists GROUP BY vec_id, s
-    )
-    SELECT CAST(s AS INTEGER) AS sub, CAST(count(*) AS BIGINT) AS n,
-           floor((10.0 * sum(CAST(round(dist * 10000) AS BIGINT))
-                  / count(*) + 5.0) / 10.0) / 10000.0 AS mse
-    FROM best GROUP BY s
-"""
-
-
-@q("sim_pq_distortion", _PQ_DISTORTION_SQL)
-def sim_pq_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-subspace PQ quantization distortion
-    (operators/similarity.pq_distortion): min-L2² to the codebook per
-    subvector — the same argmin pq_encode assigns by — aggregated to
-    (sub, n, mse) with per-row distortions on the 1e-4 integer grid so
-    float accumulation order can't flap the mean across engines. THE
-    index-quality number that sizes m/codes before a 100 TB encode.
-    Scale shape: literal-codebook projection (zero shuffle) + one
-    m×-explode + one map-side-combinable aggregate to m rows."""
-    from bgpexplorer_spark.operators.similarity import pq_distortion
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    return pq_distortion(emb, m=4, codes=8, dim=64)
-
-
-def _rp_project_sql(k: int = 16, dim: int = 64) -> str:
-    import math
-
-    inv = repr(1.0 / math.sqrt(k))
-    return f"""
-    WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS a FROM embeddings),
-    js AS (SELECT unnest(range(0, {k})) AS j)
-    SELECT vec_id, CAST(j AS INTEGER) AS j,
-           round(list_sum([ a[i+1] * (CASE WHEN
-                 ((i + 64*j) * 2654435761 % 97 - 48) >= 0
-                 THEN 1.0 ELSE -1.0 END) for i in range(0, {dim}) ])
-                 * {inv}, 4) + 0.0 AS comp
-    FROM v, js
-    """
-
-
-@q("sim_rp_project", _rp_project_sql())
-def sim_rp_project(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Johnson–Lindenstrauss sparse sign random projection
-    (operators/similarity.rp_project): 64→16 dims, signs from the same
-    distinctness-guarded multiplicative-scramble family as the LSH
-    hyperplanes — deterministic, training-free, ZERO-shuffle (one
-    codegen'd projection over the corpus), the at-scale reducer when
-    PCA's covariance pass is not affordable. The contract row
-    posexplodes the projection to scalar (vec_id, j, comp) rows — the
-    gate canonicalizer cannot sort array columns — while the operator
-    keeps the array API. The oracle replays the integer sign
-    arithmetic (all intermediates < 2^53) and the √k-normalized
-    rounded components exactly."""
-    from bgpexplorer_spark.operators.similarity import rp_project
-    from bgpexplorer_spark.sources.tables import fan_out
-
-    # fan_out: the 16 per-component zip_with folds are CPU-dense per-row
-    # HOFs that otherwise run on the 1-split local parquet (measured sf1:
-    # exec_run_ms == wall — fully serial); no-op on a many-split cluster
-    emb = fan_out(load_table(spark, sf_dir, "embeddings"), spark, key="vec_id", min_bytes=4 << 20)
-    return rp_project(emb, k=16, dim=64).select(
-        "vec_id", F.posexplode("proj").alias("j", "comp")
-    )
-
-
-_LEXDIV_SQL = f"""
-    SELECT doc_id,
-           CAST(len(l) AS BIGINT) AS n_tokens,
-           CAST(len(ty) AS BIGINT) AS n_types,
-           CAST(len(hap) AS BIGINT) AS n_hapax,
-           CASE WHEN len(l) > 0 THEN
-               floor((len(ty) * 100000.0 / len(l) + 5.0) / 10.0) / 10000.0
-           ELSE 0.0 END AS ttr,
-           CASE WHEN len(ty) > 0 THEN
-               floor((len(hap) * 100000.0 / len(ty) + 5.0) / 10.0) / 10000.0
-           ELSE 0.0 END AS hapax_frac
-    FROM (
-        SELECT doc_id, l, ty,
-               [t for t in ty if len(list_filter(l, x -> x = t)) = 1] AS hap
-        FROM (
-            SELECT doc_id, l, list_distinct(l) AS ty
-            FROM (SELECT doc_id,
-                         {_duck_tokens("coalesce(text, '')")} AS l
-                  FROM documents)
-        )
-    )
-"""
-
-
-@q("text_lexical_diversity", _LEXDIV_SQL)
-def text_lexical_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document lexical diversity (operators/text.lexical_diversity):
-    type/token ratio + hapax fraction — the repetitiveness/gibberish
-    quality signals statistics-based filters threshold on. Pure per-row
-    higher-order functions: ZERO shuffles, one codegen'd corpus scan;
-    ratios exact-integer half-up on the 1e-4 grid; null text scores 0s.
-    The oracle replays the tokenization, distinct, and per-type
-    occurrence counts with DuckDB list comprehensions."""
-    from bgpexplorer_spark.operators.text import lexical_diversity
-    from bgpexplorer_spark.sources.tables import fan_out
-
-    docs = fan_out(load_table(spark, sf_dir, "documents"), spark, key="doc_id")
-    return lexical_diversity(docs)
-
-
-def _sign_sig_sql(bits: int = 60) -> str:
-    return (
-        "SELECT vec_id, CAST(list_sum([CASE WHEN a[i+1] >= 0 THEN "
-        f"(2**i)::BIGINT ELSE 0 END for i in range(0, {bits})]) AS BIGINT) "
-        "AS simhash FROM (SELECT vec_id, embedding::DOUBLE[] AS a "
-        "FROM embeddings)"
-    )
-
-
-def _sign_topk_sql(k: int = 10, bits: int = 60) -> str:
-    return f"""
-    WITH s AS ({_sign_sig_sql(bits)}),
-    q AS (SELECT simhash AS qs FROM s WHERE vec_id = 0)
-    SELECT vec_id,
-           CAST(bit_count(xor(simhash, qs)) AS INTEGER) AS hamming
-    FROM s, q
-    ORDER BY hamming, vec_id LIMIT {k}
-    """
-
-
-@q("sim_sign_topk", _sign_topk_sql())
-def sim_sign_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Binary-embedding ANN (operators/similarity.sign_signature +
-    sign_hamming_topk): 60-bit sign binarization (exact BIGINT
-    power-of-two fold — a double accumulator would lose exactness past
-    2^53), then top-10 by Hamming distance to the vec_id=0 query — the
-    cheapest retrieval tier: 16 bytes/vector at rest, bit_count(xor)
-    per row instead of a 64-mul HOF cosine. Ties break by id; the
-    oracle replays the binarization and the xor/bit_count ranking."""
-    from bgpexplorer_spark.operators.similarity import sign_hamming_topk
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    qv = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
-    return sign_hamming_topk(emb, qv, k=10)
-
-
-def _sign_neardup_sql(max_hamming: int = 3, bits: int = 60) -> str:
-    # brute-force oracle: the AND-OR banded join's coverage is EXACT, so
-    # the engine's banded candidates must equal all-pairs hamming <= h
-    return f"""
-    WITH s AS ({_sign_sig_sql(bits)})
-    SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-           CAST(bit_count(xor(a.simhash, b.simhash)) AS INTEGER) AS hamming
-    FROM s a JOIN s b ON a.vec_id < b.vec_id
-    WHERE bit_count(xor(a.simhash, b.simhash)) <= {max_hamming}
-    """
-
-
-@q("sim_sign_neardup", _sign_neardup_sql(bits=24))
-def sim_sign_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding near-dup candidates over the sign signature
-    (operators/similarity.sign_neardup_pairs) — SimHash for embeddings:
-    the EXACT-coverage AND-OR banded join (concatenated combination
-    keys over 6 sub-bands, the measured anti-quadratic shape reused
-    from the text SimHash path) finds every pair within hamming ≤ 3;
-    the oracle is deliberately the BRUTE-FORCE all-pairs scan, so the
-    coverage guarantee itself is what the gate verifies. Verified at
-    bits=24 (18 true pairs at sf0.01): the fixture's 0.35-noise
-    clusters sit ≥14 bits apart at the full 60-bit width (measured),
-    where a hamming-3 result is empty and the gate would verify
-    nothing — the coarse width is where the guarantee has work to
-    find."""
-    from bgpexplorer_spark.operators.similarity import sign_neardup_pairs
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    return sign_neardup_pairs(emb, max_hamming=3, bits=24)
-
-
-_KEEP_BEST_SQL = f"""
-    WITH RECURSIVE {_CC_CTES},
-    scored AS (
-        SELECT a.doc_id, a.component, d.n_chars
-        FROM assign a JOIN documents d USING (doc_id)
-    ),
-    ranked AS (
-        SELECT doc_id, component,
-               row_number() OVER (PARTITION BY component
-                    ORDER BY n_chars DESC, doc_id) AS rk
-        FROM scored
-    ),
-    keep AS (SELECT component, doc_id AS keeper_id FROM ranked WHERE rk = 1)
-    SELECT r.doc_id, r.component, k.keeper_id,
-           r.doc_id = k.keeper_id AS kept
-    FROM ranked r JOIN keep k USING (component)
-"""
-
-
-@q("dedup_keep_best", _KEEP_BEST_SQL)
-def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The dedup KEEP decision end-to-end
-    (operators/dedup.canonical_by_quality over the full
-    neardup_pairs → connected_components pipeline): each near-dup
-    component keeps its BEST-quality member (n_chars here; ties →
-    lowest id) instead of the min-id default — clusters usually hold
-    one clean copy and N truncated variants, and min-id keeps whichever
-    crawled first. The oracle composes the recursive-CTE closure (LSH
-    recall stays part of the contract) with the quality argmax."""
-    from bgpexplorer_spark.operators.dedup import (
-        canonical_by_quality,
-        connected_components,
-        neardup_pairs,
-    )
-    from bgpexplorer_spark.sources.tables import fan_out
-
-    docs = fan_out(load_table(spark, sf_dir, "documents"), spark, key="doc_id")
-    pairs = neardup_pairs(docs, "doc_id", n=3, threshold=0.5, k=16, bands=4)
-    comp = connected_components(pairs)
-    plain = load_table(spark, sf_dir, "documents")
-    # complete the assignment: connected_components emits only nodes
-    # with edges; singletons are their own (trivially kept) component
-    full = (
-        plain.select(F.col("doc_id").alias("node"))
-        .join(comp.hint("merge"), "node", "left")
-        .withColumn("component", F.coalesce("component", "node"))
-    )
-    return canonical_by_quality(full, plain.select("doc_id", "n_chars"))
-
-
-def _span_corruption_sql(block: int = 3, rate: int = 5) -> str:
-    h = _duck_hash32("doc_id::VARCHAR || ':' || b::VARCHAR")
-    sent = "'<extra_id_' || (list_position(mb, b) - 1)::VARCHAR || '>'"
-    btxt = f"array_to_string(l[b*{block}+1 : b*{block}+{block}], ' ')"
-    return f"""
-    WITH base AS (
-        SELECT doc_id, l,
-               CAST(ceil(len(l) / {block}.0) AS INTEGER) AS nb
-        FROM (SELECT doc_id, {_duck_tokens("coalesce(text, '')")} AS l
-              FROM documents)
-    ),
-    m AS (
-        SELECT doc_id, l, nb,
-               [b for b in range(0, nb) if {h} % {rate} = 0] AS mb
-        FROM base
-    )
-    SELECT doc_id, nb AS n_blocks,
-           CAST(len(mb) AS INTEGER) AS n_masked,
-           array_to_string(
-               [CASE WHEN list_contains(mb, b) THEN {sent}
-                     ELSE {btxt} END
-                for b in range(0, nb)], ' ') AS input_text,
-           coalesce(array_to_string(
-               [{sent} || ' ' || {btxt} for b in mb], ' '), '') AS target_text
-    FROM m
-    """
-
-
-@q("pipe_span_corruption", _span_corruption_sql())
-def pipe_span_corruption(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """T5-style span-corruption pair generation
-    (operators/text.span_corruption): deterministic ~1/5 block masking
-    via the portable hash, ordinal <extra_id_K> sentinels, input/target
-    split — the infilling-pretraining data op, as per-row HOFs with
-    zero shuffles. The oracle replays the hash draw, tiling, sentinel
-    numbering, and both concatenations exactly."""
-    from bgpexplorer_spark.operators.text import span_corruption
-    from bgpexplorer_spark.sources.tables import fan_out
-
-    docs = fan_out(load_table(spark, sf_dir, "documents"), spark, key="doc_id")
-    return span_corruption(docs)
-
-
-def _fim_sql(rate: int = 3) -> str:
-    hf = _duck_hash32("doc_id::VARCHAR || ':fim'")
-    ha = _duck_hash32("doc_id::VARCHAR || ':a'")
-    hb = _duck_hash32("doc_id::VARCHAR || ':b'")
-    return f"""
-    WITH base AS (
-        SELECT doc_id, l, len(l) AS n,
-               len(l) >= 4 AND {hf} % {rate} = 0 AS fim
-        FROM (SELECT doc_id, {_duck_tokens("coalesce(text, '')")} AS l
-              FROM documents)
-    ),
-    cut AS (
-        SELECT doc_id, l, n, fim,
-               CAST(1 + {ha} % (n - 2) AS INTEGER) AS a
-        FROM base WHERE fim
-    ),
-    cut2 AS (
-        SELECT doc_id, l, n, a,
-               CAST(a + 1 + {hb} % (n - a - 1) AS INTEGER) AS b
-        FROM cut
-    )
-    SELECT doc_id, TRUE AS fim,
-           array_to_string(l[1:a], ' ') AS prefix,
-           array_to_string(l[a+1:b], ' ') AS middle,
-           array_to_string(l[b+1:n], ' ') AS suffix
-    FROM cut2
-    UNION ALL
-    SELECT doc_id, FALSE AS fim,
-           coalesce(array_to_string(l, ' '), '') AS prefix,
-           '' AS middle, '' AS suffix
-    FROM base WHERE NOT fim
-    """
-
-
-@q("pipe_fim_split", _fim_sql())
-def pipe_fim_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fill-in-the-middle splitting (operators/text.fim_split): a
-    deterministic ~1/3 of ≥4-token documents cut at two hash-chosen
-    token boundaries into (prefix, middle, suffix) for PSM-order
-    training — both cut sides non-empty by construction, parts always
-    re-concatenate to the document; the rest pass through unsplit.
-    Per-row HOFs, zero shuffles; the oracle replays the hash draws and
-    slice boundaries exactly."""
-    from bgpexplorer_spark.operators.text import fim_split
-    from bgpexplorer_spark.sources.tables import fan_out
-
-    docs = fan_out(load_table(spark, sf_dir, "documents"), spark, key="doc_id")
-    return fim_split(docs)
-
-
-# ---------------------------------------------------------------------------
-# r11 continuation: evaluation-grade operators — index recall, dimension
-# truncation quality, leakage-free splitting, cross-source dup leakage
-# ---------------------------------------------------------------------------
-
-def _eval_query_sample(emb: DataFrame, n_q: int) -> list[tuple[int, list[float]]]:
-    """The literal-bounded eval query sample: the n_q lowest-id vectors
-    (the ivf_centroids convention — a bounded collect, inlined as
-    literals; never a corpus-derived join side)."""
-    rows = emb.filter(F.col("vec_id") < n_q).select("vec_id", "embedding").collect()
-    return sorted(
-        (int(r["vec_id"]), [float(x) for x in r["embedding"]]) for r in rows
-    )
-
-
-def _ann_recall_sql(
-    n_q: int = 6, k: int = 10, nprobe: int = 2, n_centroids: int = 8
-) -> str:
-    def cos(a: str, b: str) -> str:
-        return (
-            f"(list_sum([{a}[i] * {b}[i] for i in range(1, 65)]) / "
-            f"(sqrt(list_sum([{a}[i] * {a}[i] for i in range(1, 65)])) * "
-            f"sqrt(list_sum([{b}[i] * {b}[i] for i in range(1, 65)]))))"
-        )
-
-    return f"""
-    WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS a FROM embeddings),
-    c AS (SELECT vec_id AS cid, a AS cvec FROM v WHERE vec_id < {n_centroids}),
-    qs AS (SELECT vec_id AS qid, a AS qv FROM v WHERE vec_id < {n_q}),
-    exact AS (
-        SELECT qid, vec_id FROM (
-            SELECT qs.qid, v.vec_id,
-                   row_number() OVER (
-                       PARTITION BY qs.qid
-                       ORDER BY round({cos('a', 'qv')}, 4) DESC, v.vec_id) AS rn
-            FROM v CROSS JOIN qs
-        ) WHERE rn <= {k}
-    ),
-    probes AS (
-        SELECT qid, cid FROM (
-            SELECT qs.qid, c.cid,
-                   row_number() OVER (
-                       PARTITION BY qs.qid
-                       ORDER BY {cos('cvec', 'qv')} DESC, c.cid) AS rn
-            FROM c CROSS JOIN qs
-        ) WHERE rn <= {nprobe}
-    ),
-    assigned AS (
-        SELECT vec_id, cid FROM (
-            SELECT v.vec_id, c.cid,
-                   row_number() OVER (
-                       PARTITION BY v.vec_id
-                       ORDER BY {cos('a', 'cvec')} DESC, c.cid DESC) AS rk
-            FROM v CROSS JOIN c
-        ) WHERE rk = 1
-    ),
-    ann AS (
-        SELECT qid, vec_id FROM (
-            SELECT p.qid, v.vec_id,
-                   row_number() OVER (
-                       PARTITION BY p.qid
-                       ORDER BY round({cos('a', 'qv')}, 4) DESC, v.vec_id) AS rn
-            FROM v
-            JOIN assigned USING (vec_id)
-            JOIN probes p ON p.cid = assigned.cid
-            JOIN qs ON qs.qid = p.qid
-        ) WHERE rn <= {k}
-    )
-    SELECT e.qid,
-           CAST(count(a.vec_id) AS BIGINT) AS hits,
-           {k} AS k,
-           round(count(a.vec_id) / {k}, 4) AS recall
-    FROM exact e
-    LEFT JOIN ann a ON a.qid = e.qid AND a.vec_id = e.vec_id
-    GROUP BY e.qid
-    """
-
-
-@q("sim_ann_recall", _ann_recall_sql())
-def sim_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@10 of the IVF index (nprobe=2 of 8 cells) against the
-    exact brute-force ground truth over a 6-query literal sample
-    (operators/similarity.ann_recall) — the evaluation that sizes
-    nprobe/n_centroids before a full-corpus index build. The oracle
-    recomputes BOTH retrieval paths per query in SQL and the same
-    overlap count, so the recall numbers themselves are the verified
-    contract."""
-    from bgpexplorer_spark.operators.similarity import (
-        ann_recall, ivf_assign, ivf_centroids,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = _eval_query_sample(emb, 6)
-    assigned = ivf_assign(emb, ivf_centroids(emb, 8)).persist()
-    return ann_recall(
-        emb, queries, k=10, nprobe=2, n_centroids=8, assigned=assigned,
-        use_gemm=True,  # ONE exact corpus scan for all queries (measured
-        # 1.6-2.1x over the per-query TakeOrdered union at sf1)
-    )
-
-
-def _matryoshka_sql(n_q: int = 6, k: int = 10, dims: int = 16) -> str:
-    def cos(a: str, b: str, d: int) -> str:
-        return (
-            f"(list_sum([{a}[i] * {b}[i] for i in range(1, {d + 1})]) / "
-            f"(sqrt(list_sum([{a}[i] * {a}[i] for i in range(1, {d + 1})])) * "
-            f"sqrt(list_sum([{b}[i] * {b}[i] for i in range(1, {d + 1})]))))"
-        )
-
-    return f"""
-    WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS a FROM embeddings),
-    qs AS (SELECT vec_id AS qid, a AS qv FROM v WHERE vec_id < {n_q}),
-    full_k AS (
-        SELECT qid, vec_id FROM (
-            SELECT qs.qid, v.vec_id,
-                   row_number() OVER (
-                       PARTITION BY qs.qid
-                       ORDER BY round({cos('a', 'qv', 64)}, 4) DESC, v.vec_id) AS rn
-            FROM v CROSS JOIN qs
-        ) WHERE rn <= {k}
-    ),
-    trunc_k AS (
-        SELECT qid, vec_id FROM (
-            SELECT qs.qid, v.vec_id,
-                   row_number() OVER (
-                       PARTITION BY qs.qid
-                       ORDER BY round({cos('a', 'qv', dims)}, 4) DESC, v.vec_id) AS rn
-            FROM v CROSS JOIN qs
-        ) WHERE rn <= {k}
-    )
-    SELECT f.qid,
-           {dims} AS dims,
-           CAST(count(t.vec_id) AS BIGINT) AS hits,
-           {k} AS k,
-           round(count(t.vec_id) / {k}, 4) AS overlap
-    FROM full_k f
-    LEFT JOIN trunc_k t ON t.qid = f.qid AND t.vec_id = f.vec_id
-    GROUP BY f.qid
-    """
-
-
-@q("sim_matryoshka", _matryoshka_sql())
-def sim_matryoshka(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Overlap@10 between exact retrieval on full 64-d vectors and on
-    their first 16 components (operators/similarity.matryoshka_overlap)
-    — the dimension-budget evaluation: a high overlap licenses storing
-    a 4× smaller vector prefix in the hot index and re-ranking
-    survivors at full precision."""
-    from bgpexplorer_spark.operators.similarity import matryoshka_overlap
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = _eval_query_sample(emb, 6)
-    return matryoshka_overlap(emb, queries, k=10, dims=16, use_gemm=True)
-
-
-_LEAKAGE_SPLIT_ORACLE = f"""
-    WITH RECURSIVE {_CC_CTES}
-    SELECT doc_id, component,
-           CASE WHEN {_duck_hash32("'split:' || CAST(component AS VARCHAR)")}
-                     % 100 < 10
-                THEN 'val' ELSE 'train' END AS split
-    FROM assign
-    """
-
-
-@q("pipe_leakage_split", _LEAKAGE_SPLIT_ORACLE)
-def pipe_leakage_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup-aware train/val split (operators/pipeline.leakage_split):
-    every document is assigned by the portable hash of its near-dup
-    COMPONENT, so no verified near-duplicate pair straddles the
-    boundary — within-corpus leakage control, the complement of the
-    cross-corpus decontaminate operators. Rides the full
-    LSH→verify→components pipeline; the oracle replays banding, the
-    recursive closure AND the hash decision."""
-    from bgpexplorer_spark.operators.dedup import neardup_pairs
-    from bgpexplorer_spark.operators.pipeline import leakage_split
-    from bgpexplorer_spark.sources.tables import fan_out
-
-    docs = fan_out(load_table(spark, sf_dir, "documents"), spark, key="doc_id")
-    pairs = neardup_pairs(docs, "doc_id", n=3, threshold=0.5, k=16, bands=4)
-    plain = load_table(spark, sf_dir, "documents")
-    return leakage_split(plain, pairs, "doc_id", val_pct=10, salt="split")
-
-
-_CROSS_SOURCE_ORACLE = f"""
-    WITH {_lsh_pair_ctes()},
-    pairs AS (
-        SELECT id_a, id_b, round(cnt / (na.n + nb.n - cnt), 4) AS jaccard
-        FROM shared
-        JOIN sizes na ON na.doc_id = id_a
-        JOIN sizes nb ON nb.doc_id = id_b
-        WHERE round(cnt / (na.n + nb.n - cnt), 4) >= 0.35
-    ),
-    labeled AS (
-        SELECT least(da.source, db.source) AS source_a,
-               greatest(da.source, db.source) AS source_b,
-               CAST(round(p.jaccard * 10000) AS BIGINT) AS j4
-        FROM pairs p
-        JOIN documents da ON da.doc_id = p.id_a
-        JOIN documents db ON db.doc_id = p.id_b
-    )
-    SELECT source_a, source_b,
-           CAST(count(*) AS BIGINT) AS n_pairs,
-           round(sum(j4) / (count(*) * 10000.0), 4) AS avg_jaccard
-    FROM labeled
-    GROUP BY source_a, source_b
-    """
-
-
-@q("dedup_cross_source", _CROSS_SOURCE_ORACLE)
-def dedup_cross_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-source duplication leakage report
-    (operators/dedup.cross_source_report): verified near-dup pairs
-    (the dedup_lsh_verified path, jaccard ≥ 0.35) labeled with the
-    canonicalized source pair of their endpoints and aggregated — which
-    feeds duplicate each other vs self-duplicate. Mean jaccard is exact
-    integer arithmetic on the round-4 values, so engine summation order
-    cannot diverge."""
-    from bgpexplorer_spark.operators.dedup import cross_source_report, neardup_pairs
-    from bgpexplorer_spark.sources.tables import fan_out
-
-    docs = fan_out(load_table(spark, sf_dir, "documents"), spark, key="doc_id")
-    pairs = neardup_pairs(docs, "doc_id", n=3, threshold=0.35, k=16, bands=4)
-    return cross_source_report(
-        pairs, load_table(spark, sf_dir, "documents"), "doc_id", "source"
-    )
-
-
-_BIGRAM_NLL_ORACLE = f"""
-    WITH d AS (SELECT doc_id, {_duck_tokens('lower(text)')} AS l FROM documents),
-    d2 AS (SELECT doc_id, l FROM d WHERE len(l) >= 2),
-    bi AS (
-        SELECT doc_id, l[i] AS w1, l[i + 1] AS w2
-        FROM (SELECT doc_id, l, unnest(range(1, len(l))) AS i FROM d2)
-    ),
-    bc AS (SELECT w1, w2, count(*) AS c12 FROM bi GROUP BY w1, w2),
-    uc AS (SELECT w1, count(*) AS c1 FROM bi GROUP BY w1),
-    voc AS (SELECT count(DISTINCT w) AS v
-            FROM (SELECT unnest(l) AS w FROM d)),
-    scored AS (
-        SELECT b.doc_id,
-               CAST(round(ln((coalesce(c.c12, 0) + 1)
-                             / (coalesce(u.c1, 0) + voc.v * 1.0))
-                          * 1000000) AS BIGINT) AS lp6
-        FROM bi b
-        LEFT JOIN bc c USING (w1, w2)
-        LEFT JOIN uc u USING (w1)
-        CROSS JOIN voc
-    )
-    SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
-           round(-sum(lp6) / (count(*) * 1000000.0), 4) AS nll
-    FROM scored GROUP BY doc_id
-    """
-
-
-@q("text_bigram_nll", _BIGRAM_NLL_ORACLE)
-def text_bigram_nll(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Word-bigram LM quality scoring (operators/text.bigram_nll): the
-    add-one-smoothed companion to text_charlm at WORD level — per-doc
-    mean NLL against corpus-trained bigram statistics, merge-pinned
-    count joins (bigram vocabularies grow with the corpus — never
-    broadcast), exact integer-scaled log sum so engine summation order
-    cannot diverge."""
-    from bgpexplorer_spark.operators.text import bigram_nll
-    from bgpexplorer_spark.sources.tables import fan_out
-
-    # fan_out: the CPU-dense per-row bigram build otherwise runs on the
-    # few input splits of a small parquet (measured sf10: 31.9 -> 7.8 s)
-    docs = fan_out(load_table(spark, sf_dir, "documents"), spark, key="doc_id")
-    return bigram_nll(docs)
-
-
-@q("st_neardup_flag", _incremental_dedup_sql())
-def st_neardup_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming near-dup flagging (streaming/feed.live_neardup_flag) in
-    its batch-equivalent mode, against the same yesterday/today corpus
-    split and oracle as dedup_incremental: the operator recomputes the
-    MinHash signature PER-ROW (HOFs, no aggregation) and checks the
-    band keys with stream-static joins, so a live document stream is
-    flagged with ZERO streaming state; the real-stream e2e (file
-    source, availableNow, memory sink) is tested equal to
-    incremental_dedup in test_streaming.py."""
-    from bgpexplorer_spark.operators.dedup import dedup_index
-    from bgpexplorer_spark.sources.tables import fan_out
-    from bgpexplorer_spark.streaming.feed import live_neardup_flag
-
-    docs = fan_out(load_table(spark, sf_dir, "documents"), spark, key="doc_id")
-    corpus = docs.filter(F.col("doc_id") % 3 != 0)
-    batch = docs.filter(F.col("doc_id") % 3 == 0)
-    idx = dedup_index(corpus, "doc_id", k=16, n=3, bands=4)
-    return live_neardup_flag(batch, idx, "doc_id", k=16, n=3, bands=4)
-
-
-_PACK_BINS_ORACLE = f"""
-    WITH RECURSIVE per_doc AS (
-        SELECT doc_id,
-               CAST({_duck_hash32("CAST(doc_id AS VARCHAR)")} % 8 AS INTEGER)
-                   AS shard,
-               CAST(len({_duck_tokens('text')}) AS BIGINT) AS n_tokens
-        FROM documents
-    ),
-    ordered AS (
-        SELECT *, row_number() OVER (PARTITION BY shard
-                                     ORDER BY n_tokens DESC, doc_id) AS rn
-        FROM per_doc
-    ),
-    fill(shard, rn, doc_id, n_tokens, bin, binfill) AS (
-        SELECT shard, rn, doc_id, n_tokens, CAST(0 AS BIGINT), n_tokens
-        FROM ordered WHERE rn = 1
-        UNION ALL
-        SELECT o.shard, o.rn, o.doc_id, o.n_tokens,
-               CASE WHEN f.binfill + o.n_tokens <= 96
-                    THEN f.bin ELSE f.bin + 1 END,
-               CASE WHEN f.binfill + o.n_tokens <= 96
-                    THEN f.binfill + o.n_tokens ELSE o.n_tokens END
-        FROM ordered o JOIN fill f ON o.shard = f.shard AND o.rn = f.rn + 1
-    )
-    SELECT doc_id, shard, bin, n_tokens, n_tokens > 96 AS oversize FROM fill
-    """
-
-
-@q("pipe_pack_bins", _PACK_BINS_ORACLE)
-def pipe_pack_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """No-split greedy bin packing (operators/pipeline.pack_bins):
-    next-fit-decreasing into 96-token bins over 8 hash shards — the
-    attention-isolation packing layout next to pack_sequences'
-    concat-then-cut. The sequential fill runs as ONE aggregate fold per
-    shard; the oracle replays it with a linear recursive CTE, so the
-    exact bin assignment (including oversize singleton bins) is the
-    verified contract."""
-    from bgpexplorer_spark.operators.pipeline import pack_bins
-    from bgpexplorer_spark.sources.tables import fan_out
-
-    # fan_out: the pre-shuffle token count tokenizes every doc — the
-    # serial stage on a 1-split local parquet; the per-shard fill after
-    # the grouping shuffle is unchanged
-    docs = fan_out(load_table(spark, sf_dir, "documents"), spark, key="doc_id", min_bytes=4 << 20)
-    return pack_bins(docs, max_tokens=96, n_shards=8)
-
-
-_VOCAB_DRIFT_ORACLE = f"""
-    WITH ta AS (SELECT unnest({_duck_tokens('lower(text)')}) AS term
-                FROM documents WHERE doc_id % 2 = 0),
-    tb AS (SELECT unnest({_duck_tokens('lower(text)')}) AS term
-           FROM documents WHERE doc_id % 2 = 1),
-    ca AS (SELECT term, count(*) AS count_a FROM ta GROUP BY term),
-    cb AS (SELECT term, count(*) AS count_b FROM tb GROUP BY term),
-    j AS (SELECT term, count_a, count_b FROM ca FULL OUTER JOIN cb USING (term)),
-    tot AS (SELECT sum(coalesce(count_a, 0)) AS sa,
-                   sum(coalesce(count_b, 0)) AS sb,
-                   count(*) AS v
-            FROM j),
-    scored AS (
-        SELECT term,
-               CAST(coalesce(count_a, 0) AS BIGINT) AS count_a,
-               CAST(coalesce(count_b, 0) AS BIGINT) AS count_b,
-               CAST(round(
-                   ((coalesce(count_a, 0) + 1) / (tot.sa + tot.v * 1.0))
-                   * ln(((coalesce(count_a, 0) + 1) / (tot.sa + tot.v * 1.0))
-                        / ((coalesce(count_b, 0) + 1) / (tot.sb + tot.v * 1.0)))
-                   * 1000000000) AS BIGINT) AS kl_contrib_e9
-        FROM j CROSS JOIN tot
-    )
-    SELECT term, count_a, count_b, kl_contrib_e9
-    FROM scored
-    ORDER BY abs(kl_contrib_e9) DESC, term LIMIT 20
-    """
-
-
-@q("pipe_vocab_drift", _VOCAB_DRIFT_ORACLE)
-def pipe_vocab_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Term-level vocabulary drift (operators/pipeline.vocab_drift)
-    between the even- and odd-id halves of the corpus: top-20 terms by
-    |add-one-smoothed KL contribution| — the monitoring report a
-    recurring ingest runs between yesterday's and today's corpus. The
-    per-term contribution is an exact 1e-9-grid integer, so the ranking
-    cannot flap on float summation order; the count join is
-    merge-pinned full-outer (vocabularies are corpus-grown — never
-    broadcast)."""
-    from bgpexplorer_spark.operators.pipeline import vocab_drift
-    from bgpexplorer_spark.sources.tables import fan_out
-
-    docs = fan_out(load_table(spark, sf_dir, "documents"), spark, key="doc_id")
-    return vocab_drift(
-        docs.filter(F.col("doc_id") % 2 == 0),
-        docs.filter(F.col("doc_id") % 2 == 1),
-        k=20,
-    )
-
-
-_VOCAB_COVERAGE_ORACLE = f"""
-    WITH toks AS (SELECT unnest({_duck_tokens('lower(text)')}) AS term
-                  FROM documents),
-    counts AS (SELECT term, count(*) AS cnt FROM toks GROUP BY term),
-    ranked AS (
-        SELECT cnt, row_number() OVER (ORDER BY cnt DESC, term) AS rn
-        FROM counts
-    ),
-    tot AS (SELECT sum(cnt) AS t FROM counts),
-    cuts AS (SELECT unnest([100, 1000, 10000]) AS top_n)
-    SELECT cuts.top_n,
-           CAST(sum(r.cnt) AS BIGINT) AS covered_tokens,
-           CAST(tot.t AS BIGINT) AS total_tokens,
-           round(sum(r.cnt) / (tot.t * 1.0), 6) AS coverage
-    FROM cuts
-    JOIN ranked r ON r.rn <= cuts.top_n
-    CROSS JOIN tot
-    GROUP BY cuts.top_n, tot.t
-    """
-
-
-@q("text_vocab_coverage", _VOCAB_COVERAGE_ORACLE)
-def text_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Vocabulary coverage curve (operators/text.vocab_coverage): corpus
-    token share covered by the top-{100,1000,10000} terms — one count
-    aggregate + TakeOrdered per cutoff, no full-vocabulary window. The
-    oracle ranks in SQL and must agree on counts, the deterministic
-    tie-break, and the rounded share."""
-    from bgpexplorer_spark.operators.text import vocab_coverage
-    from bgpexplorer_spark.sources.tables import fan_out
-
-    docs = fan_out(load_table(spark, sf_dir, "documents"), spark, key="doc_id")
-    return vocab_coverage(docs, cutoffs=[100, 1000, 10000])
-
-
-def _ann_recall_sweep_sql(nprobes=(1, 2, 4)) -> str:
-    parts = []
-    for np_ in nprobes:
-        body = _ann_recall_sql(nprobe=np_).strip()
-        parts.append(
-            f"SELECT {np_} AS nprobe, qid, hits, k, recall FROM ({body})"
-        )
-    return " UNION ALL ".join(parts)
-
-
-@q("sim_recall_sweep", _ann_recall_sweep_sql())
-def sim_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@10 vs nprobe ∈ {1,2,4} (operators/similarity.
-    ann_recall_sweep) — the tuning curve that sets the probe budget;
-    every sweep point independently oracle-verified."""
-    from bgpexplorer_spark.operators.similarity import (
-        ann_recall_sweep, ivf_assign, ivf_centroids,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = _eval_query_sample(emb, 6)
-    assigned = ivf_assign(emb, ivf_centroids(emb, 8)).persist()
-    return ann_recall_sweep(
-        emb, queries, k=10, nprobes=[1, 2, 4], n_centroids=8, assigned=assigned
-    )
-
-
-def _minhash_calibration_sql(k: int = 16, threshold: float = 0.35) -> str:
-    agree = " + ".join(
-        f"CASE WHEN a.m{i} = b.m{i} THEN 1 ELSE 0 END" for i in range(k)
-    )
-    step = 10_000 // k
-    return f"""
-    WITH {_lsh_pair_ctes(k=k)},
-    vp AS (
-        SELECT id_a, id_b, round(cnt / (na.n + nb.n - cnt), 4) AS jaccard
-        FROM shared
-        JOIN sizes na ON na.doc_id = id_a
-        JOIN sizes nb ON nb.doc_id = id_b
-        WHERE round(cnt / (na.n + nb.n - cnt), 4) >= {threshold}
-    ),
-    lab AS (
-        SELECT ({agree}) AS agree,
-               CAST(round(v.jaccard * 10000) AS BIGINT) AS j4
-        FROM vp v
-        JOIN sigs a ON a.doc_id = v.id_a
-        JOIN sigs b ON b.doc_id = v.id_b
-    )
-    SELECT CAST(agree AS INTEGER) AS agree,
-           round(agree / {float(k)}, 4) AS est_jaccard,
-           CAST(count(*) AS BIGINT) AS n_pairs,
-           round(sum(j4) / (count(*) * 10000.0), 4) AS mean_jaccard,
-           round(sum(abs(agree * {step} - j4)) / (count(*) * 10000.0), 4)
-               AS mean_abs_err
-    FROM lab GROUP BY agree
-    """
-
-
-@q("dedup_minhash_calibration", _minhash_calibration_sql())
-def dedup_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash estimate calibration (operators/dedup.minhash_calibration)
-    on the verified dedup_lsh_verified pair set: per signature-agreement
-    level, pair count, implied estimate, mean exact jaccard and mean
-    absolute error — all on the exact 1e-4 integer grid."""
-    from bgpexplorer_spark.operators.dedup import (
-        minhash_calibration, neardup_pairs,
-    )
-    from bgpexplorer_spark.sources.tables import fan_out
-
-    docs = fan_out(load_table(spark, sf_dir, "documents"), spark, key="doc_id")
-    pairs = neardup_pairs(docs, "doc_id", n=3, threshold=0.35, k=16, bands=4)
-    return minhash_calibration(docs, pairs, "doc_id", k=16, n=3)
-
-
-def _embedding_drift_sql(n_centroids: int = 8) -> str:
-    def cos(a: str, b: str) -> str:
-        return (
-            f"(list_sum([{a}[i] * {b}[i] for i in range(1, 65)]) / "
-            f"(sqrt(list_sum([{a}[i] * {a}[i] for i in range(1, 65)])) * "
-            f"sqrt(list_sum([{b}[i] * {b}[i] for i in range(1, 65)]))))"
-        )
-
-    ma = "(sums_a[i] / (count_a * 1000000.0))"
-    mb = "(sums_b[i] / (count_b * 1000000.0))"
-    cos_means = (
-        f"(list_sum([{ma} * {mb} for i in range(1, 65)]) / "
-        f"(sqrt(list_sum([{ma} * {ma} for i in range(1, 65)])) * "
-        f"sqrt(list_sum([{mb} * {mb} for i in range(1, 65)]))))"
-    )
-    return f"""
-    WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS a FROM embeddings),
-    c AS (SELECT vec_id AS cid, a AS cvec FROM v WHERE vec_id < {n_centroids}),
-    assigned AS (
-        SELECT vec_id, cid, a FROM (
-            SELECT v.vec_id, c.cid, v.a,
-                   row_number() OVER (
-                       PARTITION BY v.vec_id
-                       ORDER BY {cos('a', 'cvec')} DESC, c.cid DESC) AS rk
-            FROM v CROSS JOIN c
-        ) WHERE rk = 1
-    ),
-    sides AS (SELECT vec_id, cid, a, vec_id % 2 = 0 AS is_a FROM assigned),
-    ss AS (SELECT unnest(range(1, 65)) AS i),
-    dims AS (
-        SELECT cid, is_a, i,
-               sum(CAST(round(a[i] * 1000000) AS BIGINT)) AS s,
-               count(*) AS n
-        FROM sides, ss GROUP BY cid, is_a, i
-    ),
-    cells AS (
-        SELECT cid, is_a, max(n) AS cnt, list(s ORDER BY i) AS sums
-        FROM dims GROUP BY cid, is_a
-    ),
-    a_side AS (SELECT cid, cnt AS count_a, sums AS sums_a FROM cells WHERE is_a),
-    b_side AS (SELECT cid, cnt AS count_b, sums AS sums_b
-               FROM cells WHERE NOT is_a),
-    j AS (SELECT cid, count_a, count_b, sums_a, sums_b
-          FROM a_side FULL OUTER JOIN b_side USING (cid)),
-    tot AS (SELECT sum(coalesce(count_a, 0)) AS ta,
-                   sum(coalesce(count_b, 0)) AS tb FROM j)
-    SELECT cid,
-           CAST(coalesce(count_a, 0) AS BIGINT) AS count_a,
-           CAST(coalesce(count_b, 0) AS BIGINT) AS count_b,
-           round(coalesce(count_a, 0) / (tot.ta * 1.0), 6) AS share_a,
-           round(coalesce(count_b, 0) / (tot.tb * 1.0), 6) AS share_b,
-           CASE WHEN count_a IS NOT NULL AND count_b IS NOT NULL
-                THEN round({cos_means}, 4) + 0.0 END AS centroid_cos
-    FROM j CROSS JOIN tot
-    """
-
-
-@q("sim_embedding_drift", _embedding_drift_sql())
-def sim_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-cell embedding drift (operators/similarity.embedding_drift)
-    between the even- and odd-id halves, assigned to the shared 8-cell
-    codebook: occupancy counts/shares + the cosine between each cell's
-    two means — occupancy says a topic grew, the mean cosine says it
-    MOVED. Exact 1e-6 integer dimension sums; the oracle replays
-    assignment, sums, means and the fold."""
-    from bgpexplorer_spark.operators.similarity import (
-        embedding_drift, ivf_centroids,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    cents = ivf_centroids(emb, 8)
-    return embedding_drift(
-        emb.filter(F.col("vec_id") % 2 == 0),
-        emb.filter(F.col("vec_id") % 2 == 1),
-        cents,
-    )
-
-
-_BIGRAM_XCORPUS_ORACLE = f"""
-    WITH tr AS (SELECT doc_id, {_duck_tokens('lower(text)')} AS l
-                FROM documents WHERE doc_id % 2 = 0),
-    sc AS (SELECT doc_id, {_duck_tokens('lower(text)')} AS l
-           FROM documents WHERE doc_id % 2 = 1),
-    tr2 AS (SELECT doc_id, l FROM tr WHERE len(l) >= 2),
-    tbi AS (
-        SELECT l[i] AS w1, l[i + 1] AS w2
-        FROM (SELECT l, unnest(range(1, len(l))) AS i FROM tr2)
-    ),
-    bc AS (SELECT w1, w2, count(*) AS c12 FROM tbi GROUP BY w1, w2),
-    uc AS (SELECT w1, count(*) AS c1 FROM tbi GROUP BY w1),
-    voc AS (SELECT count(DISTINCT w) AS v
-            FROM (SELECT unnest(l) AS w FROM tr)),
-    sc2 AS (SELECT doc_id, l FROM sc WHERE len(l) >= 2),
-    sbi AS (
-        SELECT doc_id, l[i] AS w1, l[i + 1] AS w2
-        FROM (SELECT doc_id, l, unnest(range(1, len(l))) AS i FROM sc2)
-    ),
-    scored AS (
-        SELECT b.doc_id,
-               CAST(round(ln((coalesce(c.c12, 0) + 1)
-                             / (coalesce(u.c1, 0) + voc.v * 1.0))
-                          * 1000000) AS BIGINT) AS lp6
-        FROM sbi b
-        LEFT JOIN bc c USING (w1, w2)
-        LEFT JOIN uc u USING (w1)
-        CROSS JOIN voc
-    )
-    SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
-           round(-sum(lp6) / (count(*) * 1000000.0), 4) AS nll
-    FROM scored GROUP BY doc_id
-    """
-
-
-@q("text_bigram_nll_xcorpus", _BIGRAM_XCORPUS_ORACLE)
-def text_bigram_nll_xcorpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-corpus bigram scoring (operators/text.bigram_nll with
-    ``train=``): the odd-id half scored against statistics trained on
-    the even-id half — the decontamination/reference-LM use, exercising
-    the unseen-bigram add-one floor and the null-count coalesces
-    through the oracle (self-scoring never hits them)."""
-    from bgpexplorer_spark.operators.text import bigram_nll
-    from bgpexplorer_spark.sources.tables import fan_out
-
-    docs = fan_out(load_table(spark, sf_dir, "documents"), spark, key="doc_id")
-    return bigram_nll(
-        docs.filter(F.col("doc_id") % 2 == 1),
-        train=docs.filter(F.col("doc_id") % 2 == 0),
     )

@@ -6,10 +6,9 @@ and 13818-3), so ``parse_mp3_meta`` walks the frame sequence and sums
 per-frame durations exactly — VBR streams need no special case, and a
 Xing/Info VBR tag in the first frame is cross-checked when present.
 
-Feeds ``operators.multimodal.decode_media`` as the ``decoder='mp3-meta'``
-branch (the reference repo has no media path; this is part of the
-LLM-pipeline extension surface). ``encode_mp3`` builds deterministic
-valid fixtures (headers + silent payloads) for tests and oracles.
+No engine path consumes it (the reference repo has no media path; this
+is part of the LLM-pipeline extension surface). ``encode_mp3`` builds
+deterministic valid fixtures (headers + silent payloads) for tests.
 """
 
 from __future__ import annotations

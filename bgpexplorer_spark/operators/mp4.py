@@ -7,10 +7,8 @@ the presentation duration, the first visual ``trak``'s ``tkhd`` for
 16.16-fixed display width/height, its ``mdhd`` for the media timescale,
 and ``stsz``/``stz2`` for the sample (frame) count.
 
-Feeds ``operators.multimodal.decode_media`` as the ``decoder='mp4-meta'``
-branch and gives ``frame_sample`` a REAL frame count to sample against.
-``encode_mp4`` builds deterministic valid fixtures (a minimal
-ftyp+moov+mdat tree) for tests and oracles.
+No engine path consumes it. ``encode_mp4`` builds deterministic valid
+fixtures (a minimal ftyp+moov+mdat tree) for tests.
 """
 
 from __future__ import annotations

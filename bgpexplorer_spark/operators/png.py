@@ -14,8 +14,6 @@ greyscale is rescaled 0..255, palette indexes directly). The inverse
 profiles included) builds deterministic real-PNG fixtures for tests;
 PNG is lossless so round-trips are exact, and libpng's ``pngfix`` is
 used in tests as an independent validator of the emitted streams.
-
-Flows into ``operators.multimodal.decode_media`` as ``decoder='png'``.
 """
 
 from __future__ import annotations

@@ -43,59 +43,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {n: load_table(spark, sf_dir, n) for n in TABLE_NAMES}
-
-def fan_out(
-    df: DataFrame, spark: SparkSession, key: str | None = None,
-    min_bytes: int = 0,
-) -> DataFrame:
-    """Repartition to the session's core count when the source scan yields
-    fewer splits — a local single-row-group parquet file is unsplittable, so
-    a CPU-dense downstream stage (explode amplification, per-row hashing)
-    would otherwise run on one task. On a cluster where the scan already
-    produces >= defaultParallelism splits this is a no-op, so the shuffle is
-    never paid at scale. Use ONLY before stages whose per-row cost dwarfs
-    one row exchange; for cheap maps the shuffle costs more than it saves.
-
-    Pass ``key`` (the frame's unique id column) whenever one exists:
-    hash-repartitioning on a unique key spreads as evenly as round-robin
-    but (a) skips the keyless form's sort-before-repartition of every
-    input row (SPARK-23207 — on by default so retried tasks reproduce
-    their row assignment; hash placement is deterministic for free),
-    (b) lets any downstream groupBy/join on the same key reuse the
-    exchange instead of adding a second one (measured on simhash32 at
-    sf0.1: keyed 0.20 s vs round-robin 0.67 s wall, hot-stage
-    executorRunTime 0.7 s vs 13.1 s), and (c) keeps the repartition
-    retry-safe by construction.
-
-    ``min_bytes`` gates the fan-out on the frame's optimizer size
-    estimate (``optimizedPlan().stats().sizeInBytes`` — plan-time
-    metadata, no job): below it the exchange costs more than the serial
-    compute it parallelizes, so the frame is returned untouched. This is
-    the down-scale half of scale-adaptivity — the partition-count check
-    is the up-scale half (≥ core-count splits → no-op). Use 0 only for
-    stages whose per-row cost is extreme (md5-per-gram explodes), where
-    fanning wins even on a few thousand rows."""
-    from pyspark.sql import functions as F
-
-    # Fan to HALF the cores (floor 8, capped at the core count), not all
-    # of them: the HOF/explode stages this feeds are allocation-heavy,
-    # and their measured executorCpuTime grows near-linearly with local
-    # task concurrency (memory-bandwidth/allocator stalls count as
-    # on-CPU cycles) while wall stops improving — sweep at sf1 on 32
-    # cores: cluster_purity 16-way 0.62 s wall / 2.4 s CPU vs 32-way
-    # 0.68 s / 5.4 s; minhash+lsh 16-way 1.43 s / 17.6 s vs 32-way
-    # 1.41 s / 32.1 s. Half-the-cores keeps near-best wall at roughly
-    # half the CPU, and leaves headroom for the stage's own shuffle
-    # write and concurrent jobs. ≤ 8-core sessions are unaffected.
-    p = spark.sparkContext.defaultParallelism
-    target = min(p, max(8, p // 2))
-    if min_bytes:
-        try:
-            size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        except Exception:
-            size = min_bytes  # unknown size: err toward fanning out
-        if size < min_bytes:
-            return df
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target, F.col(key)) if key else df.repartition(target)
-    return df

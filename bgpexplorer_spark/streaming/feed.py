@@ -1008,107 +1008,3 @@ def live_rpki_rates(
             "n_valid", "n_invalid", "n_notfound", "n_total",
         )
     )
-
-
-def live_neardup_flag(
-    new_df: DataFrame,
-    index: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 16,
-    n: int = 3,
-    bands: int = 4,
-) -> DataFrame:
-    """Streaming near-duplicate flagging of an incoming DOCUMENT stream
-    against the at-rest corpus ``dedup.dedup_index`` — the live face of
-    :func:`dedup.incremental_dedup` (same flags: ``exact_dup`` /
-    ``near_dup`` / ``keep``), restructured so every step is STATELESS:
-
-    - the MinHash signature is computed per-row (tokens → distinct
-      n-gram shingles → k permutation mins, all higher-order functions
-      — no shingle explode, no per-doc aggregation, so no streaming
-      state), reproducing ``dedup.minhash_signatures`` bit-for-bit;
-    - each of the ``bands`` LSH band keys becomes a COLUMN, and
-      membership is ``bands`` + 1 stream-static equi-joins against the
-      narrow index (static side re-read every micro-batch, so a
-      nightly index refresh lands without restarting the query);
-      no stream-side distinct/groupBy anywhere, state stays EMPTY
-      however long the stream runs.
-
-    Docs with fewer than ``n`` tokens carry NULL band keys (join to
-    nothing → ``near_dup`` false), matching the batch operator, whose
-    signature aggregate never sees them. Works unchanged in batch mode
-    and returns the identical result to ``incremental_dedup`` (the
-    equivalence is tested); ``bands`` must divide ``k``.
-    """
-    from bgpexplorer_spark.operators.dedup import MINHASH_P, _minhash_params
-    from bgpexplorer_spark.operators.text import (
-        portable_hash32,
-        shingles_of_tokens,
-        tokens,
-    )
-
-    params = _minhash_params(k)
-    rpb = k // bands
-
-    base = new_df.select(
-        F.col(id_col),
-        F.md5(F.col(text_col)).alias("content_hash"),
-        tokens(F.col(text_col)).alias("_toks"),
-    ).withColumn(
-        "_hs",
-        F.transform(
-            F.array_distinct(shingles_of_tokens(F.col("_toks"), n)),
-            lambda s: portable_hash32(s),
-        ),
-    )
-
-    def perm_min(a: int, b: int):
-        return F.array_min(
-            F.transform(F.col("_hs"), lambda h: (h * a + b) % MINHASH_P)
-        )
-
-    mins = [perm_min(a, b) for (a, b) in params]
-    band_keys = []
-    for bnd in range(bands):
-        bucket = F.md5(
-            F.concat_ws(
-                ",", *[mins[bnd * rpb + r].cast("string") for r in range(rpb)]
-            )
-        )
-        band_keys.append(
-            F.when(
-                F.size("_hs") > 0,
-                F.concat_ws(":", F.lit(str(bnd)), bucket),
-            ).alias(f"_key{bnd}")
-        )
-    keyed = base.select(id_col, "content_hash", *band_keys)
-
-    ex_keys = (
-        index.filter(F.col("kind") == "exact")
-        .select(F.col("key").alias("content_hash"))
-        .distinct()
-        .withColumn("_ex", F.lit(True))
-    )
-    lsh_keys = index.filter(F.col("kind") == "lsh").select("key").distinct()
-
-    out = keyed.join(ex_keys, "content_hash", "left")
-    near = F.lit(False)
-    for bnd in range(bands):
-        out = out.join(
-            lsh_keys.select(
-                F.col("key").alias(f"_key{bnd}"),
-                F.lit(True).alias(f"_n{bnd}"),
-            ),
-            f"_key{bnd}",
-            "left",
-        )
-        near = near | F.coalesce(F.col(f"_n{bnd}"), F.lit(False))
-    ex = F.coalesce(F.col("_ex"), F.lit(False))
-    return out.select(
-        F.col(id_col),
-        "content_hash",
-        ex.alias("exact_dup"),
-        near.alias("near_dup"),
-        (~ex & ~near).alias("keep"),
-    )

@@ -1,5 +1,4 @@
-"""LLM-data-pipeline operators: dedup, similarity, text analysis,
-multimodal plumbing."""
+"""LLM-data-pipeline operators: dedup, similarity, text analysis."""
 
 from __future__ import annotations
 
@@ -8,7 +7,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from bgpexplorer_spark.operators import dedup, multimodal, similarity, text
+from bgpexplorer_spark.operators import dedup, similarity, text
 
 DOCS = [
     (0, "the quick brown fox jumps over the lazy dog"),
@@ -179,30 +178,6 @@ def test_ann_topk_and_neardup(spark):
     pairs = similarity.embedding_neardup_pairs(df, threshold=0.98).collect()
     assert any((r.id_a, r.id_b) == (0, 1) for r in pairs)
 
-def test_multimodal_plumbing(spark):
-    rows = [
-        (1, "image", b"\x01\x02\x03\x04", ("s", 100, 100, None, None)),
-        (2, "video", b"\xff\xee", ("s", None, None, None, 3500)),
-        (3, "audio", b"\x00" * 10, ("s", None, None, 16000, 2000)),
-    ]
-    df = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-    dec = {r.media_id: r for r in multimodal.decode_media(df).collect()}
-    assert dec[1].n_bytes == 4 and 16 <= dec[1].width < 80
-    assert dec[1].mean_byte == 2.5
-    # deterministic: same content → same fake dims
-    dec2 = {r.media_id: r for r in multimodal.decode_media(df).collect()}
-    assert dec[1] == dec2[1]
-    rs = multimodal.resize_images(df, 32, 32).collect()
-    assert len(rs) == 1 and rs[0].width == 32
-    frames = multimodal.frame_sample(df, every_ms=1000).collect()
-    assert [f.frame_ts_ms for f in frames] == [0, 1000, 2000]
-    # real decode path is stubbed: raises NotImplementedError
-    import pytest as _pt
-
-    with _pt.raises(Exception) as ei:
-        multimodal.decode_media(df, use_real=True).collect()
-    assert "NotImplementedError" in str(ei.value) or isinstance(ei.value, NotImplementedError)
-
 def test_ivf_assign_and_topk(spark):
     # two clean clusters along axes 0 and 1; ids 0/1 double as centroids
     rows = [
@@ -321,66 +296,6 @@ def test_connected_components_star_keeps_self_pair_only_nodes(spark):
         got = {(r["node"], r["component"]) for r in fn(pairs).collect()}
         assert got == {(1, 1), (2, 1), (42, 42), (7, 7), (8, 7)}, fn.__name__
 
-
-def test_multimodal_real_decoders(spark):
-    """BMP/PPM/WAV decode for real (no codec libraries needed): dims,
-    rates, and pixel means come from the actual bytes; resize really
-    resamples and re-encodes."""
-    import io
-    import struct
-    import wave
-
-    import numpy as np
-
-    from bgpexplorer_spark.operators.multimodal import decode_pnm, encode_ppm
-
-    # 2x2 24-bit BMP, bottom-up, rows padded to 4 bytes:
-    # pixels (BGR): row0(bottom): blue, green; row1(top): red, white
-    px = bytes([255, 0, 0, 0, 255, 0]) + b"\x00\x00"   # bottom row + pad
-    px += bytes([0, 0, 255, 255, 255, 255]) + b"\x00\x00"  # top row + pad
-    bmp = (
-        b"BM" + struct.pack("<IHHI", 54 + len(px), 0, 0, 54)
-        + struct.pack("<IiiHHIIiiII", 40, 2, 2, 1, 24, 0, len(px), 0, 0, 0, 0)
-        + px
-    )
-    # 3x1 PPM: black, mid-gray, white
-    ppm = encode_ppm(np.array([[[0, 0, 0], [128, 128, 128], [255, 255, 255]]], dtype=np.uint8))
-    # 16-bit PCM WAV: 8000 Hz mono, 4000 frames (500 ms), constant 256
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as f:
-        f.setnchannels(1)
-        f.setsampwidth(2)
-        f.setframerate(8000)
-        f.writeframes(struct.pack("<4000h", *([256] * 4000)))
-    wav = buf.getvalue()
-
-    rows = [
-        (1, "image", bmp, ("s", None, None, None, None)),
-        (2, "image", ppm, ("s", None, None, None, None)),
-        (3, "audio", wav, ("s", None, None, None, None)),
-        (4, "image", b"\x89PNG\r\n\x1a\n garbage", ("s", None, None, None, None)),
-    ]
-    df = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-    dec = {r.media_id: r for r in multimodal.decode_media(df).collect()}
-
-    assert dec[1].decoder == "bmp" and (dec[1].width, dec[1].height) == (2, 2)
-    # mean over RGB of {red, white, blue, green} = (3*255 + 3*255)/12? —
-    # exact: red(255,0,0)+white(255,255,255)+blue(0,0,255)+green(0,255,0)
-    assert dec[1].mean_byte == round((255 * 6) / 12, 4)
-    assert dec[2].decoder == "ppm" and (dec[2].width, dec[2].height) == (3, 1)
-    assert dec[2].mean_byte == round((0 + 128 + 255) / 3, 4)
-    assert dec[3].decoder == "wav"
-    assert dec[3].sample_rate == 8000 and dec[3].duration_ms == 500
-    assert dec[3].channels == 1 and dec[3].mean_byte == 1.0  # 256/256
-    assert dec[4].decoder == "fake"  # PNG needs a codec → honest fallback
-
-    # real resize: 2x2 BMP → 4x4 PPM, pixels actually resampled
-    rs = {r.media_id: r for r in multimodal.resize_images(df, 4, 4).collect()}
-    arr = decode_pnm(bytes(rs[1].resized_ppm))
-    assert arr.shape == (4, 4, 3)
-    assert tuple(arr[0, 0]) == (255, 0, 0)    # top-left = red
-    assert tuple(arr[3, 3]) == (0, 255, 0)    # bottom-right = green
-    assert rs[4].resized_ppm is None          # undecodable keeps the stub
 
 def test_simhash_candidate_pairs(docs):
     pairs = {
@@ -1439,83 +1354,6 @@ def test_hashed_classifier_margin_hand_computed(spark):
     assert out[2] == 0.25
 
 
-def test_ahash_brightness_invariant_and_bits(spark):
-    """A gradient image and its +40-brightness copy hash identically
-    (threshold shifts with the mean); a white-on-left image yields the
-    hand-computable half-ones pattern; undecodable bytes emit NULLs."""
-    import numpy as np
-
-    grad = np.tile(np.arange(16, dtype=np.uint8) * 12, (16, 1))[..., None]
-    bright = grad + 40
-    half = np.zeros((16, 16, 1), np.uint8)
-    half[:, :8] = 200
-
-    def pgm(a):
-        return b"P5\n16 16\n255\n" + a.tobytes()
-
-    rows = [
-        (1, "image", pgm(grad), None),
-        (2, "image", pgm(bright), None),
-        (3, "image", pgm(half), None),
-        (4, "image", b"not an image", None),
-    ]
-    df = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-    got = {r.media_id: r for r in multimodal.ahash_media(df).collect()}
-    assert got[1].ahash == got[2].ahash
-    assert got[3].ahash == ("1111000011110000" * 4)
-    assert got[3].band == int("1111000011110000", 2)
-    assert got[4].ahash is None and got[4].band is None
-    assert got[1].width == 16 and got[1].height == 16
-
-
-def test_audio_features_hand_computed(spark):
-    """1 kHz-rate clip with samples [3, -1, 0, 5]: RMS, peak, ZCR and
-    duration all hand-checkable; a non-WAV payload emits NULLs."""
-    import io
-    import wave
-
-    import numpy as np
-
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as f:
-        f.setnchannels(1)
-        f.setsampwidth(2)
-        f.setframerate(1000)
-        f.writeframes(np.array([3, -1, 0, 5], np.int16).tobytes())
-    stereo = io.BytesIO()
-    with wave.open(stereo, "wb") as f:
-        f.setnchannels(2)
-        f.setsampwidth(2)
-        f.setframerate(1000)
-        f.writeframes(np.array([3, -1, 0, 5], np.int16).tobytes())
-    deep = io.BytesIO()  # 24-bit PCM: NULLs, not byte-wise garbage
-    with wave.open(deep, "wb") as f:
-        f.setnchannels(1)
-        f.setsampwidth(3)
-        f.setframerate(1000)
-        f.writeframes(b"\x00\x00\x00" * 4)
-    rows = [
-        (1, "audio", buf.getvalue(), None),
-        (2, "audio", b"xx", None),
-        (3, "audio", stereo.getvalue(), None),
-        (4, "audio", deep.getvalue(), None),
-    ]
-    df = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-    got = {r.media_id: r for r in multimodal.audio_features(df).collect()}
-    r1 = got[1]
-    assert (r1.sample_rate, r1.channels, r1.n_samples, r1.duration_ms) == (
-        1000, 1, 4, 4,
-    )
-    assert r1.rms == round((35 / 4) ** 0.5, 4)
-    assert r1.peak == 5
-    # sign flips: 3→-1 and -1→0 (0 counts as non-negative)
-    assert r1.zero_crossings == 2
-    assert got[2].rms is None
-    # stereo: 4 interleaved samples = 2 frames → 2 ms, not 4
-    assert (got[3].channels, got[3].n_samples, got[3].duration_ms) == (2, 4, 2)
-    assert got[4].rms is None and got[4].sample_rate is None
-
-
 def test_knn_graph_hand_computed(spark):
     """Orthogonal-ish vectors: a and its scaled copy share a bucket and
     rank each other first; the lone-bucket vector emits no edges; rank
@@ -1604,23 +1442,6 @@ def test_classifier_paths_agree_and_no_literal_blowup(spark):
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
 
 
-def test_ahash_nondivisible_dims_use_global_mean(spark):
-    """A 17x16 image whose cropped-off bottom row is very bright: the
-    threshold is the FULL image mean (documented), so the dark top
-    region hashes all-zero — cropping must not silently re-center it."""
-    import numpy as np
-
-    img = np.zeros((17, 16, 1), np.uint8)
-    img[16, :] = 255  # bright row that the 8x8 grid crop discards
-    raw = b"P5\n16 17\n255\n" + img.tobytes()
-    df = spark.createDataFrame(
-        [(1, "image", raw, None)], multimodal.MEDIA_SCHEMA
-    )
-    r = multimodal.ahash_media(df).collect()[0]
-    assert (r.width, r.height) == (16, 17)
-    assert r.ahash == "0" * 64  # every retained cell is below the global mean
-
-
 def test_char_entropy_hand_computed(spark):
     """'aaab' → H = -(3/4 ln 3/4 + 1/4 ln 1/4); uniform 'abcd' → ln 4;
     single-char filler → 0.0; empty text emits no row."""
@@ -1637,35 +1458,6 @@ def test_char_entropy_hand_computed(spark):
     assert got[2].entropy == round(math.log(4), 4)
     assert got[3].entropy == 0.0
     assert 4 not in got
-
-
-def test_phash_neardup_pairs_hand_computed(spark):
-    """Identical hashes pair at hamming 0; one flipped bit inside band 1
-    still pairs via the other three bands (pigeonhole); a far hash pairs
-    with nothing; NULL hashes are ignored."""
-    base = "10" * 32
-    oneoff = "01" + base[2:]          # 2 bits differ, both in band 1
-    far = "0" * 64
-    rows = [(1, base, None, 16, 16), (2, base, None, 16, 16),
-            (3, oneoff, None, 16, 16), (4, far, None, 16, 16),
-            (5, None, None, None, None)]
-    df = spark.createDataFrame(
-        rows, "media_id long, ahash string, band int, width int, height int"
-    )
-    got = {(r.id_a, r.id_b): r.hamming
-           for r in multimodal.phash_neardup_pairs(df).collect()}
-    assert got == {(1, 2): 0, (1, 3): 2, (2, 3): 2}
-
-
-def test_phash_neardup_rejects_non_64bit_hash(spark):
-    """A hash from a non-default grid must raise, not silently yield zero
-    pairs (the band/chunk arithmetic assumes exactly 64 bits)."""
-    df = spark.createDataFrame(
-        [(1, "10" * 32, None, 16, 16), (2, "1010", None, 2, 2)],
-        "media_id long, ahash string, band int, width int, height int",
-    )
-    with pytest.raises(Exception, match="64-bit"):
-        multimodal.phash_neardup_pairs(df).collect()
 
 
 def test_dedup_sweep_hand_computed(spark):
@@ -1691,71 +1483,6 @@ def test_cluster_size_histogram_hand_computed(spark):
     got = {r.cluster_size: (r.n_clusters, r.n_docs)
            for r in dedup.cluster_size_histogram(comps).collect()}
     assert got == {3: (1, 3), 2: (1, 2), 1: (1, 1)}
-
-
-def test_exif_metadata_wire(spark):
-    """Both endiannesses round-trip through the real APP1 walk; a plain
-    JPEG and junk bytes emit NULLs; a decoder-visible image keeps
-    decoding after the splice."""
-    import numpy as np
-
-    from bgpexplorer_spark.operators.exif import build_exif_app1, splice_app1
-    from bgpexplorer_spark.operators.jpeg import decode_jpeg, encode_jpeg
-
-    base = encode_jpeg(np.full((4, 4), 9, np.uint8), quality=100)
-    le = splice_app1(base, build_exif_app1(
-        make="A", model="B", orientation=3,
-        datetime="2024:02:03 04:05:06", exposure=(1, 60), iso=400,
-        pixel_x=4, pixel_y=4))
-    be = splice_app1(base, build_exif_app1(
-        make="C", orientation=8, big_endian=True))
-    rows = [(1, "image", le, None), (2, "image", be, None),
-            (3, "image", base, None), (4, "image", b"xx", None)]
-    df = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-    got = {r.media_id: r for r in multimodal.exif_metadata(df).collect()}
-    assert (got[1].make, got[1].model, got[1].orientation) == ("A", "B", 3)
-    assert got[1].datetime == "2024:02:03 04:05:06"
-    assert (got[1].exposure_num, got[1].exposure_den, got[1].iso) == (1, 60, 400)
-    assert (got[2].make, got[2].orientation) == ("C", 8)
-    assert got[3].make is None and got[4].make is None
-    assert decode_jpeg(le) is not None  # APP1 splice keeps the image valid
-
-
-def test_exif_fill_bytes_and_hostile_values(spark):
-    """Spec-legal 0xFF fill bytes before APP1 don't hide the EXIF; a
-    hostile LONG orientation/ISO outside the int32/1..8 domain becomes
-    NULL instead of wrapping or killing the Arrow batch."""
-    import struct
-
-    import numpy as np
-
-    from bgpexplorer_spark.operators.exif import (
-        build_exif_app1, parse_exif, splice_app1,
-    )
-    from bgpexplorer_spark.operators.jpeg import encode_jpeg
-
-    base = encode_jpeg(np.zeros((4, 4), np.uint8), quality=100)
-    app1 = build_exif_app1(make="Pad", orientation=2)
-    padded = base[:2] + b"\xff" * 3 + app1 + base[2:]
-    assert parse_exif(padded)["make"] == "Pad"
-
-    # forge orientation as LONG 2^31 (type 4): APP1 = marker(2)+len(2)
-    # +'Exif\0\0'(6) = 10 bytes, TIFF header 8 → IFD0 count at 18
-    evil = bytearray(app1)
-    ifd0 = 10 + 8
-    n = struct.unpack_from("<H", evil, ifd0)[0]
-    for i in range(n):
-        ent = ifd0 + 2 + i * 12
-        tag = struct.unpack_from("<H", evil, ent)[0]
-        if tag == 274:  # orientation → LONG 2^31
-            struct.pack_into("<HHI", evil, ent, 274, 4, 1)
-            struct.pack_into("<I", evil, ent + 8, 2**31)
-    x = parse_exif(splice_app1(base, bytes(evil)))
-    assert x is not None and x["orientation"] is None
-    rows = [(1, "image", splice_app1(base, bytes(evil)), None)]
-    df = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-    out = multimodal.exif_metadata(df).collect()[0]
-    assert out.orientation is None and out.make == "Pad"
 
 
 def test_cosine_topk_gemm_matches_hof(spark):
@@ -1785,92 +1512,6 @@ def test_cosine_topk_gemm_matches_hof(spark):
     got_z = [(r.vec_id, r.cos_sim)
              for r in similarity.cosine_topk_gemm(with_zero, q, k=12).collect()]
     assert got_z == want
-
-
-def test_dct_phash_properties(spark):
-    """DCT pHash: exact brightness-shift invariance (only DC moves),
-    stability under a smooth gradient overlay (energy stays inside the
-    low-frequency block — the case aHash flips bits on), sensitivity to
-    real content change, and NULL for undecodables."""
-    import numpy as np
-
-    rng = np.random.default_rng(7)
-    base = rng.integers(0, 200, size=(16, 16))
-
-    def pgm(arr):
-        a = np.clip(arr, 0, 255).astype(np.uint8)
-        return b"P5\n16 16\n255\n" + a.tobytes()
-
-    grad = np.tile(np.arange(16), (16, 1))          # +0..15 left->right
-    other = rng.integers(0, 200, size=(16, 16))     # unrelated content
-    rows = [
-        (1, "image", pgm(base), None),
-        (2, "image", pgm(base + 40), None),         # brightness shift
-        (3, "image", pgm(base + grad), None),       # smooth gradient
-        (4, "image", pgm(other), None),
-        (5, "image", b"\xff\xd8junk", None),        # undecodable
-    ]
-    df = spark.createDataFrame(
-        rows, "media_id long, media_type string, content binary, meta string"
-    )
-    got = {r.media_id: r for r in multimodal.dct_phash_media(df).collect()}
-
-    def ham(a, b):
-        return sum(x != y for x, y in zip(got[a].ahash, got[b].ahash))
-
-    assert got[1].ahash == got[2].ahash          # brightness: identical
-    assert ham(1, 3) <= 3                        # gradient: near-dup
-    assert ham(1, 4) > 10                        # different content: far
-    assert got[5].ahash is None
-    # the gradient case is exactly where aHash degrades: same images
-    # under aHash drift further than under DCT
-    ah = {r.media_id: r.ahash
-          for r in multimodal.ahash_media(df, grid=8).collect()}
-    ah_ham13 = sum(x != y for x, y in zip(ah[1], ah[3]))
-    assert ah_ham13 >= ham(1, 3)
-
-
-def test_audio_energy_hash_properties(spark):
-    """Audio fingerprint: exact gain invariance (every frame energy and
-    the median scale together), sensitivity to different content, mono
-    collapse of stereo, NULL for too-short/undecodable clips."""
-    import io
-    import wave
-
-    import numpy as np
-
-    rng = np.random.default_rng(3)
-
-    def wav(samples, nch=1):
-        buf = io.BytesIO()
-        with wave.open(buf, "wb") as f:
-            f.setnchannels(nch)
-            f.setsampwidth(2)
-            f.setframerate(8000)
-            f.writeframes(np.asarray(samples, dtype=np.int16).tobytes())
-        return buf.getvalue()
-
-    base = rng.integers(-8000, 8000, size=1000)
-    stereo = np.column_stack([base, base]).reshape(-1)  # same signal L=R
-    rows = [
-        (1, "audio", wav(base), None),
-        (2, "audio", wav(base // 2), None),          # -6 dB gain
-        (3, "audio", wav(rng.integers(-8000, 8000, size=1000)), None),
-        (4, "audio", wav(stereo, nch=2), None),      # stereo of the same
-        (5, "audio", wav(base[:32]), None),          # < 64 samples: NULL
-        (6, "audio", b"RIFFjunk", None),             # undecodable: NULL
-    ]
-    df = spark.createDataFrame(
-        rows, "media_id long, media_type string, content binary, meta string"
-    )
-    got = {r.media_id: r for r in multimodal.audio_energy_hash(df).collect()}
-    assert len(got[1].ahash) == 64
-    assert got[1].ahash == got[2].ahash            # gain-invariant
-    assert got[1].ahash == got[4].ahash            # stereo mono-izes
-    assert got[4].channels == 2
-    diff = sum(a != b for a, b in zip(got[1].ahash, got[3].ahash))
-    assert diff > 10                               # different content
-    assert got[5].ahash is None and got[6].ahash is None
 
 
 # --- MIPS + Gram/PCA (r8) ----------------------------------------------------

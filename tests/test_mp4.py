@@ -1,6 +1,5 @@
 """ISO-BMFF metadata walk (operators/mp4.py): box-tree parse incl.
-64-bit sizes and version-1 headers, rejection, never-raise fuzz, and
-the container-probed frame_sample path."""
+64-bit sizes and version-1 headers, rejection and never-raise fuzz."""
 
 from __future__ import annotations
 
@@ -70,25 +69,3 @@ def test_never_raises_on_bitflipped_valid(seed, flips):
         b[f % len(b)] ^= 1 << (f % 8)
     parse_mp4_meta(bytes(b))
 
-
-def test_frame_sample_uses_container_duration(spark):
-    """use_container=True samples frames against the REAL moov duration
-    even when the declared metadata lies; undecodable payloads fall back
-    to the declared value."""
-    from bgpexplorer_spark.operators.multimodal import MEDIA_SCHEMA, frame_sample
-
-    rows = [
-        # declared 99s, container says 3s → 3 frames at 1 fps
-        (1, "video", encode_mp4(duration_ms=3000), ("s", None, None, None, 99000)),
-        # not a real container → declared 2s wins
-        (2, "video", b"\x00\x01garbage", ("s", None, None, None, 2000)),
-        (3, "image", encode_mp4(duration_ms=9000), ("s", None, None, None, 1000)),
-    ]
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    out = frame_sample(media, every_ms=1000, use_container=True).collect()
-    per = {}
-    for r in out:
-        per.setdefault(r.media_id, []).append(r.frame_ts_ms)
-    assert sorted(per[1]) == [0, 1000, 2000]
-    assert sorted(per[2]) == [0, 1000]
-    assert 3 not in per  # images never sampled

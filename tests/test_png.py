@@ -1,7 +1,6 @@
 """Stdlib-zlib PNG decoder (operators/png.py): round-trips, all five
 scanline filters against an independent forward-filter model, palette
-expansion, rejection of out-of-scope profiles, and the Spark
-decoder='png' branch."""
+expansion and rejection of out-of-scope profiles."""
 
 from __future__ import annotations
 
@@ -10,7 +9,6 @@ import zlib
 
 import numpy as np
 
-from bgpexplorer_spark.operators import multimodal
 from bgpexplorer_spark.operators.png import decode_png, encode_png
 
 
@@ -154,27 +152,6 @@ def test_multichunk_idat():
         + _chunk(b"IEND", b"")
     )
     assert np.array_equal(decode_png(b), img)
-
-
-def test_decode_media_png_branch(spark):
-    rgba = _pattern(10, 12, 4, seed=2)
-    gray = _pattern(6, 6, 1, seed=4)
-    rows = [
-        (1, "image", encode_png(rgba), ("s", None, None, None, None)),
-        (2, "image", encode_png(gray), ("s", None, None, None, None)),
-    ]
-    df = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-    dec = {r.media_id: r for r in multimodal.decode_media(df).collect()}
-    assert dec[1].decoder == "png"
-    assert (dec[1].width, dec[1].height, dec[1].channels) == (12, 10, 4)
-    assert dec[1].mean_byte == round(float(rgba.mean()), 4)  # lossless
-    assert dec[2].decoder == "png" and dec[2].channels == 1
-
-    from bgpexplorer_spark.operators.multimodal import decode_pnm
-
-    rs = {r.media_id: r for r in multimodal.resize_images(df, 4, 4).collect()}
-    arr = decode_pnm(bytes(rs[1].resized_ppm))
-    assert arr.shape == (4, 4, 3)  # RGBA → RGB re-encode
 
 
 def test_encode_png_validates_with_libpng():

@@ -66,44 +66,6 @@ def test_session_registry_symmetric(spark):
 
 _SF_DIR = "/root/testdata/sf0.001"
 
-def test_fact_tables_never_broadcast(spark):
-    """q3/q5 join strategy: the fact tables (lineitem, orders) must never
-    enter a BroadcastExchange build — only the dim chains do. At sf0.1 the
-    optimizer would happily broadcast a <10 MB lineitem; at 100 TB that
-    plan is fatal, so the hints are load-bearing."""
-    import os
-
-    if not os.path.isdir(_SF_DIR):
-        import pytest
-
-        pytest.skip("driver testdata not present")
-    from bgpexplorer_spark.contract import QUERIES
-
-    def broadcast_subtrees(df):
-        """treeStrings of every BroadcastExchange subtree (AQE-aware)."""
-        out = []
-
-        def walk(node):
-            name = node.nodeName()
-            if "AdaptiveSparkPlan" in name:
-                walk(node.initialPlan())
-                return
-            if "BroadcastExchange" in name:
-                out.append(node.treeString())
-                return
-            kids = node.children()
-            for i in range(kids.size()):
-                walk(kids.apply(i))
-
-        walk(df._jdf.queryExecution().executedPlan())
-        return out
-
-    for key in ["q3_shipping_priority", "q5_revenue_by_nation"]:
-        subtrees = broadcast_subtrees(QUERIES[key](spark, _SF_DIR))
-        assert subtrees, f"{key} expected broadcast dim chains"
-        for st in subtrees:
-            assert "lineitem.parquet" not in st, f"{key} broadcasts lineitem"
-
 def test_lpm_join_uses_partial_aggregation(spark):
     """lpm_join_v4 keeps the longest prefix via groupBy+max(struct) —
     the plan must show a partial HashAggregate before the exchange, not a

@@ -1187,67 +1187,3 @@ def test_tws_variants_gated_or_equivalent(spark, tmp_path):
     assert run(live_flap_damping, "t1fd", "ck3") == run(
         live_flap_damping_tws, "t2fd", "ck4"
     )
-
-
-def test_live_neardup_flag_stream_matches_incremental(spark, tmp_path):
-    """live_neardup_flag: a real file-source document stream flagged
-    against the at-rest dedup_index returns EXACTLY what batch
-    incremental_dedup returns on the same inputs (exact re-uploads
-    flagged exact_dup, shingle-overlapping rewrites flagged near_dup,
-    fresh docs keep), and the batch-mode call is identical too."""
-    from bgpexplorer_spark.operators.dedup import dedup_index, incremental_dedup
-    from bgpexplorer_spark.streaming.feed import live_neardup_flag
-
-    base = " ".join(f"tok{i}" for i in range(30))
-    near = " ".join(
-        "CHANGED" if i == 20 else f"tok{i}" for i in range(30)
-    )  # one token of thirty changed: some band's 4 mins survive intact
-    corpus = spark.createDataFrame(
-        [
-            (1, base),
-            (2, "completely different reference text about spark engines"),
-            (3, "a b"),  # < n tokens: contributes no LSH keys
-        ],
-        "doc_id long, text string",
-    )
-    newdocs = [
-        (10, base),  # exact re-upload
-        (11, near),  # near-duplicate rewrite
-        (12, "entirely novel content nothing shares any shingle"),  # keep
-        (13, "x y"),  # too short for trigram shingles
-    ]
-    new_df = spark.createDataFrame(newdocs, "doc_id long, text string")
-    idx = dedup_index(corpus, "doc_id", k=16, n=3, bands=4)
-
-    want = {
-        r.doc_id: (r.exact_dup, r.near_dup, r.keep)
-        for r in incremental_dedup(new_df, idx, "doc_id", k=16, n=3, bands=4).collect()
-    }
-    assert want[10] == (True, True, False)
-    assert want[11][1] and not want[11][0]
-    assert want[12] == (False, False, True)
-    assert want[13] == (False, False, True)
-
-    # batch-mode call of the streaming operator
-    got_batch = {
-        r.doc_id: (r.exact_dup, r.near_dup, r.keep)
-        for r in live_neardup_flag(new_df, idx, k=16, n=3, bands=4).collect()
-    }
-    assert got_batch == want
-
-    # real streaming run: parquet file source, availableNow, memory sink
-    src = str(tmp_path / "docs_in")
-    new_df.write.parquet(src)
-    stream = spark.readStream.schema("doc_id long, text string").parquet(src)
-    assert stream.isStreaming
-    flagged = live_neardup_flag(stream, idx, k=16, n=3, bands=4)
-    q = (
-        flagged.writeStream.format("memory").queryName("neardup_live")
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    q.awaitTermination(120)
-    got_stream = {
-        r.doc_id: (r.exact_dup, r.near_dup, r.keep)
-        for r in spark.sql("SELECT * FROM neardup_live").collect()
-    }
-    assert got_stream == want

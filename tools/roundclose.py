@@ -18,14 +18,13 @@ Usage::
     python tools/roundclose.py 9          # writes *_r09.* artifacts
     python tools/roundclose.py 9 --skip-fp   # fingerprints already pinned
 
-Runs ~45 min end-to-end (selfcheck ~8, bench ~35). Any step failing
-aborts the pipeline with that step's output on stderr; nothing is
-overwritten until its producer exits 0.
+Runs ~15 min end-to-end on 4 cores (selfcheck ~2, bench ~12). Any step
+failing aborts the pipeline with that step's output on stderr; nothing
+is overwritten until its producer exits 0.
 """
 
 from __future__ import annotations
 
-import os
 import shutil
 import subprocess
 import sys
@@ -63,12 +62,9 @@ def main() -> None:
             [sys.executable, str(ROOT / "tools" / "plan_fingerprints.py")],
         )
         print("   REVIEW: git diff tools/plan_fingerprints.json", flush=True)
-    # fixture dir honors the same env-override convention as
-    # tools/measure_sf10.py, so the pipeline runs on any checkout
-    sf001 = os.environ.get("SPARK_GRAFT_SF001_DIR", "/root/testdata/sf0.01")
     run(
         "selfcheck (full oracle gate, sf0.01)",
-        [sys.executable, str(ROOT / "tools" / "selfcheck.py"), sf001],
+        [sys.executable, str(ROOT / "tools" / "selfcheck.py")],
         capture_to=ROOT / f"SELFCHECK_r{n:02d}.log",
     )
     run(

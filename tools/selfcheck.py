@@ -138,13 +138,6 @@ def main():
     sf_dir = args[0] if args and "/" in args[0] else "/root/testdata/sf0.01"
     only = set(a for a in args if "/" not in a)
 
-    # lazy oracles (e.g. the adaptive-plane knn family) derive constants
-    # from the fixture named by this env var — pin it to the dir this
-    # check actually runs against, so ANY fixture size verifies
-    import os
-
-    os.environ["SPARK_GRAFT_SF001_DIR"] = sf_dir
-
     import importlib.util
 
     spec = importlib.util.spec_from_file_location(
@@ -158,10 +151,7 @@ def main():
     print(f"ENGINE-DIGEST: {engine_digest()}")
     spark = get_spark("selfcheck", cpus=8)
     con = duckdb.connect()
-    for t in [
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ]:
+    for t in ["region", "nation", "customer", "events"]:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
@@ -183,9 +173,6 @@ def main():
         except Exception as e:
             print(f"{name}: SPARK ERROR {type(e).__name__}: {str(e)[:200]}")
             fails.append(name)
-            continue
-        if name not in osql:
-            print(f"{name}: rows-only (no oracle) spark_rows={stbl.num_rows}")
             continue
         try:
             otbl = con.execute(osql[name]).fetch_arrow_table()
