@@ -27,9 +27,10 @@ BENCH_QUERIES = [
     "j1_semijoin",
     "f1_subnet_match",
     "f5_aspath_subseq",
-    # the engine's flagship serving shape end-to-end (build_history →
-    # query_rib → to_nested_json → flatten) — regression-tracked, not
-    # just its ingredients
+    # the engine's flagship serving shape (build_history → serving_copy →
+    # query_rib → to_nested_json → nest_items → flatten). Each timed count
+    # rebuilds the copy, fetches the page's history and nests it;
+    # query_rib's page action runs once, when the frame is built
     "o7_nested_output",
     # real wire-format ingestion: MRT decode → build_history
     "s1_mrt_decode",

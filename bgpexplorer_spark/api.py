@@ -23,7 +23,9 @@ from urllib.parse import parse_qs, urlparse
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from bgpexplorer_spark.operators.query import QueryParams, query_rib, to_nested_json
+from bgpexplorer_spark.operators.query import (
+    QueryParams, nest_items, query_rib, serving_copy, to_nested_json,
+)
 from bgpexplorer_spark.operators.rib import statistics
 from bgpexplorer_spark.schemas import RIB_NAMES
 
@@ -102,6 +104,13 @@ class BgpExplorerService:
         # parallel)
         self._memo_lock = threading.Lock()
         self._memo_building: dict[tuple, threading.Lock] = {}
+        # the in-memory served copy of the history: (state version,
+        # cached query.serving_copy frame, its per-rib route counts).
+        # Built by the first /api/json request of a version, so the
+        # ingest sink's bump does no Spark work; _served_lock makes
+        # concurrent first requests build it once
+        self._served: tuple[int, DataFrame, dict[str, int]] | None = None
+        self._served_lock = threading.Lock()
         self.whois_server_map = None
         if svc_config is not None and getattr(svc_config, "whoisjsonconfig", None):
             from bgpexplorer_spark.operators.whois import WhoisServerMap
@@ -110,19 +119,36 @@ class BgpExplorerService:
                 svc_config.whoisjsonconfig
             )
 
-    def _length(self, rib: str) -> int | None:
-        """Maintained count for ``rib``; computed once and memoized when
-        the service was built without snapshot counts. None → query_rib
-        runs the exact per-request scan (exact_length=True)."""
-        if self.exact_length:
-            return None
-        if self.route_counts is None:
-            from bgpexplorer_spark.operators.rib import route_counts as rc
+    def _served_copy(self) -> tuple[DataFrame, dict[str, int]]:
+        """The served copy for the current state version and its route
+        counts, built on first use: ``serving_copy(self.history)``
+        cached, materialized by the route-count job. The previous
+        version's copy is unpersisted once the new one is in place; a
+        request still holding it keeps its answers (the frame recomputes
+        from the files planned when it was built)."""
+        from bgpexplorer_spark.operators.rib import route_counts as rc
 
-            self.route_counts = {
-                r["rib"]: r["routes"] for r in rc(self.history).collect()
-            }
-        return self.route_counts.get(rib, 0)
+        with self._served_lock:
+            with self._memo_lock:
+                version, history = self._state_version, self.history
+            old = self._served
+            if old is not None and old[0] == version:
+                return old[1], old[2]
+            df = serving_copy(history).cache()
+            counts = {r["rib"]: r["routes"] for r in rc(df).collect()}
+            self._served = (version, df, counts)
+        if old is not None:
+            old[1].unpersist()
+        return df, counts
+
+    def release_served_copy(self) -> None:
+        """Unpersist the served copy (the daemon's stop): the cache
+        manager holds a cached frame until it is unpersisted, whether or
+        not the service is still referenced. A later request rebuilds."""
+        with self._served_lock:
+            old, self._served = self._served, None
+        if old is not None:
+            old[1].unpersist()
 
     @classmethod
     def from_snapshot(cls, spark, path: str, sessions: DataFrame | None = None):
@@ -144,12 +170,20 @@ class BgpExplorerService:
         if rib not in RIB_NAMES:
             rib = "ipv4u"
         p = QueryParams(**params)
-        hist = self._history_for_asof() if p.asof is not None else self.history
-        r = query_rib(hist, rib, p, length=self._length(rib))
-        items = {
-            row.nlri_str: json.loads(row.items_json)
-            for row in to_nested_json(r).collect()
-        }
+        if p.asof is not None:
+            # answered as of the cutoff: length is recomputed there
+            r = query_rib(self._history_for_asof(), rib, p)
+        else:
+            served, counts = self._served_copy()
+            if self.exact_length:
+                length = None
+            else:
+                # maintained counts (snapshot) until the first bump,
+                # then the served copy's own
+                maintained = self.route_counts
+                length = (counts if maintained is None else maintained).get(rib, 0)
+            r = query_rib(served, rib, p, length=length)
+        items = nest_items(r, to_nested_json(r).collect())
         return {
             "ribtype": r.ribtype,
             "length": r.length,
@@ -200,12 +234,15 @@ class BgpExplorerService:
 
     def bump_state_version(self) -> None:
         """New state landed (ingest batch applied / snapshot reloaded):
-        invalidate every per-state serving memo — analytics reports and
-        the maintained route counts — so the next request recomputes.
-        With a ``history_provider`` set (a zero-arg callable returning
-        the current history DataFrame — the live-daemon wiring, since a
-        batch DataFrame binds its file listing at creation), the history
-        itself is refreshed too."""
+        invalidate every per-state serving memo — analytics reports, the
+        maintained route counts and the served copy of the history — so
+        the next request recomputes. With a ``history_provider`` set (a
+        zero-arg callable returning the current history DataFrame — the
+        live-daemon wiring, since a batch DataFrame binds its file
+        listing at creation), the history itself is re-read too: a file
+        listing, no Spark job. The served copy is rebuilt (and the old
+        one unpersisted) by the next /api/json request, not here, so the
+        ingest sink's bump stays cheap."""
         # refresh the history FIRST: bumping before the refresh opens a
         # window where a request computes a new-version memo key but
         # build() still reads the old history — the stale frame would

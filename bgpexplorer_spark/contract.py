@@ -1391,7 +1391,8 @@ def s5_mrt_rib_dump(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # The full §3.1 read path, flattened back out of the nested JSON so DuckDB
 # can verify every stage: derived updates → build_history(differ) →
-# query_rib(filter, limit) → emitted_history → to_nested_json → explode.
+# query_rib(filter, limit) → emitted_history → to_nested_json → nest_items
+# → explode.
 # ts is synthetic (2024-01-01 + event_id seconds): unique per event, so
 # window order, the differ lag, and the nested ts_ms map keys are all
 # deterministic on both engines.
@@ -1450,15 +1451,41 @@ _O7_ORACLE = f"""
 def o7_nested_output(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O7/F14 — the flagship nested route→session→path→ts output
     (src/bgpsvc.rs:493-596) built via the real engine path
-    (build_history → query_rib → to_nested_json), then exploded back to
-    flat typed rows THROUGH the JSON itself so the oracle verifies the
+    (build_history → serving_copy → query_rib → to_nested_json →
+    nest_items, the daemon's /api/json path), then exploded back to flat
+    typed rows THROUGH the served JSON itself so the oracle verifies the
     nested shaping, the match/page/maxdepth semantics, and the attrs
-    round-trip in one go."""
-    from bgpexplorer_spark.operators.query import QueryParams, query_rib, to_nested_json
+    round-trip in one go.
 
-    hist = _derived_updates_history(spark, sf_dir)
+    The history fetch and the nesting stay inside the returned frame, so
+    every action on it re-reads the copy: the page's rows are grouped by
+    route and each group is nested by the served :func:`nest_items`.
+    Only query_rib's page action runs when the frame is built."""
+    import json
+    from types import SimpleNamespace
+
+    import pandas as pd
+    from pyspark.sql import Row
+
+    from bgpexplorer_spark.operators.query import (
+        QueryParams, nest_items, query_rib, serving_copy, to_nested_json,
+    )
+
+    hist = serving_copy(_derived_updates_history(spark, sf_dir))
     r = query_rib(hist, "ipv4u", QueryParams(filter="10.0.0.0/8", limit=50))
-    nested = to_nested_json(r)
+    # nest_items reads only the page order of the result
+    page = SimpleNamespace(routes=r.routes)
+
+    def nest(pdf: pd.DataFrame) -> pd.DataFrame:
+        items = nest_items(page, [Row(**d) for d in pdf.to_dict("records")])
+        return pd.DataFrame({
+            "nlri_str": list(items),
+            "items_json": [json.dumps(v) for v in items.values()],
+        })
+
+    nested = to_nested_json(r).groupBy("nlri_str").applyInPandas(
+        nest, "nlri_str string, items_json string"
+    )
     m = F.from_json("items_json", "map<string,map<string,map<string,string>>>")
     return (
         nested.select("nlri_str", F.explode(m).alias("sid", "paths"))

@@ -14,9 +14,10 @@ Pipeline wiring (every piece is the standard component, nothing bespoke):
    (``feed.run_ingest`` with a processingTime trigger) folds the
    micro-batches through ``build_history`` into the partitioned history
    table, publishes each batch to WebSocket subscribers, and bumps the
-   service's state version (which re-reads the table — a batch
-   DataFrame binds its file listing at creation — and drops the
-   serving memos).
+   service's state version. The bump re-lists the table (a batch
+   DataFrame binds its file listing at creation) and drops the serving
+   memos; it runs no Spark job. The next ``/api/json`` request builds
+   the new version's in-memory served copy and unpersists the old one.
 4. **Serving**: ``BgpExplorerService`` + the bundled UI over HTTP
    (``api.serve``); ``roasfile=`` feeds /api/analytics/rpki via the
    validator-export loaders.
@@ -210,6 +211,8 @@ class BgpExplorerDaemon:
         if self.httpd is not None:
             self.httpd.shutdown()
             self.httpd = None
+        if self.service is not None:
+            self.service.release_served_copy()
 
 
 def run_from_ini(

@@ -8,10 +8,17 @@ a composition of DataFrame operators:
     offset/limit pagination  →  history emission (newest-maxdepth)  →
     supernet fallback when the page is empty  →  nested-map JSON shaping.
 
-Scale shape: one shuffle on the history key for the windows, one on the
-route key for the existential — both prunable by the (rib, ts_date)
-partitioning; the filter column itself is pure predicate algebra pushed
-into the scan.
+Scale shape: one action returns the page and ``found`` (an ``observe``
+count under the ordered offset/limit); a second runs only for the
+supernet fallback; the page's history is one map-only collect keyed on
+the page's route keys, and the route → session → path → ts nesting is
+built on the driver from those ≤ limit × depth rows. On the serving copy
+(:func:`serving_copy`: partitioned by route key, each entry's slot from
+the newest precomputed) a request without entry filters runs no window
+and no exchange. Requests with ``onlyactive``/``changed_after``/
+``changed_before``, and ``asof`` requests, compute the windows per
+request. The filter column itself is pure predicate algebra pushed into
+the scan.
 """
 
 from __future__ import annotations
@@ -19,7 +26,7 @@ from __future__ import annotations
 import datetime as dt
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Row, Window
 from pyspark.sql import functions as F
 
 from bgpexplorer_spark.filterlang import parse_filter
@@ -28,6 +35,10 @@ from bgpexplorer_spark.functions.timeutil import parse_ts_param, ts_cutoff_str, 
 from bgpexplorer_spark.schemas import KEY_COLS
 
 ROUTE_COLS = ["rib", "nlri_str"]  # route identity (sessions/paths nest under it)
+
+# the serving copy's extra column: each entry's 1-based slot counted from
+# the newest entry of its KEY_COLS key
+SLOT_COL = "_slot"
 
 @dataclass
 class QueryParams:
@@ -67,6 +78,47 @@ def history_entry_filter(p: QueryParams) -> Column:
     if p.changed_after is not None:
         c = c & (F.col("ts") > F.lit(ts_cutoff_str(p.changed_after)))
     return c
+
+def serving_copy(history: DataFrame) -> DataFrame:
+    """The history as the serving layer holds it once per state version:
+    hash-partitioned by route key (so the route-level dedup and every
+    KEY_COLS window above it need no exchange) plus :data:`SLOT_COL`.
+    With the slot, the match window of :func:`matched_routes` and the
+    maxdepth cut of :func:`emitted_history` are plain filters for every
+    request that does not filter entries. The caller caches it.
+
+    The copy is detached from the table's file index first (rebuilt over
+    the history's planned RDD of internal rows, no row conversion): a
+    cached plan that reads a path is refreshed in place by every
+    in-process append to that path (CacheManager.recacheByPath), which
+    would move an older version's copy — and the frames sharing its
+    file index — onto newer files, and would make every version's copy
+    one and the same cache entry."""
+    spark = history.sparkSession
+    # Spark internals, checked on Spark 4.1: Dataset.queryExecution().toRdd()
+    # and the private[sql] SparkSession.internalCreateDataFrame.
+    # tests/test_served_copy.py::test_serving_copy_reads_no_files fails
+    # if an upgrade changes them
+    jdf = history._jdf
+    detached = DataFrame(
+        spark._jsparkSession.internalCreateDataFrame(
+            jdf.queryExecution().toRdd(), jdf.schema(), False
+        ),
+        spark,
+    )
+    n = spark.sparkContext.defaultParallelism
+    w = Window.partitionBy(*KEY_COLS).orderBy(F.col("ts").desc())
+    return detached.repartition(n, *ROUTE_COLS).withColumn(
+        SLOT_COL, F.row_number().over(w)
+    )
+
+def _uses_slots(history: DataFrame, p: QueryParams) -> bool:
+    """Slots rank the unfiltered history: they serve a request only when
+    filter_ah keeps every entry."""
+    filters_entries = (
+        p.onlyactive or p.changed_after is not None or p.changed_before is not None
+    )
+    return SLOT_COL in history.columns and not filters_entries
 
 def _route_sort_key() -> list[Column]:
     """Deterministic route order standing in for BTreeMap key order (O1
@@ -114,17 +166,21 @@ def matched_routes(
         # parquet min/max pruning for the serving path. Supernet mode
         # reverses containment, where the prefilter does not apply.
         df = df.filter(pushdown_prefilter(terms, rib))
-    wk = Window.partitionBy(*KEY_COLS)
-    df = df.withColumn("_total", F.count(F.lit(1)).over(wk))
-    df = df.filter(history_entry_filter(p))
-    df = df.withColumn(
-        "_rn_asc", F.row_number().over(wk.orderBy(F.col("ts").asc()))
-    )
     # NB maxdepth=0 ⇒ zero match-window slots ⇒ no route matches: the
     # reference's own semantics (src/ribfilter.rs:601-606 skips len-0
     # entries) — deliberately asymmetric with emitted_history's
     # "0 = unlimited" (src/bgpsvc.rs:521-526), replicated as-is
-    df = df.filter(F.col("_rn_asc") > F.col("_total") - F.lit(p.maxdepth))
+    if _uses_slots(history, p):
+        # no entry filter: the window is the newest maxdepth slots
+        df = df.filter(F.col(SLOT_COL) <= F.lit(p.maxdepth))
+    else:
+        wk = Window.partitionBy(*KEY_COLS)
+        df = df.withColumn("_total", F.count(F.lit(1)).over(wk))
+        df = df.filter(history_entry_filter(p))
+        df = df.withColumn(
+            "_rn_asc", F.row_number().over(wk.orderBy(F.col("ts").asc()))
+        )
+        df = df.filter(F.col("_rn_asc") > F.col("_total") - F.lit(p.maxdepth))
     df = df.filter(F.coalesce(filter_to_column(terms, rib, supernet), F.lit(False)))
     return df.select(
         "rib", "nlri_str", "rd_hi", "rd_lo", "addr_v4", "addr_v6",
@@ -142,38 +198,34 @@ def page_routes(
         ordered = routes.orderBy(*_route_sort_key())
     return ordered.offset(p.skip).limit(p.limit)
 
-# emitted_history page prefilter bound: collecting the page's nlri_str
-# keys is bounded by p.limit the same way the serving layer's own page
-# collect is; past this many keys the IN-list stops being a cheap plan
-# literal and the broadcast semi-join alone is the right shape.
-_PAGE_PREFILTER_MAX = 1024
+def _key_in(keys: list[str]) -> Column:
+    """``nlri_str IN (keys)`` as ONE expression (one py4j call, where
+    ``isin(*keys)`` pays one per key). Each key is a hex binary literal
+    cast to string — no quoting to get wrong — which constant folding
+    turns back into a plain literal set for the scan."""
+    if not keys:
+        return F.lit(False)
+    lits = ", ".join(f"CAST(X'{k.encode().hex()}' AS STRING)" for k in keys)
+    return F.expr(f"nlri_str IN ({lits})")
 
 def emitted_history(
-    history: DataFrame, page: DataFrame, p: QueryParams
+    history: DataFrame, rib: str, keys: list[str], p: QueryParams
 ) -> DataFrame:
-    """F13/O7 input — for the paged routes, the newest ``maxdepth``
-    filter_ah-passing entries per (session, path); maxdepth=0 = unlimited
-    (BAHItems, src/bgpsvc.rs:516-532).
+    """F13/O7 input — for the paged routes (``keys``: their ``nlri_str``
+    in ``rib``), the newest ``maxdepth`` filter_ah-passing entries per
+    (session, path); maxdepth=0 = unlimited (BAHItems,
+    src/bgpsvc.rs:516-532).
 
-    Page prefilter (r11 optimization, guide §8 "decide with small rows,
-    move big rows once"): the broadcast semi-join below is correct but
-    Catalyst cannot push a JOIN under a Window, so on derived history
-    the FULL window-chain output crossed the ingest exchange per run
-    just to be semi-joined down to the ≤ ``p.limit`` page (measured at
-    sf1: 27 MB shuffled, the two hottest stages of the query). The page
-    is already a materialized ≤ limit-row frame, so its distinct
-    ``nlri_str`` keys become a plain IN predicate — a filter on a window
-    PARTITION key, which Catalyst pushes below every KEY_COLS window,
-    through the ingest repartition, into the scan (real column →
-    PushedFilters + parquet bloom-filter row-group skipping; derived
-    column → substituted and applied at the scan projection). Whole keys
-    are kept or dropped, never split, and the exact ROUTE_COLS semi-join
-    still runs above — rows identical by construction."""
-    if p.limit <= _PAGE_PREFILTER_MAX:
-        keys = [r[0] for r in page.select("nlri_str").distinct().collect()]
-        history = history.filter(F.col("nlri_str").isin(keys))
-    df = history.join(F.broadcast(page.select(*ROUTE_COLS)), ROUTE_COLS, "left_semi")
-    df = df.filter(history_entry_filter(p))
+    The page keys are a predicate on a window PARTITION key, so Catalyst
+    pushes it below the KEY_COLS window into the scan; whole keys are
+    kept or dropped, never split. On the serving copy without entry
+    filters the maxdepth cut is a slot filter and the fetch is map-only."""
+    df = history.filter((F.col("rib") == rib) & _key_in(keys))
+    if _uses_slots(history, p):
+        if p.maxdepth > 0:
+            df = df.filter(F.col(SLOT_COL) <= F.lit(p.maxdepth))
+        return df.drop(SLOT_COL)
+    df = df.drop(SLOT_COL).filter(history_entry_filter(p))
     w = Window.partitionBy(*KEY_COLS).orderBy(F.col("ts").desc())
     df = df.withColumn("_rn", F.row_number().over(w))
     if p.maxdepth > 0:
@@ -191,7 +243,7 @@ class RibQueryResult:
     limit: int
     maxdepth: int
     onlyactive: bool
-    routes: DataFrame    # the emitted page of route keys
+    routes: list[Row]    # the emitted page of route keys, in page order
     history: DataFrame   # flat emitted history rows for those routes
     from_supernet: bool  # True when the supernet fallback produced the page
 
@@ -215,36 +267,44 @@ def query_rib(
     stood at that instant — the serving form of analytics.rib_asof. The
     maintained ``length`` describes the full table, so it is recomputed
     under asof (the cutoff filter pushes down to the scan; partition
-    pruning on ts_date bounds the read)."""
+    pruning on ts_date bounds the read). Slots of a serving copy rank
+    the untruncated history, so asof drops them and runs the windows."""
     if p.asof is not None:
         from bgpexplorer_spark.functions.timeutil import asof_prune
 
-        history = asof_prune(history, p.asof)
+        history = asof_prune(history.drop(SLOT_COL), p.asof)
         length = None
     if length is None:
         rib_df = history.filter(F.col("rib") == rib)
         length = rib_df.dropDuplicates(ROUTE_COLS).count()
 
     terms = parse_filter(p.filter)
-    # materialized once per request: the match set feeds both the found
-    # count and the page. localCheckpoint instead of .cache() so a
-    # long-running HTTP server doesn't accumulate CacheManager entries
-    # per request (blocks free when the request's DataFrames are GC'd)
-    matched = matched_routes(history, rib, p).localCheckpoint(eager=True)
+    matched = matched_routes(history, rib, p)
     # O2: count short-circuits to table size on empty filter
-    # (src/bgpsvc.rs:603-613)
-    found = length if not terms else matched.count()
-
-    page = page_routes(matched, p)
+    # (src/bgpsvc.rs:603-613); otherwise the count is observed in the
+    # page's own action. limit 0 is optimized into an empty relation
+    # that never reports the metric, so it counts on its own.
+    observed = bool(terms) and p.limit > 0
+    if observed:
+        obs = Observation()
+        matched = matched.observe(obs, F.count(F.lit(1)).alias("found"))
+    page = page_routes(matched, p).collect()
+    if not terms:
+        found = length
+    elif observed:
+        found = obs.get["found"]
+    else:
+        found = matched.count()
     from_supernet = False
     # the primary page is empty iff found <= skip (page = matched rows
-    # after OFFSET skip), so the supernet-fallback probe
-    # (src/bgpsvc.rs:625-658) needs NO extra Spark action
+    # after OFFSET skip); only then does the supernet fallback
+    # (src/bgpsvc.rs:625-658) run its own action
     if found <= p.skip:
-        page = page_routes(matched_routes(history, rib, p, supernet=True), p, supernet=True)
+        page = page_routes(
+            matched_routes(history, rib, p, supernet=True), p, supernet=True
+        ).collect()
         from_supernet = True
-    page = page.localCheckpoint(eager=True)
-    hist = emitted_history(history, page, p)
+    hist = emitted_history(history, rib, [r.nlri_str for r in page], p)
     return RibQueryResult(
         ribtype=rib, length=length, found=found, skip=p.skip, limit=p.limit,
         maxdepth=p.maxdepth, onlyactive=p.onlyactive, routes=page,
@@ -252,94 +312,50 @@ def query_rib(
     )
 
 def to_nested_json(result: RibQueryResult) -> DataFrame:
-    """O7 — route → {session → {path → {ts_millis → entry}}} JSON shaping
-    (src/bgpsvc.rs:493-596), newest-first inside each path, sessions and
-    paths in ascending numeric order (BTreeMap serialization order). One
-    row per route: (nlri_str, items_json) — byte-deterministic across
-    runs/partitionings.
-
-    ONE shuffle: rows group by (rib, nlri_str) once and the
-    session→path→history nesting is built in expression land (distinct
-    ids + per-level filter/sort over the collected array). The previous
-    shape aggregated three times — (…,session,path) → (…,session) →
-    (…,) — which is three exchanges, because a hash partitioning on four
-    keys does not satisfy clustering on their prefix. Per-prefix group
-    sizes are history-depth-bounded, so the in-array nesting is tiny."""
+    """O7 input — the page's emitted history as flat rows (nlri_str,
+    session_id, path_id, ts, ts_ms, entry), ``entry`` being the JSON
+    text the response carries per timestamp. A projection only: no
+    join, no aggregation, no exchange. :func:`nest_items` nests the
+    collected rows on the driver."""
     from bgpexplorer_spark.operators.ingest import attrs_struct
 
-    h = result.history.withColumn("_ts_ms", ts_to_millis(F.col("ts")).cast("string"))
-    entry = F.to_json(
-        F.struct(F.col("active"), attrs_struct().alias("attrs"), F.col("labels"))
+    return result.history.select(
+        "nlri_str", "session_id", "path_id", "ts",
+        ts_to_millis(F.col("ts")).cast("string").alias("ts_ms"),
+        F.to_json(
+            F.struct(F.col("active"), attrs_struct().alias("attrs"), F.col("labels"))
+        ).alias("entry"),
     )
-    grouped = (
-        h.withColumn("_e", entry)
-        .groupBy("rib", "nlri_str")
-        .agg(
-            F.collect_list(
-                F.struct(
-                    F.col("session_id").alias("s"),
-                    F.col("path_id").alias("p"),
-                    F.col("ts").alias("t"),
-                    F.struct(F.col("_ts_ms"), F.col("_e")).alias("kv"),
-                )
-            ).alias("_rows")
-        )
-    )
-    rows = F.col("_rows")
 
-    def hist_map(s, p):
-        # newest-first per path: same (t, kv) struct sort the 3-level
-        # shape used, reversed — identical tie order
-        ents = F.filter(rows, lambda x: (x["s"] == s) & (x["p"] == p))
-        srt = F.reverse(
-            F.array_sort(
-                F.transform(
-                    ents, lambda x: F.struct(x["t"].alias("t"), x["kv"].alias("kv"))
-                )
-            )
-        )
-        kvs = srt.getField("kv")
-        # the reference keys history by a BTreeMap<ts> so same-ts rows
-        # CANNOT coexist there (the insert overwrites); the engine's
-        # history table can hold them, and map_from_entries would raise
-        # DUPLICATED_MAP_KEY. Collapse to one entry per ts-millis —
-        # keeping the (t, kv)-max, the deterministic stand-in for the
-        # BTreeMap's last-insert-wins (no arrival order survives batch)
-        dedup = F.filter(
-            kvs,
-            lambda x, i: (i == F.lit(0))
-            | (x["_ts_ms"] != F.element_at(kvs, i)["_ts_ms"]),
-        )
-        return F.map_from_entries(dedup)
+def nest_items(result: RibQueryResult, rows: list[Row]) -> dict:
+    """O7 — route → {session → {path → {ts_millis → entry}}}
+    (src/bgpsvc.rs:493-596) from the collected :func:`to_nested_json`
+    rows: routes in page order, sessions and paths in ascending numeric
+    order (BTreeMap serialization order), newest-first inside each path.
+    Routes without emitted history are left out.
 
-    def path_map(s):
-        paths = F.array_sort(
-            F.array_distinct(
-                F.transform(
-                    F.filter(rows, lambda x: x["s"] == s), lambda x: x["p"]
-                )
-            )
-        )
-        return F.map_from_entries(
-            F.transform(
-                paths,
-                lambda p: F.struct(
-                    p.cast("string").alias("key"), hist_map(s, p).alias("value")
-                ),
-            )
-        )
-
-    sess_ids = F.array_sort(
-        F.array_distinct(F.transform(rows, lambda x: x["s"]))
-    )
-    sess_map = F.map_from_entries(
-        F.transform(
-            sess_ids,
-            lambda s: F.struct(
-                s.cast("string").alias("key"), path_map(s).alias("value")
-            ),
-        )
-    )
-    return grouped.select(
-        "rib", "nlri_str", F.to_json(sess_map).alias("items_json")
-    )
+    The reference keys history by a BTreeMap<ts>, so same-ts entries
+    cannot coexist there (the insert overwrites); the history table can
+    hold them. They collapse to one entry per ts-millis, keeping the
+    (t, ts_ms, entry)-max, the deterministic stand-in for the BTreeMap's
+    last-insert-wins (no arrival order survives batch)."""
+    by_route: dict[str, dict] = {}
+    for r in rows:
+        paths = by_route.setdefault(r.nlri_str, {}).setdefault(r.session_id, {})
+        paths.setdefault(r.path_id, []).append((r.ts, r.ts_ms, r.entry))
+    items = {}
+    for key in result.routes:
+        sessions = by_route.get(key.nlri_str)
+        if sessions is None:
+            continue
+        out = {}
+        for sid in sorted(sessions):
+            paths = {}
+            for pid in sorted(sessions[sid]):
+                hist: dict[str, str] = {}
+                for _, ms, entry in sorted(sessions[sid][pid], reverse=True):
+                    hist.setdefault(ms, entry)
+                paths[str(pid)] = hist
+            out[str(sid)] = paths
+        items[key.nlri_str] = out
+    return items

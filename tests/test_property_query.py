@@ -1,0 +1,259 @@
+"""Property-based equivalence for the route query (query_rib →
+to_nested_json → nest_items): the slot path over the serving copy, the
+windowed path over the plain history, and a pure-Python model of the
+reference's query semantics must agree on random histories.
+
+The model replays events per (rib, nlri, session, path) like ``_replay``
+(tests/test_property_filter.py) and evaluates filters with its
+``_py_match`` terms; it is written from the reference semantics, not from
+query.py: the match window is the newest ``maxdepth`` slots of the
+UNFILTERED per-path count (src/ribfilter.rs:595-609), emission keeps the
+newest ``maxdepth`` filter_ah-passing entries (0 = all,
+src/bgpsvc.rs:516-532), an empty primary page falls back to the
+reversed-containment supernet query ordered most-specific-first
+(src/bgpsvc.rs:625-658), and same-millisecond entries collapse to the
+newest one.
+"""
+
+from __future__ import annotations
+
+import datetime as dt
+import ipaddress
+import json
+
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
+
+from bgpexplorer_spark.filterlang.terms import V4Term, parse_filter
+from bgpexplorer_spark.operators.ingest import build_history
+from bgpexplorer_spark.operators.query import (
+    QueryParams, nest_items, query_rib, serving_copy, to_nested_json,
+)
+
+from tests.ribdata import T0, make_updates, u
+from tests.test_property_filter import _py_attr, _py_key
+
+_ROUTES = [
+    ("ipv4u", "10.0.0.0/8"),
+    ("ipv4u", "10.0.0.0/16"),
+    ("ipv4u", "10.0.1.0/24"),
+    ("ipv4u", "10.0.2.0/24"),
+    ("ipv4u", "10.1.0.0/16"),
+    ("ipv4m", "10.0.1.0/24"),  # same nlri_str in another rib
+]
+
+# "10.0.1.77" has no exact route: its page is always the supernet one
+_FILTERS = [
+    "", "10.0.0.0/8", "10.0.0.0/8", "10.0.0.0/16", "10.0.1.0/24", "as:101",
+    "-as:101", "10.0.0.0/8 as:102", "10.0.1.77", "10.0.1.77",
+]
+
+_US = dt.timedelta(microseconds=1)
+
+
+def _net(nlri):
+    n = ipaddress.ip_network(nlri)
+    return int(n.network_address), n.prefixlen
+
+
+def _route_dict(nlri, var):
+    addr, plen = _net(nlri)
+    return {"addr": addr, "plen": plen, "nlri": nlri, "aspath": [100 + var, 200],
+            "comms": [], "rd": None, "nh": None, "extcomms": []}
+
+
+def _supernet_key(item, route):
+    """match_super_ipv4: the route prefix contains the filter net."""
+    if isinstance(item, V4Term):
+        if item.multicast:
+            return None
+        span = (1 << (32 - route["plen"])) - 1
+        last = item.addr | ((1 << (32 - item.plen)) - 1)
+        return route["addr"] <= item.addr and route["addr"] + span >= last
+    return None
+
+
+def _match(terms, route, rib, supernet):
+    """The reference's 3-valued AND of terms (``_py_term`` with the key
+    half swapped for reversed containment in supernet mode)."""
+    out = True
+    for t in terms:
+        k = _supernet_key(t.item, route) if supernet else _py_key(t.item, route, rib)
+        a = _py_attr(t.item, route)
+
+        def pol(x, neg=t.negated):
+            return (not x) if neg else x
+
+        if k is True:
+            r = True if a is None else pol(a)
+        elif k is False:
+            r = pol(False)
+        else:
+            r = None if a is None else pol(a)
+        if r is False:
+            return False
+        if r is None:
+            out = None
+    return out
+
+
+def _replay(events):
+    """events: [(route, session, path, op, variant, ts)] in time order →
+    {(rib, nlri, session, path): [(ts, active, variant)]} oldest first
+    (history mode "every": withdraws before any update are dropped, a
+    withdraw carries the last update's attributes)."""
+    last, hist = {}, {}
+    for (rib, nlri), s, pid, op, var, t in events:
+        key = (rib, nlri, s, pid)
+        if op == "update":
+            last[key] = var
+            hist.setdefault(key, []).append((t, True, var))
+        elif key in last:
+            hist.setdefault(key, []).append((t, False, last[key]))
+    return hist
+
+
+def _model(hist, rib, p):
+    terms = parse_filter(p.filter)
+
+    def passes(e):
+        t, active, _ = e
+        return (
+            (not p.onlyactive or active)
+            and (p.changed_after is None or t > p.changed_after)
+            and (p.changed_before is None or t < p.changed_before)
+        )
+
+    keys = {k for k in hist if k[0] == rib}
+    routes = sorted({k[1] for k in keys}, key=lambda n: (*_net(n), n))
+
+    def matched(supernet):
+        out = []
+        for nlri in routes:
+            hit = False
+            for k in keys:
+                if k[1] != nlri:
+                    continue
+                seq = hist[k]
+                passing = [e for e in seq if passes(e)]
+                window = [e for i, e in enumerate(passing, 1)
+                          if i > len(seq) - p.maxdepth]
+                hit = hit or any(
+                    _match(terms, _route_dict(nlri, e[2]), rib, supernet) is True
+                    for e in window
+                )
+            if hit:
+                out.append(nlri)
+        return out
+
+    hits = matched(False)
+    found = len(routes) if not terms else len(hits)
+    page = hits[p.skip:p.skip + p.limit]
+    from_supernet = found <= p.skip
+    if from_supernet:
+        sup = sorted(matched(True), key=lambda n: (-_net(n)[1], *_net(n), n))
+        page = sup[p.skip:p.skip + p.limit]
+    items = {}
+    for nlri in page:
+        out = {}
+        for s in sorted({k[2] for k in keys if k[1] == nlri}):
+            paths = {}
+            for pid in sorted({k[3] for k in keys if k[1] == nlri and k[2] == s}):
+                ents = sorted(
+                    (e for e in hist[(rib, nlri, s, pid)] if passes(e)), reverse=True
+                )
+                if p.maxdepth > 0:
+                    ents = ents[:p.maxdepth]
+                by_ms = {}
+                for t, active, var in ents:  # newest first: first per ms wins
+                    ms = str((t - T0) // dt.timedelta(milliseconds=1)
+                             + int(T0.timestamp() * 1000))
+                    by_ms.setdefault(ms, [active, var])
+                if by_ms:
+                    paths[str(pid)] = by_ms
+            if paths:
+                out[str(s)] = paths
+        if out:
+            items[nlri] = out
+    return len(routes), found, page, from_supernet, json.dumps(items)
+
+
+def _served(history, rib, p):
+    r = query_rib(history, rib, p)
+    items = nest_items(r, to_nested_json(r).collect())
+    shaped = {
+        nlri: {
+            s: {
+                pid: {
+                    ms: [json.loads(e)["active"],
+                         json.loads(e)["attrs"]["aspath"][0]["asns"][0] - 100]
+                    for ms, e in ents.items()
+                }
+                for pid, ents in paths.items()
+            }
+            for s, paths in sessions.items()
+        }
+        for nlri, sessions in items.items()
+    }
+    # dumped: key order (page, session, path, newest first) is compared too
+    return (r.length, r.found, [x.nlri_str for x in r.routes], r.from_supernet,
+            json.dumps(shaped))
+
+
+# weighted towards few keys, so paths run deeper than maxdepth and the
+# same nlri_str is live in both ribs
+_EVENT = st.tuples(
+    st.sampled_from(_ROUTES + [_ROUTES[2]] * 3 + [_ROUTES[5]] * 2 + [_ROUTES[1]] * 2),
+    st.sampled_from([0, 0, 1]),                      # session
+    st.sampled_from([0, 0, 0, 1]),                   # path
+    st.sampled_from(["update", "update", "withdraw"]),
+    st.sampled_from([0, 1, 2]),                      # attribute variant
+    st.sampled_from([1, 1, 300, 2500]),              # µs since the previous event
+)
+
+
+@settings(
+    max_examples=8, deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
+)
+@given(data=st.data())
+def test_query_paths_match_model(spark, data):
+    drawn = data.draw(st.lists(_EVENT, min_size=10, max_size=30))
+    events, t = [], T0
+    for route, s, pid, op, var, gap in drawn:
+        t += gap * _US  # strictly increasing: entries never tie on ts
+        events.append((route, s, pid, op, var, t))
+    rows = []
+    for (rib, nlri), s, pid, op, var, ts in events:
+        row = u(nlri, rib=rib, op=op, session_id=s, path_id=pid,
+                aspath=[("Seq", [100 + var, 200])] if op == "update" else None)
+        row["ts"] = ts
+        rows.append(row)
+    table = build_history(make_updates(spark, rows)).cache()
+    served = serving_copy(table).cache()
+    hist = _replay(events)
+    stamps = [e[5] for e in events]
+    try:
+        for maxdepth in (0, 1, 3):
+            entry_filtered = data.draw(st.sampled_from([False, False, True]))
+            p = QueryParams(
+                filter=data.draw(st.sampled_from(_FILTERS)),
+                skip=data.draw(st.sampled_from([0, 0, 0, 1, 5])),
+                limit=data.draw(st.sampled_from([1, 1000, 1000])),
+                maxdepth=maxdepth,
+                onlyactive=entry_filtered and data.draw(st.booleans()),
+                changed_after=(
+                    data.draw(st.sampled_from(stamps)) if entry_filtered
+                    and data.draw(st.booleans()) else None
+                ),
+                changed_before=(
+                    data.draw(st.sampled_from(stamps)) if entry_filtered
+                    and data.draw(st.booleans()) else None
+                ),
+            )
+            want = _model(hist, "ipv4u", p)
+            assert _served(served, "ipv4u", p) == want, (p, events)
+            assert _served(table, "ipv4u", p) == want, (p, events)
+    finally:
+        served.unpersist()
+        table.unpersist()

@@ -12,7 +12,9 @@ from bgpexplorer_spark.operators.ingest import build_history
 from bgpexplorer_spark.operators.lpm import lpm_join_v4
 from bgpexplorer_spark.operators.query import (
     QueryParams,
+    nest_items,
     query_rib,
+    serving_copy,
     to_nested_json,
 )
 
@@ -27,9 +29,12 @@ def test_pagination_and_counts(spark):
     r = query_rib(hist, "ipv4u", QueryParams(filter="10.0.0.0/8", skip=2, limit=3))
     assert r.length == 11
     assert r.found == 10
-    page = [x.nlri_str for x in r.routes.select("nlri_str").collect()]
+    page = [x.nlri_str for x in r.routes]
     assert page == ["10.0.2.0/24", "10.0.3.0/24", "10.0.4.0/24"]  # key order
     assert not r.from_supernet
+    # limit 0 plans no scan for the page, so found is counted on its own
+    r0 = query_rib(hist, "ipv4u", QueryParams(filter="10.0.0.0/8", limit=0))
+    assert r0.found == 10 and r0.routes == [] and not r0.from_supernet
 
 def test_empty_filter_shortcircuit(spark):
     hist = _hist(spark, [u("10.0.0.0/24", t=1), u("11.0.0.0/24", t=2)])
@@ -43,7 +48,7 @@ def test_changed_bounds_strict(spark):
     )
     p = QueryParams(filter="10.0.0.0/8", changed_after=ts(1), changed_before=ts(9))
     r = query_rib(hist, "ipv4u", p)
-    got = {x.nlri_str for x in r.routes.collect()}
+    got = {x.nlri_str for x in r.routes}
     assert got == {"10.0.1.0/24"}  # strict bounds exclude t=1 and t=9
 
 def test_onlyactive(spark):
@@ -90,22 +95,22 @@ def test_supernet_fallback(spark):
     # most-specific first
     r = query_rib(hist, "ipv4u", QueryParams(filter="10.0.0.77"))
     assert r.from_supernet
-    page = [x.nlri_str for x in r.routes.collect()]
+    page = [x.nlri_str for x in r.routes]
     assert page == ["10.0.0.0/24", "10.0.0.0/8"]
     assert r.found == 0
 
 def test_nested_json(spark):
-    hist = _hist(
+    hist = serving_copy(_hist(
         spark,
         [
             u("10.0.0.0/24", t=1, aspath=[("Seq", [100])]),
             u("10.0.0.0/24", t=2, op="withdraw"),
         ],
-    )
+    ))
     r = query_rib(hist, "ipv4u", QueryParams(filter="10.0.0.0/24"))
-    out = to_nested_json(r).collect()
+    out = nest_items(r, to_nested_json(r).collect())
     assert len(out) == 1
-    items = json.loads(out[0].items_json)
+    items = out["10.0.0.0/24"]
     sess = items["0"]          # session 0
     path = sess["0"]           # path 0
     entries = list(path.items())
@@ -154,11 +159,11 @@ def test_maintained_length_skips_full_scan(spark):
 
     r_exact = query_rib(hist, "ipv4u", QueryParams())
     n_exact = jobs_for(
-        "exact", lambda: query_rib(hist, "ipv4u", QueryParams()).routes.collect()
+        "exact", lambda: query_rib(hist, "ipv4u", QueryParams())
     )
     n_maint = jobs_for(
         "maint",
-        lambda: query_rib(hist, "ipv4u", QueryParams(), length=6).routes.collect(),
+        lambda: query_rib(hist, "ipv4u", QueryParams(), length=6),
     )
     assert n_maint < n_exact
     r = query_rib(hist, "ipv4u", QueryParams(), length=6)
@@ -278,28 +283,27 @@ def test_ts_cutoff_offsetless_iso_is_utc(monkeypatch):
 
 def test_nested_json_same_timestamp_entries_collapse(spark):
     """Two same-second updates for one (rib,nlri,session,path): the
-    reference's BTreeMap<ts> cannot hold both (insert overwrites), and
-    map_from_entries would raise DUPLICATED_MAP_KEY — the nested output
-    must collapse them to ONE entry per ts-millis, deterministically,
-    instead of crashing the serving query."""
+    reference's BTreeMap<ts> cannot hold both (insert overwrites) — the
+    nested output must collapse them to ONE entry per ts-millis,
+    deterministically, whichever order the rows arrive in."""
     import json as _json
 
-    hist = build_history(make_updates(spark, [
+    hist = serving_copy(build_history(make_updates(spark, [
         u("10.0.0.0/24", t=0, session_id=0, aspath=[("Seq", [100])]),
         u("10.0.0.0/24", t=0, session_id=0, aspath=[("Seq", [200])]),
         u("10.0.0.0/24", t=60, session_id=0, aspath=[("Seq", [300])]),
-    ]))
+    ])))
     r = query_rib(hist, "ipv4u", QueryParams(limit=10))
-    out = to_nested_json(r).collect()
+    out = nest_items(r, to_nested_json(r).collect())
     assert len(out) == 1
-    items = _json.loads(out[0].items_json)
+    items = out["10.0.0.0/24"]
     tsmap = items["0"]["0"]
     assert len(tsmap) == 2  # the t=0 pair collapsed + the t=60 entry
     # deterministic winner: the (t, kv)-max of the duplicate pair
     dup = _json.loads(tsmap[str(1704067200000)])
     assert dup["attrs"]["aspath"][0]["asns"] in ([100], [200])
-    again = _json.loads(to_nested_json(r).collect()[0].items_json)
-    assert again == items  # byte-deterministic across runs
+    again = nest_items(r, to_nested_json(r).collect())["10.0.0.0/24"]
+    assert _json.dumps(again) == _json.dumps(items)  # byte-deterministic across runs
 
 
 def test_invalid_regex_term_dropped(spark):

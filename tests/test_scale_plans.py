@@ -100,20 +100,30 @@ def test_neardup_pipeline_no_cartesian(spark):
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 
-def test_emitted_history_broadcasts_page(spark):
-    """The §3.1 serving join: the paged route keys (≤ limit rows) must be
-    the broadcast side of the history semi-join — at 100 TB the history
-    table can never be the build side."""
-    from bgpexplorer_spark.operators.query import QueryParams, emitted_history, query_rib
+def test_page_history_fetch_has_no_join(spark, tmp_path):
+    """The §3.1 page-history fetch is keyed on the page's route keys (one
+    literal IN predicate pushed to the scan), not joined against the
+    page: no join of any kind, and the history is never broadcast — at
+    100 TB it can never be a build side. Holds on the daemon's table
+    (windowed path) and on its served copy (slot path)."""
+    from bgpexplorer_spark.operators.query import (
+        QueryParams, query_rib, serving_copy, to_nested_json,
+    )
 
-    hist = build_history(
-        make_updates(spark, [u(f"10.0.{i}.0/24", t=i) for i in range(8)])
-    ).cache()
-    r = query_rib(hist, "ipv4u", QueryParams(filter="10.0.0.0/8", limit=3), length=8)
-    plan = _plan(r.history)
-    assert "BroadcastExchange" in plan
-    # the semi-join build side is the page, not the history scan
-    assert "LeftSemi" in plan
+    write_snapshot(
+        build_history(make_updates(spark, [u(f"10.0.{i}.0/24", t=i) for i in range(8)])),
+        str(tmp_path / "t"),
+    )
+    table = spark.read.parquet(str(tmp_path / "t")).drop("ts_date")
+    for hist in (table, serving_copy(table)):
+        r = query_rib(hist, "ipv4u", QueryParams(filter="10.0.0.0/8", limit=3), length=8)
+        assert [x.nlri_str for x in r.routes] == [f"10.0.{i}.0/24" for i in range(3)]
+        plan = _plan(to_nested_json(r))
+        assert "Join" not in plan and "LeftSemi" not in plan
+        assert "BroadcastExchange" not in plan
+        assert {x.nlri_str for x in to_nested_json(r).collect()} == {
+            x.nlri_str for x in r.routes
+        }
 
 def test_mrt_decode_no_shuffle_before_parse(spark, tmp_path):
     """MRT decode parallelism is per-FILE: binaryFile scan → mapInPandas,
@@ -576,16 +586,13 @@ def test_origin_footprint_is_takeordered(spark):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
-def test_nested_json_single_exchange(spark):
-    """to_nested_json builds the session->path->history nesting in ONE
-    aggregation on (rib, nlri_str) — the previous three-level groupBy
-    chain paid three exchanges (a 4-key hash partitioning does not
-    satisfy clustering on its prefix). Since the r11 nlri_str-subset
-    repartition in build_history, that one aggregation REUSES the
-    history exchange outright: the nesting must add ZERO exchanges on
-    top of the query plan."""
+def test_nested_json_fetch_has_no_exchange(spark):
+    """On the served copy (partitioned by route key, slots precomputed)
+    the page-history fetch that to_nested_json collects is map-only:
+    ZERO exchanges and no window above the cached copy — the nesting is
+    built on the driver, with no per-request groupBy or shuffle."""
     from bgpexplorer_spark.operators.query import (
-        QueryParams, query_rib, to_nested_json,
+        QueryParams, query_rib, serving_copy, to_nested_json,
     )
 
     hist = build_history(make_updates(spark, [
@@ -593,11 +600,18 @@ def test_nested_json_single_exchange(spark):
           aspath=[("Seq", [100, 200 + i % 3])])
         for i in range(8)
     ]))
-    r = query_rib(hist, "ipv4u", QueryParams(limit=10))
-    # isolate the nesting: plan exchanges added on TOP of the query plan
-    base = _plan(r.history).count("Exchange")
-    full = _plan(to_nested_json(r)).count("Exchange")
-    assert full - base == 0, (base, full)
+    served = serving_copy(hist).cache()
+    try:
+        served.count()
+        r = query_rib(served, "ipv4u", QueryParams(limit=10))
+        # the cached copy's own build plan prints below InMemoryRelation
+        top = _plan(to_nested_json(r)).split("InMemoryRelation")[0]
+        assert "InMemoryTableScan" in top
+        for bad in ("Exchange", "Window", "Aggregate", "Join"):
+            assert bad not in top, (bad, top)
+        assert len(to_nested_json(r).collect()) == 8
+    finally:
+        served.unpersist()
 
 
 def test_upstream_diversity_plan_no_join(spark):

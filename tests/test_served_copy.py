@@ -1,0 +1,165 @@
+"""The service's in-memory served copy of the history: one per state
+version, built by the first /api/json request after a bump, freed when
+the next version's copy replaces it, and private to the route query (the
+table schema everywhere else)."""
+
+from __future__ import annotations
+
+import json
+
+from pyspark import StorageLevel
+from pyspark.sql import functions as F
+
+from bgpexplorer_spark import api
+from bgpexplorer_spark.api import BgpExplorerService
+from bgpexplorer_spark.operators.ingest import build_history
+from bgpexplorer_spark.operators.query import SLOT_COL, serving_copy
+from bgpexplorer_spark.snapshotd import SnapshotKeeper, load_snapshot_dir
+
+from tests.ribdata import make_updates, u
+
+
+def _append(spark, table: str, rows) -> None:
+    """One ingest micro-batch, written the way feed.run_ingest writes it."""
+    (
+        build_history(make_updates(spark, rows))
+        .withColumn("ts_date", F.to_date("ts"))
+        .write.mode("append")
+        .partitionBy("rib", "ts_date")
+        .parquet(table)
+    )
+
+
+def _service(spark, table: str) -> BgpExplorerService:
+    def provider():
+        return spark.read.parquet(table).drop("ts_date")
+
+    svc = BgpExplorerService(provider())
+    svc.history_provider = provider
+    return svc
+
+
+def _entries(resp, nlri: str) -> list[tuple[int, int]]:
+    """(ts_ms, first AS) of the route's session 0 / path 0 history,
+    newest first."""
+    hist = resp["items"][nlri]["0"]["0"]
+    return [
+        (int(ms), json.loads(e)["attrs"]["aspath"][0]["asns"][0])
+        for ms, e in hist.items()
+    ]
+
+
+def test_serving_copy_reads_no_files(spark, tmp_path):
+    """serving_copy detaches from the table's file index through Spark
+    internals (Dataset.queryExecution().toRdd(),
+    SparkSession.internalCreateDataFrame). A Spark upgrade that changes
+    them must fail here, not by serving moved or shared cache entries."""
+    table = str(tmp_path / "table")
+    _append(spark, table, [u("10.0.0.0/24", t=1)])
+    copy = serving_copy(spark.read.parquet(table).drop("ts_date"))
+    logical = copy._jdf.queryExecution().optimizedPlan().toString()
+    physical = copy._jdf.queryExecution().executedPlan().toString()
+    assert "LogicalRDD" in logical and "Relation" not in logical, (
+        f"serving_copy no longer detaches from the file index:\n{logical}"
+    )
+    assert "FileScan" not in physical, physical
+    assert copy.count() == 1
+
+
+def test_served_copy_fresh_after_bump(spark, tmp_path):
+    table = str(tmp_path / "table")
+    _append(spark, table, [
+        u("10.0.0.0/24", t=i, aspath=[("Seq", [100 + i])]) for i in (1, 2, 3)
+    ])
+    svc = _service(spark, table)
+    resp = svc.api_json("ipv4u", filter="10.0.0.0/24", maxdepth=2)
+    assert resp["length"] == 1 and resp["found"] == 1
+    assert [a for _, a in _entries(resp, "10.0.0.0/24")] == [103, 102]
+    # as:102 sits in slot 2: inside a depth-2 match window
+    assert svc.api_json("ipv4u", filter="as:102", maxdepth=2)["found"] == 1
+    first_copy = svc._served[1]
+
+    _append(spark, table, [
+        u("10.0.0.0/24", t=4, aspath=[("Seq", [104])]),
+        u("10.0.1.0/24", t=4, aspath=[("Seq", [200])]),
+    ])
+    # the table changed but the version did not: the copy is reused
+    assert svc.api_json("ipv4u", filter="10.0.0.0/24")["length"] == 1
+    assert svc._served[1] is first_copy
+
+    svc.bump_state_version()
+    resp = svc.api_json("ipv4u", filter="10.0.0.0/24", maxdepth=2)
+    assert resp["length"] == 2 and resp["found"] == 1
+    # the new entry is served, the older slots shifted by one, and
+    # maxdepth now cuts the t=2 entry
+    assert [a for _, a in _entries(resp, "10.0.0.0/24")] == [104, 103]
+    # as:102 moved to slot 3: outside the window; the empty primary page
+    # falls back to the supernet query, which the AS term also fails
+    moved = svc.api_json("ipv4u", filter="as:102", maxdepth=2)
+    assert moved["found"] == 0 and moved["items"] == {}
+    assert svc.api_json("ipv4u", filter="as:102", maxdepth=3)["found"] == 1
+    # the old copy was freed when the new one replaced it, and the new
+    # one is held in memory although the table was appended to in-process
+    assert svc._served[1] is not first_copy
+    assert first_copy.storageLevel == StorageLevel.NONE
+    assert svc._served[1].storageLevel.useMemory
+    # a stopped daemon releases its copy
+    current = svc._served[1]
+    svc.release_served_copy()
+    assert current.storageLevel == StorageLevel.NONE
+
+
+def test_request_finishes_on_its_version(spark, tmp_path, monkeypatch):
+    """A request holds the copy it started with: a bump and a rebuild
+    (which unpersists that copy) in the middle of it do not change its
+    answer."""
+    table = str(tmp_path / "table")
+    _append(spark, table, [u("10.0.0.0/24", t=1, aspath=[("Seq", [101])])])
+    svc = _service(spark, table)
+    real = api.query_rib
+    inner = {}
+
+    def query_rib_with_concurrent_ingest(history, rib, p, **kw):
+        if not inner:
+            inner["started_on"] = svc._served[1]
+            _append(spark, table, [u("10.0.0.0/24", t=2, aspath=[("Seq", [102])])])
+            svc.bump_state_version()
+            inner["resp"] = svc.api_json("ipv4u", filter="10.0.0.0/24")
+        return real(history, rib, p, **kw)
+
+    monkeypatch.setattr(api, "query_rib", query_rib_with_concurrent_ingest)
+    outer = svc.api_json("ipv4u", filter="10.0.0.0/24")
+    assert [a for _, a in _entries(outer, "10.0.0.0/24")] == [101]
+    assert [a for _, a in _entries(inner["resp"], "10.0.0.0/24")] == [102, 101]
+    assert inner["started_on"].storageLevel == StorageLevel.NONE
+    monkeypatch.setattr(api, "query_rib", real)
+    again = svc.api_json("ipv4u", filter="10.0.0.0/24")
+    assert [a for _, a in _entries(again, "10.0.0.0/24")] == [102, 101]
+
+
+def test_served_copy_stays_private(spark, tmp_path):
+    """Only the route query sees the slot column: service.history, the
+    snapshot the keeper writes, and the analytics reports keep the
+    table schema."""
+    table = str(tmp_path / "table")
+    _append(spark, table, [
+        u("10.0.0.0/24", t=1, aspath=[("Seq", [100, 300])]),
+        u("10.0.0.0/24", t=2, aspath=[("Seq", [200, 400])], session_id=1),
+        u("10.0.1.0/24", t=3, aspath=[("Seq", [100, 300])]),
+    ])
+    svc = _service(spark, table)
+    schema = spark.read.parquet(table).drop("ts_date").schema
+    svc.api_json("ipv4u", filter="10.0.0.0/8")
+    assert SLOT_COL in svc._served[1].columns
+    assert svc.history.schema == schema
+
+    keeper = SnapshotKeeper(lambda: svc.history, str(tmp_path / "snap"))
+    assert keeper.save_once() is not None
+    saved = load_snapshot_dir(spark, str(tmp_path / "snap"))
+    assert SLOT_COL not in saved.columns and saved.count() == 3
+
+    assert svc.api_statistics()["ribs"]["ipv4u"] == 2
+    moas = svc.api_moas("ipv4u")
+    assert [m["nlri"] for m in moas] == ["10.0.0.0/24"]
+    assert isinstance(svc.api_as_relationships("ipv4u"), list)
+    assert svc.history.schema == schema
