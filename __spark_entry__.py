@@ -4,7 +4,8 @@
 ingest → rib_history → filter-language query) on sf0.001.
 ``queries()``/``oracle_sql()`` expose the SURVEY.md §2 operator inventory
 over the driver tables with DuckDB oracles (see
-bgpexplorer_spark/contract.py).
+bgpexplorer_spark/contract.py); tests/test_contract_oracles.py checks
+every query against its oracle.
 """
 
 from __future__ import annotations
@@ -62,83 +63,12 @@ def entry(spark: SparkSession) -> DataFrame:
         "rib", "nlri_str", "addr_v4", "prefixlen", "session_id", "ts", "active", "aspath_flat"
     )
 
-def _gate_rotation_order(names: list[str]) -> list[str]:
-    """Sampling policy for the driver's 50-query correctness gate, which
-    hashes the FIRST 50 entries of ``queries()``. This entry point owns
-    that policy (the contract library stays in stable declaration order):
-
-    1. queries whose MOST RECENT past gate row failed come first, so a
-       fix is always independently re-verified the next round;
-    2. then by STALENESS — the round a query was last driver-checked,
-       oldest first (never-checked counts as round 0, so new queries
-       lead). Pure appearance-count rotation (the pre-r10 policy) only
-       MINIMIZED check counts; with ~5 new queries/round a long-green
-       query's re-check gap grew with contract size. Recency-first
-       BOUNDS it: every round the 50 slots take the 50 least-recently
-       verified queries, so the worst-case gap is ceil(N/50) rounds
-       (~4 at N=188) regardless of growth;
-    3. then fewest past appearances, then declaration order.
-
-    Past gate results are read from ``CORRECTNESS_r*.json`` at the repo
-    root; with none present (fresh clone) this is plain declaration
-    order. Every query is additionally verified every round by
-    ``tools/selfcheck.py`` (full-contract log committed as
-    ``SELFCHECK_r{N}.log``); this ordering only picks WHICH slice gets
-    the driver-side re-check."""
-    import json
-    import re
-
-    counts = dict.fromkeys(names, 0)
-    last_round = dict.fromkeys(names, 0)
-    last_result: dict[str, bool] = {}
-    root = Path(__file__).resolve().parent
-    try:
-        # tolerate stray glob matches without a round number
-        # (CORRECTNESS_rerun.json etc.) — skip them instead of raising
-        matched = [
-            (p, re.search(r"r(\d+)", p.name))
-            for p in root.glob("CORRECTNESS_r*.json")
-        ]
-        gate_files = sorted(
-            ((p, int(m.group(1))) for p, m in matched if m),
-            key=lambda pm: pm[1],
-        )
-    except OSError:
-        gate_files = []
-    for gf, rnd in gate_files:
-        try:
-            rows = json.loads(gf.read_text())
-        except (OSError, ValueError):
-            continue
-        if not isinstance(rows, dict):
-            continue
-        for name, row in rows.items():
-            if name not in counts:
-                continue
-            counts[name] += 1
-            last_round[name] = max(last_round[name], rnd)
-            if isinstance(row, dict):
-                last_result[name] = (
-                    row.get("hash_match") is True
-                    or (row.get("hash_match") is None and row.get("err") is None
-                        and row.get("rows_match") is True)
-                )
-    pos = {n: i for i, n in enumerate(names)}
-    return sorted(
-        names,
-        key=lambda n: (last_result.get(n, True), last_round[n], counts[n], pos[n]),
-    )
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     from bgpexplorer_spark.contract import all_queries
 
-    qs = all_queries()
-    order = _gate_rotation_order(list(qs))
-    return {n: qs[n] for n in order}
+    return all_queries()
 
 def oracle_sql() -> dict[str, str]:
     from bgpexplorer_spark.contract import all_oracles
 
-    oracles = all_oracles()
-    order = _gate_rotation_order(list(oracles))
-    return {n: oracles[n] for n in order}
+    return all_oracles()

@@ -940,6 +940,30 @@ class BgpExplorerService:
 
 _BOOL = {"true": True, "1": True, "false": False, "0": False}
 
+# every integer URL parameter and its smallest accepted value
+_INT_PARAMS = {
+    "skip": 0, "limit": 0, "maxdepth": 0, "k": 0, "gap": 0, "half_life": 1,
+}
+
+class BadParam(ValueError):
+    """A malformed URL parameter: answered 400, not 500."""
+
+def _int_params(qs: dict[str, str]) -> dict[str, int]:
+    """The integer URL parameters present in ``qs``, parsed and range
+    checked; raises :class:`BadParam` naming the first bad one."""
+    out = {}
+    for name, lo in _INT_PARAMS.items():
+        if name not in qs:
+            continue
+        try:
+            v = int(qs[name])
+        except ValueError:
+            v = None
+        if v is None or v < lo:
+            raise BadParam(f"{name} must be an integer >= {lo}, got {qs[name]!r}")
+        out[name] = v
+    return out
+
 def _make_handler(svc: BgpExplorerService):
     class Handler(BaseHTTPRequestHandler):
         def log_message(self, *a):  # quiet
@@ -1035,12 +1059,13 @@ def _make_handler(svc: BgpExplorerService):
                 if parts[:2] == ["api", "statistics"]:
                     return self._send(svc.api_statistics())
                 rib = qs.get("rib", "ipv4u")
+                ints = _int_params(qs)
 
                 def page(default_k=1000):
                     # every analytics list endpoint takes the same
                     # k (limit) + skip (offset) cap
-                    return {"k": int(qs.get("k", default_k)),
-                            "skip": int(qs.get("skip", 0))}
+                    return {"k": ints.get("k", default_k),
+                            "skip": ints.get("skip", 0)}
 
                 if parts[:3] == ["api", "analytics", "moas"]:
                     return self._send(
@@ -1060,7 +1085,7 @@ def _make_handler(svc: BgpExplorerService):
                     return self._send(
                         svc.api_damping(
                             rib, qs.get("at"),
-                            int(qs.get("half_life", 900)), **page(),
+                            ints.get("half_life", 900), **page(),
                         )
                     )
                 if parts[:3] == ["api", "analytics", "bogons"]:
@@ -1070,7 +1095,7 @@ def _make_handler(svc: BgpExplorerService):
                 if parts[:3] == ["api", "analytics", "ages"]:
                     return self._send(
                         svc.api_route_ages(
-                            rib, qs.get("asof"), int(qs.get("k", 100)),
+                            rib, qs.get("asof"), ints.get("k", 100),
                         )
                     )
                 if parts[:3] == ["api", "analytics", "agreement"]:
@@ -1104,12 +1129,12 @@ def _make_handler(svc: BgpExplorerService):
                 if parts[:3] == ["api", "analytics", "convergence"]:
                     return self._send(
                         svc.api_convergence(
-                            rib, int(qs.get("gap", 300)), **page()
+                            rib, ints.get("gap", 300), **page()
                         )
                     )
                 if parts[:3] == ["api", "analytics", "flappers"]:
                     return self._send(
-                        svc.api_flappers(rib, int(qs.get("k", 20)))
+                        svc.api_flappers(rib, ints.get("k", 20))
                     )
                 if parts[:2] == ["api", "sessions"]:
                     return self._send(svc.api_sessions())
@@ -1118,8 +1143,8 @@ def _make_handler(svc: BgpExplorerService):
                     if "filter" in qs:
                         params["filter"] = qs["filter"]
                     for k in ("skip", "limit", "maxdepth"):
-                        if k in qs:
-                            params[k] = int(qs[k])
+                        if k in ints:
+                            params[k] = ints[k]
                     if "onlyactive" in qs:
                         params["onlyactive"] = _BOOL.get(qs["onlyactive"].lower(), False)
                     for k in ("changed_after", "changed_before", "asof"):
@@ -1129,6 +1154,8 @@ def _make_handler(svc: BgpExplorerService):
                 if parts[:1] != ["api"]:
                     return self._send_file(u.path)
                 return self._send({"error": "not found"}, 404)
+            except BadParam as e:
+                return self._send({"error": str(e)}, 400)
             except Exception as e:  # surface engine errors as 500 JSON
                 return self._send({"error": str(e)[:500]}, 500)
 

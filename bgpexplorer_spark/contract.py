@@ -646,9 +646,8 @@ def st_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 def all_queries() -> dict[str, SparkQuery]:
-    """Every declared contract query, in stable declaration order. Any
-    sampling/rotation policy belongs to the caller (e.g. the gate entry
-    point or selfcheck tooling), not this library."""
+    """Every declared contract query, in stable declaration order
+    (tests/test_contract_oracles.py runs each against its oracle)."""
     return dict(QUERIES)
 
 def all_oracles() -> dict[str, str]:
@@ -1569,9 +1568,7 @@ def ts_to_millis_col(c):
 
 def derived_updates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Derived UPDATES_SCHEMA event rows (pre-history): the raw stream
-    shape shared by the engine-path contract queries and the streaming
-    micro-bench (bench.py feeds these through the
-    applyInPandasWithState operators).
+    shape shared by the engine-path contract queries.
 
     ts is a synthetic per-event-unique timestamp (2024-01-01 + event_id
     seconds) so every window order and the nested ts_ms map keys are

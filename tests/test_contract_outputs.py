@@ -65,64 +65,6 @@ def test_no_query_emits_unsortable_columns(spark):
     )
 
 
-def _load_entry_from(root):
-    """exec a copy of __spark_entry__.py out of `root` so its gate-file
-    glob (Path(__file__).parent) resolves against a controlled dir."""
-    import importlib.util
-    from pathlib import Path
-
-    src = Path(__file__).resolve().parents[1] / "__spark_entry__.py"
-    copy = root / "__spark_entry__.py"
-    copy.write_text(src.read_text())
-    spec = importlib.util.spec_from_file_location(
-        f"spark_entry_copy_{root.name}", copy
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
-
-
-def test_entry_rotation_prioritizes_failed_rows(tmp_path):
-    """The gate sampling policy lives in __spark_entry__ (not the contract
-    library): most-recently-FAILED rows first, then least-gate-checked,
-    declaration order as the tie-break."""
-    import json
-
-    mod = _load_entry_from(tmp_path)
-    names = ["a", "b", "c", "d"]
-
-    # no gate files → plain declaration order
-    assert mod._gate_rotation_order(names) == names
-
-    (tmp_path / "CORRECTNESS_r01.json").write_text(json.dumps({
-        "a": {"hash_match": True, "err": None},
-        "b": {"hash_match": True, "err": None},
-    }))
-    # never-checked c, d rotate ahead of checked a, b
-    assert mod._gate_rotation_order(names) == ["c", "d", "a", "b"]
-
-    (tmp_path / "CORRECTNESS_r02.json").write_text(json.dumps({
-        "c": {"hash_match": None, "err": "boom"},   # failed row
-        "d": {"hash_match": True, "err": None},
-        "a": {"hash_match": True, "err": None},
-    }))
-    # c failed its most recent gate → first, regardless of check count;
-    # then once-checked b, d (declaration order) before twice-checked a
-    assert mod._gate_rotation_order(names) == ["c", "b", "d", "a"]
-
-    # staleness beats appearance count (r10 policy): a has MORE total
-    # checks than c but its last check is OLDER, so a rotates in first —
-    # this bounds the worst-case re-verification gap at ceil(N/slots)
-    # rounds instead of letting it grow with the contract
-    (tmp_path / "CORRECTNESS_r03.json").write_text(json.dumps({
-        "c": {"hash_match": True, "err": None},   # c's failure fixed
-        "b": {"hash_match": True, "err": None},
-        "d": {"hash_match": True, "err": None},
-    }))
-    # last checked: a@r2 (count 2) before b,c,d@r3 (counts 2,2,2)
-    assert mod._gate_rotation_order(names) == ["a", "b", "c", "d"]
-
-
 def test_contract_api_is_declaration_ordered():
     """all_queries()/all_oracles() must NOT depend on repo-root grader
     artifacts (ADVICE r6): stable declaration order only."""

@@ -282,19 +282,18 @@ def test_filter_queries_compile_without_codegen_fallback(spark):
     failure throws instead of silently degrading to interpreted eval.
     Guards the combinator single-reference discipline in
     filterlang/compile.py (multi/chain/term_to_column) — the composite
-    vote keys (mdt/mvpn/evpn) are the trees that previously blew up."""
-    import importlib.util
+    vote keys (mdt/mvpn/evpn) are the trees that previously blew up, and
+    f5 is the AS-path subsequence expression that ``as:A,B`` compiles to."""
+    from bgpexplorer_spark.contract import all_queries
 
-    spec = importlib.util.spec_from_file_location("e", "/root/repo/__spark_entry__.py")
-    m = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(m)
-    qs = m.queries()
+    qs = all_queries()
     old = spark.conf.get("spark.sql.codegen.fallback")
     spark.conf.set("spark.sql.codegen.fallback", "false")
     try:
         for name in (
             "f_mdt_vote", "f_mvpn_vote", "f_evpn_chain", "f_l2_range",
             "f10_negation", "f9_num_polymorphic", "c9_whois_textops",
+            "f5_aspath_subseq",
         ):
             assert qs[name](spark, _SF_DIR).count() >= 0, name
     finally:
@@ -358,6 +357,35 @@ def test_rib_diff_single_pass_no_join(spark):
     p2 = _plan(rib_diff(plain, 1704067200000 + 200_000, 1704067200000 + 600_000))
     assert "SortMergeJoin" not in p2 and "BroadcastHashJoin" not in p2
     assert "WindowExec" not in p2 and "Window" not in p2
+
+def test_ingest_fold_shuffles_once(spark):
+    """The daemon's ingest fold (feed.run_ingest → build_history) runs
+    every window on the one nlri_str exchange: the withdraw forward fill,
+    the differ dedup and the newest-N cut add no second shuffle, and no
+    Python eval runs in the fold."""
+    upd = make_updates(spark, [
+        u(f"10.0.{i % 3}.0/24", t=i, session_id=i % 2,
+          op="withdraw" if i % 4 == 3 else "update")
+        for i in range(12)
+    ])
+    for mode in ("every", "differ"):
+        for depth in (None, 3):
+            plan = _plan(build_history(upd, history_mode=mode, history_depth=depth))
+            assert plan.count("Exchange") == 1, (mode, depth, plan)
+            assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+
+def test_current_state_is_partial_max_by(spark, tmp_path):
+    """current_state, under every analytics report, picks the newest
+    entry per key with a map-side partial max_by: one exchange and no
+    window sort."""
+    from bgpexplorer_spark.operators.rib import current_state
+
+    build_history(
+        make_updates(spark, [u(f"10.0.{i % 3}.0/24", t=i) for i in range(9)])
+    ).write.parquet(str(tmp_path / "h"))
+    plan = _plan(current_state(spark.read.parquet(str(tmp_path / "h"))))
+    assert "Window" not in plan
+    assert "partial_max_by" in plan and plan.count("Exchange") == 1, plan
 
 def test_repetition_and_bogon_are_map_side(spark):
     """Per-document quality/bogon operators must not shuffle at all."""
@@ -642,6 +670,24 @@ def test_deaggregation_plan_no_cartesian(spark):
     plan = _plan(deaggregation(current_state(hist)))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
+
+
+def test_subprefix_hijacks_plan_no_cartesian(spark):
+    """/api/analytics/hijacks resolves covers by truncation EQUI-joins on
+    (cover_addr, cover_plen), like deaggregation — never a
+    cartesian/nested-loop range join, and no Python eval."""
+    from bgpexplorer_spark.operators.analytics import subprefix_hijacks
+    from bgpexplorer_spark.operators.rib import current_state
+
+    hist = build_history(make_updates(spark, [
+        u("10.0.0.0/16", t=1, aspath=[("Seq", [100, 300])]),
+        u("10.0.1.0/24", t=2, aspath=[("Seq", [100, 400])]),
+    ]))
+    plan = _plan(subprefix_hijacks(current_state(hist)))
+    assert "Join" in plan
+    for bad in ("CartesianProduct", "BroadcastNestedLoopJoin",
+                "BatchEvalPython", "ArrowEvalPython"):
+        assert bad not in plan, bad
 
 
 def test_gram_matrix_single_small_shuffle(spark):

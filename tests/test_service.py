@@ -443,6 +443,38 @@ def test_http_whois_and_dns_endpoints(spark):
         httpd.shutdown()
 
 
+def test_http_malformed_numeric_param_is_400(spark):
+    """A non-integer or out-of-range numeric URL parameter is the
+    client's error: 400 naming the parameter, never a 500."""
+    hist = build_history(make_updates(spark, [u("10.0.0.0/24", t=1)])).cache()
+    svc = BgpExplorerService(hist, route_counts={"ipv4u": 1})
+    httpd = serve(svc, port=0)
+    base = f"http://127.0.0.1:{httpd.server_address[1]}"
+    try:
+        for path, name in [
+            ("/api/json/ipv4u?limit=abc", "limit"),
+            ("/api/json/ipv4u?skip=-1", "skip"),
+            ("/api/json/ipv4u?limit=-5", "limit"),
+            ("/api/json/ipv4u?maxdepth=-2", "maxdepth"),
+            ("/api/analytics/moas?k=x", "k"),
+            ("/api/analytics/moas?skip=1.5", "skip"),
+            ("/api/analytics/flappers?k=x", "k"),
+            ("/api/analytics/convergence?gap=soon", "gap"),
+            ("/api/analytics/damping?half_life=0", "half_life"),
+        ]:
+            try:
+                urllib.request.urlopen(base + path)
+                raise AssertionError(f"expected 400 for {path}")
+            except urllib.error.HTTPError as e:
+                assert e.code == 400, (path, e.code)
+                assert json.loads(e.read())["error"].startswith(name + " "), path
+        # well-formed values still answer
+        ok = json.loads(urllib.request.urlopen(base + "/api/json/ipv4u?limit=1&skip=0").read())
+        assert ok["limit"] == 1 and ok["length"] == 1
+    finally:
+        httpd.shutdown()
+
+
 def test_api_asof_time_travel(spark):
     hist = build_history(
         make_updates(
