@@ -16,6 +16,7 @@ analog: DataFrames over immutable snapshots need no reader lock.
 from __future__ import annotations
 
 import json
+import logging
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
@@ -23,11 +24,14 @@ from urllib.parse import parse_qs, urlparse
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from bgpexplorer_spark.functions.timeutil import parse_ts_param
 from bgpexplorer_spark.operators.query import (
-    QueryParams, nest_items, query_rib, serving_copy, to_nested_json,
+    QueryParams, RouteIndex, nest_items, query_rib, serving_copy, to_nested_json,
 )
 from bgpexplorer_spark.operators.rib import statistics
 from bgpexplorer_spark.schemas import RIB_NAMES
+
+log = logging.getLogger(__name__)
 
 class BgpExplorerService:
     """Programmatic facade (what the HTTP layer and tests call).
@@ -105,11 +109,11 @@ class BgpExplorerService:
         self._memo_lock = threading.Lock()
         self._memo_building: dict[tuple, threading.Lock] = {}
         # the in-memory served copy of the history: (state version,
-        # cached query.serving_copy frame, its per-rib route counts).
+        # cached query.serving_copy frame, its query.RouteIndex).
         # Built by the first /api/json request of a version, so the
         # ingest sink's bump does no Spark work; _served_lock makes
         # concurrent first requests build it once
-        self._served: tuple[int, DataFrame, dict[str, int]] | None = None
+        self._served: tuple[int, DataFrame, RouteIndex] | None = None
         self._served_lock = threading.Lock()
         self.whois_server_map = None
         if svc_config is not None and getattr(svc_config, "whoisjsonconfig", None):
@@ -119,15 +123,14 @@ class BgpExplorerService:
                 svc_config.whoisjsonconfig
             )
 
-    def _served_copy(self) -> tuple[DataFrame, dict[str, int]]:
+    def _served_copy(self) -> tuple[DataFrame, RouteIndex]:
         """The served copy for the current state version and its route
-        counts, built on first use: ``serving_copy(self.history)``
-        cached, materialized by the route-count job. The previous
+        index, built together on first use: ``serving_copy(self.history)``
+        cached, materialized by the index's collect. The previous
         version's copy is unpersisted once the new one is in place; a
         request still holding it keeps its answers (the frame recomputes
-        from the files planned when it was built)."""
-        from bgpexplorer_spark.operators.rib import route_counts as rc
-
+        from the files planned when it was built, and the index is its
+        own)."""
         with self._served_lock:
             with self._memo_lock:
                 version, history = self._state_version, self.history
@@ -135,11 +138,11 @@ class BgpExplorerService:
             if old is not None and old[0] == version:
                 return old[1], old[2]
             df = serving_copy(history).cache()
-            counts = {r["rib"]: r["routes"] for r in rc(df).collect()}
-            self._served = (version, df, counts)
+            index = RouteIndex.build(df)
+            self._served = (version, df, index)
         if old is not None:
             old[1].unpersist()
-        return df, counts
+        return df, index
 
     def release_served_copy(self) -> None:
         """Unpersist the served copy (the daemon's stop): the cache
@@ -174,15 +177,15 @@ class BgpExplorerService:
             # answered as of the cutoff: length is recomputed there
             r = query_rib(self._history_for_asof(), rib, p)
         else:
-            served, counts = self._served_copy()
+            served, index = self._served_copy()
             if self.exact_length:
                 length = None
             else:
                 # maintained counts (snapshot) until the first bump,
                 # then the served copy's own
                 maintained = self.route_counts
-                length = (counts if maintained is None else maintained).get(rib, 0)
-            r = query_rib(served, rib, p, length=length)
+                length = (index.counts if maintained is None else maintained).get(rib, 0)
+            r = query_rib(served, rib, p, length=length, index=index)
         items = nest_items(r, to_nested_json(r).collect())
         return {
             "ribtype": r.ribtype,
@@ -496,7 +499,6 @@ class BgpExplorerService:
     def api_route_ages(self, rib: str = "ipv4u", asof=None, k: int = 100) -> list[dict]:
         """GET /api/analytics/ages[?rib=&asof=&k=] — oldest-first route
         age report over the (optionally time-traveled) active state."""
-        from bgpexplorer_spark.functions.timeutil import parse_ts_param
         from bgpexplorer_spark.operators.analytics import route_age_report
 
         at = (
@@ -964,6 +966,22 @@ def _int_params(qs: dict[str, str]) -> dict[str, int]:
         out[name] = v
     return out
 
+# every time URL parameter: epoch millis or RFC 3339
+_TS_PARAMS = ("asof", "changed_after", "changed_before", "t1", "t2", "at")
+
+def _check_ts_params(qs: dict[str, str]) -> None:
+    """Raise :class:`BadParam` naming the first time parameter in ``qs``
+    that is neither epoch millis nor RFC 3339."""
+    for name in _TS_PARAMS:
+        if name not in qs:
+            continue
+        try:
+            parse_ts_param(qs[name])
+        except (ValueError, OverflowError, OSError):
+            raise BadParam(
+                f"{name} must be epoch millis or RFC 3339, got {qs[name]!r}"
+            ) from None
+
 def _make_handler(svc: BgpExplorerService):
     class Handler(BaseHTTPRequestHandler):
         def log_message(self, *a):  # quiet
@@ -1060,6 +1078,7 @@ def _make_handler(svc: BgpExplorerService):
                     return self._send(svc.api_statistics())
                 rib = qs.get("rib", "ipv4u")
                 ints = _int_params(qs)
+                _check_ts_params(qs)
 
                 def page(default_k=1000):
                     # every analytics list endpoint takes the same
@@ -1157,6 +1176,7 @@ def _make_handler(svc: BgpExplorerService):
             except BadParam as e:
                 return self._send({"error": str(e)}, 400)
             except Exception as e:  # surface engine errors as 500 JSON
+                log.exception("500 on GET %s", self.path)
                 return self._send({"error": str(e)[:500]}, 500)
 
     return Handler

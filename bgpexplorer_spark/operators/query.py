@@ -19,6 +19,11 @@ and no exchange. Requests with ``onlyactive``/``changed_after``/
 ``changed_before``, and ``asof`` requests, compute the windows per
 request. The filter column itself is pure predicate algebra pushed into
 the scan.
+
+Key-term requests on the serving copy skip both page actions: the
+copy's :class:`RouteIndex` (one sorted row per route, held on the
+driver) answers ``found``, the page and the supernet fallback, and the
+page's history collect is the request's only Spark job.
 """
 
 from __future__ import annotations
@@ -26,11 +31,16 @@ from __future__ import annotations
 import datetime as dt
 from dataclasses import dataclass
 
+import numpy as np
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import Column, DataFrame, Observation, Row, Window
 from pyspark.sql import functions as F
 
 from bgpexplorer_spark.filterlang import parse_filter
-from bgpexplorer_spark.filterlang.compile import filter_to_column, pushdown_prefilter
+from bgpexplorer_spark.filterlang.compile import (
+    _RD_RIBS, _V4_PREFIX_RIBS, _V6_PREFIX_RIBS, filter_to_column, pushdown_prefilter,
+)
+from bgpexplorer_spark.filterlang.terms import FilterTerm, RDTerm, V4Term, V6Term
 from bgpexplorer_spark.functions.timeutil import parse_ts_param, ts_cutoff_str, ts_to_millis
 from bgpexplorer_spark.schemas import KEY_COLS
 
@@ -232,6 +242,220 @@ def emitted_history(
         df = df.filter(F.col("_rn") <= F.lit(p.maxdepth))
     return df.drop("_rn")
 
+# --- the per-version route index ---------------------------------------------
+
+# families whose key is the plain prefix, or an rd→prefix chain on the
+# vpn ones (compile.key_match): address bits of the prefix, per rib
+_INDEX_BITS = {**dict.fromkeys(_V4_PREFIX_RIBS, 32), **dict.fromkeys(_V6_PREFIX_RIBS, 128)}
+_RD_CHAIN = tuple(r for r in _RD_RIBS if r in _INDEX_BITS)
+_ONES = (1 << 128) - 1
+_U64 = (1 << 64) - 1
+# the network mask of each prefix length, as (high, low) 64-bit halves of
+# the 128-bit left-aligned address
+_MASK_HI = np.array([(_ONES ^ (_ONES >> n)) >> 64 for n in range(129)], np.uint64)
+_MASK_LO = np.array([(_ONES ^ (_ONES >> n)) & _U64 for n in range(129)], np.uint64)
+_NONE = np.empty(0, np.int64)
+_I64_MAX = np.iinfo(np.int64).max
+
+def _le(ah, al, bh, bl):
+    """(ah, al) <= (bh, bl) on 128-bit values split in uint64 halves."""
+    return (ah < bh) | ((ah == bh) & (al <= bl))
+
+@dataclass
+class _RibRows:
+    """One rib's routes in :func:`_route_sort_key` order. The address of
+    the rib's family is left-aligned in 128 bits (``hi``, ``lo``), so a
+    v4 prefix a/n is the 128-bit prefix (a << 96)/n and one mask table
+    serves both families; null keys sort first as Spark orders them.
+    ``starts`` opens each run of rows whose sort columns before the
+    address are equal: inside a run the address ascends."""
+
+    nlri: np.ndarray      # nlri_str
+    rd_hi: np.ndarray     # int64, null → int64 min (no RD term equals it)
+    rd_lo: np.ndarray
+    hi: np.ndarray        # uint64 halves of the family address
+    lo: np.ndarray
+    plen: np.ndarray      # int64, clipped to 0..128
+    keyed: np.ndarray     # bool: address and prefixlen present
+    mc: np.ndarray        # bool: prefix inside 224.0.0.0/4 (v4) or ff00::/8 (v6)
+    keylen: np.ndarray    # _key_len: labels*24 + 64 per RD + prefixlen
+    starts: np.ndarray    # run starts, then len(nlri)
+    plens: np.ndarray     # the distinct keyed prefix lengths
+
+    def _bound(self, a: int, b: int, key: int, side: str) -> int:
+        """searchsorted for 128-bit ``key`` in the run [a, b)."""
+        h, lo = np.uint64(key >> 64), np.uint64(key & _U64)
+        i = a + int(np.searchsorted(self.hi[a:b], h, "left"))
+        j = a + int(np.searchsorted(self.hi[a:b], h, "right"))
+        return i + int(np.searchsorted(self.lo[i:j], lo, side))
+
+    def candidates(self, a: int, b: int, net, supernet: bool) -> np.ndarray:
+        """Rows of the run [a, b) that can hold ``net``'s answers: the
+        address range [first, last] of a subnet term; for a supernet term
+        the address ``first`` masked to each prefix length up to its own
+        (routes are stored canonical, iputil.v4_net_last_col)."""
+        first, last, n, _ = net
+        if not supernet:
+            return np.arange(self._bound(a, b, first, "left"),
+                             self._bound(a, b, last, "right"))
+        probes = {first & (_ONES ^ (_ONES >> int(m))) for m in self.plens if m <= n}
+        return np.sort(np.concatenate([_NONE] + [
+            np.arange(self._bound(a, b, k, "left"), self._bound(a, b, k, "right"))
+            for k in probes
+        ]))
+
+    def keeps(self, rows: np.ndarray, net, supernet: bool) -> np.ndarray:
+        """The key's Yes of ``net`` on ``rows``: _key_v4prefix /
+        _key_v6prefix with containment (reversed for a supernet term),
+        prefix lengths and the route-multicast gate."""
+        first, last, n, multicast = net
+        hi, lo, plen = self.hi[rows], self.lo[rows], self.plen[rows]
+        fh, fl = np.uint64(first >> 64), np.uint64(first & _U64)
+        if supernet:
+            inside = ((fh & _MASK_HI[plen]) == hi) & ((fl & _MASK_LO[plen]) == lo) \
+                & (plen <= n)
+        else:
+            lh, ll = np.uint64(last >> 64), np.uint64(last & _U64)
+            inside = _le(fh, fl, hi, lo) & _le(hi, lo, lh, ll) & (plen >= n) \
+                & (self.mc[rows] == multicast)
+        return self.keyed[rows] & inside
+
+class RouteIndex:
+    """The served copy's routes held on the driver, one row per route of
+    the index-answered families (:data:`_INDEX_BITS`), sorted per rib in
+    :func:`_route_sort_key` order: the sorted global index DITA prunes
+    with, here over a whole rib (the reference's BTreeMap range scan,
+    src/ribfilter.rs:563-580). Built once per state version from one
+    Arrow collect, which also counts every rib's routes (``counts``)."""
+
+    def __init__(self, counts: dict[str, int], ribs: dict[str, _RibRows]):
+        self.counts = counts
+        self._ribs = ribs
+
+    @classmethod
+    def build(cls, served: DataFrame) -> RouteIndex:
+        t = served.select(
+            *ROUTE_COLS, "rd_hi", "rd_lo", "addr_v4", "addr_v6", "prefixlen",
+            F.coalesce(F.size("labels"), F.lit(0)).alias("nlabels"),
+        ).dropDuplicates(ROUTE_COLS).toArrow()
+        rib = np.array(t["rib"].to_pylist(), dtype=str)
+        names, sizes = np.unique(rib, return_counts=True)
+
+        def ints(name: str, null: int) -> np.ndarray:
+            col = t[name]
+            vals = col.fill_null(0).to_numpy().astype(np.int64)
+            return np.where(col.is_null().to_numpy(), null, vals)
+
+        nlri = np.array(t["nlri_str"].to_pylist(), dtype=str)
+        low = np.iinfo(np.int64).min
+        rd_hi, rd_lo = ints("rd_hi", low), ints("rd_lo", low)
+        v4 = ints("addr_v4", -1)  # addresses are unsigned: -1 sorts first
+        v6_null = t["addr_v6"].is_null().to_numpy()
+        v6 = np.frombuffer(
+            b"".join(x or bytes(16) for x in t["addr_v6"].to_pylist()), ">u8"
+        ).reshape(-1, 2).astype(np.uint64)
+        plen = ints("prefixlen", -1)
+        nlabels = ints("nlabels", 0)
+        # _route_sort_key per rib: the last key is the primary one
+        order = np.lexsort(
+            (nlri, plen, v6[:, 1], v6[:, 0], ~v6_null, v4, rd_lo, rd_hi, rib)
+        )
+        ribs = {}
+        for name, bits in _INDEX_BITS.items():
+            at = order[rib[order] == name]
+            if bits == 32:
+                keyed = (v4[at] >= 0) & (plen[at] >= 0)
+                hi = np.where(keyed, v4[at], 0).astype(np.uint64) << np.uint64(32)
+                lo = np.zeros(len(at), np.uint64)
+                mc = keyed & (plen[at] >= 4) & ((hi >> np.uint64(60)) == 0xE)
+                run_cols = (rd_hi[at], rd_lo[at])
+            else:
+                keyed = ~v6_null[at] & (plen[at] >= 0)
+                hi, lo = v6[at, 0], v6[at, 1]
+                mc = keyed & (plen[at] >= 8) & ((hi >> np.uint64(56)) == 0xFF)
+                run_cols = (rd_hi[at], rd_lo[at], v4[at])
+            change = np.zeros(len(at), bool)
+            change[:1] = True
+            for c in run_cols:
+                change[1:] |= c[1:] != c[:-1]
+            ribs[name] = _RibRows(
+                nlri=nlri[at], rd_hi=rd_hi[at], rd_lo=rd_lo[at],
+                hi=hi, lo=lo, plen=np.clip(plen[at], 0, 128), keyed=keyed, mc=mc,
+                keylen=nlabels[at] * 24 + np.where(rd_hi[at] != low, 64, 0)
+                + np.maximum(plen[at], 0),
+                starts=np.append(np.flatnonzero(change), len(at)),
+                plens=np.unique(plen[at][keyed]),
+            )
+        return cls(dict(zip(names.tolist(), sizes.tolist())), ribs)
+
+    def select(self, rib: str, terms: list[FilterTerm], supernet: bool) -> np.ndarray:
+        """Row numbers, in page order, of ``rib``'s routes that ``terms``
+        (all index-exact: :func:`_index_exact`) say Yes to. An RD term
+        keeps the runs of its RD; the first prefix term picks candidate
+        rows by binary search inside each run, and every prefix term is
+        then checked exactly on them."""
+        ix = self._ribs[rib]
+        if not terms:
+            return np.arange(len(ix.nlri))
+        bits = _INDEX_BITS[rib]
+        runs = np.arange(len(ix.starts) - 1)
+        nets = []
+        for t in terms:
+            it = t.item
+            if isinstance(it, RDTerm):
+                if rib not in _RD_CHAIN:
+                    return _NONE
+                s = ix.starts[runs]
+                runs = runs[(ix.rd_hi[s] == it.hi) & (ix.rd_lo[s] == it.lo)]
+            elif isinstance(it, V4Term) != (bits == 32) or (supernet and it.multicast):
+                # a term of the other family, or a multicast term reversed:
+                # the key says Unknown, which never emits
+                return _NONE
+            else:
+                first = int(it.addr) << 96 if bits == 32 else int.from_bytes(it.addr, "big")
+                nets.append((first, first | (_ONES >> it.plen), it.plen, it.multicast))
+        out = []
+        for r in runs:
+            a, b = int(ix.starts[r]), int(ix.starts[r + 1])
+            rows = ix.candidates(a, b, nets[0], supernet) if nets else np.arange(a, b)
+            for net in nets:
+                rows = rows[ix.keeps(rows, net, supernet)]
+            out.append(rows)
+        return np.concatenate([_NONE] + out)
+
+    def page(
+        self, rib: str, terms: list[FilterTerm], p: QueryParams, length: int
+    ) -> tuple[int, list[Row], bool]:
+        """``found``, the page and whether the supernet fallback made it,
+        as :func:`query_rib`'s Spark path computes them."""
+        hits = self.select(rib, terms, False)
+        found = len(hits) if terms else length
+        rows = hits
+        if found <= p.skip:
+            rows = self.select(rib, terms, True)
+            # most specific first, then page order
+            rows = rows[np.argsort(-self._ribs[rib].keylen[rows], kind="stable")]
+        nlri = self._ribs[rib].nlri[rows[p.skip:p.skip + p.limit]]
+        return found, [Row(rib=rib, nlri_str=str(s)) for s in nlri], found <= p.skip
+
+def _index_exact(history: DataFrame, rib: str, p: QueryParams, terms) -> bool:
+    """The index answers a request exactly when its whole filter is key
+    terms on an index-answered rib (an empty filter included) and, on
+    the serving copy, every route sits in the match window: no entry
+    filter, no asof, and maxdepth > 0 (every key has its newest slot)."""
+    return (
+        rib in _INDEX_BITS and p.asof is None and p.maxdepth > 0
+        and _uses_slots(history, p)
+        and all(
+            not t.negated and (
+                isinstance(t.item, (V4Term, V6Term))
+                # an RD beyond BIGINT is not a literal Spark compares alike
+                or isinstance(t.item, RDTerm) and max(t.item.hi, t.item.lo) <= _I64_MAX
+            )
+            for t in terms
+        )
+    )
+
 @dataclass
 class RibQueryResult:
     """The /api/json response envelope (src/bgpsvc.rs:690-706)."""
@@ -243,12 +467,49 @@ class RibQueryResult:
     limit: int
     maxdepth: int
     onlyactive: bool
-    routes: list[Row]    # the emitted page of route keys, in page order
+    routes: list[Row]    # the page's routes (rib, nlri_str, ...), in page order
     history: DataFrame   # flat emitted history rows for those routes
     from_supernet: bool  # True when the supernet fallback produced the page
 
+def _spark_page(
+    history: DataFrame, rib: str, p: QueryParams, terms, length: int
+) -> tuple[int, list[Row], bool]:
+    """``found``, the page and whether the supernet fallback made it, in
+    one Spark action (two with the fallback)."""
+    matched = matched_routes(history, rib, p)
+    # O2: count short-circuits to table size on empty filter
+    # (src/bgpsvc.rs:603-613); otherwise the count is observed in the
+    # page's own action. limit 0 is optimized into an empty relation
+    # that never reports the metric, so it counts on its own.
+    observed = bool(terms) and p.limit > 0
+    if observed:
+        obs = Observation()
+        matched = matched.observe(obs, F.count(F.lit(1)).alias("found"))
+    page = page_routes(matched, p).collect()
+    found = None
+    if not terms:
+        found = length
+    elif observed:
+        try:
+            found = obs.get["found"]
+        except Py4JJavaError:
+            # a filter that can never say Yes (a v4 term on a v6 rib) is
+            # optimized into an empty relation, which reports no metric
+            pass
+    if found is None:
+        found = matched.count()
+    # the primary page is empty iff found <= skip (page = matched rows
+    # after OFFSET skip); only then does the supernet fallback
+    # (src/bgpsvc.rs:625-658) run its own action
+    if found <= p.skip:
+        page = page_routes(
+            matched_routes(history, rib, p, supernet=True), p, supernet=True
+        ).collect()
+    return found, page, found <= p.skip
+
 def query_rib(
-    history: DataFrame, rib: str, p: QueryParams, *, length: int | None = None
+    history: DataFrame, rib: str, p: QueryParams, *, length: int | None = None,
+    index: RouteIndex | None = None,
 ) -> RibQueryResult:
     """§3.1 end-to-end, including the two-query supernet fallback (O5):
     when the primary page is empty the serving layer re-plans with
@@ -261,6 +522,11 @@ def query_rib(
     snapshot-write/compaction) so a 100 TB table doesn't pay a full
     dedup-count scan per HTTP request. None → computed exactly (the
     explicit exact path).
+
+    ``index`` — the :class:`RouteIndex` of ``history`` (a serving copy).
+    When the request is index-exact (:func:`_index_exact`) it answers
+    ``found`` and the page on the driver; any other request runs the
+    Spark path.
 
     ``p.asof`` truncates the history at ts <= asof first, so the whole
     pipeline (length, match, windows, nested output) answers as the RIB
@@ -279,31 +545,10 @@ def query_rib(
         length = rib_df.dropDuplicates(ROUTE_COLS).count()
 
     terms = parse_filter(p.filter)
-    matched = matched_routes(history, rib, p)
-    # O2: count short-circuits to table size on empty filter
-    # (src/bgpsvc.rs:603-613); otherwise the count is observed in the
-    # page's own action. limit 0 is optimized into an empty relation
-    # that never reports the metric, so it counts on its own.
-    observed = bool(terms) and p.limit > 0
-    if observed:
-        obs = Observation()
-        matched = matched.observe(obs, F.count(F.lit(1)).alias("found"))
-    page = page_routes(matched, p).collect()
-    if not terms:
-        found = length
-    elif observed:
-        found = obs.get["found"]
+    if index is not None and _index_exact(history, rib, p, terms):
+        found, page, from_supernet = index.page(rib, terms, p, length)
     else:
-        found = matched.count()
-    from_supernet = False
-    # the primary page is empty iff found <= skip (page = matched rows
-    # after OFFSET skip); only then does the supernet fallback
-    # (src/bgpsvc.rs:625-658) run its own action
-    if found <= p.skip:
-        page = page_routes(
-            matched_routes(history, rib, p, supernet=True), p, supernet=True
-        ).collect()
-        from_supernet = True
+        found, page, from_supernet = _spark_page(history, rib, p, terms, length)
     hist = emitted_history(history, rib, [r.nlri_str for r in page], p)
     return RibQueryResult(
         ribtype=rib, length=length, found=found, skip=p.skip, limit=p.limit,

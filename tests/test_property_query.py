@@ -1,7 +1,8 @@
 """Property-based equivalence for the route query (query_rib →
 to_nested_json → nest_items): the slot path over the serving copy, the
-windowed path over the plain history, and a pure-Python model of the
-reference's query semantics must agree on random histories.
+windowed path over the plain history, the route-index path over the
+serving copy, and a pure-Python model of the reference's query semantics
+must agree on random histories.
 
 The model replays events per (rib, nlri, session, path) like ``_replay``
 (tests/test_property_filter.py) and evaluates filters with its
@@ -24,14 +25,15 @@ import json
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from bgpexplorer_spark.filterlang.terms import V4Term, parse_filter
+from bgpexplorer_spark.filterlang.terms import NumTerm, V4Term, V6Term, parse_filter
 from bgpexplorer_spark.operators.ingest import build_history
 from bgpexplorer_spark.operators.query import (
-    QueryParams, nest_items, query_rib, serving_copy, to_nested_json,
+    QueryParams, RouteIndex, _index_exact, nest_items, query_rib, serving_copy,
+    to_nested_json,
 )
 
 from tests.ribdata import T0, make_updates, u
-from tests.test_property_filter import _py_attr, _py_key
+from tests.test_property_filter import _py_attr, _py_key, _py_key_rd
 
 _ROUTES = [
     ("ipv4u", "10.0.0.0/8"),
@@ -56,20 +58,51 @@ def _net(nlri):
     return int(n.network_address), n.prefixlen
 
 
-def _route_dict(nlri, var):
-    addr, plen = _net(nlri)
+def _parse(rib, nlri):
+    """(rd, addr, plen) of an nlri_str as tests.ribdata.u writes it: an
+    RD route reads 'hi:lo:prefix'."""
+    if rib.startswith("vpn"):
+        hi, lo, net = nlri.split(":", 2)
+        return (int(hi), int(lo)), *_net(net)
+    return None, *_net(nlri)
+
+
+def _order(rib, nlri):
+    """The page order: RD (absent first), address, length, nlri_str."""
+    rd, addr, plen = _parse(rib, nlri)
+    return (rd or (-1, -1), addr, plen, nlri)
+
+
+def _supernet_order(rib, nlri):
+    """Most specific first: 64 bits per RD plus the prefix length."""
+    rd, _, plen = _parse(rib, nlri)
+    return (-(plen + (64 if rd else 0)), *_order(rib, nlri))
+
+
+def _route_dict(rib, nlri, var):
+    rd, addr, plen = _parse(rib, nlri)
     return {"addr": addr, "plen": plen, "nlri": nlri, "aspath": [100 + var, 200],
-            "comms": [], "rd": None, "nh": None, "extcomms": []}
+            "comms": [], "rd": rd, "nh": None, "extcomms": []}
 
 
-def _supernet_key(item, route):
-    """match_super_ipv4: the route prefix contains the filter net."""
-    if isinstance(item, V4Term):
+def _supernet_key(item, route, rib):
+    """match_super_ipv4/ipv6 (the route prefix contains the filter net)
+    behind the vpn families' RD: reversed containment, soft prefix
+    length for a number, Unknown for the rest."""
+    if rib.startswith("vpn"):
+        r = _py_key_rd(item, route)
+        if r is not None:
+            return r
+    bits = 128 if rib == "ipv6u" else 32
+    if isinstance(item, V6Term if bits == 128 else V4Term):
         if item.multicast:
             return None
-        span = (1 << (32 - route["plen"])) - 1
-        last = item.addr | ((1 << (32 - item.plen)) - 1)
-        return route["addr"] <= item.addr and route["addr"] + span >= last
+        addr = int.from_bytes(item.addr, "big") if bits == 128 else item.addr
+        span = (1 << (bits - route["plen"])) - 1
+        last = addr | ((1 << (bits - item.plen)) - 1)
+        return route["addr"] <= addr and route["addr"] + span >= last
+    if isinstance(item, NumTerm):
+        return True if route["plen"] == item.n else None
     return None
 
 
@@ -78,7 +111,7 @@ def _match(terms, route, rib, supernet):
     half swapped for reversed containment in supernet mode)."""
     out = True
     for t in terms:
-        k = _supernet_key(t.item, route) if supernet else _py_key(t.item, route, rib)
+        k = _supernet_key(t.item, route, rib) if supernet else _py_key(t.item, route, rib)
         a = _py_attr(t.item, route)
 
         def pol(x, neg=t.negated):
@@ -125,7 +158,7 @@ def _model(hist, rib, p):
         )
 
     keys = {k for k in hist if k[0] == rib}
-    routes = sorted({k[1] for k in keys}, key=lambda n: (*_net(n), n))
+    routes = sorted({k[1] for k in keys}, key=lambda n: _order(rib, n))
 
     def matched(supernet):
         out = []
@@ -139,7 +172,7 @@ def _model(hist, rib, p):
                 window = [e for i, e in enumerate(passing, 1)
                           if i > len(seq) - p.maxdepth]
                 hit = hit or any(
-                    _match(terms, _route_dict(nlri, e[2]), rib, supernet) is True
+                    _match(terms, _route_dict(rib, nlri, e[2]), rib, supernet) is True
                     for e in window
                 )
             if hit:
@@ -151,7 +184,7 @@ def _model(hist, rib, p):
     page = hits[p.skip:p.skip + p.limit]
     from_supernet = found <= p.skip
     if from_supernet:
-        sup = sorted(matched(True), key=lambda n: (-_net(n)[1], *_net(n), n))
+        sup = sorted(matched(True), key=lambda n: _supernet_order(rib, n))
         page = sup[p.skip:p.skip + p.limit]
     items = {}
     for nlri in page:
@@ -178,8 +211,9 @@ def _model(hist, rib, p):
     return len(routes), found, page, from_supernet, json.dumps(items)
 
 
-def _served(history, rib, p):
-    r = query_rib(history, rib, p)
+def _served(history, rib, p, index=None):
+    length = None if index is None else index.counts.get(rib, 0)
+    r = query_rib(history, rib, p, length=length, index=index)
     items = nest_items(r, to_nested_json(r).collect())
     shaped = {
         nlri: {
@@ -257,3 +291,114 @@ def test_query_paths_match_model(spark, data):
     finally:
         served.unpersist()
         table.unpersist()
+
+
+# the index-answered families with multicast prefixes and covering
+# supernets; one nlri_str sits in two ribs and one prefix under two RDs
+_INDEX_ROUTES = [
+    ("ipv4u", "0.0.0.0/0", None),
+    ("ipv4u", "10.0.0.0/8", None),
+    ("ipv4u", "10.0.1.0/24", None),
+    ("ipv4u", "224.0.0.0/4", None),
+    ("ipv4u", "224.1.0.0/16", None),
+    ("ipv4m", "10.0.1.0/24", None),
+    ("ipv4m", "224.1.0.0/16", None),
+    ("ipv6u", "2c0a::/16", None),
+    ("ipv6u", "2c0a:0:1::/48", None),
+    ("ipv6u", "ff00::/8", None),
+    ("ipv6u", "ff02::/16", None),
+    ("vpnv4u", "10.0.0.0/8", "1:2"),
+    ("vpnv4u", "10.0.1.0/24", "1:2"),
+    ("vpnv4u", "10.0.1.0/24", "1:3"),
+    ("vpnv4u", "224.1.0.0/16", "2:1"),
+]
+
+# filters the index answers (host probes fall back to supernets; a term
+# of the other family, or an RD off the vpn ribs, matches nothing) ...
+_V4_EXACT = ["", "", "10.0.1.77", "224.1.2.3", "10.0.0.0/8", "10.0.1.0/24",
+             "224.0.0.0/4", "0.0.0.0/0", "10.0.0.0/8 10.0.1.0/24", "2c0a::/16",
+             "rd:1:2"]
+_INDEX_EXACT = {
+    "ipv4u": _V4_EXACT,
+    "ipv4m": _V4_EXACT,
+    "ipv6u": ["", "", "2c0a:0:1::5", "ff02::1", "2c0a::/16", "ff00::/8",
+              "2c0a:0:1::/48", "::/0", "10.0.0.0/8"],
+    "vpnv4u": ["", "rd:1:2 10.0.1.0/24", "rd:1:3 10.0.1.7", "rd:1:2",
+               "10.0.1.99", "rd:9:9 10.0.0.0/8", "rd:2:1 224.1.2.3",
+               "224.0.0.0/4"],
+}
+# ... and filters that must run on Spark
+_V4_SPARK = ["-10.0.0.0/8", "24", "re:/24$", "as:101", "10.0.0.0/8 as:102",
+             "-rd:1:2"]
+_INDEX_SPARK = {
+    "ipv4u": _V4_SPARK,
+    "ipv4m": _V4_SPARK,
+    "ipv6u": ["-2c0a::/16", "48", "re:/48$", "as:101", "2c0a::/16 as:102"],
+    "vpnv4u": _V4_SPARK,
+}
+
+_INDEX_EVENT = st.tuples(
+    st.sampled_from(_INDEX_ROUTES),
+    st.sampled_from([0, 0, 1]),                      # session
+    st.sampled_from([0, 0, 1]),                      # path
+    st.sampled_from(["update", "update", "update", "withdraw"]),
+    st.sampled_from([0, 1, 2]),                      # attribute variant
+    st.sampled_from([1, 300, 2500]),                 # µs since the previous event
+)
+
+
+@settings(
+    max_examples=5, deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
+)
+@given(data=st.data())
+def test_route_index_matches_spark_and_model(spark, data):
+    """query_rib with the served copy's RouteIndex, query_rib without it
+    and the model agree on every rib the index answers. Key-term filters
+    must take the index path, and negated, numeric, regex, AS-path,
+    maxdepth=0 and entry-filtered requests must not."""
+    drawn = data.draw(st.lists(_INDEX_EVENT, min_size=15, max_size=40))
+    events, rows, t = [], [], T0
+    for (rib, net, rd), s, pid, op, var, gap in drawn:
+        t += gap * _US
+        row = u(net, rib=rib, rd=rd, op=op, session_id=s, path_id=pid,
+                aspath=[("Seq", [100 + var, 200])] if op == "update" else None)
+        row["ts"] = t
+        rows.append(row)
+        events.append(((rib, row["nlri_str"]), s, pid, op, var, t))
+    served = serving_copy(build_history(make_updates(spark, rows))).cache()
+    index = RouteIndex.build(served)
+    hist = _replay(events)
+    stamps = [e[5] for e in events]
+    skips, limits = st.sampled_from([0, 0, 1, 2, 20]), st.sampled_from([1, 2, 1000])
+    try:
+        # every index-exact filter of every rib: the index against the model
+        for rib, filters in _INDEX_EXACT.items():
+            for flt in filters:
+                p = QueryParams(filter=flt, skip=data.draw(skips),
+                                limit=data.draw(limits),
+                                maxdepth=data.draw(st.sampled_from([1, 3])))
+                assert _index_exact(served, rib, p, parse_filter(flt)), p
+                assert _served(served, rib, p, index) == _model(hist, rib, p), (rib, p)
+        # drawn requests: with the index, without it, and the model
+        for _ in range(4):
+            rib = data.draw(st.sampled_from(sorted(_INDEX_EXACT)))
+            flt = data.draw(st.sampled_from(_INDEX_EXACT[rib] + _INDEX_SPARK[rib]))
+            entry_filtered = data.draw(st.sampled_from([False, False, False, True]))
+            p = QueryParams(
+                filter=flt,
+                skip=data.draw(skips),
+                limit=data.draw(limits),
+                maxdepth=data.draw(st.sampled_from([0, 1, 3, 3])),
+                onlyactive=entry_filtered and data.draw(st.booleans()),
+                changed_after=(
+                    data.draw(st.sampled_from(stamps)) if entry_filtered else None
+                ),
+            )
+            exact = flt in _INDEX_EXACT[rib] and not entry_filtered and p.maxdepth > 0
+            assert _index_exact(served, rib, p, parse_filter(flt)) == exact, p
+            want = _model(hist, rib, p)
+            assert _served(served, rib, p, index) == want, (rib, p, events)
+            assert _served(served, rib, p) == want, (rib, p, events)
+    finally:
+        served.unpersist()

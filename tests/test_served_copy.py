@@ -6,6 +6,7 @@ table schema everywhere else)."""
 from __future__ import annotations
 
 import json
+import uuid
 
 from pyspark import StorageLevel
 from pyspark.sql import functions as F
@@ -110,9 +111,9 @@ def test_served_copy_fresh_after_bump(spark, tmp_path):
 
 
 def test_request_finishes_on_its_version(spark, tmp_path, monkeypatch):
-    """A request holds the copy it started with: a bump and a rebuild
-    (which unpersists that copy) in the middle of it do not change its
-    answer."""
+    """A request holds the copy and the route index it started with: a
+    bump and a rebuild (which unpersists that copy) in the middle of it
+    do not change its answer."""
     table = str(tmp_path / "table")
     _append(spark, table, [u("10.0.0.0/24", t=1, aspath=[("Seq", [101])])])
     svc = _service(spark, table)
@@ -122,19 +123,73 @@ def test_request_finishes_on_its_version(spark, tmp_path, monkeypatch):
     def query_rib_with_concurrent_ingest(history, rib, p, **kw):
         if not inner:
             inner["started_on"] = svc._served[1]
-            _append(spark, table, [u("10.0.0.0/24", t=2, aspath=[("Seq", [102])])])
+            # the copy and the index of one version
+            assert history is svc._served[1] and kw["index"] is svc._served[2]
+            _append(spark, table, [
+                u("10.0.0.0/24", t=2, aspath=[("Seq", [102])]),
+                u("10.0.1.0/24", t=2, aspath=[("Seq", [201])]),
+            ])
             svc.bump_state_version()
-            inner["resp"] = svc.api_json("ipv4u", filter="10.0.0.0/24")
+            inner["resp"] = svc.api_json("ipv4u", filter="10.0.0.0/16")
+            assert svc._served[2] is not kw["index"]
         return real(history, rib, p, **kw)
 
     monkeypatch.setattr(api, "query_rib", query_rib_with_concurrent_ingest)
-    outer = svc.api_json("ipv4u", filter="10.0.0.0/24")
+    outer = svc.api_json("ipv4u", filter="10.0.0.0/16")
+    # the old index: one route, and its page's history from the old copy
+    assert outer["length"] == 1 and outer["found"] == 1
     assert [a for _, a in _entries(outer, "10.0.0.0/24")] == [101]
+    assert list(outer["items"]) == ["10.0.0.0/24"]
+    assert inner["resp"]["length"] == 2 and inner["resp"]["found"] == 2
     assert [a for _, a in _entries(inner["resp"], "10.0.0.0/24")] == [102, 101]
     assert inner["started_on"].storageLevel == StorageLevel.NONE
     monkeypatch.setattr(api, "query_rib", real)
-    again = svc.api_json("ipv4u", filter="10.0.0.0/24")
+    again = svc.api_json("ipv4u", filter="10.0.0.0/16")
+    assert again["found"] == 2
     assert [a for _, a in _entries(again, "10.0.0.0/24")] == [102, 101]
+
+
+def _jobs(spark, request) -> tuple[int, dict]:
+    """The Spark jobs ``request()`` runs, and its answer."""
+    sc = spark.sparkContext
+    group = f"job-count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count")
+    try:
+        resp = request()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group)), resp
+
+
+def test_index_answered_request_runs_one_job(spark, tmp_path):
+    """On a warm served copy a key-term request runs one Spark job, the
+    page's history collect: the route index answers found, the page and
+    the supernet fallback. An attribute term still runs its page action."""
+    table = str(tmp_path / "table")
+    _append(spark, table, [
+        u("10.0.0.0/16", t=1, aspath=[("Seq", [100])]),
+        u("10.0.1.0/24", t=2, aspath=[("Seq", [100])]),
+        u("10.0.2.0/24", t=3, aspath=[("Seq", [200])]),
+        u("10.0.1.0/24", rib="vpnv4u", rd="1:2", t=4),
+        u("10.0.1.0/24", rib="vpnv4u", rd="1:3", t=5),
+        u("2c0a::/32", rib="ipv6u", t=6),
+    ])
+    svc = _service(spark, table)
+    svc.api_json("ipv4u")  # builds the copy and its index
+    for rib, params, found, page in [
+        ("ipv4u", {"filter": "10.0.1.0/24"}, 1, ["10.0.1.0/24"]),
+        ("ipv4u", {"filter": "10.0.0.0/16"}, 3,
+         ["10.0.0.0/16", "10.0.1.0/24", "10.0.2.0/24"]),
+        ("ipv4u", {"filter": "10.0.1.77"}, 0, ["10.0.1.0/24", "10.0.0.0/16"]),
+        ("vpnv4u", {"filter": "rd:1:3 10.0.0.0/8"}, 1, ["1:3:10.0.1.0/24"]),
+        ("ipv6u", {"filter": "2c0a::/16"}, 1, ["2c0a::/32"]),
+        ("ipv4u", {"skip": 1, "limit": 1}, 3, ["10.0.1.0/24"]),
+    ]:
+        jobs, resp = _jobs(spark, lambda: svc.api_json(rib, **params))
+        assert (resp["found"], list(resp["items"])) == (found, page), params
+        assert jobs == 1, (params, jobs)
+    jobs, resp = _jobs(spark, lambda: svc.api_json("ipv4u", filter="as:100"))
+    assert resp["found"] == 2 and jobs >= 2, jobs
 
 
 def test_served_copy_stays_private(spark, tmp_path):

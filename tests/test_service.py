@@ -475,6 +475,68 @@ def test_http_malformed_numeric_param_is_400(spark):
         httpd.shutdown()
 
 
+def test_http_malformed_time_param_is_400(spark):
+    """A time parameter that is neither epoch millis nor RFC 3339 is the
+    client's error: 400 naming the parameter, never a 500."""
+    hist = build_history(make_updates(spark, [u("10.0.0.0/24", t=1)])).cache()
+    svc = BgpExplorerService(hist, route_counts={"ipv4u": 1})
+    httpd = serve(svc, port=0)
+    base = f"http://127.0.0.1:{httpd.server_address[1]}"
+    try:
+        for path, name in [
+            ("/api/json/ipv4u?changed_after=yesterday", "changed_after"),
+            ("/api/json/ipv4u?changed_before=2024-13-01", "changed_before"),
+            ("/api/json/ipv4u?asof=soon", "asof"),
+            ("/api/json/ipv4u?asof=99999999999999999999", "asof"),
+            ("/api/analytics/moas?asof=x", "asof"),
+            ("/api/analytics/ages?asof=1.5", "asof"),
+            ("/api/analytics/diff?t1=0&t2=later", "t2"),
+            ("/api/analytics/diff?t1=then", "t1"),
+            ("/api/analytics/damping?at=noon", "at"),
+        ]:
+            try:
+                urllib.request.urlopen(base + path)
+                raise AssertionError(f"expected 400 for {path}")
+            except urllib.error.HTTPError as e:
+                assert e.code == 400, (path, e.code)
+                assert json.loads(e.read())["error"].startswith(name + " "), path
+        # well-formed values still answer: epoch millis and RFC 3339
+        for q in ("changed_after=0", "changed_before=2100-01-01T00:00:00Z"):
+            ok = json.loads(urllib.request.urlopen(f"{base}/api/json/ipv4u?{q}").read())
+            assert ok["found"] == 1, q
+    finally:
+        httpd.shutdown()
+
+
+def test_http_500_is_logged_with_traceback(spark, caplog, monkeypatch):
+    """An engine error answers 500 with the same body as before, and
+    the log gets the path and the traceback."""
+    hist = build_history(make_updates(spark, [u("10.0.0.0/24", t=1)]))
+    svc = BgpExplorerService(hist, route_counts={"ipv4u": 1})
+
+    def broken():
+        raise RuntimeError("statistics exploded")
+
+    monkeypatch.setattr(svc, "api_statistics", broken)
+    httpd = serve(svc, port=0)
+    try:
+        with caplog.at_level("ERROR", logger="bgpexplorer_spark.api"):
+            try:
+                urllib.request.urlopen(
+                    f"http://127.0.0.1:{httpd.server_address[1]}/api/statistics?x=1"
+                )
+                raise AssertionError("expected 500")
+            except urllib.error.HTTPError as e:
+                assert e.code == 500
+                assert json.loads(e.read()) == {"error": "statistics exploded"}
+    finally:
+        httpd.shutdown()
+    (rec,) = [r for r in caplog.records if r.name == "bgpexplorer_spark.api"]
+    assert rec.levelname == "ERROR" and "/api/statistics?x=1" in rec.getMessage()
+    assert rec.exc_info[0] is RuntimeError
+    assert "statistics exploded" in caplog.text and "Traceback" in caplog.text
+
+
 def test_api_asof_time_travel(spark):
     hist = build_history(
         make_updates(
