@@ -36,17 +36,15 @@ log = logging.getLogger(__name__)
 class BgpExplorerService:
     """Programmatic facade (what the HTTP layer and tests call).
 
-    ``route_counts`` — maintained per-rib route counts (O3 ``length``
-    served O(1) like the reference's map size, src/bgpsvc.rs:677). Build
-    from a snapshot with :meth:`from_snapshot`, or pass
-    ``exact_length=True`` to force the per-request dedup-count scan."""
+    ``/api/json`` answers from a per-state-version served copy of the
+    history. Its :class:`RouteIndex` carries every rib's route count, so
+    O3 ``length`` is served O(1) like the reference's map size
+    (src/bgpsvc.rs:677); ``asof`` requests count it at the cutoff."""
 
     def __init__(
         self,
         history: DataFrame,
         sessions: DataFrame | None = None,
-        route_counts: dict[str, int] | None = None,
-        exact_length: bool = False,
         ws_apply_filter: bool = False,
         roas: DataFrame | None = None,
         roas_v6: DataFrame | None = None,
@@ -74,8 +72,6 @@ class BgpExplorerService:
         self.roas_v6 = roas_v6
         # FSM transition log (read_mrt_state_changes) for /api/analytics/sessions
         self.state_changes = state_changes
-        self.route_counts = dict(route_counts) if route_counts else None
-        self.exact_length = exact_length
         self.state = "Established"  # O8 (src/bgpsvc.rs:429-435)
         # S7 live feed: publish micro-batches via self.feed.publish_batch
         # (e.g. from run_ingest's foreachBatch); ws_apply_filter=True turns
@@ -90,7 +86,7 @@ class BgpExplorerService:
         # deagg / hijacks): repeated dashboard polls reuse the
         # checkpointed result instead of rebuilding it. Keyed by
         # (report, rib, state_version); bump_state_version() invalidates
-        # after new ingest — the same discipline as route_counts — and a
+        # after new ingest — the same discipline as the served copy — and a
         # TTL (analytics_memo_ttl seconds, default 60) bounds staleness
         # for deployments that ingest live WITHOUT wiring
         # run_ingest(service=...), so a memoized report can never
@@ -153,20 +149,6 @@ class BgpExplorerService:
         if old is not None:
             old[1].unpersist()
 
-    @classmethod
-    def from_snapshot(cls, spark, path: str, sessions: DataFrame | None = None):
-        """S5 + maintained counts: missing counts (pre-counts snapshot)
-        are computed once here, not per request."""
-        from bgpexplorer_spark.operators.rib import (
-            read_route_counts, read_snapshot, route_counts as rc,
-        )
-
-        hist = read_snapshot(spark, path)
-        counts = read_route_counts(spark, path)
-        if counts is None:
-            counts = {r["rib"]: r["routes"] for r in rc(hist).collect()}
-        return cls(hist, sessions=sessions, route_counts=counts)
-
     def api_json(self, rib: str, **params) -> dict:
         """GET /api/json/<rib> — the §3.1 pipeline; unknown rib names fall
         back to ipv4u like the reference (src/ribservice.rs:276)."""
@@ -178,14 +160,9 @@ class BgpExplorerService:
             r = query_rib(self._history_for_asof(), rib, p)
         else:
             served, index = self._served_copy()
-            if self.exact_length:
-                length = None
-            else:
-                # maintained counts (snapshot) until the first bump,
-                # then the served copy's own
-                maintained = self.route_counts
-                length = (index.counts if maintained is None else maintained).get(rib, 0)
-            r = query_rib(served, rib, p, length=length, index=index)
+            r = query_rib(
+                served, rib, p, length=index.counts.get(rib, 0), index=index
+            )
         items = nest_items(r, to_nested_json(r).collect())
         return {
             "ribtype": r.ribtype,
@@ -237,8 +214,8 @@ class BgpExplorerService:
 
     def bump_state_version(self) -> None:
         """New state landed (ingest batch applied / snapshot reloaded):
-        invalidate every per-state serving memo — analytics reports, the
-        maintained route counts and the served copy of the history — so
+        invalidate every per-state serving memo — the analytics reports
+        and the served copy of the history with its route index — so
         the next request recomputes. With a ``history_provider`` set (a
         zero-arg callable returning the current history DataFrame — the
         live-daemon wiring, since a batch DataFrame binds its file
@@ -255,8 +232,6 @@ class BgpExplorerService:
         provider = getattr(self, "history_provider", None)
         if provider is not None:
             self.history = provider()
-        if not self.exact_length:
-            self.route_counts = None
         with self._memo_lock:
             self._state_version += 1
             self._analytics_memo.clear()

@@ -1515,8 +1515,8 @@ _FLAT_HIST_COLS = """nlri_str, session_id, path_id, epoch_ms(ts) AS ts_ms,
 )
 def s4_snapshot_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S4/S5 — the partitioned snapshot IS the store: build_history →
-    write_snapshot ((rib, ts_date) layout + addr sort + maintained
-    counts) → read_snapshot must reproduce every row bit-for-bit
+    write_snapshot ((rib, ts_date) layout + addr sort + bloom
+    filters) → read_snapshot must reproduce every row bit-for-bit
     (reference dump/load src/bgprib.rs:903-948)."""
     import os
     import tempfile
@@ -1525,7 +1525,7 @@ def s4_snapshot_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     hist = _derived_updates_history(spark, sf_dir)
     path = os.path.join(tempfile.gettempdir(), "bgpx_snap_fixture")
-    write_snapshot(hist, path, spark=spark)
+    write_snapshot(hist, path)
     back = read_snapshot(spark, path)
     return back.select(
         "nlri_str", "session_id", "path_id",
@@ -1552,7 +1552,7 @@ def u9_compact_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     hist = _derived_updates_history(spark, sf_dir)
     path = os.path.join(tempfile.gettempdir(), "bgpx_compact_fixture")
-    write_snapshot(hist, path, spark=spark)
+    write_snapshot(hist, path)
     compact(spark, path, history_depth=3)
     back = read_snapshot(spark, path)
     return back.select(

@@ -517,11 +517,10 @@ def query_rib(
     (src/bgpsvc.rs:625-658).
 
     ``length`` — the per-rib route count. The reference serves it as an
-    O(1) map size (src/bgpsvc.rs:677); pass the maintained count
-    (operators/rib.py route_counts / read_route_counts, refreshed at
-    snapshot-write/compaction) so a 100 TB table doesn't pay a full
-    dedup-count scan per HTTP request. None → computed exactly (the
-    explicit exact path).
+    O(1) map size (src/bgpsvc.rs:677); the serving layer passes
+    ``index.counts[rib]``, counted when the served copy's index was
+    built, so a request pays no dedup-count scan. None → counted here
+    with one Spark job.
 
     ``index`` — the :class:`RouteIndex` of ``history`` (a serving copy).
     When the request is index-exact (:func:`_index_exact`) it answers
@@ -531,7 +530,7 @@ def query_rib(
     ``p.asof`` truncates the history at ts <= asof first, so the whole
     pipeline (length, match, windows, nested output) answers as the RIB
     stood at that instant — the serving form of analytics.rib_asof. The
-    maintained ``length`` describes the full table, so it is recomputed
+    passed ``length`` describes the full table, so it is recomputed
     under asof (the cutoff filter pushes down to the scan; partition
     pruning on ts_date bounds the read). Slots of a serving copy rank
     the untruncated history, so asof drops them and runs the windows."""

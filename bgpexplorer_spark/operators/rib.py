@@ -23,8 +23,7 @@ def current_state(history: DataFrame, only_active: bool = True) -> DataFrame:
     Formulated as a ``max_by`` aggregation, not a row_number window:
     partial aggregation combines map-side and skips the per-partition
     sort, so the shuffle carries one row per key per map task instead of
-    the whole table (measured flat sf0.1→sf1 vs the window's 5.6× — the
-    same reason the streaming path is ``live_current_state_agg``).
+    the whole table (measured flat sf0.1→sf1 vs the window's 5.6×).
     Same-``ts`` ties are arbitrary in both forms (the window sort was
     unstable too); ingest keys history by event time, so ties only arise
     from duplicate captures.
@@ -76,51 +75,7 @@ def statistics(history: DataFrame) -> DataFrame:
         F.count_distinct("session_id").alias("sessions"),
     )
 
-def route_counts(history: DataFrame) -> DataFrame:
-    """O3 — distinct routes per rib. The reference serves ``length`` as an
-    O(1) BTreeMap size (src/bgpsvc.rs:677); here the equivalent is a tiny
-    maintained aggregate refreshed at snapshot-write/compaction time, NOT
-    a per-request full-table scan."""
-    return history.groupBy("rib").agg(F.count_distinct("nlri_str").alias("routes"))
-
-_COUNTS_FILE = "_route_counts.json"
-
-def write_route_counts(spark, history: DataFrame, path: str) -> dict[str, int]:
-    """Materialize per-rib route counts next to the snapshot (an
-    underscore-prefixed file, invisible to the parquet reader). Goes
-    through the Hadoop FileSystem API so it lands on HDFS/S3 paths too."""
-    import json as _json
-
-    counts = {r["rib"]: r["routes"] for r in route_counts(history).collect()}
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path + "/" + _COUNTS_FILE)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    out = fs.create(jpath, True)
-    out.write(bytearray(_json.dumps(counts).encode()))
-    out.close()
-    return counts
-
-def read_route_counts(spark, path: str) -> dict[str, int] | None:
-    """The maintained counts, or None when the snapshot predates them."""
-    import json as _json
-
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path + "/" + _COUNTS_FILE)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(jpath):
-        return None
-    stream = fs.open(jpath)
-    try:
-        # py4j arrays are pass-by-value — read JVM-side via commons-io
-        text = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-        return {k: int(v) for k, v in _json.loads(text).items()}
-    finally:
-        stream.close()
-
-def write_snapshot(
-    history: DataFrame, path: str, mode: str = "overwrite", spark=None,
-    bloom_cols: tuple = ("nlri_str", "session_id"),
-) -> None:
+def write_snapshot(history: DataFrame, path: str) -> None:
     """S4 — the parquet table IS the snapshot (vs CBOR dump+rename,
     src/bgprib.rs:903-948).
 
@@ -131,23 +86,18 @@ def write_snapshot(
     the BTreeMap range scan (src/ribfilter.rs:231-305) as stats-based
     skipping. Point-lookup keys that do NOT correlate with the sort
     order (``nlri_str`` exact match, ``session_id``) get parquet bloom
-    filters so a single-route probe skips row groups min/max can't
-    (set ``bloom_cols=()`` to disable).
-
-    Pass ``spark`` to also refresh the maintained per-rib route counts
-    (O3 ``length`` without a per-request scan).
+    filters so a single-route probe skips row groups min/max can't.
+    An existing table at ``path`` is overwritten.
     """
     w = (
         history.withColumn("ts_date", F.to_date("ts"))
         .repartition("rib", "ts_date")
         .sortWithinPartitions("addr_v4", "addr_v6", "prefixlen")
-        .write.mode(mode)
+        .write.mode("overwrite")
     )
-    for c in bloom_cols:
+    for c in ("nlri_str", "session_id"):
         w = w.option(f"parquet.bloom.filter.enabled#{c}", "true")
     w.partitionBy("rib", "ts_date").parquet(path)
-    if spark is not None:
-        write_route_counts(spark, history, path)
 
 def read_snapshot(spark, path: str) -> DataFrame:
     """S5 — no index rebuild needed (indexes are not materialized)."""
@@ -182,7 +132,7 @@ def compact(spark, path: str, history_depth: int | None = None) -> None:
     df = read_snapshot(spark, path)
     if history_depth is not None:
         df = retained(df, history_depth)
-    write_snapshot(df, tmp, spark=spark)  # complete, durable copy — source untouched
+    write_snapshot(df, tmp)  # complete, durable copy — source untouched
     atomic_swap(spark, tmp, path)
 
 def atomic_swap(spark, tmp: str, path: str) -> None:

@@ -1,32 +1,16 @@
-"""Session registry (SURVEY.md §1.1; reference BgpSessionStorage,
-src/bgpsvc.rs:135-162 with the order-insensitive peer-pair identity of
-src/bgpsvc.rs:58-134).
+"""Dense session ids (SURVEY.md §1.1; reference BgpSessionStorage,
+src/bgpsvc.rs:135-162).
 
-The reference hands out small-int session ids keyed by a symmetric
-(peer1, peer2) descriptor — Eq/Ord/Hash ignore which side is which. Here
-the canonical identity is the SORTED peer pair, and the surrogate id is a
-dense rank over first-seen order (deterministic given the event table).
+The reference hands out small-int session ids from an insertion-order
+counter. Here :func:`dense_ids` numbers a tiny distinct dimension in a
+fixed column order; ``sources/mrt.assign_sessions`` uses it to turn an
+archive's distinct peers into ``session_id`` values.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-def canonical_peer_pair(df: DataFrame,
-                        addr1: str = "peer1_addr", as1: str = "peer1_as",
-                        addr2: str = "peer2_addr", as2: str = "peer2_as") -> DataFrame:
-    """Symmetric identity: sort the two (addr, as) pairs so (A,B) and
-    (B,A) collapse to one session."""
-    first = F.struct(F.col(addr1).alias("addr"), F.col(as1).alias("asn"))
-    second = F.struct(F.col(addr2).alias("addr"), F.col(as2).alias("asn"))
-    lo = F.least(first, second)
-    hi = F.greatest(first, second)
-    return df.select(
-        "*",
-        lo.getField("addr").alias("peer_lo_addr"), lo.getField("asn").alias("peer_lo_as"),
-        hi.getField("addr").alias("peer_hi_addr"), hi.getField("asn").alias("peer_hi_as"),
-    )
 
 def dense_ids(df: DataFrame, order_cols: list[str], id_col: str = "session_id") -> DataFrame:
     """Dense 0..n-1 ids over a TINY distinct frame in lexicographic
@@ -43,20 +27,3 @@ def dense_ids(df: DataFrame, order_cols: list[str], id_col: str = "session_id") 
         .select(F.col("_id").cast("int").alias(id_col), "_s.*")
     )
 
-def build_session_registry(peer_events: DataFrame, ts_col: str = "ts") -> DataFrame:
-    """Distinct canonical peer pairs → dense session_id by first-seen
-    time (the reference's insertion-order counter,
-    src/bgpsvc.rs:146-161)."""
-    canon = canonical_peer_pair(peer_events)
-    firsts = canon.groupBy(
-        "peer_lo_addr", "peer_lo_as", "peer_hi_addr", "peer_hi_as"
-    ).agg(F.min(ts_col).alias("first_seen"))
-    return dense_ids(
-        firsts,
-        ["first_seen", "peer_lo_addr", "peer_lo_as", "peer_hi_addr", "peer_hi_as"],
-    ).select(
-        "session_id",
-        F.col("peer_lo_addr").alias("peer1_addr"), F.col("peer_lo_as").alias("peer1_as"),
-        F.col("peer_hi_addr").alias("peer2_addr"), F.col("peer_hi_as").alias("peer2_as"),
-        "first_seen",
-    )

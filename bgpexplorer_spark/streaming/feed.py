@@ -13,10 +13,15 @@ Structured Streaming DataFrame:
   via ``foreachBatch`` re-using the batch ``build_history`` on each
   micro-batch — the single-writer thread (U10) replaced by per-key
   event-time ordering. Exactly-once into the parquet table comes from the
-  checkpoointed sink; analytic views (current_state etc.) run on the
+  checkpointed sink; analytic views (current_state etc.) run on the
   table, which is the batch-first stance of SURVEY §7.
-- ``windowed_update_rates`` shows the event-time/watermark capability the
-  reference lacks entirely (ST3: "None"), strictly more capable.
+- ``live_current_state`` keeps the current-state view as keyed streaming
+  state (later arrival wins a same-timestamp tie, like the reference's
+  BTreeMap insert).
+- ``windowed_update_rates`` and the other ``windowed_*`` / ``live_*``
+  aggregates show the event-time/watermark capability the reference
+  lacks entirely (ST3: "None"). Flap damping is batch-only
+  (``analytics.flap_damping``, served at ``/api/analytics/damping``).
 """
 
 from __future__ import annotations
@@ -82,7 +87,7 @@ def run_ingest(
             feed.publish_batch(batch_df)
         if service is not None:
             # new state landed: drop the serving layer's per-state memos
-            # (analytics reports, maintained route counts)
+            # (analytics reports, the served copy and its route index)
             service.bump_state_version()
 
     w = updates.writeStream.foreachBatch(sink).option(
@@ -174,36 +179,6 @@ def heavy_hitters(
     )
 
 
-def live_current_state_agg(updates: DataFrame) -> DataFrame:
-    """JVM-native variant of :func:`live_current_state`: the keyed
-    latest-(ts, active) upsert expressed as a BUILT-IN streaming
-    ``max_by`` aggregation — state lives JVM-side, no per-key Python
-    crossing, so the state path runs at native aggregation throughput
-    (measured ~5-10× the applyInPandasWithState variant; see bench's
-    streaming section).
-
-    Semantics caveat, documented deliberately: when two arrivals of the
-    same key carry the SAME timestamp inside one batch, the built-in
-    aggregate has no arrival order to break the tie with — the
-    applyInPandasWithState variant preserves the reference's
-    later-arrival-wins (src/bgprib.rs BTreeMap insert). Live feeds
-    timestamp at ingest with microsecond resolution, so equal-ts
-    same-key arrivals are a replay artifact; use the faithful variant
-    when exact replay equivalence matters and this one for throughput."""
-    latest = F.max_by(
-        F.struct(F.col("ts"), (F.col("op") == "update").alias("active")),
-        F.col("ts"),
-    )
-    return (
-        updates.groupBy("rib", "nlri_str", "session_id", "path_id")
-        .agg(latest.alias("_l"))
-        .select(
-            "rib", "nlri_str", "session_id", "path_id",
-            F.col("_l.ts").alias("ts"), F.col("_l.active").alias("active"),
-        )
-    )
-
-
 def live_current_state(updates: DataFrame) -> DataFrame:
     """ST4 (true-streaming variant) — the RIB current-state view kept as
     STREAMING STATE rather than recomputed from the table: one state
@@ -265,612 +240,6 @@ def live_current_state(updates: DataFrame) -> DataFrame:
         "rib", "nlri_str", "session_id", "path_id"
     ).applyInPandasWithState(
         upsert, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
-    )
-
-def _damping_fold(penalty, last_us, announced, flaps,
-                  ts_us, wd, lam, flap_penalty):
-    """One micro-batch of the RFC 2439 fold, vectorized: ``ts_us`` is the
-    ascending-sorted event times (µs), ``wd`` the is-withdrawal mask.
-    Exponential decay composes, so the sequential "decay to each event,
-    add at counted withdrawals" loop equals one decay of the entry
-    penalty to the batch end plus one flap_penalty decayed from each
-    counted withdrawal to the batch end; "counted" (withdrawal while
-    announced) is a shift-compare because the announced flag after event
-    i is just ``not wd[i]``. Returns (penalty, last_us, announced,
-    flaps). Property-tested equal to the event-at-a-time fold."""
-    import math
-
-    import numpy as np
-
-    announced_before = np.empty(len(wd), dtype=bool)
-    announced_before[0] = announced
-    announced_before[1:] = ~wd[:-1]
-    counted = wd & announced_before
-    # events never rewind the clock: a late event older than the stored
-    # last_us neither decays nor advances it (same max() as the
-    # sequential fold)
-    eff = ts_us if last_us is None else np.maximum(ts_us, last_us)
-    t_end = int(eff[-1])
-    if last_us is not None:
-        penalty *= math.exp(-lam * (t_end - last_us) / 1e6)
-    penalty += flap_penalty * float(
-        np.exp(-lam * (t_end - eff[counted]) / 1e6).sum()
-    )
-    return (
-        float(penalty), t_end, not bool(wd[-1]), flaps + int(counted.sum())
-    )
-
-
-def live_flap_damping(
-    updates: DataFrame,
-    half_life_sec: float = 900.0,
-    flap_penalty: float = 1000.0,
-    suppress_threshold: float = 2000.0,
-    reuse_threshold: float = 750.0,
-) -> DataFrame:
-    """Streaming RFC 2439 flap damping — the live counterpart of
-    ``analytics.flap_damping``: per-(rib, nlri) state holds (penalty,
-    last event time, was-announced); each micro-batch decays the stored
-    penalty to the batch's newest event, adds ``flap_penalty`` per
-    withdrawal-after-announce, and emits the prefix's current figure
-    with suppress/reuse classification. State is 3 small scalars per
-    prefix, so the keyed store scales to the DFZ.
-
-    applyInPandasWithState is the documented escape hatch for operators
-    the built-ins can't express — an exponentially-decayed accumulator
-    must OUTLIVE the batch (windowed aggs can't carry it).
-
-    The fold is VECTORIZED (no per-row Python in the state path):
-    exponential decay composes, so the sequential "decay to each event,
-    add penalty at counted withdrawals" loop equals one decay of the
-    entry penalty to the batch end plus, per counted withdrawal, one
-    flap_penalty decayed from that event to the batch end — and "counted"
-    (withdrawal while announced) is a shift-compare on the op sequence
-    because the announced flag after event i is just op_i == 'update'.
-    On a flap storm this is one numpy pass per key per batch instead of
-    a Python loop over every event."""
-    import math
-
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    lam = math.log(2.0) / float(half_life_sec)
-    out_schema = (
-        "rib string, nlri_str string, n_flaps bigint, penalty double, "
-        "suppressed boolean, reusable boolean, ts timestamp"
-    )
-    state_schema = "penalty double, last_us bigint, announced boolean, flaps bigint"
-
-    # template-copy output (see live_current_state): the per-key
-    # DataFrame construction dominates the state path's per-key cost
-    _tmpl = pd.DataFrame(
-        [{
-            "rib": "", "nlri_str": "", "n_flaps": 0, "penalty": 0.0,
-            "suppressed": False, "reusable": False,
-            "ts": pd.Timestamp(0, unit="us"),
-        }]
-    )
-
-    def step(key, pdfs, state: GroupState):
-        if state.exists:
-            penalty, last_us, announced, flaps = state.get
-        else:
-            penalty, last_us, announced, flaps = 0.0, None, False, 0
-        rows = pd.concat(list(pdfs), ignore_index=True)
-        if rows.empty:
-            return
-        ts_us = rows["ts"].to_numpy("datetime64[ns]").astype("int64") // 1000
-        wd = rows["op"].to_numpy() == "withdraw"
-        if len(ts_us) > 1 and (ts_us[1:] < ts_us[:-1]).any():
-            order = ts_us.argsort(kind="stable")
-            ts_us, wd = ts_us[order], wd[order]
-        penalty, last_us, announced, flaps = _damping_fold(
-            penalty, last_us, announced, flaps, ts_us, wd, lam, flap_penalty
-        )
-        state.update((float(penalty), int(last_us), bool(announced), int(flaps)))
-        rib, nlri = key
-        out = _tmpl.copy()
-        out.iat[0, 0] = rib
-        out.iat[0, 1] = nlri
-        out.iat[0, 2] = flaps
-        out.iat[0, 3] = round(penalty, 4)
-        out.iat[0, 4] = bool(penalty >= suppress_threshold)
-        out.iat[0, 5] = bool(penalty < reuse_threshold)
-        out.iat[0, 6] = pd.Timestamp(last_us, unit="us")
-        yield out
-
-    return updates.groupBy("rib", "nlri_str").applyInPandasWithState(
-        step, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
-    )
-
-
-def _require_tws_runtime() -> None:
-    """Spark's state-v2 Python runner (TransformWithStateInPySpark)
-    speaks protobuf to the JVM — without ``google.protobuf`` the
-    streaming driver worker CRASHES mid-query
-    (STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE, observed r11).
-    Fail at BUILD time with a diagnosis instead."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError as e:
-        raise ImportError(
-            "transformWithStateInPandas requires the google.protobuf "
-            "runtime (Spark's state-v2 Python runner); it is not "
-            "installed in this environment — use live_current_state / "
-            "live_flap_damping (applyInPandasWithState), the default "
-            "reference paths"
-        ) from e
-
-
-def live_current_state_tws(updates: DataFrame) -> DataFrame:
-    """state-v2 (Spark 4 ``transformWithStateInPandas``) variant of
-    :func:`live_current_state` — same keyed upsert semantics, same
-    output schema, state held in a named ValueState instead of the
-    GroupState tuple. Requires the RocksDB state store provider
-    (session knob ``SPARK_GRAFT_STATE_STORE=rocksdb``; the v2 API is
-    RocksDB-only by design) AND the google.protobuf runtime
-    (:func:`_require_tws_runtime`) — the latter is absent in this
-    container, so the r10-ask-#7 A/B is import-gated, one dependency
-    away: see ARCHITECTURE.md r11 for the decision paragraph. The
-    applyInPandasWithState form stays the default/reference path."""
-    _require_tws_runtime()
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    out_schema = (
-        "rib string, nlri_str string, session_id int, path_id bigint, "
-        "ts timestamp, active boolean"
-    )
-
-    _tmpl = pd.DataFrame(
-        [{
-            "rib": "", "nlri_str": "", "session_id": 0, "path_id": 0,
-            "ts": pd.Timestamp(0, unit="us"), "active": False,
-        }]
-    )
-
-    class Upsert(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._latest = handle.getValueState(
-                "latest", "ts_us bigint, active boolean"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            got = self._latest.get() if self._latest.exists() else None
-            ts_us, active = got if got is not None else (None, None)
-            for pdf in rows:
-                if pdf.empty:
-                    continue
-                v = pdf["ts"].to_numpy("datetime64[ns]").astype("int64")
-                i = len(v) - 1 - int(v[::-1].argmax())
-                t = int(v[i]) // 1000
-                if ts_us is None or t >= ts_us:
-                    ts_us, active = t, pdf["op"].iat[i] == "update"
-            self._latest.update((int(ts_us), bool(active)))
-            rib, nlri, sid, pid = key
-            out = _tmpl.copy()
-            out.iat[0, 0] = rib
-            out.iat[0, 1] = nlri
-            out.iat[0, 2] = sid
-            out.iat[0, 3] = pid
-            out.iat[0, 4] = pd.Timestamp(ts_us, unit="us")
-            out.iat[0, 5] = bool(active)
-            yield out
-
-        def close(self) -> None:
-            pass
-
-    return updates.groupBy(
-        "rib", "nlri_str", "session_id", "path_id"
-    ).transformWithStateInPandas(
-        Upsert(), out_schema, "Update", "None"
-    )
-
-
-def live_flap_damping_tws(
-    updates: DataFrame,
-    half_life_sec: float = 900.0,
-    flap_penalty: float = 1000.0,
-    suppress_threshold: float = 2000.0,
-    reuse_threshold: float = 750.0,
-) -> DataFrame:
-    """state-v2 variant of :func:`live_flap_damping` (same vectorized
-    RFC 2439 fold, ValueState instead of GroupState; RocksDB-only,
-    import-gated on google.protobuf). See
-    :func:`live_current_state_tws` for why both exist."""
-    _require_tws_runtime()
-    import math
-
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    lam = math.log(2.0) / float(half_life_sec)
-    out_schema = (
-        "rib string, nlri_str string, n_flaps bigint, penalty double, "
-        "suppressed boolean, reusable boolean, ts timestamp"
-    )
-    _tmpl = pd.DataFrame(
-        [{
-            "rib": "", "nlri_str": "", "n_flaps": 0, "penalty": 0.0,
-            "suppressed": False, "reusable": False,
-            "ts": pd.Timestamp(0, unit="us"),
-        }]
-    )
-
-    class Damp(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._st = handle.getValueState(
-                "damp", "penalty double, last_us bigint, announced boolean, flaps bigint"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            got = self._st.get() if self._st.exists() else None
-            penalty, last_us, announced, flaps = (
-                got if got is not None else (0.0, None, False, 0)
-            )
-            pdfs = pd.concat(list(rows), ignore_index=True)
-            if pdfs.empty:
-                return
-            ts_us = pdfs["ts"].to_numpy("datetime64[ns]").astype("int64") // 1000
-            wd = pdfs["op"].to_numpy() == "withdraw"
-            if len(ts_us) > 1 and (ts_us[1:] < ts_us[:-1]).any():
-                order = ts_us.argsort(kind="stable")
-                ts_us, wd = ts_us[order], wd[order]
-            penalty, last_us, announced, flaps = _damping_fold(
-                penalty, last_us, announced, flaps, ts_us, wd, lam, flap_penalty
-            )
-            self._st.update(
-                (float(penalty), int(last_us), bool(announced), int(flaps))
-            )
-            rib, nlri = key
-            out = _tmpl.copy()
-            out.iat[0, 0] = rib
-            out.iat[0, 1] = nlri
-            out.iat[0, 2] = flaps
-            out.iat[0, 3] = round(penalty, 4)
-            out.iat[0, 4] = bool(penalty >= suppress_threshold)
-            out.iat[0, 5] = bool(penalty < reuse_threshold)
-            out.iat[0, 6] = pd.Timestamp(last_us, unit="us")
-            yield out
-
-        def close(self) -> None:
-            pass
-
-    return updates.groupBy("rib", "nlri_str").transformWithStateInPandas(
-        Damp(), out_schema, "Update", "None"
-    )
-
-
-FLAP_STATE_SCHEMA = (
-    "rib string, nlri_str string, penalty double, last_us bigint, "
-    "announced boolean, flaps bigint"
-)
-
-
-def flap_damping_increment(
-    state_df: DataFrame,
-    batch: DataFrame,
-    half_life_sec: float = 900.0,
-    flap_penalty: float = 1000.0,
-    suppress_threshold: float = 2000.0,
-    reuse_threshold: float = 750.0,
-) -> DataFrame:
-    """One micro-batch of RFC 2439 damping as a PURE JVM batch-to-batch
-    fold — the incremental formulation of ``analytics.flap_damping``'s
-    closed-form decay, with no per-key Python crossing (the
-    applyInPandasWithState path's ~190 µs/key/batch floor).
-
-    ``state_df`` rows are FLAP_STATE_SCHEMA; the return value is the
-    UPDATED state for every key the batch touched (same schema plus the
-    derived n_flaps/suppressed/reusable/ts output columns). The math
-    mirrors ``_damping_fold`` exactly: sort the key's batch events,
-    clamp each event time to the stored ``last_us`` (late events never
-    rewind the clock), decay the entry penalty to the batch end, and add
-    one ``flap_penalty`` decayed from each counted withdrawal
-    (withdrawal-while-announced, a shift-compare on the sorted op
-    sequence seeded by the stored ``announced`` flag).
-
-    One shuffle (the per-key collect_list) + one co-keyed join with the
-    state table; everything after is array expressions inside
-    whole-stage codegen, so throughput scales with JVM batch speed, not
-    key count × Python crossing."""
-    import math
-
-    lam = math.log(2.0) / float(half_life_sec)
-    ev = (
-        batch.select(
-            "rib", "nlri_str",
-            F.unix_micros("ts").alias("ts_us"),
-            (F.col("op") == "withdraw").alias("wd"),
-        )
-        .groupBy("rib", "nlri_str")
-        .agg(F.array_sort(F.collect_list(F.struct("ts_us", "wd"))).alias("ev"))
-    )
-    j = ev.join(state_df, ["rib", "nlri_str"], "left")
-    # counted[i]: withdrawal while announced; announced-before-first is
-    # the carried state flag (false for a never-seen key)
-    j = j.withColumn(
-        "_counted",
-        F.expr(
-            "transform(ev, (x, i) -> x.wd AND (CASE WHEN i = 0 "
-            "THEN coalesce(announced, false) "
-            "ELSE NOT element_at(ev, i).wd END))"
-        ),
-    ).withColumn(
-        "_t_end",
-        F.greatest(F.expr("element_at(ev, -1).ts_us"), F.col("last_us")),
-    )
-    decayed_adds = F.expr(
-        "aggregate(zip_with(ev, _counted, (e, c) -> "
-        "struct(e.ts_us AS ts_us, c AS c)), CAST(0.0 AS DOUBLE), "
-        f"(acc, y) -> acc + (CASE WHEN y.c THEN exp(-{lam!r} * "
-        "(_t_end - greatest(y.ts_us, coalesce(last_us, y.ts_us))) / 1e6) "
-        "ELSE CAST(0.0 AS DOUBLE) END))"
-    )
-    new_penalty = (
-        F.when(
-            F.col("last_us").isNotNull(),
-            F.col("penalty")
-            * F.exp(F.lit(-lam) * (F.col("_t_end") - F.col("last_us")) / F.lit(1e6)),
-        ).otherwise(F.lit(0.0))
-        + F.lit(float(flap_penalty)) * decayed_adds
-    )
-    n_counted = F.expr(
-        "aggregate(_counted, 0L, (acc, c) -> acc + (CASE WHEN c THEN 1L ELSE 0L END))"
-    )
-    out = j.select(
-        "rib", "nlri_str",
-        # FULL precision into the carried state (the keyed-state path
-        # rounds only for display; re-rounding each batch would drift
-        # chained increments near the thresholds)
-        new_penalty.alias("penalty_raw"),
-        F.col("_t_end").alias("last_us"),
-        # the stored flag only advances on in-order data: a batch whose
-        # newest event predates the carried clock (out-of-order delivery)
-        # must not overwrite `announced` with stale polarity
-        F.when(
-            F.expr("element_at(ev, -1).ts_us")
-            >= F.coalesce(F.col("last_us"), F.lit(0)),
-            F.expr("NOT element_at(ev, -1).wd"),
-        ).otherwise(F.col("announced")).alias("announced"),
-        (F.coalesce(F.col("flaps"), F.lit(0)) + n_counted).alias("flaps"),
-    )
-    return out.select(
-        "rib", "nlri_str",
-        F.col("flaps").alias("n_flaps"),
-        F.round("penalty_raw", 4).alias("penalty"),
-        (F.col("penalty_raw") >= suppress_threshold).alias("suppressed"),
-        (F.col("penalty_raw") < reuse_threshold).alias("reusable"),
-        F.timestamp_micros("last_us").alias("ts"),
-        "penalty_raw", "last_us", "announced", "flaps",
-    )
-
-
-def _checkpoint_query_id(spark: SparkSession, checkpoint: str) -> str | None:
-    """The streaming query id from the checkpoint's own metadata — stable
-    across same-checkpoint restarts, NEW when the checkpoint dir is
-    wiped/recreated (epochs renumber then). The path alone can't tell
-    those apart. Local checkpoints read directly; non-local URIs
-    (hdfs://, s3a://) go through the session's Hadoop filesystem.
-    Returns None when the metadata can't be read (no lineage claim)."""
-    import json as _json
-    import os as _os
-
-    meta = _os.path.join(checkpoint, "metadata")
-    try:
-        with open(meta, encoding="utf-8") as f:
-            return _json.load(f)["id"]
-    except Exception:  # noqa: BLE001 — not a local path; try Hadoop FS
-        try:
-            jvm = spark._jvm
-            p = jvm.org.apache.hadoop.fs.Path(meta)
-            fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-            stream = fs.open(p)
-            try:
-                text = jvm.org.apache.commons.io.IOUtils.toString(
-                    stream, "UTF-8"
-                )
-            finally:
-                stream.close()
-            return _json.loads(text)["id"]
-        except Exception:  # noqa: BLE001 — no metadata → no lineage claim
-            return None
-
-
-def run_flap_damping_incremental(
-    updates: DataFrame,
-    checkpoint: str,
-    half_life_sec: float = 900.0,
-    flap_penalty: float = 1000.0,
-    suppress_threshold: float = 2000.0,
-    reuse_threshold: float = 750.0,
-    on_batch=None,
-    state_dir: str | None = None,
-):
-    """Streaming RFC 2439 damping via foreachBatch + the JVM-native
-    incremental fold — the high-throughput alternative to
-    ``live_flap_damping`` (which stays as the keyed-state formulation).
-
-    Per micro-batch: fold the batch into the carried state table with
-    :func:`flap_damping_increment` (localCheckpointed ONCE — the fold is
-    reused by the state merge, the anti-join and ``on_batch``), merge
-    into the carried state (O(state keys) per batch — the cost traded
-    against the state path's O(keys × Python crossing)), and hand the
-    batch's updated figures to ``on_batch``. With ``state_dir`` the
-    merged state is also persisted each batch under versioned subdirs
-    with an atomic CURRENT marker (a crash mid-write never destroys the
-    previous durable copy), and a restarted query RESTORES the carried
-    state from it — the restart durability the built-in state store
-    gives the keyed path. foreachBatch is at-least-once and the state is
-    persisted BEFORE Spark commits the epoch to the streaming
-    checkpoint, so a same-checkpoint restart that REPLAYS the last epoch
-    onto state that already folded it skips the fold (idempotent per
-    epoch; the persisted CKPT file scopes the epoch comparison to one
-    checkpoint lineage)."""
-    import os
-    import shutil
-
-    _lineage_cache: list = []  # [id-or-None]; the query id never changes
-
-    def _lineage_id(spark: SparkSession) -> str | None:
-        """Cached wrapper over :func:`_checkpoint_query_id` — the id is
-        immutable for the query's lifetime, so the first SUCCESSFUL read
-        is cached. A failed read is NOT cached: it is retried on the
-        next call, so one transient metadata-read hiccup doesn't strip
-        replay protection for the rest of the query."""
-        if _lineage_cache:
-            return _lineage_cache[0]
-        lineage = _checkpoint_query_id(spark, checkpoint)
-        if lineage is not None:
-            _lineage_cache.append(lineage)
-        return lineage
-
-    def _persist_state(new_state: DataFrame, epoch_id: int) -> None:
-        version = f"v{epoch_id}"
-        os.makedirs(state_dir, exist_ok=True)
-        vdir = os.path.join(state_dir, version)
-        new_state.write.mode("overwrite").parquet(vdir)
-        # the lineage id lives INSIDE the version dir, before the marker
-        # flip — marker and lineage can never disagree (the old marker
-        # keeps pointing at the old vdir with its own _LINEAGE)
-        lineage = _lineage_id(new_state.sparkSession)
-        wrote_lineage = False
-        if lineage is not None:
-            with open(os.path.join(vdir, "_LINEAGE"), "w", encoding="ascii") as f:
-                f.write(lineage)
-            wrote_lineage = True
-        marker = os.path.join(state_dir, "CURRENT")
-        prev = None
-        try:
-            with open(marker, encoding="ascii") as f:
-                prev = f.read().strip()
-        except OSError:
-            pass
-        tmp = f"{marker}.part-{epoch_id}"
-        with open(tmp, "w", encoding="ascii") as f:
-            f.write(version)
-        os.replace(tmp, marker)  # commit point
-        for d in os.listdir(state_dir):
-            if d.startswith("v") and d not in (version, prev):
-                shutil.rmtree(os.path.join(state_dir, d), ignore_errors=True)
-        if wrote_lineage:
-            # retire the pre-_LINEAGE layout's marker ONLY once the new
-            # version dir actually carries a _LINEAGE file — if the
-            # metadata read failed this batch, CKPT stays as the sole
-            # remaining replay guard for a same-checkpoint restart
-            try:
-                os.remove(os.path.join(state_dir, "CKPT"))
-            except OSError:
-                pass
-
-    def _restore_state(spark: SparkSession) -> tuple[DataFrame, int] | None:
-        """(state df, last folded epoch) — epoch is -1 when the persisted
-        state came from a DIFFERENT streaming query lineage (fresh or
-        recreated checkpoint renumbers epochs from 0, so the ids aren't
-        comparable and every incoming epoch must fold)."""
-        if state_dir is None:
-            return None
-        try:
-            with open(os.path.join(state_dir, "CURRENT"), encoding="ascii") as f:
-                current = f.read().strip()
-            vdir = os.path.join(state_dir, current)
-            df = spark.read.parquet(vdir).select(
-                "rib", "nlri_str", "penalty", "last_us", "announced", "flaps"
-            )
-            epoch = -1
-            try:
-                with open(os.path.join(vdir, "_LINEAGE"), encoding="ascii") as f:
-                    stored = f.read().strip()
-                if stored and stored == _lineage_id(spark):
-                    epoch = int(current[1:])
-            except OSError:
-                # migration: state persisted by the pre-_LINEAGE layout
-                # recorded the checkpoint PATH in a CKPT file — honor it
-                # (same-path = same lineage was that layout's contract)
-                try:
-                    with open(os.path.join(state_dir, "CKPT"), encoding="utf-8") as f:
-                        if f.read().strip() == os.path.abspath(checkpoint):
-                            epoch = int(current[1:])
-                except OSError:
-                    pass
-            return df, epoch
-        except Exception:  # noqa: BLE001 — no durable state yet
-            return None
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        st = getattr(sink, "_state", None)
-        if st is None:
-            restored = _restore_state(spark)
-            if restored is not None:
-                st, restored_epoch = restored
-                if epoch_id <= restored_epoch:
-                    # foreachBatch is at-least-once: the state for this
-                    # epoch was persisted but the crash hit before the
-                    # streaming checkpoint committed, so the epoch is
-                    # replayed onto state that ALREADY folded it. Folding
-                    # again would double-count penalty/flaps — skip the
-                    # fold and re-emit the batch keys' persisted figures
-                    # instead (idempotent per epoch).
-                    sink._state = st.localCheckpoint(eager=True)
-                    if on_batch is not None:
-                        on_batch(
-                            sink._state
-                            .join(
-                                batch_df.select("rib", "nlri_str").distinct(),
-                                ["rib", "nlri_str"],
-                            )
-                            .select(
-                                "rib", "nlri_str",
-                                F.col("flaps").alias("n_flaps"),
-                                F.round("penalty", 4).alias("penalty"),
-                                (F.col("penalty") >= suppress_threshold)
-                                .alias("suppressed"),
-                                (F.col("penalty") < reuse_threshold)
-                                .alias("reusable"),
-                                F.timestamp_micros("last_us").alias("ts"),
-                            )
-                        )
-                    return
-        if st is None:
-            st = spark.createDataFrame([], FLAP_STATE_SCHEMA)
-        changed = flap_damping_increment(
-            st, batch_df, half_life_sec, flap_penalty,
-            suppress_threshold, reuse_threshold,
-        ).localCheckpoint(eager=True)
-        new_state = (
-            changed.select(
-                "rib", "nlri_str",
-                F.col("penalty_raw").alias("penalty"),
-                "last_us", "announced", "flaps",
-            )
-            .unionByName(
-                st.join(changed, ["rib", "nlri_str"], "left_anti")
-            )
-            .localCheckpoint(eager=True)
-        )
-        sink._state = new_state
-        if state_dir is not None:
-            _persist_state(new_state, epoch_id)
-        if on_batch is not None:
-            on_batch(
-                changed.select(
-                    "rib", "nlri_str", "n_flaps", "penalty",
-                    "suppressed", "reusable", "ts",
-                )
-            )
-
-    return (
-        updates.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
     )
 
 

@@ -1,12 +1,11 @@
-"""BGP time-series analytics (operators/analytics) and training-pipeline
-sampling/packing (operators/pipeline)."""
+"""BGP time-series analytics (operators/analytics)."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from bgpexplorer_spark.operators import analytics, pipeline
+from bgpexplorer_spark.operators import analytics
 from bgpexplorer_spark.operators.ingest import build_history
 from bgpexplorer_spark.operators.rib import current_state
 from tests.ribdata import T0, make_updates, u
@@ -81,64 +80,6 @@ def test_top_flappers_order(hist):
     assert top[0].nlri_str == "10.0.0.0/16" and top[0].n_flips == 2
     assert top[1].n_flips == 1
 
-DOCS = [(i, " ".join(f"w{j}" for j in range(i % 7 + 1)), ["en", "de", "fr"][i % 3]) for i in range(60)]
-
-@pytest.fixture(scope="module")
-def docs(spark):
-    return spark.createDataFrame(DOCS, "doc_id long, text string, lang string").cache()
-
-def test_stratified_sample_deterministic(docs):
-    a = pipeline.stratified_sample(docs, "lang", {"en": 0.5}, "doc_id").collect()
-    b = pipeline.stratified_sample(docs, "lang", {"en": 0.5}, "doc_id").collect()
-    assert sorted(r.doc_id for r in a) == sorted(r.doc_id for r in b)
-
-def test_stratified_sample_monotone(docs):
-    small = {r.doc_id for r in pipeline.stratified_sample(docs, "lang", {"en": 0.3}, "doc_id").collect()}
-    big = {r.doc_id for r in pipeline.stratified_sample(docs, "lang", {"en": 0.6}, "doc_id").collect()}
-    assert small <= big  # raising the fraction only ADDS rows
-
-def test_stratified_sample_default_fraction(docs):
-    # default 0: strata not named are dropped entirely
-    out = pipeline.stratified_sample(docs, "lang", {"en": 1.0}, "doc_id").collect()
-    assert {r.lang for r in out} == {"en"}
-    assert len(out) == sum(1 for d in DOCS if d[2] == "en")  # frac 1.0 keeps all
-
-def test_stratified_sample_salt_decorrelates(docs):
-    a = {r.doc_id for r in pipeline.stratified_sample(docs, "lang", {"en": 0.5}, "doc_id", salt="a").collect()}
-    b = {r.doc_id for r in pipeline.stratified_sample(docs, "lang", {"en": 0.5}, "doc_id", salt="b").collect()}
-    assert a != b  # different passes select different rows
-
-def test_pack_sequences_offsets_contiguous(docs):
-    out = pipeline.pack_sequences(docs, max_tokens=10, n_shards=4).collect()
-    by_shard: dict[int, list] = {}
-    for r in out:
-        by_shard.setdefault(r.shard, []).append(r)
-    for rows in by_shard.values():
-        rows.sort(key=lambda r: r.doc_id)
-        off = 0
-        for r in rows:
-            assert r.start_offset == off  # end-to-end, no gaps
-            off += r.n_tokens
-
-def test_pack_sequences_chunk_spans(docs):
-    out = pipeline.pack_sequences(docs, max_tokens=10, n_shards=4).collect()
-    for r in out:
-        assert r.chunk_first == r.start_offset // 10
-        last = r.start_offset + max(r.n_tokens, 1) - 1
-        assert r.chunk_last == last // 10
-        assert r.n_chunks == r.chunk_last - r.chunk_first + 1
-        assert r.n_chunks >= 1
-
-def test_pack_sequences_empty_doc(spark):
-    docs = spark.createDataFrame(
-        [(0, "a b c"), (1, ""), (2, "d e")], "doc_id long, text string"
-    )
-    out = {r.doc_id: r for r in pipeline.pack_sequences(docs, 4, n_shards=1).collect()}
-    assert out[1].n_tokens == 0
-    assert out[1].n_chunks == 1  # occupies zero tokens but lands in one chunk
-    # total stream length = 5 tokens
-    assert sum(r.n_tokens for r in out.values()) == 5
-
 def test_aspath_prepend_stats(spark):
     df = spark.createDataFrame(
         [(1, [100, 100, 100, 200, 300]), (2, [100, 200, 100]), (3, [7]), (4, [])],
@@ -171,15 +112,6 @@ def test_as_adjacency(spark):
     st = current_state(build_history(make_updates(spark, rows)))
     edges = {(r.as_a, r.as_b): r.n_routes for r in analytics.as_adjacency(st).collect()}
     assert edges == {(100, 200): 2, (200, 300): 2}  # no (100,100) self-edge
-
-def test_mixture_stats(docs):
-    out = {r.stratum: r for r in pipeline.mixture_stats(docs, "lang").collect()}
-    assert set(out) == {"en", "de", "fr"}
-    assert sum(r.n_docs for r in out.values()) == len(DOCS)
-    assert abs(sum(r.doc_share for r in out.values()) - 1.0) < 1e-5
-    assert abs(sum(r.token_share for r in out.values()) - 1.0) < 1e-5
-    # en docs are ids 0,3,6,... -> 20 docs
-    assert out["en"].n_docs == 20
 
 def test_rpki_validate_truth_table(spark):
     routes = spark.createDataFrame(
@@ -686,20 +618,6 @@ def test_origin_footprint(spark):
     out = {r.origin_as: r for r in analytics.origin_footprint(st).collect()}
     assert out[100].n_prefixes == 2 and out[100].n_addresses == 65536 + 256
     assert out[200].n_prefixes == 1 and out[200].n_addresses == 256
-
-
-def test_corpus_report(spark):
-    df = spark.createDataFrame(
-        [
-            (1, "a b c", "en"), (2, "a b c", "en"),  # exact dup
-            (3, "x y", "de"), (4, "p q r s", "en"),
-        ],
-        "doc_id long, text string, lang string",
-    )
-    r = pipeline.corpus_report(df).collect()[0]
-    assert r.n_docs == 4 and r.n_tokens == 12 and r.dup_frac == 0.25
-    assert (r.min_tokens, r.avg_tokens, r.max_tokens) == (2, 3.0, 4)
-    assert r.top_lang == "en" and r.top_lang_share == 0.75
 
 
 def test_martian_prefixes_v6_boundaries(spark):

@@ -517,29 +517,6 @@ def test_repetition_features_hand_computed(spark):
     assert r[2].r_top2gram_char_frac == round(3 / 7, 4)
 
 
-def test_decontaminate_ngram_overlap(spark):
-    from bgpexplorer_spark.operators.pipeline import decontaminate
-
-    train = spark.createDataFrame(
-        [
-            (1, "the quick brown fox jumps"),   # shares 3-gram with eval
-            (2, "totally unrelated training text"),
-            (3, "quick brown fox somewhere else"),  # shares too
-        ],
-        ["doc_id", "text"],
-    )
-    ev = spark.createDataFrame(
-        [(100, "a quick brown fox appeared")], ["doc_id", "text"]
-    )
-    got = {r.doc_id: r.contaminated for r in
-           decontaminate(train, ev, n=3).collect()}
-    assert got == {1: True, 2: False, 3: True}
-    # higher n: the shared run is only 3 tokens long -> clean
-    got5 = {r.doc_id: r.contaminated for r in
-            decontaminate(train, ev, n=5).collect()}
-    assert got5 == {1: False, 2: False, 3: False}
-
-
 def test_tfidf_topk_hand_computed(spark):
     import math
 
@@ -628,88 +605,6 @@ def test_semantic_dedup_groups(spark):
         (4, 0, False), (5, 2, False), (6, 6, True),
     ]
 
-def test_dsir_weights_match_reference_model(spark):
-    """dsir_weights equals a pure-Python replica of the DSIR math
-    (hashed unigram+bigram bucket models, add-1 smoothing, summed
-    log-likelihood ratio) on a small corpus — exact to the 4-decimal
-    rounding."""
-    import hashlib
-    import math
-
-    from bgpexplorer_spark.operators.pipeline import dsir_weights
-
-    def h32(s):
-        return int(hashlib.md5(s.encode()).hexdigest()[:8], 16)
-
-    def grams(t):
-        tk = t.split()
-        return tk + [a + " " + b for a, b in zip(tk, tk[1:])]
-
-    raw_docs = {
-        0: "the cat sat on the mat",
-        1: "stock market rally today",
-        2: "the cat chased the dog",
-    }
-    tgt_docs = ["cat dog pets the cat", "a dog and a cat"]
-    nb, s = 256, 1.0
-
-    def model(texts):
-        cnt = {}
-        for t in texts:
-            for g in grams(t):
-                b = h32(g) % nb
-                cnt[b] = cnt.get(b, 0) + 1
-        return cnt, sum(cnt.values()) + s * nb
-
-    tc, tden = model(tgt_docs)
-    rc, rden = model(raw_docs.values())
-    expect = {
-        d: round(
-            sum(
-                math.log((tc.get(h32(g) % nb, 0) + s) / tden)
-                - math.log((rc.get(h32(g) % nb, 0) + s) / rden)
-                for g in grams(t)
-            ),
-            4,
-        )
-        for d, t in raw_docs.items()
-    }
-    raw = spark.createDataFrame(list(raw_docs.items()), "doc_id long, text string")
-    target = spark.createDataFrame(
-        [(100 + i, t) for i, t in enumerate(tgt_docs)], "doc_id long, text string"
-    )
-    got = {r.doc_id: r.log_weight for r in dsir_weights(raw, target).collect()}
-    assert set(got) == set(expect)
-    for d in expect:
-        assert abs(got[d] - expect[d]) < 2e-4, (d, got[d], expect[d])
-
-def test_gumbel_topk_resample_deterministic_and_correct(spark):
-    """Gumbel-top-k: keys equal log_weight + -ln(-ln(u)) with u derived
-    from the portable id hash; top-k by key is deterministic across
-    reruns and matches a pure-Python replica."""
-    import hashlib
-    import math
-
-    from bgpexplorer_spark.operators.pipeline import gumbel_topk_resample
-
-    w = spark.createDataFrame(
-        [(i, float(-(i % 7))) for i in range(50)], "doc_id long, log_weight double"
-    )
-
-    def key(i, lw):
-        h = int(hashlib.md5(str(i).encode()).hexdigest()[:8], 16)
-        return round(lw - math.log(-math.log((h + 0.5) / 2**32)), 4)
-
-    expect = sorted(
-        ((key(i, float(-(i % 7))), -i) for i in range(50)), reverse=True
-    )[:10]
-    for _ in range(2):  # determinism across executions
-        got = [
-            (r.gumbel_key, -r.doc_id)
-            for r in gumbel_topk_resample(w, 10).collect()
-        ]
-        assert got == expect
-
 def test_duplicate_span_stats(spark):
     """ExactSubstr signal: an 8-token window shared by two docs marks one
     window duplicated in each; an exactly-8-token unique doc has one
@@ -732,75 +627,6 @@ def test_duplicate_span_stats(spark):
     assert out == {
         0: (3, 1, 0.3333), 1: (3, 1, 0.3333), 2: (1, 0, 0.0), 3: (0, 0, 0.0),
     }
-
-def test_quality_buckets_integer_arithmetic(spark):
-    """Bucket = 1 + (n * docs_below) // total: ties share a bucket, the
-    shares sum to 1, and no global sort window appears in the plan."""
-    from bgpexplorer_spark.operators.pipeline import quality_buckets
-
-    rows = [(i, float(i % 4)) for i in range(20)]  # 4 tied score groups
-    scored = spark.createDataFrame(rows, "doc_id long, nll double")
-    out = {r.bucket: (r.n_docs, r.doc_share)
-           for r in quality_buckets(scored, n_buckets=4).collect()}
-    # each score group (5 docs) lands wholly in one bucket
-    assert out == {1: (5, 0.25), 2: (5, 0.25), 3: (5, 0.25), 4: (5, 0.25)}
-    plan = quality_buckets(scored, n_buckets=4)._jdf.queryExecution() \
-        .executedPlan().toString()
-    assert "Window" not in plan
-
-def test_quality_buckets_unrounded_scores_driver_safe(spark):
-    """An unrounded model-produced double score (every row distinct) must
-    not materialize corpus-cardinality rows on the driver: the internal
-    4-dp quantization collapses the histogram first, and a cap on the
-    quantized histogram fails fast instead of collecting."""
-    from bgpexplorer_spark.operators.pipeline import quality_buckets
-
-    # 5000 docs, every score distinct at full double precision but all
-    # inside [0, 0.5) so the 4-dp grid collapses them to <=5000 cells —
-    # and a tight max_distinct proves the guard sees quantized counts
-    scored = spark.range(5000).selectExpr(
-        "id AS doc_id", "(id * 1e-4) + (id * 1e-9) AS nll"
-    )
-    out = quality_buckets(scored, n_buckets=5, max_distinct=10_000).collect()
-    assert sum(r.n_docs for r in out) == 5000
-    assert {r.bucket for r in out} == {1, 2, 3, 4, 5}
-    # share mass sums to 1
-    assert abs(sum(r.doc_share for r in out) - 1.0) < 1e-6
-
-    # guard: quantized histogram still over the cap -> fail fast
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="distinct scores"):
-        quality_buckets(scored, n_buckets=5, max_distinct=100)
-
-
-def test_contamination_report(spark):
-    from bgpexplorer_spark.operators.pipeline import contamination_report
-
-    train = spark.createDataFrame(
-        [
-            (0, "one two three four five six seven eight nine ten"),
-            (1, "alpha beta gamma delta"),
-        ],
-        "doc_id long, text string",
-    )
-    ev = spark.createDataFrame(
-        [
-            # 3 shingles (n=4): 2 present in train doc 0, 1 novel
-            (100, "one two three four five ZZZ"),
-            (101, "totally disjoint words here"),   # 0 shingles hit
-            (102, "short"),                         # < n tokens: 0 shingles
-        ],
-        "doc_id long, text string",
-    )
-    got = {
-        r.doc_id: (r.n_shingles, r.n_overlapping, r.overlap_frac)
-        for r in contamination_report(train, ev, n=4).collect()
-    }
-    assert got == {
-        100: (3, 2, 0.6667), 101: (1, 0, 0.0), 102: (0, 0, 0.0),
-    }
-
 
 def test_c4_clean_rules(spark):
     df = spark.createDataFrame(
@@ -872,33 +698,6 @@ def test_paragraph_dedup_keep_first(spark):
     assert out[1].n_paras == 2 and out[1].n_kept == 1
     assert out[2].n_paras == 2 and out[2].n_kept == 1
     assert out[2].kept_chars == len("unique body two")
-
-
-def test_temperature_mixture_hand_computed(spark):
-    from bgpexplorer_spark.operators.pipeline import temperature_mixture
-
-    # two sources with a 9:1 token imbalance; T=2 takes sqrt of shares:
-    # sqrt(.9)=.94868, sqrt(.1)=.31623 -> weights .75/.25
-    df = spark.createDataFrame(
-        [(i, "w " * 9, "big") for i in range(10)]
-        + [(100 + i, "w", "small") for i in range(10)],
-        "doc_id long, text string, source string",
-    )
-    out = {r.stratum: r for r in temperature_mixture(
-        df, "source", temperature=2.0, token_budget=1000).collect()}
-    assert out["big"].n_tokens == 90 and out["small"].n_tokens == 10
-    assert abs(out["big"].sample_weight - 0.75) < 1e-6
-    assert abs(out["small"].sample_weight - 0.25) < 1e-6
-    assert out["big"].token_allocation == 750
-    assert out["small"].token_allocation == 250
-    # the low-resource source gets oversampled: 25 epochs vs ~8.3
-    assert out["small"].epochs == 25.0
-    assert abs(out["big"].epochs - 8.3333) < 1e-3
-
-    # T=1 reproduces natural proportions
-    nat = {r.stratum: r.sample_weight for r in temperature_mixture(
-        df, "source", temperature=1.0).collect()}
-    assert abs(nat["big"] - 0.9) < 1e-6 and abs(nat["small"] - 0.1) < 1e-6
 
 
 def test_remove_duplicate_spans_keep_first(spark):
@@ -981,43 +780,6 @@ def test_dedup_index_merge_is_union_distinct(spark):
     ).distinct()
     full = dedup.dedup_index(day1.unionByName(day2), "doc_id")
     assert sorted(map(tuple, merged.collect())) == sorted(map(tuple, full.collect()))
-
-
-def test_source_stats_and_filter(spark):
-    from bgpexplorer_spark.operators.pipeline import filter_sources, source_stats
-
-    df = spark.createDataFrame(
-        [
-            (1, "mirror", "same text repeated here ok"),
-            (2, "mirror", "same text repeated here ok"),     # exact dup
-            (3, "mirror", "same text repeated here ok"),     # exact dup
-            (4, "mirror", "one fresh page on the mirror"),
-            (5, "clean", "plenty of unique words in this document body"),
-            (6, "clean", "another unique document with different content"),
-        ],
-        "doc_id long, source string, text string",
-    )
-    st = {r.source: r for r in source_stats(df).collect()}
-    assert st["mirror"].n_docs == 4 and st["mirror"].dup_frac == 0.5
-    assert st["clean"].dup_frac == 0.0
-    kept = sorted(
-        r.doc_id
-        for r in filter_sources(df, max_dup_frac=0.25).collect()
-    )
-    assert kept == [5, 6]  # the whole mirror domain dropped
-
-
-def test_filter_sources_broadcasts_keep_list(spark):
-    from bgpexplorer_spark.operators.pipeline import filter_sources
-
-    df = spark.createDataFrame(
-        [(1, "a", "x y z"), (2, "b", "p q r")],
-        "doc_id long, source string, text string",
-    )
-    plan = filter_sources(df, min_docs=1)._jdf.queryExecution() \
-        .executedPlan().toString()
-    assert "BroadcastHashJoin" in plan and "LeftSemi" in plan
-    assert "CartesianProduct" not in plan
 
 
 def test_bm25_topk_matches_python_model(spark):
@@ -1106,26 +868,6 @@ def test_pq_search_plan_is_projection_over_codes(spark):
     assert "TakeOrderedAndProject" in plan
 
 
-def test_deterministic_shuffle_reproducible_and_salted(spark):
-    from bgpexplorer_spark.operators.pipeline import deterministic_shuffle
-
-    df = spark.createDataFrame([(i,) for i in range(200)], "doc_id long")
-    a = [r.doc_id for r in
-         deterministic_shuffle(df, "doc_id", salt="e1")
-         .orderBy("shard", "rank").collect()]
-    b = [r.doc_id for r in
-         deterministic_shuffle(df.repartition(7), "doc_id", salt="e1")
-         .orderBy("shard", "rank").collect()]
-    assert a == b          # partitioning-independent epoch order
-    assert a != list(range(200))  # actually shuffled
-    c = [r.doc_id for r in
-         deterministic_shuffle(df, "doc_id", salt="e2")
-         .orderBy("shard", "rank").collect()]
-    assert a != c          # a new salt decorrelates the epoch
-    shards = {r.shard for r in deterministic_shuffle(df, "doc_id").collect()}
-    assert shards <= set(range(16)) and len(shards) > 8
-
-
 def test_ivfpq_only_scores_probed_cells(spark):
     """IVF-PQ: candidates outside the probed coarse cells never appear,
     however close their codes would rank."""
@@ -1139,27 +881,6 @@ def test_ivfpq_only_scores_probed_cells(spark):
     # pattern (20.x) -> probe lands on cid 2; only i%4==2 vectors rank
     assert {r.vec_id for r in out} == {i for i in range(16) if i % 4 == 2}
     assert out[0].vec_id == 2 and out[0].approx_dist == 0.0
-
-
-def test_decontaminate_fuzzy_flags(spark):
-    from bgpexplorer_spark.operators.pipeline import decontaminate_fuzzy
-
-    words = [f"tok{i}" for i in range(40)]
-    base = " ".join(words)
-    edited = " ".join(words[:20] + ["changed"] + words[21:])  # 1-word edit
-    ev = spark.createDataFrame([(100, base)], "doc_id long, text string")
-    corpus = spark.createDataFrame(
-        [
-            (1, base),
-            (2, edited),
-            (3, "completely unrelated training document text here"),
-        ],
-        "doc_id long, text string",
-    )
-    out = {r.doc_id: r for r in decontaminate_fuzzy(corpus, ev).collect()}
-    assert out[1].exact_hit and not out[1].keep
-    assert not out[2].exact_hit and out[2].near_hit and not out[2].keep
-    assert out[3].keep
 
 
 import pytest as _pytest2
@@ -1246,31 +967,6 @@ def test_huge_codebook_no_literal_blowup(spark):
     # and it actually runs: every vector gets some centroid
     assert out.count() == 200
     assert out.filter(F.col("cid") < 0).count() == 0
-
-
-def test_chunk_documents_hand_computed(spark):
-    """size=10, overlap=3 (stride 7): a 20-char doc chunks at 1/8/15
-    with the tail chunk short; an empty doc still emits ONE empty chunk
-    (provenance never drops a doc)."""
-    from bgpexplorer_spark.operators.pipeline import chunk_documents
-
-    docs = spark.createDataFrame(
-        [(1, "abcdefghijklmnopqrst"), (2, "")], "doc_id long, text string"
-    )
-    rows = sorted(
-        (r.doc_id, r.chunk_idx, r.chunk_start, r.chunk_text, r.n_chunks)
-        for r in chunk_documents(docs, size=10, overlap=3).collect()
-    )
-    assert rows == [
-        (1, 0, 1, "abcdefghij", 3),
-        (1, 1, 8, "hijklmnopq", 3),
-        (1, 2, 15, "opqrst", 3),
-        (2, 0, 1, "", 1),
-    ]
-    import pytest as _pt
-
-    with _pt.raises(ValueError):
-        chunk_documents(docs, size=5, overlap=5)
 
 
 def test_normalize_text_rules(spark):
@@ -1835,34 +1531,6 @@ def test_knn_density_matches_brute_force(spark):
         assert out[s] == (len(sims), want), s
 
 
-def test_cluster_sample_balanced_and_monotone(spark):
-    """cluster_sample keeps at most n per cluster, every kept row's rank
-    is its position in the deterministic hash order, and raising n is
-    append-only (the n=2 sample is a subset of the n=4 sample)."""
-    from bgpexplorer_spark.operators.pipeline import cluster_sample
-    import numpy as np
-
-    rng = np.random.default_rng(3)
-    # two tight clusters around orthogonal axes + the 2 centroid seeds
-    rows = []
-    for i in range(30):
-        base = np.zeros(64); base[i % 2] = 1.0
-        v = base + rng.normal(scale=0.05, size=64)
-        rows.append((i, [float(x) for x in v]))
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    cents = similarity.ivf_centroids(emb, 2)
-
-    s2 = {(r.vec_id, r.cid): r.rank for r in cluster_sample(emb, cents, 2).collect()}
-    s4 = {(r.vec_id, r.cid): r.rank for r in cluster_sample(emb, cents, 4).collect()}
-    from collections import Counter
-    assert max(Counter(c for _, c in s2).values()) <= 2
-    assert max(Counter(c for _, c in s4).values()) <= 4
-    assert set(s2) <= set(s4)                  # monotone growth
-    assert all(s4[k] == v for k, v in s2.items())  # ranks stable
-    with pytest.raises(ValueError):
-        cluster_sample(emb, cents, 0)
-
-
 def test_novelty_scores_hand_computed(spark):
     """novelty = fraction of a doc's distinct trigrams first seen in it:
     originals score 1, exact dups 0, partial overlap in between;
@@ -1934,20 +1602,6 @@ def test_novelty_conservation_property(spark):
     out2 = dedup.novelty_scores(df2, "doc_id", n=3).collect()
     assert sum(r.n_novel for r in out2) == len(corpus_shingles)
     assert sum(r.n_shingles for r in out2) == sum(r.n_shingles for r in out)
-
-
-def test_cluster_sample_full_when_n_exceeds_cluster(spark):
-    """n_per_cluster >= max cluster size keeps EVERY vector exactly once
-    (the sample degenerates to the full assignment)."""
-    from bgpexplorer_spark.operators.pipeline import cluster_sample
-
-    rows = [(i, [1.0 if j == i % 4 else 0.01 for j in range(8)])
-            for i in range(24)]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    cents = similarity.ivf_centroids(emb, 4)
-    out = cluster_sample(emb, cents, n_per_cluster=100).collect()
-    assert sorted(r.vec_id for r in out) == list(range(24))
-    assert len({(r.vec_id) for r in out}) == 24
 
 
 def test_bpe_handles_apostrophe_symbols(spark):
@@ -2339,36 +1993,6 @@ def test_matryoshka_overlap_numpy_and_identity(spark):
     assert any(h < k for h in out.values())  # truncation must cost something
 
 
-def test_leakage_split_no_pair_straddles(spark):
-    """leakage_split: every near-dup pair lands in one split, components
-    are the transitive closure, singletons split by their own id, and
-    the decision is deterministic across invocations."""
-    from bgpexplorer_spark.operators.pipeline import leakage_split
-
-    docs = spark.createDataFrame(
-        [(i,) for i in range(200)], "doc_id long"
-    )
-    # chain 0-1-2, pair (5,6), pair (7,9); rest singletons
-    pairs = spark.createDataFrame(
-        [(0, 1, 0.9), (1, 2, 0.8), (5, 6, 0.7), (7, 9, 0.6)],
-        "id_a long, id_b long, jaccard double",
-    )
-    out = {r.doc_id: (r.component, r.split)
-           for r in leakage_split(docs, pairs, "doc_id", val_pct=20).collect()}
-    assert len(out) == 200
-    assert out[0][0] == out[1][0] == out[2][0] == 0
-    assert out[5][0] == out[6][0] == 5
-    assert out[7][0] == out[9][0] == 7
-    assert out[42] == (42, out[42][1])
-    for a, b in [(0, 1), (1, 2), (0, 2), (5, 6), (7, 9)]:
-        assert out[a][1] == out[b][1], (a, b)
-    splits = {s for _, s in out.values()}
-    assert splits == {"train", "val"}  # 20% of 200 hits both with high prob
-    again = {r.doc_id: (r.component, r.split)
-             for r in leakage_split(docs, pairs, "doc_id", val_pct=20).collect()}
-    assert again == out
-
-
 def test_cross_source_report_hand_computed(spark):
     """cross_source_report: canonicalized source pairs, exact counts,
     and the integer-arithmetic mean jaccard."""
@@ -2503,38 +2127,6 @@ def test_gemm_multi_equals_per_query_topk(spark):
     assert m1 == m2
 
 
-def test_vocab_drift_hand_computed(spark):
-    """vocab_drift on a constructed pair: a term present only in A
-    dominates positively, one only in B negatively; shared terms with
-    equal rates contribute ~0; counts and the exact integer grid
-    verified against a pure-Python model."""
-    import math
-
-    a = spark.createDataFrame(
-        [(0, "x x x shared shared"), (1, "x shared")],
-        "doc_id long, text string",
-    )
-    b = spark.createDataFrame(
-        [(2, "y y shared shared"), (3, "y shared")],
-        "doc_id long, text string",
-    )
-    from bgpexplorer_spark.operators.pipeline import vocab_drift
-
-    out = {r.term: (r.count_a, r.count_b, r.kl_contrib_e9)
-           for r in vocab_drift(a, b, k=10).collect()}
-    # A: x=4, shared=3 (tot 7); B: y=3, shared=3 (tot 6); vocab {x,y,shared}=3
-    def contrib(ca, cb):
-        pa = (ca + 1) / (7 + 3.0)
-        pb = (cb + 1) / (6 + 3.0)
-        return round(pa * math.log(pa / pb) * 1e9)
-
-    assert out["x"] == (4, 0, contrib(4, 0))
-    assert out["y"] == (0, 3, contrib(0, 3))
-    assert out["shared"] == (3, 3, contrib(3, 3))
-    assert out["x"][2] > 0 > out["y"][2]
-    assert abs(out["shared"][2]) < abs(out["x"][2])
-
-
 def test_vocab_coverage_hand_computed(spark):
     """vocab_coverage with a tie exactly at the cutoff boundary: the
     lexicographically smaller term wins the last slot in both the
@@ -2656,50 +2248,3 @@ def test_embedding_drift_hand_computed(spark):
     assert out2[1].count_b == 0 and out2[1].centroid_cos is None
 
 
-def test_write_curated_layout_and_pruning(spark, tmp_path):
-    """write_curated materializes the (split, shard) partition layout,
-    read-back of split='val' is PARTITION pruning (no val rows ever
-    scanned for a train read), every doc appears exactly once with its
-    leakage_split/pack_bins labels, and rows within a shard file are
-    bin-ordered."""
-    import os
-
-    from bgpexplorer_spark.operators.pipeline import (
-        leakage_split, pack_bins, write_curated,
-    )
-
-    docs = spark.createDataFrame(
-        [(i, " ".join(f"w{j}" for j in range(3 + i % 10))) for i in range(120)],
-        "doc_id long, text string",
-    )
-    pairs = spark.createDataFrame(
-        [(0, 1, 0.9), (2, 3, 0.8)], "id_a long, id_b long, jaccard double"
-    )
-    path = str(tmp_path / "curated")
-    write_curated(docs, path, pairs, max_tokens=12, n_shards=4, val_pct=25)
-
-    # layout: split=.../shard=... directories
-    top = sorted(d for d in os.listdir(path) if d.startswith("split="))
-    assert top and set(top) <= {"split=train", "split=val"}
-    assert any(
-        d.startswith("shard=") for d in os.listdir(os.path.join(path, top[0]))
-    )
-
-    back = spark.read.parquet(path)
-    assert back.count() == 120
-    want_split = {r.doc_id: r.split
-                  for r in leakage_split(docs, pairs, val_pct=25).collect()}
-    want_pack = {r.doc_id: (r.shard, r.bin)
-                 for r in pack_bins(docs, 12, n_shards=4).collect()}
-    got = {r.doc_id: (r.split, r.shard, r.bin) for r in back.collect()}
-    assert {i: s for i, (s, _sh, _b) in got.items()} == want_split
-    assert {i: (sh, b) for i, (_s, sh, b) in got.items()} == want_pack
-
-    # partition pruning: the split filter must reach PartitionFilters
-    plan = (
-        back.filter(F.col("split") == "val")
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "PartitionFilters" in plan and "split" in plan.split(
-        "PartitionFilters", 1
-    )[1][:200]

@@ -174,30 +174,6 @@ def test_portable_hash_prefix_widths_and_independence():
     assert all(v >> 28 == w for v, w in zip(h60, h32))
 
 
-def test_dsir_bucket_family_full_range_and_uniformity():
-    """The DSIR feature hash (pipeline.hashed_ngram_buckets:
-    portable_hash32(gram) % n_buckets) must reach EVERY bucket and stay
-    roughly uniform over a realistic gram population — a modulus
-    interacting with a periodic hash family could leave buckets
-    permanently empty (the same silent-degradation class as the
-    hyperplane aliasing: empty buckets = degenerate importance
-    weights). Replays the engine's md5-prefix-mod recipe."""
-    import hashlib
-    from collections import Counter
-
-    n_buckets = 256
-    grams = [f"w{i}" for i in range(4000)] + [
-        f"w{i} w{i+1}" for i in range(4000)
-    ]
-    buckets = Counter(
-        int(hashlib.md5(g.encode()).hexdigest()[:8], 16) % n_buckets for g in grams
-    )
-    assert len(buckets) == n_buckets, "some DSIR buckets are unreachable"
-    mean = len(grams) / n_buckets
-    assert max(buckets.values()) < 3 * mean
-    assert min(buckets.values()) > mean / 3
-
-
 def test_pq_subspace_slices_tile_dim_exactly():
     """The PQ subspace decomposition (similarity.pq_codebooks /
     pq_encode: subspace s = slice(v, s·d+1, d), d = dim//m): the m

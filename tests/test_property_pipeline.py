@@ -1,6 +1,6 @@
-"""Property-based invariants for the training-pipeline operators
-(operators/pipeline) against independent pure-Python models: random
-corpora, any divergence is an operator bug."""
+"""Property-based invariants for the text, dedup and similarity
+operators against independent pure-Python models: random corpora, any
+divergence is an operator bug."""
 
 from __future__ import annotations
 
@@ -11,77 +11,7 @@ from hypothesis import strategies as st
 
 from pyspark.sql import functions as F
 
-from bgpexplorer_spark.operators import pipeline, text
-
-def _hash32(s: str) -> int:
-    return int(hashlib.md5(s.encode()).hexdigest()[:8], 16)
-
-_docs = st.lists(
-    st.tuples(
-        st.integers(min_value=0, max_value=10_000),
-        st.text(
-            alphabet=st.sampled_from("ab \t"), min_size=0, max_size=40
-        ),
-        st.sampled_from(["en", "de", "fr", "zh"]),
-    ),
-    min_size=1,
-    max_size=30,
-    unique_by=lambda t: t[0],
-)
-
-@settings(
-    max_examples=12,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-@given(docs=_docs, frac=st.floats(min_value=0.0, max_value=1.0))
-def test_stratified_sample_matches_model(spark, docs, frac):
-    df = spark.createDataFrame(docs, "doc_id long, text string, lang string")
-    got = {
-        r.doc_id
-        for r in pipeline.stratified_sample(
-            df, "lang", {"en": frac}, "doc_id", default_fraction=0.25
-        ).collect()
-    }
-    want = {
-        i
-        for i, _t, lang in docs
-        if _hash32(str(i)) / 2**32 < (frac if lang == "en" else 0.25)
-    }
-    assert got == want
-
-@settings(
-    max_examples=12,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-@given(docs=_docs, max_tokens=st.integers(min_value=1, max_value=16))
-def test_pack_sequences_matches_model(spark, docs, max_tokens):
-    df = spark.createDataFrame(docs, "doc_id long, text string, lang string")
-    out = {
-        r.doc_id: r
-        for r in pipeline.pack_sequences(df, max_tokens, n_shards=4).collect()
-    }
-    # model: shard by md5 hash, lay out in id order, cut every max_tokens
-    shards: dict[int, list[tuple[int, int]]] = {}
-    for i, text, _l in docs:
-        nt = len([t for t in text.split() if t])
-        shards.setdefault(_hash32(str(i)) % 4, []).append((i, nt))
-    for sh, items in shards.items():
-        off = 0
-        for i, nt in sorted(items):
-            r = out[i]
-            assert (r.shard, r.start_offset, r.n_tokens) == (sh, off, nt)
-            first = off // max_tokens
-            last = (off + max(nt, 1) - 1) // max_tokens
-            assert (r.chunk_first, r.chunk_last, r.n_chunks) == (
-                first,
-                last,
-                last - first + 1,
-            )
-            off += nt
-    assert set(out) == {i for i, _t, _l in docs}
-
+from bgpexplorer_spark.operators import text
 
 _structured_docs = st.lists(
     st.tuples(
@@ -171,107 +101,6 @@ def test_c4_clean_matches_model(spark, docs):
         kept = [l for l in lines if keep(l)]
         assert got[i] == (len(lines), len(kept), len(kept) >= 3,
                           "\n".join(kept))
-
-
-_paths = st.lists(
-    st.lists(st.integers(min_value=1, max_value=9), min_size=1, max_size=5),
-    min_size=1,
-    max_size=12,
-)
-
-
-def _rel_model(paths):
-    """Pure-Python Gao model mirroring operators/analytics
-    .as_relationships: collapse prepends, distinct paths, undirected
-    degree, summit = max degree (tie -> earliest position), uphill c2p
-    votes / downhill p2c votes, p2p on disagreement."""
-    collapsed = set()
-    for p in paths:
-        c = [p[0]] + [x for i, x in enumerate(p[1:]) if x != p[i]]
-        if len(c) >= 2:
-            collapsed.add(tuple(c))
-    nbrs: dict[int, set[int]] = {}
-    for p in collapsed:
-        for a, b in zip(p, p[1:]):
-            nbrs.setdefault(a, set()).add(b)
-            nbrs.setdefault(b, set()).add(a)
-    votes: dict[tuple[int, int], list[int]] = {}
-    for p in collapsed:
-        deg = [len(nbrs[x]) for x in p]
-        top = max(range(len(p)), key=lambda i: (deg[i], -i))
-        for i, (a, b) in enumerate(zip(p, p[1:])):
-            lo, hi = min(a, b), max(a, b)
-            low_customer = (a < b) if i < top else (b < a)
-            v = votes.setdefault((lo, hi), [0, 0])
-            v[0 if low_customer else 1] += 1
-    out = {}
-    for (lo, hi), (nl, nh) in votes.items():
-        rel = "p2p" if (nl and nh) else ("c2p" if nl else "p2c")
-        out[(lo, hi)] = (nl, nh, rel)
-    return out
-
-
-@settings(
-    max_examples=25, deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-@given(paths=_paths)
-def test_as_relationships_matches_model(spark, paths):
-    from bgpexplorer_spark.operators.analytics import as_relationships
-
-    df = spark.createDataFrame(
-        [(i, list(p)) for i, p in enumerate(paths)],
-        "id long, aspath_flat array<bigint>",
-    )
-    got = {
-        (r.as_low, r.as_high): (r.n_low_customer, r.n_high_customer, r.rel)
-        for r in as_relationships(df).collect()
-    }
-    assert got == _rel_model(paths)
-
-
-@settings(
-    max_examples=20, deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-@given(paths=_paths)
-def test_customer_cone_matches_model(spark, paths):
-    """The iterative provider→customer closure must equal a pure-Python
-    transitive closure over the same inferred p2c edges — including on
-    cyclic inferred graphs, where both sides converge to the full
-    reachable set."""
-    from bgpexplorer_spark.operators.analytics import (
-        as_relationships,
-        customer_cone,
-    )
-
-    rels = _rel_model(paths)
-    pc: dict[int, set[int]] = {}
-    nodes = set()
-    for (lo, hi), (nl, nh, rel) in rels.items():
-        if rel == "p2p":
-            continue
-        prov, cust = (hi, lo) if rel == "c2p" else (lo, hi)
-        pc.setdefault(prov, set()).add(cust)
-        nodes.update((prov, cust))
-    exp = {}
-    for n in nodes:
-        seen: set[int] = set()
-        frontier = set(pc.get(n, ()))
-        while frontier:
-            seen |= frontier
-            frontier = {
-                c for f in frontier for c in pc.get(f, ())
-            } - seen
-        exp[n] = len(seen - {n}) + 1 if n in seen else len(seen) + 1
-
-    df = spark.createDataFrame(
-        [(i, list(p)) for i, p in enumerate(paths)],
-        "id long, aspath_flat array<bigint>",
-    )
-    got = {r.asn: r.cone_size
-           for r in customer_cone(as_relationships(df)).collect()}
-    assert got == exp
 
 
 @settings(max_examples=20, deadline=None)
@@ -399,120 +228,6 @@ def test_classifier_margin_matches_python_replay(spark, texts):
         assert got[i] == replay(t)
 
 
-def test_unimax_allocation_water_filling(spark):
-    """UniMax (Chung 2023) hand-computed: budget 100, max_epochs 2,
-    strata with 10/20/100 tokens → caps 20/40/200. Waterline: ascending
-    caps [20, 40, 200]; candidates (100-0)/3=33.3 (cap 20 < → capped),
-    (100-20)/2=40 (cap 40 >= 40 → waterline 40): allocations 20/40/40.
-    And with a budget above total capacity, everyone gets their cap."""
-    from bgpexplorer_spark.operators.pipeline import unimax_allocation
-
-    docs = spark.createDataFrame(
-        [("a", "w " * 10), ("b", "w " * 20), ("c", "w " * 100)],
-        "lang string, text string",
-    )
-    got = {r.stratum: r for r in unimax_allocation(
-        docs, "lang", token_budget=100, max_epochs=2.0
-    ).collect()}
-    assert got["a"].allocation == 20.0 and got["a"].epochs == 2.0
-    assert got["b"].allocation == 40.0 and got["b"].epochs == 2.0
-    assert got["c"].allocation == 40.0 and got["c"].epochs == 0.4
-    assert abs(sum(r.allocation for r in got.values()) - 100.0) < 1e-6
-    assert got["c"].sample_weight == 0.4
-
-    over = {r.stratum: r for r in unimax_allocation(
-        docs, "lang", token_budget=10_000, max_epochs=2.0
-    ).collect()}
-    assert all(r.epochs == 2.0 for r in over.values())
-    assert over["c"].allocation == 200.0
-
-
-def test_hybrid_rrf_fusion_hand_computed(spark):
-    """RRF on tiny hand-built lists: a doc in both lists outranks a doc
-    first in one list only; missing-list docs contribute a single term;
-    ties break by id."""
-    from bgpexplorer_spark.operators.pipeline import hybrid_rrf_topk
-
-    docs = spark.createDataFrame(
-        [(1, "spark spark spark"), (2, "spark window"), (3, "nothing here"),
-         (4, "window")],
-        "doc_id long, text string",
-    )
-    # embeddings: doc 2 closest to the query, then 3; 1 and 4 opposite
-    emb = spark.createDataFrame(
-        [(1, [-1.0, 0.0]), (2, [1.0, 0.0]), (3, [0.9, 0.1]), (4, [0.0, -1.0])],
-        "vec_id long, embedding array<double>",
-    )
-    got = {r.doc_id: r for r in hybrid_rrf_topk(
-        docs, emb, ["spark", "window"], [1.0, 0.0], k=4, pool=2
-    ).collect()}
-    # lexical pool (bm25 top2): 2 (both terms), then 1 or 4; dense pool:
-    # 2 then 3. Doc 2 is rank-1 in BOTH lists -> highest fused score.
-    assert got[2].rrf_score == round(1 / 61 + 1 / 61, 6)
-    assert got[2].lexical_rank == 1 and got[2].dense_rank == 1
-    assert got[3].lexical_rank is None and got[3].dense_rank == 2
-    assert got[3].rrf_score == round(1 / 62, 6)
-    top = sorted(got.values(), key=lambda r: (-r.rrf_score, r.doc_id))
-    assert top[0].doc_id == 2
-
-
-_edges = st.lists(
-    st.tuples(
-        st.integers(min_value=0, max_value=40),
-        st.integers(min_value=0, max_value=40),
-    ).filter(lambda t: t[0] != t[1]),
-    min_size=0,
-    max_size=25,
-)
-
-
-@settings(
-    max_examples=12,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-@given(edges=_edges, val_pct=st.integers(min_value=0, max_value=100))
-def test_leakage_split_matches_union_find(spark, edges, val_pct):
-    """leakage_split vs a pure-Python union-find: component = min
-    reachable id, split = hash(salt:component)%100 < val_pct, and —
-    the contract — NO edge ever straddles the split."""
-    n = 41
-    docs = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
-    pairs = spark.createDataFrame(
-        [(min(a, b), max(a, b), 1.0) for a, b in edges] or [(0, 0, 1.0)],
-        "id_a long, id_b long, jaccard double",
-    )
-    if not edges:
-        pairs = pairs.filter(F.col("id_a") != F.col("id_b"))
-    parent = list(range(n))
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in edges:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    comp = {i: find(i) for i in range(n)}
-    want = {
-        i: (
-            comp[i],
-            "val" if _hash32(f"split:{comp[i]}") % 100 < val_pct else "train",
-        )
-        for i in range(n)
-    }
-    got = {
-        r.doc_id: (r.component, r.split)
-        for r in pipeline.leakage_split(docs, pairs, "doc_id", val_pct=val_pct).collect()
-    }
-    assert got == want
-    for a, b in edges:
-        assert got[a][1] == got[b][1]
-
-
 _bigram_docs = st.lists(
     st.tuples(
         st.integers(min_value=0, max_value=999),
@@ -562,49 +277,3 @@ def test_bigram_nll_matches_model(spark, docs):
     assert got == want
 
 
-@settings(
-    max_examples=12,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-@given(docs=_docs, cap=st.integers(min_value=1, max_value=12))
-def test_pack_bins_matches_model(spark, docs, cap):
-    """pack_bins vs a pure-Python next-fit-decreasing model: identical
-    (shard, bin) assignment, non-oversize bins never exceed capacity,
-    bin ids are contiguous from 0 per shard."""
-    df = spark.createDataFrame(
-        [(i, t) for i, t, _l in docs], "doc_id long, text string"
-    )
-    n_shards = 4
-    got = {
-        r.doc_id: (r.shard, r.bin, r.n_tokens, r.oversize)
-        for r in pipeline.pack_bins(
-            df, max_tokens=cap, n_shards=n_shards
-        ).collect()
-    }
-    per_shard: dict[int, list] = {}
-    for i, t, _l in docs:
-        sh = _hash32(str(i)) % n_shards
-        per_shard.setdefault(sh, []).append((len((t or "").split()), i))
-    want = {}
-    for sh, items in per_shard.items():
-        items.sort(key=lambda x: (-x[0], x[1]))
-        b, fill = -1, cap + 1
-        for n, i in items:
-            if fill + n <= cap:
-                fill += n
-            else:
-                b, fill = b + 1, n
-            want[i] = (sh, b, n, n > cap)
-    assert got == want
-    # invariants: fills of non-oversize bins bounded; contiguous bins
-    fills: dict[tuple, int] = {}
-    for i, (sh, b, n, ov) in got.items():
-        fills[(sh, b)] = fills.get((sh, b), 0) + n
-    for (sh, b), f in fills.items():
-        members_oversize = [ov for i, (s2, b2, n, ov) in got.items()
-                            if (s2, b2) == (sh, b) and ov]
-        assert f <= cap or members_oversize
-    for sh in {s for s, _b, _n, _o in got.values()}:
-        bins = sorted({b for s, b, _n, _o in got.values() if s == sh})
-        assert bins == list(range(len(bins)))

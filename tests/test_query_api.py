@@ -170,63 +170,6 @@ def test_maintained_length_skips_full_scan(spark):
     assert r.length == r.found == r_exact.length == 6  # envelope identical
 
 
-def test_route_counts_roundtrip(spark, tmp_path):
-    from bgpexplorer_spark.operators.rib import (
-        read_route_counts, route_counts, write_snapshot,
-    )
-
-    hist = _hist(spark, [u(f"10.0.{i}.0/24", t=i) for i in range(4)])
-    path = str(tmp_path / "snap")
-    write_snapshot(hist, path, spark=spark)
-    counts = read_route_counts(spark, path)
-    assert counts == {"ipv4u": 4}
-    # the maintained number equals the exact aggregate
-    exact = {r["rib"]: r["routes"] for r in route_counts(hist).collect()}
-    assert counts == exact
-
-
-def test_posting_table_semijoin_matches_predicate_path(spark):
-    """The exploded posting-table semi-join must select exactly the same
-    routes as the default array_contains predicate (J1 scale path)."""
-    from bgpexplorer_spark.filterlang.compile import matches
-    from bgpexplorer_spark.operators.postings import (
-        build_posting_df,
-        intersect_postings,
-        semi_join_postings,
-    )
-    from tests.ribdata import make_updates, u
-    from bgpexplorer_spark.operators.ingest import build_history
-
-    hist = build_history(
-        make_updates(
-            spark,
-            [
-                u("10.0.0.0/24", t=1, aspath=[("Seq", [100, 200])], comms=[65536 + 1]),
-                u("10.0.1.0/24", t=2, aspath=[("Seq", [300])], comms=[65536 + 2]),
-                u("10.0.2.0/24", t=3, aspath=[("Set", [100])], comms=None),
-                u("10.0.3.0/24", t=4, aspath=None),
-            ],
-        )
-    )
-    asn = build_posting_df(hist, "asn")
-    via_postings = {
-        r.nlri_str for r in semi_join_postings(hist, asn, [100]).select("nlri_str").collect()
-    }
-    via_predicate = {
-        r.nlri_str for r in hist.filter(matches("as:100", "ipv4u")).select("nlri_str").collect()
-    }
-    assert via_postings == via_predicate == {"10.0.0.0/24", "10.0.2.0/24"}
-
-    comm = build_posting_df(hist, "community")
-    both = intersect_postings(
-        hist,
-        [asn.filter(F.col("value") == 100), comm.filter(F.col("value") == 65537)],
-    )
-    assert {r.nlri_str for r in both.select("nlri_str").collect()} == {"10.0.0.0/24"}
-    # missing posting value short-circuits to empty
-    assert semi_join_postings(hist, asn, [999]).count() == 0
-
-
 def test_lpm_join_v6_matches_ipaddress_model(spark):
     import ipaddress
     import random

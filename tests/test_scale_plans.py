@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 from bgpexplorer_spark.filterlang.compile import matches
 from bgpexplorer_spark.operators.ingest import build_history
 from bgpexplorer_spark.operators.rib import write_snapshot
-from bgpexplorer_spark.operators.sessions import build_session_registry
 
 from tests.ribdata import make_updates, u
 
@@ -47,22 +46,6 @@ def test_no_python_udfs_in_query_paths(spark):
     )
     plan = _plan(q)
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-
-def test_session_registry_symmetric(spark):
-    rows = [
-        ("10.0.0.1", 65001, "10.0.0.2", 65002, 1),
-        ("10.0.0.2", 65002, "10.0.0.1", 65001, 2),  # same pair, swapped
-        ("10.0.0.3", 65003, "10.0.0.4", 65004, 3),
-    ]
-    df = spark.createDataFrame(
-        rows, "peer1_addr string, peer1_as long, peer2_addr string, peer2_as long, ts long"
-    )
-    reg = build_session_registry(df).collect()
-    assert len(reg) == 2
-    ids = {r.session_id for r in reg}
-    assert ids == {0, 1}
-    first = min(reg, key=lambda r: r.session_id)
-    assert first.peer1_addr == "10.0.0.1" and first.peer2_addr == "10.0.0.2"
 
 _SF_DIR = "/root/testdata/sf0.001"
 
@@ -204,78 +187,6 @@ def test_analytics_have_no_python_udfs(spark):
         plan = _plan(df)
         assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
-def test_pipeline_sample_is_scan_plus_filter_only(spark):
-    from bgpexplorer_spark.operators.pipeline import stratified_sample
-
-    docs = spark.createDataFrame(
-        [(i, "t", "en") for i in range(10)], "doc_id long, text string, lang string"
-    )
-    plan = _plan(stratified_sample(docs, "lang", {"en": 0.5}, "doc_id"))
-    # pure narrow plan: no exchange (shuffle) anywhere
-    assert "Exchange" not in plan
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-
-def test_pack_sequences_partitions_by_shard(spark):
-    from bgpexplorer_spark.operators.pipeline import pack_sequences
-
-    docs = spark.createDataFrame(
-        [(i, "a b c") for i in range(10)], "doc_id long, text string"
-    )
-    plan = _plan(pack_sequences(docs, 512, n_shards=8))
-    # ONE hash exchange on the shard key feeds the running-sum window --
-    # parallelism = n_shards regardless of input size
-    assert plan.count("Exchange hashpartitioning") == 1
-    assert "shard" in plan.split("Exchange hashpartitioning")[1][:60]
-
-def test_bucketed_join_has_no_exchange(spark):
-    import uuid
-
-    from bgpexplorer_spark.operators.joins import read_bucketed, write_bucketed
-
-    rows = [u(f"10.{i % 50}.0.0/16", t=i) for i in range(200)]
-    hist = build_history(make_updates(spark, rows))
-    tag = uuid.uuid4().hex[:8]
-    d1, d2 = tempfile.mkdtemp(), tempfile.mkdtemp()
-    write_bucketed(hist, f"hist_a_{tag}", d1, buckets=8)
-    write_bucketed(
-        hist.select("nlri_str", "session_id", "active"), f"hist_b_{tag}", d2, buckets=8
-    )
-    a, b = read_bucketed(spark, f"hist_a_{tag}"), read_bucketed(spark, f"hist_b_{tag}")
-    # at test size the planner rightly broadcasts instead; disable it to
-    # get the fact-fact shape (both sides beyond any broadcast threshold)
-    # where bucketing is what deletes the shuffles
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = a.join(b.withColumnRenamed("active", "b_active"), "nlri_str")
-        plan = _plan(joined)
-        # co-located layout: the join consumes the bucketing — no shuffle
-        assert "Exchange hashpartitioning" not in plan
-        assert "Bucketed: true" in plan
-        assert joined.count() > 0
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-
-def test_salted_join_matches_plain_join(spark):
-    from bgpexplorer_spark.operators.joins import salted_join
-
-    # pathological skew: 90% of the big side shares one key
-    big = spark.createDataFrame(
-        [(("hot" if i % 10 else f"k{i}"), i) for i in range(1000)], "k string, v long"
-    )
-    small = spark.createDataFrame(
-        [("hot", 1), ("k10", 2), ("k20", 3), ("missing", 4)], "k string, w long"
-    )
-    plain = sorted(map(tuple, big.join(small, "k").collect()))
-    salted = sorted(map(tuple, salted_join(big, small, "k", salt=8).collect()))
-    assert plain == salted
-    left_plain = sorted(map(tuple, big.join(small, "k", "left").collect()))
-    left_salted = sorted(map(tuple, salted_join(big, small, "k", salt=8, how="left").collect()))
-    assert left_plain == left_salted
-    # the join key actually carries the salt (skew spread over 8 subkeys)
-    plan = _plan(salted_join(big, small, "k", salt=8))
-    assert "_salt" in plan
-
 def test_filter_queries_compile_without_codegen_fallback(spark):
     """The compiled 3VL filter trees must stay inside janino's method
     budget: with spark.sql.codegen.fallback=false a whole-stage compile
@@ -322,21 +233,6 @@ def test_rpki_aggregate_key_is_narrow(spark):
     for m in re.finditer(r"hashpartitioning\(([^)]*)\)", plan):
         keys = m.group(1)
         assert "extra_a" not in keys and "extra_b" not in keys, keys
-
-def test_decontaminate_broadcasts_eval_side(spark):
-    """The eval shingle set must build the BROADCAST side of a LEFT SEMI
-    join — a shuffled membership test would re-shuffle the whole train
-    corpus at 100 TB."""
-    from bgpexplorer_spark.operators.pipeline import decontaminate
-
-    train = spark.createDataFrame(
-        [(i, f"w{i} w{i+1} w{i+2} w{i+3}") for i in range(50)],
-        "doc_id long, text string",
-    )
-    ev = spark.createDataFrame([(999, "w1 w2 w3 w4")], "doc_id long, text string")
-    plan = _plan(decontaminate(train, ev, n=3))
-    assert "BroadcastHashJoin" in plan and "LeftSemi" in plan
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 def test_rib_diff_single_pass_no_join(spark):
     """rib_diff extracts both instants with conditional argmax aggregates
@@ -415,27 +311,6 @@ def test_semantic_dedup_no_cartesian_no_udf(spark):
     plan = _plan(semantic_dedup(emb, threshold=0.9, n_clusters=4))
     assert "CartesianProduct" not in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-
-def test_dsir_model_never_shuffle_joined(spark):
-    """The DSIR log-likelihood-ratio model is fixed-size resident state:
-    small models inline as a literal array lookup (NO join at all in the
-    scoring plan); large models fall back to a broadcast join. Neither
-    shape may shuffle the exploded gram stream onto the model or drop
-    into Python eval."""
-    from bgpexplorer_spark.operators.pipeline import dsir_weights
-
-    docs = spark.createDataFrame(
-        [(i, f"tok{i % 7} tok{i % 5} tok{i % 3}") for i in range(50)],
-        "doc_id long, text string",
-    )
-    target = docs.filter("doc_id % 10 = 0")
-    plan = _plan(dsir_weights(docs, target))
-    assert "Join" not in plan  # literal-lookup path: zero joins
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-    big = _plan(dsir_weights(docs, target, n_buckets=5000))
-    assert "BroadcastHashJoin" in big and "SortMergeJoin" not in big
-    assert "BatchEvalPython" not in big and "ArrowEvalPython" not in big
-
 
 def test_cleaning_rules_are_map_side(spark):
     """C4 line filters, Gopher shape gates, and PII scrub are per-row
@@ -1017,15 +892,10 @@ def test_r11_second_wave_plan_shapes(spark):
     - bigram_nll: BOTH count joins merge-pinned SMJ (bigram vocabularies
       grow with the corpus — the AQE-underestimate broadcast class), no
       BroadcastHashJoin anywhere;
-    - vocab_drift: the full-outer vocabulary join is an SMJ, zero
-      broadcasts;
     - cross_source_report: both id-attribute joins SMJ, zero broadcasts;
-    - pack_bins: exactly ONE exchange (the per-shard grouping) feeding
-      the Arrow fill pass — no joins anywhere;
     - vocab_coverage cutoffs are TakeOrdered, never a global window.
     """
     from bgpexplorer_spark.operators.dedup import cross_source_report
-    from bgpexplorer_spark.operators.pipeline import pack_bins, vocab_drift
     from bgpexplorer_spark.operators.text import bigram_nll, vocab_coverage
 
     docs = spark.createDataFrame(
@@ -1037,21 +907,12 @@ def test_r11_second_wave_plan_shapes(spark):
     assert p.count("BroadcastHashJoin") == 0, p
     assert p.count("SortMergeJoin") == 2, p
 
-    p = _plan(vocab_drift(docs.filter("doc_id % 2 = 0"),
-                          docs.filter("doc_id % 2 = 1")))
-    assert p.count("BroadcastHashJoin") == 0, p
-    assert "FullOuter" in p and "SortMergeJoin" in p, p
-
     pairs = spark.createDataFrame(
         [(1, 2, 0.5), (2, 3, 0.9)], "id_a long, id_b long, jaccard double"
     )
     p = _plan(cross_source_report(pairs, docs))
     assert p.count("BroadcastHashJoin") == 0, p
     assert p.count("SortMergeJoin") == 2, p
-
-    p = _plan(pack_bins(docs, max_tokens=8, n_shards=4))
-    assert "Join" not in p, p
-    assert p.count("Exchange") == 1, p
 
     p = _plan(vocab_coverage(docs, cutoffs=[2, 5]))
     assert "Window" not in p, p

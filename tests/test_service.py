@@ -332,9 +332,9 @@ def test_compact_never_overwrites_source_in_place(spark, tmp_path, monkeypatch):
     real_write = ribmod.write_snapshot
     targets = []
 
-    def spy(df, p, mode="overwrite", spark=None):
+    def spy(df, p):
         targets.append(p)
-        return real_write(df, p, mode, spark=spark)
+        return real_write(df, p)
 
     monkeypatch.setattr(ribmod, "write_snapshot", spy)
     ribmod.compact(spark, path, history_depth=1)
@@ -405,7 +405,7 @@ def test_http_whois_and_dns_endpoints(spark):
     transports (reference handle_query src/whoissvc.rs:520-600: section
     extraction per mode, comment filtering, raw passthrough)."""
     hist = build_history(make_updates(spark, [u("10.0.0.0/24", t=1)])).cache()
-    svc = BgpExplorerService(hist, route_counts={"ipv4u": 1})
+    svc = BgpExplorerService(hist)
 
     whois_text = (
         "% comment line\n"
@@ -447,7 +447,7 @@ def test_http_malformed_numeric_param_is_400(spark):
     """A non-integer or out-of-range numeric URL parameter is the
     client's error: 400 naming the parameter, never a 500."""
     hist = build_history(make_updates(spark, [u("10.0.0.0/24", t=1)])).cache()
-    svc = BgpExplorerService(hist, route_counts={"ipv4u": 1})
+    svc = BgpExplorerService(hist)
     httpd = serve(svc, port=0)
     base = f"http://127.0.0.1:{httpd.server_address[1]}"
     try:
@@ -479,7 +479,7 @@ def test_http_malformed_time_param_is_400(spark):
     """A time parameter that is neither epoch millis nor RFC 3339 is the
     client's error: 400 naming the parameter, never a 500."""
     hist = build_history(make_updates(spark, [u("10.0.0.0/24", t=1)])).cache()
-    svc = BgpExplorerService(hist, route_counts={"ipv4u": 1})
+    svc = BgpExplorerService(hist)
     httpd = serve(svc, port=0)
     base = f"http://127.0.0.1:{httpd.server_address[1]}"
     try:
@@ -512,7 +512,7 @@ def test_http_500_is_logged_with_traceback(spark, caplog, monkeypatch):
     """An engine error answers 500 with the same body as before, and
     the log gets the path and the traceback."""
     hist = build_history(make_updates(spark, [u("10.0.0.0/24", t=1)]))
-    svc = BgpExplorerService(hist, route_counts={"ipv4u": 1})
+    svc = BgpExplorerService(hist)
 
     def broken():
         raise RuntimeError("statistics exploded")
