@@ -18,6 +18,7 @@ from __future__ import annotations
 import json
 import logging
 import threading
+import time
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
@@ -26,7 +27,7 @@ from pyspark.sql import functions as F
 
 from bgpexplorer_spark.functions.timeutil import parse_ts_param
 from bgpexplorer_spark.operators.query import (
-    QueryParams, RouteIndex, nest_items, query_rib, serving_copy, to_nested_json,
+    HistoryStore, QueryParams, nest_items, query_rib, serving_copy, to_nested_json,
 )
 from bgpexplorer_spark.operators.rib import statistics
 from bgpexplorer_spark.schemas import RIB_NAMES
@@ -37,9 +38,10 @@ class BgpExplorerService:
     """Programmatic facade (what the HTTP layer and tests call).
 
     ``/api/json`` answers from a per-state-version served copy of the
-    history. Its :class:`RouteIndex` carries every rib's route count, so
-    O3 ``length`` is served O(1) like the reference's map size
-    (src/bgpsvc.rs:677); ``asof`` requests count it at the cutoff."""
+    history and its :class:`HistoryStore` on the driver. The store's
+    route index carries every rib's route count, so O3 ``length`` is
+    served O(1) like the reference's map size (src/bgpsvc.rs:677);
+    ``asof`` requests count it at the cutoff."""
 
     def __init__(
         self,
@@ -105,11 +107,11 @@ class BgpExplorerService:
         self._memo_lock = threading.Lock()
         self._memo_building: dict[tuple, threading.Lock] = {}
         # the in-memory served copy of the history: (state version,
-        # cached query.serving_copy frame, its query.RouteIndex).
-        # Built by the first /api/json request of a version, so the
-        # ingest sink's bump does no Spark work; _served_lock makes
-        # concurrent first requests build it once
-        self._served: tuple[int, DataFrame, RouteIndex] | None = None
+        # cached query.serving_copy frame, its query.HistoryStore or None
+        # when the store failed to build). Built by the first /api/json
+        # request of a version, so the ingest sink's bump does no Spark
+        # work; _served_lock makes concurrent first requests build it once
+        self._served: tuple[int, DataFrame, HistoryStore | None] | None = None
         self._served_lock = threading.Lock()
         self.whois_server_map = None
         if svc_config is not None and getattr(svc_config, "whoisjsonconfig", None):
@@ -119,14 +121,19 @@ class BgpExplorerService:
                 svc_config.whoisjsonconfig
             )
 
-    def _served_copy(self) -> tuple[DataFrame, RouteIndex]:
-        """The served copy for the current state version and its route
-        index, built together on first use: ``serving_copy(self.history)``
-        cached, materialized by the index's collect. The previous
+    def _served_copy(self) -> tuple[DataFrame, HistoryStore | None]:
+        """The served copy for the current state version and its history
+        store, built together on first use: ``serving_copy(self.history)``
+        cached, materialized by the store's collect. The previous
         version's copy is unpersisted once the new one is in place; a
         request still holding it keeps its answers (the frame recomputes
-        from the files planned when it was built, and the index is its
-        own)."""
+        from the files planned when it was built, and the store is its
+        own).
+
+        A store that fails to build (say, a collect past
+        ``spark.driver.maxResultSize``) is logged once with its traceback
+        and the version is served from the cached copy alone: every
+        request then runs the Spark path and counts ``length`` itself."""
         with self._served_lock:
             with self._memo_lock:
                 version, history = self._state_version, self.history
@@ -134,11 +141,26 @@ class BgpExplorerService:
             if old is not None and old[0] == version:
                 return old[1], old[2]
             df = serving_copy(history).cache()
-            index = RouteIndex.build(df)
-            self._served = (version, df, index)
+            t0 = time.perf_counter()
+            try:
+                store = HistoryStore.build(df)
+            except Exception:
+                log.exception(
+                    "served copy v%d: history store build failed, serving"
+                    " this version from Spark", version,
+                )
+                store = None
+            else:
+                log.info(
+                    "served copy v%d: %d history rows, %d routes, %d store"
+                    " bytes, built in %.0f ms", version, store.table.num_rows,
+                    sum(store.index.counts.values()), store.table.nbytes,
+                    (time.perf_counter() - t0) * 1000,
+                )
+            self._served = (version, df, store)
         if old is not None:
             old[1].unpersist()
-        return df, index
+        return df, store
 
     def release_served_copy(self) -> None:
         """Unpersist the served copy (the daemon's stop): the cache
@@ -159,11 +181,11 @@ class BgpExplorerService:
             # answered as of the cutoff: length is recomputed there
             r = query_rib(self._history_for_asof(), rib, p)
         else:
-            served, index = self._served_copy()
-            r = query_rib(
-                served, rib, p, length=index.counts.get(rib, 0), index=index
-            )
-        items = nest_items(r, to_nested_json(r).collect())
+            served, store = self._served_copy()
+            length = None if store is None else store.index.counts.get(rib, 0)
+            r = query_rib(served, rib, p, length=length, store=store)
+        rows = r.rows if r.rows is not None else to_nested_json(r).collect()
+        items = nest_items(r, rows)
         return {
             "ribtype": r.ribtype,
             "length": r.length,
@@ -182,8 +204,6 @@ class BgpExplorerService:
         requests page the checkpointed rows until the TTL expires or
         the state version bumps. Old entries drop out of the dict and
         their blocks are context-cleaned on GC."""
-        import time
-
         if not self.analytics_memo_ttl:
             return build()
         # capture the version ONCE: a bump between lookup and store must
@@ -849,9 +869,6 @@ class BgpExplorerService:
     }
 
     def _cached(self, key: str, fetch, ttl: float = 1800.0) -> str:
-        import threading
-        import time
-
         if not hasattr(self, "_ttl_cache"):
             self._ttl_cache = {}
         hit = self._ttl_cache.get(key)

@@ -20,10 +20,14 @@ and no exchange. Requests with ``onlyactive``/``changed_after``/
 request. The filter column itself is pure predicate algebra pushed into
 the scan.
 
-Key-term requests on the serving copy skip both page actions: the
-copy's :class:`RouteIndex` (one sorted row per route, held on the
-driver) answers ``found``, the page and the supernet fallback, and the
-page's history collect is the request's only Spark job.
+On the serving copy the driver holds a :class:`HistoryStore` per state
+version: the copy's page-history projection as one Arrow table, and
+the :class:`RouteIndex` (one sorted row per route) derived from it.
+A request that does not filter entries takes its page's history from
+the store, so it runs no history collect. Key-term requests also skip
+both page actions, because the index answers ``found``, the page and
+the supernet fallback: they run no Spark job at all. Attribute terms
+run their page action only.
 """
 
 from __future__ import annotations
@@ -32,6 +36,8 @@ import datetime as dt
 from dataclasses import dataclass
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import Column, DataFrame, Observation, Row, Window
 from pyspark.sql import functions as F
@@ -49,6 +55,11 @@ ROUTE_COLS = ["rib", "nlri_str"]  # route identity (sessions/paths nest under it
 # the serving copy's extra column: each entry's 1-based slot counted from
 # the newest entry of its KEY_COLS key
 SLOT_COL = "_slot"
+
+# the history store's columns: the route and the slot a page and its
+# maxdepth cut select on, and to_nested_json's columns (PAGE_COLS)
+PAGE_COLS = ["nlri_str", "session_id", "path_id", "ts", "ts_ms", "entry"]
+STORE_COLS = ["rib", *PAGE_COLS, SLOT_COL]
 
 @dataclass
 class QueryParams:
@@ -257,6 +268,11 @@ _MASK_LO = np.array([(_ONES ^ (_ONES >> n)) & _U64 for n in range(129)], np.uint
 _NONE = np.empty(0, np.int64)
 _I64_MAX = np.iinfo(np.int64).max
 
+def _ints(col: pa.ChunkedArray, null: int) -> np.ndarray:
+    """An integer column as int64, its nulls as ``null``."""
+    vals = col.fill_null(0).to_numpy().astype(np.int64)
+    return np.where(col.is_null().to_numpy(), null, vals)
+
 def _le(ah, al, bh, bl):
     """(ah, al) <= (bh, bl) on 128-bit values split in uint64 halves."""
     return (ah < bh) | ((ah == bh) & (al <= bl))
@@ -270,7 +286,7 @@ class _RibRows:
     ``starts`` opens each run of rows whose sort columns before the
     address are equal: inside a run the address ascends."""
 
-    nlri: np.ndarray      # nlri_str
+    nlri: pa.ChunkedArray  # nlri_str
     rd_hi: np.ndarray     # int64, null → int64 min (no RD term equals it)
     rd_lo: np.ndarray
     hi: np.ndarray        # uint64 halves of the family address
@@ -325,68 +341,66 @@ class RouteIndex:
     the index-answered families (:data:`_INDEX_BITS`), sorted per rib in
     :func:`_route_sort_key` order: the sorted global index DITA prunes
     with, here over a whole rib (the reference's BTreeMap range scan,
-    src/ribfilter.rs:563-580). Built once per state version from one
-    Arrow collect, which also counts every rib's routes (``counts``)."""
+    src/ribfilter.rs:563-580). Built once per state version from the
+    :class:`HistoryStore`'s collect, counting every rib's routes
+    (``counts``)."""
 
     def __init__(self, counts: dict[str, int], ribs: dict[str, _RibRows]):
         self.counts = counts
         self._ribs = ribs
 
     @classmethod
-    def build(cls, served: DataFrame) -> RouteIndex:
-        t = served.select(
-            *ROUTE_COLS, "rd_hi", "rd_lo", "addr_v4", "addr_v6", "prefixlen",
-            F.coalesce(F.size("labels"), F.lit(0)).alias("nlabels"),
-        ).dropDuplicates(ROUTE_COLS).toArrow()
-        rib = np.array(t["rib"].to_pylist(), dtype=str)
-        names, sizes = np.unique(rib, return_counts=True)
-
-        def ints(name: str, null: int) -> np.ndarray:
-            col = t[name]
-            vals = col.fill_null(0).to_numpy().astype(np.int64)
-            return np.where(col.is_null().to_numpy(), null, vals)
-
-        nlri = np.array(t["nlri_str"].to_pylist(), dtype=str)
+    def build(cls, keys: pa.Table) -> RouteIndex:
+        """From Arrow rows of ``rib``, ``nlri_str``, the sortable key
+        columns and ``nlabels``, at least one per route: sorted as
+        :func:`_route_sort_key` sorts (nulls first), and a route's
+        repeats (adjacent, as they share every sort column) dropped."""
+        t = keys.take(pc.sort_indices(keys, sort_keys=[(c, "ascending") for c in (
+            "rib", "rd_hi", "rd_lo", "addr_v4", "addr_v6", "prefixlen", "nlri_str",
+        )], null_placement="at_start"))
+        if t.num_rows > 1:
+            rib, nlri = t["rib"], t["nlri_str"]
+            repeat = pc.and_(pc.equal(rib[1:], rib[:-1]), pc.equal(nlri[1:], nlri[:-1]))
+            t = t.filter(pa.array(~np.append(False, repeat.to_numpy())))
+        counts = pc.value_counts(t["rib"])  # ribs in sorted order
+        sizes = dict(zip(counts.field("values").to_pylist(),
+                         counts.field("counts").to_pylist()))
+        starts = dict(zip(sizes, np.cumsum([0, *sizes.values()]).tolist()))
         low = np.iinfo(np.int64).min
-        rd_hi, rd_lo = ints("rd_hi", low), ints("rd_lo", low)
-        v4 = ints("addr_v4", -1)  # addresses are unsigned: -1 sorts first
-        v6_null = t["addr_v6"].is_null().to_numpy()
-        v6 = np.frombuffer(
-            b"".join(x or bytes(16) for x in t["addr_v6"].to_pylist()), ">u8"
-        ).reshape(-1, 2).astype(np.uint64)
-        plen = ints("prefixlen", -1)
-        nlabels = ints("nlabels", 0)
-        # _route_sort_key per rib: the last key is the primary one
-        order = np.lexsort(
-            (nlri, plen, v6[:, 1], v6[:, 0], ~v6_null, v4, rd_lo, rd_hi, rib)
-        )
         ribs = {}
         for name, bits in _INDEX_BITS.items():
-            at = order[rib[order] == name]
+            size = sizes.get(name, 0)
+            r = t.slice(starts.get(name, 0), size)
+            rd_hi, rd_lo = _ints(r["rd_hi"], low), _ints(r["rd_lo"], low)
+            v4 = _ints(r["addr_v4"], -1)  # addresses are unsigned: -1 sorts first
+            plen = _ints(r["prefixlen"], -1)
             if bits == 32:
-                keyed = (v4[at] >= 0) & (plen[at] >= 0)
-                hi = np.where(keyed, v4[at], 0).astype(np.uint64) << np.uint64(32)
-                lo = np.zeros(len(at), np.uint64)
-                mc = keyed & (plen[at] >= 4) & ((hi >> np.uint64(60)) == 0xE)
-                run_cols = (rd_hi[at], rd_lo[at])
+                keyed = (v4 >= 0) & (plen >= 0)
+                hi = np.where(keyed, v4, 0).astype(np.uint64) << np.uint64(32)
+                lo = np.zeros(size, np.uint64)
+                mc = keyed & (plen >= 4) & ((hi >> np.uint64(60)) == 0xE)
+                run_cols = (rd_hi, rd_lo)
             else:
-                keyed = ~v6_null[at] & (plen[at] >= 0)
-                hi, lo = v6[at, 0], v6[at, 1]
-                mc = keyed & (plen[at] >= 8) & ((hi >> np.uint64(56)) == 0xFF)
-                run_cols = (rd_hi[at], rd_lo[at], v4[at])
-            change = np.zeros(len(at), bool)
+                v6 = r["addr_v6"]
+                hi, lo = np.frombuffer(
+                    b"".join(x or bytes(16) for x in v6.to_pylist()), ">u8"
+                ).reshape(-1, 2).astype(np.uint64).T
+                keyed = ~v6.is_null().to_numpy() & (plen >= 0)
+                mc = keyed & (plen >= 8) & ((hi >> np.uint64(56)) == 0xFF)
+                run_cols = (rd_hi, rd_lo, v4)
+            change = np.zeros(size, bool)
             change[:1] = True
             for c in run_cols:
                 change[1:] |= c[1:] != c[:-1]
             ribs[name] = _RibRows(
-                nlri=nlri[at], rd_hi=rd_hi[at], rd_lo=rd_lo[at],
-                hi=hi, lo=lo, plen=np.clip(plen[at], 0, 128), keyed=keyed, mc=mc,
-                keylen=nlabels[at] * 24 + np.where(rd_hi[at] != low, 64, 0)
-                + np.maximum(plen[at], 0),
-                starts=np.append(np.flatnonzero(change), len(at)),
-                plens=np.unique(plen[at][keyed]),
+                nlri=r["nlri_str"], rd_hi=rd_hi, rd_lo=rd_lo,
+                hi=hi, lo=lo, plen=np.clip(plen, 0, 128), keyed=keyed, mc=mc,
+                keylen=_ints(r["nlabels"], 0) * 24 + np.where(rd_hi != low, 64, 0)
+                + np.maximum(plen, 0),
+                starts=np.append(np.flatnonzero(change), size),
+                plens=np.unique(plen[keyed]),
             )
-        return cls(dict(zip(names.tolist(), sizes.tolist())), ribs)
+        return cls(sizes, ribs)
 
     def select(self, rib: str, terms: list[FilterTerm], supernet: bool) -> np.ndarray:
         """Row numbers, in page order, of ``rib``'s routes that ``terms``
@@ -435,8 +449,8 @@ class RouteIndex:
             rows = self.select(rib, terms, True)
             # most specific first, then page order
             rows = rows[np.argsort(-self._ribs[rib].keylen[rows], kind="stable")]
-        nlri = self._ribs[rib].nlri[rows[p.skip:p.skip + p.limit]]
-        return found, [Row(rib=rib, nlri_str=str(s)) for s in nlri], found <= p.skip
+        nlri = self._ribs[rib].nlri.take(rows[p.skip:p.skip + p.limit]).to_pylist()
+        return found, [Row(rib=rib, nlri_str=s) for s in nlri], found <= p.skip
 
 def _index_exact(history: DataFrame, rib: str, p: QueryParams, terms) -> bool:
     """The index answers a request exactly when its whole filter is key
@@ -456,6 +470,61 @@ def _index_exact(history: DataFrame, rib: str, p: QueryParams, terms) -> bool:
         )
     )
 
+def _entry_cols() -> list[Column]:
+    """``ts_ms`` and ``entry`` as the response carries them: the one
+    expression :func:`to_nested_json` and :class:`HistoryStore` share,
+    so both serve the same bytes."""
+    from bgpexplorer_spark.operators.ingest import attrs_struct
+
+    return [
+        ts_to_millis(F.col("ts")).cast("string").alias("ts_ms"),
+        F.to_json(
+            F.struct(F.col("active"), attrs_struct().alias("attrs"), F.col("labels"))
+        ).alias("entry"),
+    ]
+
+class HistoryStore:
+    """The serving copy's page-history projection held on the driver,
+    one Arrow table of :data:`STORE_COLS` per state version, and the
+    :class:`RouteIndex` derived from the same collect: Krypton's
+    interactive serving copy beside the analytical store. A request that
+    does not filter entries takes its page's history rows from here (the
+    maxdepth cut is a slot filter), so it runs no history collect."""
+
+    def __init__(self, table: pa.Table, index: RouteIndex):
+        self.table = table
+        self.index = index
+
+    @classmethod
+    def build(cls, served: DataFrame) -> HistoryStore:
+        """One Arrow collect of ``served`` (a serving copy); it also
+        materializes the copy's cache. The route key columns come along
+        for the index, which reads them from the slot-1 rows only (one
+        per session and path of each route)."""
+        t = served.select(
+            *STORE_COLS[:5], *_entry_cols(), SLOT_COL,
+            "rd_hi", "rd_lo", "addr_v4", "addr_v6", "prefixlen",
+            F.coalesce(F.size("labels"), F.lit(0)).alias("nlabels"),
+        ).toArrow()
+        # the route and key columns only, so the slot-1 filter and the
+        # index's sort copy no entry text
+        keys = t.drop_columns(PAGE_COLS[1:]).filter(pc.equal(t[SLOT_COL], 1))
+        return cls(t.select(STORE_COLS), RouteIndex.build(keys))
+
+    def rows(self, rib: str, keys: list[str], maxdepth: int) -> list[tuple]:
+        """The :data:`PAGE_COLS` rows of ``rib``'s routes ``keys``, as
+        :func:`emitted_history` selects them on the serving copy without
+        entry filters: the newest ``maxdepth`` slots, 0 = all."""
+        t = self.table
+        keep = pc.and_(
+            pc.equal(t["rib"], rib),
+            pc.is_in(t["nlri_str"], value_set=pa.array(keys, pa.string())),
+        )
+        if maxdepth > 0:
+            keep = pc.and_(keep, pc.less_equal(t[SLOT_COL], maxdepth))
+        page = t.filter(keep)
+        return list(zip(*(page[c].to_pylist() for c in PAGE_COLS)))
+
 @dataclass
 class RibQueryResult:
     """The /api/json response envelope (src/bgpsvc.rs:690-706)."""
@@ -468,8 +537,11 @@ class RibQueryResult:
     maxdepth: int
     onlyactive: bool
     routes: list[Row]    # the page's routes (rib, nlri_str, ...), in page order
-    history: DataFrame   # flat emitted history rows for those routes
+    history: DataFrame | None  # flat emitted history rows for those routes
     from_supernet: bool  # True when the supernet fallback produced the page
+    # those rows already on the driver (PAGE_COLS tuples, from the history
+    # store), history then being None
+    rows: list[tuple] | None = None
 
 def _spark_page(
     history: DataFrame, rib: str, p: QueryParams, terms, length: int
@@ -509,7 +581,7 @@ def _spark_page(
 
 def query_rib(
     history: DataFrame, rib: str, p: QueryParams, *, length: int | None = None,
-    index: RouteIndex | None = None,
+    store: HistoryStore | None = None,
 ) -> RibQueryResult:
     """§3.1 end-to-end, including the two-query supernet fallback (O5):
     when the primary page is empty the serving layer re-plans with
@@ -518,14 +590,16 @@ def query_rib(
 
     ``length`` — the per-rib route count. The reference serves it as an
     O(1) map size (src/bgpsvc.rs:677); the serving layer passes
-    ``index.counts[rib]``, counted when the served copy's index was
+    ``store.index.counts[rib]``, counted when the served copy's store was
     built, so a request pays no dedup-count scan. None → counted here
     with one Spark job.
 
-    ``index`` — the :class:`RouteIndex` of ``history`` (a serving copy).
-    When the request is index-exact (:func:`_index_exact`) it answers
-    ``found`` and the page on the driver; any other request runs the
-    Spark path.
+    ``store`` — the :class:`HistoryStore` of ``history`` (a serving
+    copy). When the request is index-exact (:func:`_index_exact`) its
+    index answers ``found`` and the page on the driver; any other
+    request runs the Spark page path. A request that does not filter
+    entries (:func:`_uses_slots`) then takes the page's history rows
+    from the store (``rows``); any other builds the ``history`` frame.
 
     ``p.asof`` truncates the history at ts <= asof first, so the whole
     pipeline (length, match, windows, nested output) answers as the RIB
@@ -544,15 +618,20 @@ def query_rib(
         length = rib_df.dropDuplicates(ROUTE_COLS).count()
 
     terms = parse_filter(p.filter)
-    if index is not None and _index_exact(history, rib, p, terms):
-        found, page, from_supernet = index.page(rib, terms, p, length)
+    if store is not None and _index_exact(history, rib, p, terms):
+        found, page, from_supernet = store.index.page(rib, terms, p, length)
     else:
         found, page, from_supernet = _spark_page(history, rib, p, terms, length)
-    hist = emitted_history(history, rib, [r.nlri_str for r in page], p)
+    keys = [r.nlri_str for r in page]
+    rows = hist = None
+    if store is not None and _uses_slots(history, p):
+        rows = store.rows(rib, keys, p.maxdepth)
+    else:
+        hist = emitted_history(history, rib, keys, p)
     return RibQueryResult(
         ribtype=rib, length=length, found=found, skip=p.skip, limit=p.limit,
         maxdepth=p.maxdepth, onlyactive=p.onlyactive, routes=page,
-        history=hist, from_supernet=from_supernet,
+        history=hist, from_supernet=from_supernet, rows=rows,
     )
 
 def to_nested_json(result: RibQueryResult) -> DataFrame:
@@ -561,22 +640,16 @@ def to_nested_json(result: RibQueryResult) -> DataFrame:
     text the response carries per timestamp. A projection only: no
     join, no aggregation, no exchange. :func:`nest_items` nests the
     collected rows on the driver."""
-    from bgpexplorer_spark.operators.ingest import attrs_struct
+    return result.history.select(*PAGE_COLS[:4], *_entry_cols())
 
-    return result.history.select(
-        "nlri_str", "session_id", "path_id", "ts",
-        ts_to_millis(F.col("ts")).cast("string").alias("ts_ms"),
-        F.to_json(
-            F.struct(F.col("active"), attrs_struct().alias("attrs"), F.col("labels"))
-        ).alias("entry"),
-    )
-
-def nest_items(result: RibQueryResult, rows: list[Row]) -> dict:
+def nest_items(result: RibQueryResult, rows: list[tuple]) -> dict:
     """O7 — route → {session → {path → {ts_millis → entry}}}
-    (src/bgpsvc.rs:493-596) from the collected :func:`to_nested_json`
-    rows: routes in page order, sessions and paths in ascending numeric
-    order (BTreeMap serialization order), newest-first inside each path.
-    Routes without emitted history are left out.
+    (src/bgpsvc.rs:493-596) from the page's history rows in
+    :data:`PAGE_COLS` order (the collected :func:`to_nested_json` rows,
+    or ``result.rows`` from the history store): routes in page order,
+    sessions and paths in ascending numeric order (BTreeMap
+    serialization order), newest-first inside each path. Routes without
+    emitted history are left out.
 
     The reference keys history by a BTreeMap<ts>, so same-ts entries
     cannot coexist there (the insert overwrites); the history table can
@@ -584,9 +657,9 @@ def nest_items(result: RibQueryResult, rows: list[Row]) -> dict:
     (t, ts_ms, entry)-max, the deterministic stand-in for the BTreeMap's
     last-insert-wins (no arrival order survives batch)."""
     by_route: dict[str, dict] = {}
-    for r in rows:
-        paths = by_route.setdefault(r.nlri_str, {}).setdefault(r.session_id, {})
-        paths.setdefault(r.path_id, []).append((r.ts, r.ts_ms, r.entry))
+    for nlri, sid, pid, ts, ms, entry in rows:
+        paths = by_route.setdefault(nlri, {}).setdefault(sid, {})
+        paths.setdefault(pid, []).append((ts, ms, entry))
     items = {}
     for key in result.routes:
         sessions = by_route.get(key.nlri_str)

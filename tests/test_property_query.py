@@ -4,6 +4,9 @@ windowed path over the plain history, the route-index path over the
 serving copy, and a pure-Python model of the reference's query semantics
 must agree on random histories.
 
+With the history store, the raw nested items (every entry's full JSON
+text) must also equal the Spark path's.
+
 The model replays events per (rib, nlri, session, path) like ``_replay``
 (tests/test_property_filter.py) and evaluates filters with its
 ``_py_match`` terms; it is written from the reference semantics, not from
@@ -28,7 +31,7 @@ from hypothesis import strategies as st
 from bgpexplorer_spark.filterlang.terms import NumTerm, V4Term, V6Term, parse_filter
 from bgpexplorer_spark.operators.ingest import build_history
 from bgpexplorer_spark.operators.query import (
-    QueryParams, RouteIndex, _index_exact, nest_items, query_rib, serving_copy,
+    HistoryStore, QueryParams, _index_exact, nest_items, query_rib, serving_copy,
     to_nested_json,
 )
 
@@ -211,10 +214,21 @@ def _model(hist, rib, p):
     return len(routes), found, page, from_supernet, json.dumps(items)
 
 
-def _served(history, rib, p, index=None):
-    length = None if index is None else index.counts.get(rib, 0)
-    r = query_rib(history, rib, p, length=length, index=index)
-    items = nest_items(r, to_nested_json(r).collect())
+def _nested(history, rib, p, store=None):
+    """query_rib's result and its nested items, as api_json makes them."""
+    length = None if store is None else store.index.counts.get(rib, 0)
+    r = query_rib(history, rib, p, length=length, store=store)
+    rows = r.rows if r.rows is not None else to_nested_json(r).collect()
+    return r, nest_items(r, rows)
+
+
+def _served(history, rib, p, store=None):
+    return _shaped(*_nested(history, rib, p, store))
+
+
+def _shaped(r, items):
+    """The model's view of a result: each entry reduced to (active,
+    first AS)."""
     shaped = {
         nlri: {
             s: {
@@ -353,10 +367,11 @@ _INDEX_EVENT = st.tuples(
 )
 @given(data=st.data())
 def test_route_index_matches_spark_and_model(spark, data):
-    """query_rib with the served copy's RouteIndex, query_rib without it
-    and the model agree on every rib the index answers. Key-term filters
-    must take the index path, and negated, numeric, regex, AS-path,
-    maxdepth=0 and entry-filtered requests must not."""
+    """query_rib with the served copy's HistoryStore, query_rib without
+    it and the model agree on every rib the index answers, and the store
+    and Spark paths nest the same entry text. Key-term filters must take
+    the index path, and negated, numeric, regex, AS-path, maxdepth=0 and
+    entry-filtered requests must not."""
     drawn = data.draw(st.lists(_INDEX_EVENT, min_size=15, max_size=40))
     events, rows, t = [], [], T0
     for (rib, net, rd), s, pid, op, var, gap in drawn:
@@ -366,8 +381,16 @@ def test_route_index_matches_spark_and_model(spark, data):
         row["ts"] = t
         rows.append(row)
         events.append(((rib, row["nlri_str"]), s, pid, op, var, t))
+    # two entries at one ts on a path of their own: the same AS path, so
+    # the model cannot tell them apart, and different MEDs, so the
+    # collapse keeps the larger entry text on both served paths
+    for med in (1, 2):
+        row = u("10.0.1.0/24", session_id=2, aspath=[("Seq", [101, 200])], med=med)
+        row["ts"] = T0
+        rows.append(row)
+        events.append((("ipv4u", "10.0.1.0/24"), 2, 0, "update", 1, T0))
     served = serving_copy(build_history(make_updates(spark, rows))).cache()
-    index = RouteIndex.build(served)
+    store = HistoryStore.build(served)
     hist = _replay(events)
     stamps = [e[5] for e in events]
     skips, limits = st.sampled_from([0, 0, 1, 2, 20]), st.sampled_from([1, 2, 1000])
@@ -379,8 +402,8 @@ def test_route_index_matches_spark_and_model(spark, data):
                                 limit=data.draw(limits),
                                 maxdepth=data.draw(st.sampled_from([1, 3])))
                 assert _index_exact(served, rib, p, parse_filter(flt)), p
-                assert _served(served, rib, p, index) == _model(hist, rib, p), (rib, p)
-        # drawn requests: with the index, without it, and the model
+                assert _served(served, rib, p, store) == _model(hist, rib, p), (rib, p)
+        # drawn requests: with the store, without it, and the model
         for _ in range(4):
             rib = data.draw(st.sampled_from(sorted(_INDEX_EXACT)))
             flt = data.draw(st.sampled_from(_INDEX_EXACT[rib] + _INDEX_SPARK[rib]))
@@ -398,7 +421,15 @@ def test_route_index_matches_spark_and_model(spark, data):
             exact = flt in _INDEX_EXACT[rib] and not entry_filtered and p.maxdepth > 0
             assert _index_exact(served, rib, p, parse_filter(flt)) == exact, p
             want = _model(hist, rib, p)
-            assert _served(served, rib, p, index) == want, (rib, p, events)
-            assert _served(served, rib, p) == want, (rib, p, events)
+            with_store, on_spark = _nested(served, rib, p, store), _nested(served, rib, p)
+            assert _shaped(*with_store) == want, (rib, p, events)
+            assert _shaped(*on_spark) == want, (rib, p, events)
+            # the full entry text, in the same key order
+            items = with_store[1]
+            assert json.dumps(items) == json.dumps(on_spark[1]), (rib, p, events)
+            # both rows of the pair emitted: one entry, the larger text
+            pair = items.get("10.0.1.0/24", {}).get("2", {}).get("0")
+            if rib == "ipv4u" and pair is not None and p.maxdepth != 1:
+                assert [json.loads(e)["attrs"]["med"] for e in pair.values()] == [2]
     finally:
         served.unpersist()

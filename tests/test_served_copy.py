@@ -6,6 +6,8 @@ table schema everywhere else)."""
 from __future__ import annotations
 
 import json
+import logging
+import re
 import uuid
 
 from pyspark import StorageLevel
@@ -123,20 +125,20 @@ def test_request_finishes_on_its_version(spark, tmp_path, monkeypatch):
     def query_rib_with_concurrent_ingest(history, rib, p, **kw):
         if not inner:
             inner["started_on"] = svc._served[1]
-            # the copy and the index of one version
-            assert history is svc._served[1] and kw["index"] is svc._served[2]
+            # the copy and the store of one version
+            assert history is svc._served[1] and kw["store"] is svc._served[2]
             _append(spark, table, [
                 u("10.0.0.0/24", t=2, aspath=[("Seq", [102])]),
                 u("10.0.1.0/24", t=2, aspath=[("Seq", [201])]),
             ])
             svc.bump_state_version()
             inner["resp"] = svc.api_json("ipv4u", filter="10.0.0.0/16")
-            assert svc._served[2] is not kw["index"]
+            assert svc._served[2] is not kw["store"]
         return real(history, rib, p, **kw)
 
     monkeypatch.setattr(api, "query_rib", query_rib_with_concurrent_ingest)
     outer = svc.api_json("ipv4u", filter="10.0.0.0/16")
-    # the old index: one route, and its page's history from the old copy
+    # the old store: one route, and its page's history
     assert outer["length"] == 1 and outer["found"] == 1
     assert [a for _, a in _entries(outer, "10.0.0.0/24")] == [101]
     assert list(outer["items"]) == ["10.0.0.0/24"]
@@ -161,10 +163,12 @@ def _jobs(spark, request) -> tuple[int, dict]:
     return len(sc.statusTracker().getJobIdsForGroup(group)), resp
 
 
-def test_index_answered_request_runs_one_job(spark, tmp_path):
-    """On a warm served copy a key-term request runs one Spark job, the
-    page's history collect: the route index answers found, the page and
-    the supernet fallback. An attribute term still runs its page action."""
+def test_index_answered_request_runs_no_job(spark, tmp_path):
+    """On a warm served copy a key-term request runs no Spark job: the
+    store's route index answers found, the page and the supernet
+    fallback, and the store holds the page's history. An attribute term
+    runs its page action only, and an entry filter also collects the
+    page's history."""
     table = str(tmp_path / "table")
     _append(spark, table, [
         u("10.0.0.0/16", t=1, aspath=[("Seq", [100])]),
@@ -175,7 +179,7 @@ def test_index_answered_request_runs_one_job(spark, tmp_path):
         u("2c0a::/32", rib="ipv6u", t=6),
     ])
     svc = _service(spark, table)
-    svc.api_json("ipv4u")  # builds the copy and its index
+    svc.api_json("ipv4u")  # builds the copy and its store
     for rib, params, found, page in [
         ("ipv4u", {"filter": "10.0.1.0/24"}, 1, ["10.0.1.0/24"]),
         ("ipv4u", {"filter": "10.0.0.0/16"}, 3,
@@ -187,9 +191,91 @@ def test_index_answered_request_runs_one_job(spark, tmp_path):
     ]:
         jobs, resp = _jobs(spark, lambda: svc.api_json(rib, **params))
         assert (resp["found"], list(resp["items"])) == (found, page), params
-        assert jobs == 1, (params, jobs)
+        assert jobs == 0, (params, jobs)
     jobs, resp = _jobs(spark, lambda: svc.api_json("ipv4u", filter="as:100"))
-    assert resp["found"] == 2 and jobs >= 2, jobs
+    assert resp["found"] == 2 and jobs == 1, jobs
+    jobs, resp = _jobs(
+        spark, lambda: svc.api_json("ipv4u", filter="10.0.1.0/24", onlyactive=True)
+    )
+    assert list(resp["items"]) == ["10.0.1.0/24"] and jobs >= 2, jobs
+
+
+def _persisted(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+def test_failed_store_build_serves_from_spark(spark, tmp_path, monkeypatch, caplog):
+    """A history store that fails to build (say, past
+    spark.driver.maxResultSize) is logged once per version with its
+    traceback, and the version is served from the cached copy alone with
+    the answers of the normal path; no copy leaks."""
+    table = str(tmp_path / "table")
+    _append(spark, table, [
+        u("10.0.0.0/24", t=i, aspath=[("Seq", [100 + i])]) for i in (1, 2, 3)
+    ] + [u("10.0.1.0/24", t=4, aspath=[("Seq", [200])])])
+    requests = [
+        {"filter": "10.0.0.0/24", "maxdepth": 2},
+        {"filter": "10.0.0.0/16"},
+        {"filter": "10.0.0.77"},
+        {"filter": "as:102"},
+        {"skip": 1, "limit": 1},
+        {"filter": "10.0.0.0/16", "onlyactive": True},
+    ]
+    healthy = _service(spark, table)
+    want = [healthy.api_json("ipv4u", **q) for q in requests]
+    healthy.release_served_copy()
+
+    def fail(served):
+        raise RuntimeError("collect past spark.driver.maxResultSize")
+
+    monkeypatch.setattr(api.HistoryStore, "build", fail)
+    svc = _service(spark, table)
+    before = _persisted(spark)
+    with caplog.at_level(logging.INFO, logger="bgpexplorer_spark.api"):
+        assert [svc.api_json("ipv4u", **q) for q in requests] == want
+        first = svc._served[1]
+        assert svc._served[2] is None and first.storageLevel.useMemory
+        assert _persisted(spark) == before + 1
+        _append(spark, table, [u("10.0.2.0/24", t=5, aspath=[("Seq", [300])])])
+        svc.bump_state_version()
+        for _ in range(2):
+            assert svc.api_json("ipv4u", filter="10.0.0.0/16")["found"] == 3
+    errors = [r for r in caplog.records if r.levelno == logging.ERROR]
+    assert [r.getMessage() for r in errors] == [
+        f"served copy v{v}: history store build failed, serving this version"
+        " from Spark" for v in (0, 1)
+    ]
+    assert all(r.exc_info is not None for r in errors)
+    # the failed version's copy was freed when the next one replaced it
+    assert first.storageLevel == StorageLevel.NONE
+    assert _persisted(spark) == before + 1
+    svc.release_served_copy()
+    assert _persisted(spark) == before
+
+
+def test_store_build_is_logged(spark, tmp_path, caplog):
+    """Each version's store build logs one INFO line: the version, its
+    history rows, routes, store bytes and build time."""
+    table = str(tmp_path / "table")
+    _append(spark, table, [
+        u("10.0.0.0/24", t=1), u("10.0.0.0/24", t=2), u("2c0a::/32", rib="ipv6u", t=3),
+    ])
+    svc = _service(spark, table)
+    with caplog.at_level(logging.INFO, logger="bgpexplorer_spark.api"):
+        svc.api_json("ipv4u")
+        svc.api_json("ipv6u")
+        svc.bump_state_version()
+        svc.api_json("ipv4u")
+    lines = [r.getMessage() for r in caplog.records
+             if r.name == "bgpexplorer_spark.api" and r.levelno == logging.INFO]
+    assert len(lines) == 2, lines
+    nbytes = svc._served[2].table.nbytes
+    for v, line in enumerate(lines):
+        assert re.fullmatch(
+            rf"served copy v{v}: 3 history rows, 2 routes, {nbytes} store bytes,"
+            r" built in \d+ ms", line,
+        ), line
+    svc.release_served_copy()
 
 
 def test_served_copy_stays_private(spark, tmp_path):
