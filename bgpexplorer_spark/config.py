@@ -263,8 +263,10 @@ def start_snapshot_keeper(cfg: SvcConfig, get_history):
     """``snapshot`` / ``snapshot_every`` ini keys → a running
     :class:`bgpexplorer_spark.snapshotd.SnapshotKeeper` (None when the
     config names no snapshot file). Call ``.stop()`` for the reference's
-    store-on-shutdown; bootstrap history first via
-    ``snapshotd.load_snapshot_dir(spark, cfg.snapshot_file)``."""
+    store-on-shutdown. Bootstrap the history table first by copying the
+    snapshot's current version into it:
+    ``snapshotd.load_snapshot_dir(spark, cfg.snapshot_file, table)``
+    (the daemon's boot does this)."""
     if not cfg.snapshot_file:
         return None
     from bgpexplorer_spark.snapshotd import SnapshotKeeper

@@ -113,10 +113,12 @@ UPDATES_SCHEMA = T.StructType(
     + ATTR_FIELDS
 )
 
-# rib_history — UPDATES_SCHEMA + active flag + derived aspath_flat
-# (active=false is the withdraw tombstone, src/bgpattrs.rs:360-374).
+# rib_history — what ``build_history`` emits: UPDATES_SCHEMA without
+# ``op``, plus the active flag and the derived aspath_flat (active=false
+# is the withdraw tombstone, src/bgpattrs.rs:360-374). The table adds the
+# ``ts_date`` partition column; ``rib`` is a partition column there too.
 RIB_HISTORY_SCHEMA = T.StructType(
-    UPDATES_SCHEMA.fields
+    [f for f in UPDATES_SCHEMA.fields if f.name != "op"]
     + [
         T.StructField("active", T.BooleanType(), False),
         T.StructField("aspath_flat", T.ArrayType(T.LongType())),

@@ -16,10 +16,15 @@ are not atomic, so the marker flip is the commit point (readers and a
 crashed writer never see a half-written snapshot), mirroring the
 reference's write-then-rename. One previous version is kept, older ones
 are pruned.
+
+Because a version is already in the history table's layout, the daemon's
+boot restores it by copying its files into the table
+(``load_snapshot_dir``), not by rewriting it through Spark.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import re
 import shutil
@@ -28,29 +33,126 @@ import time
 import warnings
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 _MARKER = "CURRENT"
+_SPARK_SCHEMA = b"org.apache.spark.sql.parquet.row.metadata"
 
 
-def load_snapshot_dir(spark: SparkSession, path: str) -> DataFrame | None:
-    """Bootstrap history from a SnapshotKeeper directory. Missing dir,
-    missing/garbled marker, or an unreadable snapshot → warn and return
-    None (start fresh), the reference's load_snapshot error posture."""
-    from bgpexplorer_spark.operators.rib import read_snapshot
+def load_snapshot_dir(
+    spark: SparkSession,
+    path: str,
+    table: str,
+    report: dict | None = None,
+) -> DataFrame | None:
+    """Bootstrap the history table ``table`` from the SnapshotKeeper
+    directory ``path`` (a local path, as the keeper writes it).
 
-    marker = os.path.join(path, _MARKER)
+    The current version's files are copied into ``table`` as they are
+    (the snapshot is already in the table's layout) and the frame over
+    ``table`` is returned. The copy happens only when ``table`` does not
+    exist yet, and only after every data file's footer schema matched
+    the history table's. A missing dir → None (start fresh); a
+    missing/garbled marker, a missing version or a foreign file → warn
+    and return None, the reference's load_snapshot error posture.
+    Failures on the table side raise and leave no table behind.
+    ``report``, if given, receives ``what`` the boot did: restored a
+    version, kept the existing table, or started fresh and why."""
+    from bgpexplorer_spark.operators.rib import atomic_swap
+
+    report = {} if report is None else report
+    jpath = spark._jvm.org.apache.hadoop.fs.Path
+    fs = jpath(table).getFileSystem(spark._jsc.hadoopConfiguration())
+    if fs.exists(jpath(table)):
+        report["what"] = f"kept the existing table {table}"
+        return None
     try:
-        with open(marker, encoding="ascii") as f:
+        with open(os.path.join(path, _MARKER), encoding="ascii") as f:
             current = f.read().strip()
         # confine to the generated shape ('v<epoch>'): a tampered or
         # garbled marker ('..', absolute paths) must not escape `path`
         if not re.fullmatch(r"v\d+", current):
             raise ValueError(f"bad snapshot marker {current!r}")
-        return read_snapshot(spark, os.path.join(path, current))
+        vdir = os.path.abspath(os.path.join(path, current))
+        schema, files, nbytes = _check_footers(vdir)
     except Exception as e:  # noqa: BLE001 — any load error means fresh start
         if os.path.exists(path):
             warnings.warn(f"Error loading snapshot: {e}", stacklevel=2)
+            report["what"] = f"fresh (error loading snapshot: {e})"
+        else:
+            report["what"] = f"fresh (no snapshot at {path})"
         return None
+    # copy into a sibling, then rename: an interrupted restore never
+    # leaves a partial `table` that a later boot would serve
+    tmp = table + ".restore"
+    fs.delete(jpath(tmp), True)  # left by an interrupted boot
+    try:
+        # qualified, so the copy reads the local files that were checked
+        _copy(spark, "file://" + vdir, tmp)
+        atomic_swap(spark, tmp, table)
+    except BaseException:
+        fs.delete(jpath(tmp), True)
+        raise
+    report["what"] = (f"restored snapshot {current} ({files} files,"
+                      f" {nbytes} bytes copied)")
+    # the checked schema spares Spark a schema-inference job
+    return spark.read.schema(schema).parquet(table).drop("ts_date")
+
+
+def _check_footers(vdir: str) -> tuple[T.StructType, int, int]:
+    """(table schema, data files, bytes) of a snapshot version whose
+    every parquet file sits in a ``rib=…/ts_date=…`` partition and
+    carries the history table's columns and types in its footer (Spark's
+    row schema; nullability aside). The table schema is the footer's
+    columns, then the ``rib`` and ``ts_date`` partition columns, as
+    Spark infers it. Reads footers only: no Spark job."""
+    import pyarrow.parquet as pq
+
+    from bgpexplorer_spark.schemas import RIB_HISTORY_SCHEMA
+
+    if not os.path.isdir(vdir):
+        raise FileNotFoundError(f"snapshot version {vdir} is missing")
+    want = {f.name: f.dataType.simpleString()
+            for f in RIB_HISTORY_SCHEMA.fields if f.name != "rib"}
+    schema = None
+    files = nbytes = 0
+    for root, dirs, names in os.walk(vdir):
+        dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
+        for name in names:
+            if name.startswith((".", "_")):
+                continue
+            fpath = os.path.join(root, name)
+            rel = os.path.relpath(fpath, vdir)
+            if not re.fullmatch(r"rib=[^/]+/ts_date=[^/]+/[^/]+\.parquet", rel):
+                raise ValueError(f"unexpected snapshot file {rel}")
+            meta = pq.read_metadata(fpath).metadata or {}
+            if _SPARK_SCHEMA not in meta:
+                raise ValueError(f"{rel} has no Spark schema in its footer")
+            got = T.StructType.fromJson(json.loads(meta[_SPARK_SCHEMA]))
+            have = {f.name: f.dataType.simpleString() for f in got.fields}
+            if have != want:
+                diff = sorted(set(have.items()) ^ set(want.items()))
+                raise ValueError(f"{rel} is not a history file: {diff}")
+            schema = schema or got
+            files += 1
+            nbytes += os.path.getsize(fpath)
+    if not files:
+        raise ValueError(f"snapshot version {vdir} has no data files")
+    partitions = [T.StructField("rib", T.StringType()),
+                  T.StructField("ts_date", T.DateType())]
+    return T.StructType(schema.fields + partitions), files, nbytes
+
+
+def _copy(spark: SparkSession, src: str, dst: str) -> None:
+    """Copy the directory ``src`` to ``dst`` (Hadoop FileSystem API, so
+    ``dst`` may be any filesystem Spark can write)."""
+    hfs = spark._jvm.org.apache.hadoop.fs
+    conf = spark._jsc.hadoopConfiguration()
+    src, dst = hfs.Path(src), hfs.Path(dst)
+    if not hfs.FileUtil.copy(
+        src.getFileSystem(conf), src, dst.getFileSystem(conf), dst, False, conf
+    ):
+        raise IOError(f"cannot copy {src} to {dst}")
 
 
 class SnapshotKeeper:

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import datetime as dt
 import ipaddress
+import os
 from typing import Any
 
 from bgpexplorer_spark.schemas import UPDATES_SCHEMA
@@ -103,3 +104,15 @@ def make_updates(spark, rows: list[dict]):
     return spark.createDataFrame(
         [tuple(r[k] for k in _FIELDS) for r in rows], UPDATES_SCHEMA
     )
+
+
+def parquet_files(root) -> dict:
+    """Relative path → bytes of every parquet file under the table or
+    snapshot directory ``root``."""
+    out = {}
+    for d, _, names in os.walk(root):
+        for n in names:
+            if n.endswith(".parquet"):
+                with open(os.path.join(d, n), "rb") as f:
+                    out[os.path.relpath(os.path.join(d, n), root)] = f.read()
+    return out

@@ -5,12 +5,17 @@ restart restores the RIB."""
 from __future__ import annotations
 
 import json
+import os
+import re
 import socket
 import struct
 import time
 import urllib.request
 
+import pytest
+
 from bgpexplorer_spark.daemon import run_from_ini
+from tests.ribdata import make_updates, parquet_files, u
 
 
 def _ini(tmp_path, snapshot=True) -> str:
@@ -53,6 +58,36 @@ def _drive_bgp_session(host, port, prefixes):
 
 def _get(base, path):
     return json.loads(urllib.request.urlopen(base + path, timeout=10).read())
+
+
+def _snapshot(spark, snap, rows, **cast):
+    """Save ``rows`` as a SnapshotKeeper snapshot at ``snap``, with any
+    ``column=type`` casts applied first; returns the version dir."""
+    from pyspark.sql import functions as F
+
+    from bgpexplorer_spark.operators.ingest import build_history
+    from bgpexplorer_spark.snapshotd import SnapshotKeeper
+
+    hist = build_history(make_updates(spark, rows))
+    for col, typ in cast.items():
+        hist = hist.withColumn(col, F.col(col).cast(typ))
+    vdir = SnapshotKeeper(lambda: hist, str(snap)).save_once()
+    assert vdir is not None
+    return vdir
+
+
+def _plain_ini(tmp_path, snap, extra="") -> str:
+    """A daemon with a snapshot and no BGP peers."""
+    ini = tmp_path / "plain.ini"
+    ini.write_text(
+        f"[main]\nhttplisten=127.0.0.1:0\nsnapshot={snap}\n"
+        f"snapshot_every=3600\n{extra}"
+    )
+    return str(ini)
+
+
+_BOOT_LINE = (r"boot: {what}; restore \d+ ms, service \d+ ms, listeners"
+              r" \d+ ms, ingest \d+ ms, keeper \d+ ms, http \d+ ms$")
 
 
 def test_daemon_end_to_end_and_restart(spark, tmp_path):
@@ -193,7 +228,8 @@ def test_daemon_restart_multi_family_snapshot(spark, tmp_path):
     ]
     hist = build_history(make_updates(spark, rows), history_mode="every")
     snap = str(tmp_path / "snap")
-    assert SnapshotKeeper(lambda: hist, snap).save_once() is not None
+    vdir = SnapshotKeeper(lambda: hist, snap).save_once()
+    assert vdir is not None
 
     fams = ["ipv4u", "ipv6u", "vpnv4u", "ipv4lu", "l2vpls", "evpn",
             "mvpn", "ipv4mdt"]
@@ -215,6 +251,8 @@ def test_daemon_restart_multi_family_snapshot(spark, tmp_path):
     d1 = run_from_ini(spark, str(ini), str(tmp_path / "run1"),
                       processing_time="1 hour")
     try:
+        # the boot copied the snapshot's files, it did not rewrite them
+        assert parquet_files(d1.table_dir) == parquet_files(vdir)
         first = envelopes(d1.http_port)
     finally:
         d1.stop()
@@ -232,3 +270,94 @@ def test_daemon_restart_multi_family_snapshot(spark, tmp_path):
     finally:
         d2.stop()
     assert first == second  # byte parity per family across the restart
+
+
+def test_daemon_keeps_an_existing_uri_table(spark, tmp_path, caplog):
+    """A ``table_path`` URI that already holds a table is served as it
+    is: the boot must not overwrite it with the snapshot's older state."""
+    from bgpexplorer_spark.operators.ingest import build_history
+    from bgpexplorer_spark.operators.rib import write_snapshot
+
+    snap = tmp_path / "snap"
+    _snapshot(spark, snap, [u("11.0.0.0/24", t=1)])
+    table = "file://" + str(tmp_path / "table")
+    write_snapshot(build_history(make_updates(spark, [u("12.0.0.0/24", t=2)])),
+                   table)
+    ini = _plain_ini(tmp_path, snap, f"table_path={table}\n")
+    with caplog.at_level("INFO", logger="bgpexplorer_spark.daemon"):
+        d = run_from_ini(spark, ini, str(tmp_path / "run"),
+                         processing_time="1 hour")
+    try:
+        got = _get(f"http://127.0.0.1:{d.http_port}", "/api/json/ipv4u")
+        assert list(got["items"]) == ["12.0.0.0/24"]
+    finally:
+        d.stop()
+    (rec,) = [r for r in caplog.records if r.name == "bgpexplorer_spark.daemon"]
+    assert re.match(_BOOT_LINE.format(
+        what=re.escape(f"kept the existing table {table}")), rec.getMessage())
+
+
+def test_daemon_interrupted_restore_leaves_no_table(
+    spark, tmp_path, monkeypatch, caplog
+):
+    """A restore that fails part-way raises out of start() and leaves no
+    table, so the next boot restores the snapshot again, whole, and
+    discards the stale partial copy."""
+    from bgpexplorer_spark import snapshotd
+
+    snap = tmp_path / "snap"
+    vdir = _snapshot(spark, snap, [u(f"10.0.{i}.0/24", t=i) for i in range(3)])
+    ini = _plain_ini(tmp_path, snap)
+    work = tmp_path / "run"
+    table = work / "table"
+    partial = tmp_path / "run" / "table.restore"
+    copy = snapshotd._copy
+
+    def interrupted(*a):
+        copy(*a)
+        assert partial.is_dir()
+        raise OSError("copy interrupted")
+
+    monkeypatch.setattr(snapshotd, "_copy", interrupted)
+    with pytest.raises(OSError, match="copy interrupted"):
+        run_from_ini(spark, ini, str(work), processing_time="1 hour")
+    assert not table.exists()
+    monkeypatch.undo()
+
+    # a boot killed mid-copy leaves its partial copy behind
+    (partial / "rib=ipv4u" / "ts_date=2000-01-01").mkdir(parents=True)
+    (partial / "rib=ipv4u" / "ts_date=2000-01-01" / "junk.parquet").write_bytes(b"x")
+    with caplog.at_level("INFO", logger="bgpexplorer_spark.daemon"):
+        d = run_from_ini(spark, ini, str(work), processing_time="1 hour")
+    try:
+        got = _get(f"http://127.0.0.1:{d.http_port}", "/api/json/ipv4u")
+        assert sorted(got["items"]) == [f"10.0.{i}.0/24" for i in range(3)]
+        files = parquet_files(vdir)
+        assert parquet_files(table) == files and not partial.exists()
+    finally:
+        d.stop()
+    (rec,) = [r for r in caplog.records if r.name == "bgpexplorer_spark.daemon"]
+    what = (f"restored snapshot {os.path.basename(vdir)} ({len(files)} files,"
+            f" {sum(map(len, files.values()))} bytes copied)")
+    assert re.match(_BOOT_LINE.format(what=re.escape(what)), rec.getMessage())
+
+
+def test_daemon_starts_fresh_on_a_foreign_snapshot(spark, tmp_path, caplog):
+    """A snapshot whose files change a history column's type warns and
+    the daemon starts fresh; nothing is copied into the table."""
+
+    snap = tmp_path / "snap"
+    _snapshot(spark, snap, [u("10.0.0.0/24")], med="int")
+    with caplog.at_level("INFO", logger="bgpexplorer_spark.daemon"):
+        with pytest.warns(UserWarning, match="Error loading snapshot"):
+            d = run_from_ini(spark, _plain_ini(tmp_path, snap),
+                             str(tmp_path / "run"), processing_time="1 hour",
+                             http=False)
+    try:
+        assert not os.path.exists(d.table_dir)
+        assert d.service.history.count() == 0
+    finally:
+        d.stop()
+    (rec,) = [r for r in caplog.records if r.name == "bgpexplorer_spark.daemon"]
+    assert re.match(_BOOT_LINE.format(
+        what=r"fresh \(error loading snapshot: .*med.*\)"), rec.getMessage())

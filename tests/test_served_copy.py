@@ -296,7 +296,8 @@ def test_served_copy_stays_private(spark, tmp_path):
 
     keeper = SnapshotKeeper(lambda: svc.history, str(tmp_path / "snap"))
     assert keeper.save_once() is not None
-    saved = load_snapshot_dir(spark, str(tmp_path / "snap"))
+    saved = load_snapshot_dir(spark, str(tmp_path / "snap"),
+                              str(tmp_path / "restored"))
     assert SLOT_COL not in saved.columns and saved.count() == 3
 
     assert svc.api_statistics()["ribs"]["ipv4u"] == 2

@@ -1,8 +1,9 @@
 """The traced benchmark run (``perfbench/run.py --trace 1``) wraps engine
 functions by name (``perfbench/tracing.install``): ``api.query_rib``,
-``api.to_nested_json``, ``query.parse_filter``, ``api.statistics`` and
-more. An engine rename of one of them must fail here, not only the
-traced runs.
+``api.to_nested_json``, ``query.parse_filter``, ``api.statistics``,
+``snapshotd.load_snapshot_dir`` (the boot's ``rib.restore_s``) and more.
+An engine rename of one of them must fail here, not only the traced
+runs.
 
 ``install`` patches modules in place, so it runs in a subprocess of its
 own; it needs no SparkSession.
@@ -20,12 +21,16 @@ _INSTALL = """
 import sys
 sys.path[:0] = [sys.argv[1] + "/perfbench", sys.argv[1]]
 import tracing
-from bgpexplorer_spark import api
+from bgpexplorer_spark import api, snapshotd
 from bgpexplorer_spark.operators import query
 
-before = (api.query_rib, api.to_nested_json, query.parse_filter, api.statistics)
+def hooks():
+    return (api.query_rib, api.to_nested_json, query.parse_filter,
+            api.statistics, snapshotd.load_snapshot_dir)
+
+before = hooks()
 tracing.install(tracing.Tracer())
-after = (api.query_rib, api.to_nested_json, query.parse_filter, api.statistics)
+after = hooks()
 assert all(a is not b for a, b in zip(before, after)), "install wrapped nothing"
 """
 
