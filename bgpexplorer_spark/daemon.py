@@ -76,21 +76,27 @@ class BgpExplorerDaemon:
         from bgpexplorer_spark.operators.ingest import build_history
         from bgpexplorer_spark.schemas import UPDATES_SCHEMA
 
-        try:
-            return self.spark.read.parquet(self.table_dir).drop("ts_date")
-        except Exception:  # noqa: BLE001 — table not written yet
-            return build_history(
-                self.spark.createDataFrame([], UPDATES_SCHEMA),
-                history_mode=self.cfg.historymode,
-            )
+        table = self._history_with_partitions()
+        if table is not None:
+            return table.drop("ts_date")
+        return build_history(
+            self.spark.createDataFrame([], UPDATES_SCHEMA),
+            history_mode=self.cfg.historymode,
+        )
 
     def _history_with_partitions(self) -> DataFrame | None:
         """The maintained table WITH its ts_date partition column — the
         service's as-of batch view (timeutil.asof_prune consumes the
-        column as a real partition filter). None before the first ingest
-        commit creates the table (the service falls back to live)."""
+        column as a real partition filter). Read through the table's
+        known schema: a file listing, no schema-inference job. None
+        before the first ingest commit creates the table (the service
+        falls back to live)."""
+        from bgpexplorer_spark.schemas import RIB_HISTORY_TABLE_SCHEMA
+
         try:
-            return self.spark.read.parquet(self.table_dir)
+            return self.spark.read.schema(RIB_HISTORY_TABLE_SCHEMA).parquet(
+                self.table_dir
+            )
         except Exception:  # noqa: BLE001 — table not written yet
             return None
 

@@ -973,8 +973,7 @@ def bpe_encode(
 
 
 # Above this many buckets, a literal weight table bloats the serialized
-# plan (same bound rationale as similarity.INLINE_CODEBOOK_MAX: ~0.5 MB
-# of plan); switch to ONE broadcast row instead.
+# plan (~0.5 MB of plan); switch to ONE broadcast row instead.
 CLASSIFIER_INLINE_MAX = 65536
 
 

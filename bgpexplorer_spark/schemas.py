@@ -125,6 +125,23 @@ RIB_HISTORY_SCHEMA = T.StructType(
     ]
 )
 
+# The history table as Spark reads it: each data file's columns in the
+# order ``build_history`` emits them (the keys but ``rib``, ``active``, the
+# attributes, ``aspath_flat``), then the ``rib`` and ``ts_date`` partition
+# columns — the schema Spark would infer, known up front so that a read
+# of the table runs no schema-inference job.
+RIB_HISTORY_TABLE_SCHEMA = T.StructType(
+    [f for f in UPDATES_SCHEMA.fields
+     if f.name not in ("op", "rib") and f not in ATTR_FIELDS]
+    + [RIB_HISTORY_SCHEMA["active"]]
+    + ATTR_FIELDS
+    + [
+        RIB_HISTORY_SCHEMA["aspath_flat"],
+        T.StructField("rib", T.StringType()),
+        T.StructField("ts_date", T.DateType()),
+    ]
+)
+
 # sessions dimension (reference registry: src/bgpsvc.rs:135-162).
 SESSIONS_SCHEMA = T.StructType([
     T.StructField("session_id", T.IntegerType(), False),

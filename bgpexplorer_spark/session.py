@@ -8,7 +8,8 @@ so the same code deploys unchanged on a multi-executor cluster:
 - ``spark.sql.shuffle.partitions`` sized to cores locally; on a cluster it
   is the AQE *initial* partition number and should be raised to ~2-3x
   total cores.
-- Arrow enabled for the Pandas-UDF slow path (dedup/similarity operators).
+- Arrow enabled for the ``mapInPandas`` decoders in ``sources/{mrt,bmp}.py``
+  and ``query.HistoryStore``'s ``toArrow`` collect.
 - Session timezone pinned UTC so timestamps hash-match the DuckDB oracle.
 """
 
@@ -35,16 +36,6 @@ def get_spark(app_name: str = "bgpexplorer_spark", cpus: int | None = None) -> S
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
     )
-    # Streaming state store: RocksDB keeps keyed state off-heap and
-    # incremental-checkpoints it, the right posture once state outgrows
-    # executor heap (DFZ-scale key spaces); measured ~7-10% faster on the
-    # applyInPandasWithState paths even at 100k keys locally. Opt-in knob
-    # so batch-only workloads skip loading the native lib.
-    if os.environ.get("SPARK_GRAFT_STATE_STORE", "").lower() == "rocksdb":
-        builder = builder.config(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-        )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -35,6 +35,8 @@ import warnings
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from bgpexplorer_spark.schemas import RIB_HISTORY_TABLE_SCHEMA
+
 _MARKER = "CURRENT"
 _SPARK_SCHEMA = b"org.apache.spark.sql.parquet.row.metadata"
 
@@ -74,7 +76,7 @@ def load_snapshot_dir(
         if not re.fullmatch(r"v\d+", current):
             raise ValueError(f"bad snapshot marker {current!r}")
         vdir = os.path.abspath(os.path.join(path, current))
-        schema, files, nbytes = _check_footers(vdir)
+        files, nbytes = _check_footers(vdir)
     except Exception as e:  # noqa: BLE001 — any load error means fresh start
         if os.path.exists(path):
             warnings.warn(f"Error loading snapshot: {e}", stacklevel=2)
@@ -95,26 +97,23 @@ def load_snapshot_dir(
         raise
     report["what"] = (f"restored snapshot {current} ({files} files,"
                       f" {nbytes} bytes copied)")
-    # the checked schema spares Spark a schema-inference job
-    return spark.read.schema(schema).parquet(table).drop("ts_date")
+    # the table's known schema spares Spark a schema-inference job
+    return spark.read.schema(RIB_HISTORY_TABLE_SCHEMA).parquet(table).drop("ts_date")
 
 
-def _check_footers(vdir: str) -> tuple[T.StructType, int, int]:
-    """(table schema, data files, bytes) of a snapshot version whose
-    every parquet file sits in a ``rib=…/ts_date=…`` partition and
-    carries the history table's columns and types in its footer (Spark's
-    row schema; nullability aside). The table schema is the footer's
-    columns, then the ``rib`` and ``ts_date`` partition columns, as
-    Spark infers it. Reads footers only: no Spark job."""
+def _check_footers(vdir: str) -> tuple[int, int]:
+    """(data files, bytes) of a snapshot version whose every parquet
+    file sits in a ``rib=…/ts_date=…`` partition and carries the history
+    table's data columns and types in its footer (Spark's row schema;
+    nullability aside), so that ``RIB_HISTORY_TABLE_SCHEMA`` reads it.
+    Reads footers only: no Spark job."""
     import pyarrow.parquet as pq
-
-    from bgpexplorer_spark.schemas import RIB_HISTORY_SCHEMA
 
     if not os.path.isdir(vdir):
         raise FileNotFoundError(f"snapshot version {vdir} is missing")
     want = {f.name: f.dataType.simpleString()
-            for f in RIB_HISTORY_SCHEMA.fields if f.name != "rib"}
-    schema = None
+            for f in RIB_HISTORY_TABLE_SCHEMA.fields
+            if f.name not in ("rib", "ts_date")}
     files = nbytes = 0
     for root, dirs, names in os.walk(vdir):
         dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
@@ -133,14 +132,11 @@ def _check_footers(vdir: str) -> tuple[T.StructType, int, int]:
             if have != want:
                 diff = sorted(set(have.items()) ^ set(want.items()))
                 raise ValueError(f"{rel} is not a history file: {diff}")
-            schema = schema or got
             files += 1
             nbytes += os.path.getsize(fpath)
     if not files:
         raise ValueError(f"snapshot version {vdir} has no data files")
-    partitions = [T.StructField("rib", T.StringType()),
-                  T.StructField("ts_date", T.DateType())]
-    return T.StructType(schema.fields + partitions), files, nbytes
+    return files, nbytes
 
 
 def _copy(spark: SparkSession, src: str, dst: str) -> None:

@@ -1,4 +1,4 @@
-"""LLM-data-pipeline operators: dedup, similarity, text analysis."""
+"""LLM-data-pipeline operators: dedup, text."""
 
 from __future__ import annotations
 
@@ -7,7 +7,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from bgpexplorer_spark.operators import dedup, similarity, text
+from bgpexplorer_spark.operators import dedup, text
 
 DOCS = [
     (0, "the quick brown fox jumps over the lazy dog"),
@@ -151,49 +151,6 @@ def test_langid(spark):
     out = {r.id: r.lang for r in df.select("id", text.langid(F.col("text")).alias("lang")).collect()}
     assert out[1] == "en" and out[2] == "de" and out[3] == "fr" and out[4] == "und"
 
-def test_cosine_topk(spark):
-    rows = [
-        (0, [1.0, 0.0, 0.0]),
-        (1, [0.9, 0.1, 0.0]),
-        (2, [0.0, 1.0, 0.0]),
-        (3, [-1.0, 0.0, 0.0]),
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    top = similarity.cosine_topk(df, [1.0, 0.0, 0.0], k=2).collect()
-    assert [r.vec_id for r in top] == [0, 1]
-    assert top[0].cos_sim == 1.0
-
-def test_ann_topk_and_neardup(spark):
-    import random
-
-    random.seed(7)
-    base = [random.uniform(-1, 1) for _ in range(64)]
-    near = [x + random.uniform(-0.01, 0.01) for x in base]
-    rows = [(0, base), (1, near)] + [
-        (i, [random.uniform(-1, 1) for _ in range(64)]) for i in range(2, 40)
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    top = similarity.ann_topk(df, base, k=2).collect()
-    assert [r.vec_id for r in top][:2] == [0, 1]
-    pairs = similarity.embedding_neardup_pairs(df, threshold=0.98).collect()
-    assert any((r.id_a, r.id_b) == (0, 1) for r in pairs)
-
-def test_ivf_assign_and_topk(spark):
-    # two clean clusters along axes 0 and 1; ids 0/1 double as centroids
-    rows = [
-        (0, [1.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0]),
-        (2, [0.9, 0.1, 0.0]), (3, [0.8, 0.0, 0.1]),
-        (4, [0.1, 0.9, 0.0]), (5, [0.0, 0.8, 0.2]),
-    ]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    cents = similarity.ivf_centroids(emb, k=2)
-    assigned = {r.vec_id: r.cid for r in similarity.ivf_assign(emb, cents).collect()}
-    assert assigned == {0: 0, 1: 1, 2: 0, 3: 0, 4: 1, 5: 1}
-
-    # query near axis 0 with nprobe=1 must only see cluster 0
-    got = similarity.ivf_topk(emb, [1.0, 0.05, 0.0], k=10, nprobe=1, n_centroids=2).collect()
-    assert [r.vec_id for r in got] == [0, 2, 3]
-    assert all(r.cos_sim > 0.9 for r in got)
 
 def test_connected_components(spark):
     # chain 1-2-3 (diameter 2, forces >1 propagation round), pair 10-11,
@@ -433,47 +390,6 @@ def test_rolling_fingerprint_order_sensitive(docs):
     assert fp[0] != fp[3]
 
 
-def test_ivf_refine_improves_quantizer(spark):
-    import random
-
-    random.seed(3)
-    # three well-separated gaussian blobs in 8-d
-    rows = []
-    for i in range(90):
-        c = i % 3
-        base = [0.0] * 8
-        base[c] = 5.0
-        rows.append((i, [base[d] + random.gauss(0, 0.3) for d in range(8)]))
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    c0 = similarity.ivf_centroids(emb, 3)
-
-    def avg_best(cents):
-        lits = [
-            F.array(*[F.lit(float(x)) for x in r["cvec"]]) for r in cents.collect()
-        ]
-        v = emb.select(F.col("embedding").cast("array<double>").alias("_v"))
-        best = F.greatest(*[similarity.cosine(F.col("_v"), c) for c in lits])
-        return v.select(F.avg(best)).first()[0]
-
-    c2 = similarity.ivf_refine(emb, c0, iters=2)
-    assert avg_best(c2) > avg_best(c0)  # Lloyd must not make the quantizer worse
-    assert c2.count() == 3
-
-
-def test_ivf_refine_keeps_empty_cluster_centroid(spark):
-    # a far-away centroid that attracts nothing must survive unchanged
-    emb = spark.createDataFrame(
-        [(0, [1.0, 0.0]), (1, [0.9, 0.1]), (2, [0.8, 0.2])],
-        "vec_id long, embedding array<double>",
-    )
-    cents = spark.createDataFrame(
-        [(0, [1.0, 0.0]), (99, [-1.0, 0.0])], "cid long, cvec array<double>"
-    )
-    out = {r.cid: r.cvec for r in similarity.ivf_refine(emb, cents, iters=1).collect()}
-    assert out[99] == [-1.0, 0.0]  # empty cluster kept its centroid
-    assert out[0] != [1.0, 0.0]  # populated cluster moved to the mean
-
-
 def test_ngram_containment_asymmetric(spark):
     # doc 1 is a strict prefix of doc 0: containment 1.0, jaccard well below
     long = "a b c d e f g h i j k l m n o p"
@@ -580,30 +496,6 @@ def test_charlm_nll_model_equivalence(spark):
     worst = -math.log(1 / (sum(cnt2.values()) + len(cnt2)))
     assert scored[3] == round(worst, 4)
 
-def test_semantic_dedup_groups(spark):
-    """SemDeDup: items sharing a cluster cell with cosine >= threshold
-    form transitive duplicate groups; the min-id member is kept; items
-    near a centroid but below threshold stay their own group."""
-    rows = [
-        (0, [1.0, 0.0, 0.0, 0.0]),    # centroid x
-        (1, [0.0, 1.0, 0.0, 0.0]),    # centroid y
-        (2, [0.0, 0.0, 1.0, 0.0]),    # centroid z
-        (3, [0.99, 0.05, 0.0, 0.0]),  # dup of 0 (and of 4)
-        (4, [0.98, 0.08, 0.0, 0.0]),  # chain: {0, 3, 4} one group
-        (5, [0.0, 0.1, 0.99, 0.0]),   # dup of 2 -> {2, 5}
-        (6, [0.5, 0.5, 0.5, 0.5]),    # in some cell, no dup
-    ]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    got = sorted(
-        (r.vec_id, r.component, r.is_kept)
-        for r in similarity.semantic_dedup(
-            emb, threshold=0.95, n_clusters=3
-        ).collect()
-    )
-    assert got == [
-        (0, 0, True), (1, 1, True), (2, 2, True), (3, 0, False),
-        (4, 0, False), (5, 2, False), (6, 6, True),
-    ]
 
 def test_duplicate_span_stats(spark):
     """ExactSubstr signal: an 8-token window shared by two docs marks one
@@ -825,150 +717,6 @@ def test_bm25_plan_is_takeordered(spark):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
-def test_pq_encode_and_adc_hand_checked(spark):
-    """Codebook entries encode to themselves (distance 0 per subspace);
-    a vector near entry 1 in both subspaces gets code [1, 1]; ADC to a
-    query equal to entry 0 ranks entry 0 first."""
-    rows = [
-        (0, [0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0]),
-        (1, [1.0, 1.0, 1.0, 1.0, 1.0, 1.0, 1.0, 1.0]),
-        (2, [2.0, 2.0, 2.0, 2.0, 2.0, 2.0, 2.0, 2.0]),
-        (3, [3.0, 3.0, 3.0, 3.0, 3.0, 3.0, 3.0, 3.0]),
-        (10, [1.1, 0.9, 1.0, 1.0, 0.8, 1.2, 1.0, 1.0]),
-        (11, [2.9, 3.1, 3.0, 3.0, 3.0, 3.0, 2.8, 3.2]),
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    cb = similarity.pq_codebooks(df, m=2, codes=4, dim=8)
-    enc = {r.vec_id: list(r.codes)
-           for r in similarity.pq_encode(df, cb, m=2, dim=8).collect()}
-    assert enc[0] == [0, 0] and enc[3] == [3, 3]
-    assert enc[10] == [1, 1] and enc[11] == [3, 3]
-
-    out = similarity.pq_topk(df, [0.0] * 8, k=3, m=2, codes=4, dim=8).collect()
-    assert out[0].vec_id == 0 and out[0].approx_dist == 0.0
-    # 10 quantizes to entry 1 -> its ADC distance equals entry 1's
-    ids = [r.vec_id for r in out]
-    assert ids[1:] == [1, 10]
-
-
-def test_pq_search_plan_is_projection_over_codes(spark):
-    df = spark.createDataFrame(
-        [(i, [float(i)] * 8) for i in range(6)],
-        "vec_id long, embedding array<float>",
-    )
-    cb = similarity.pq_codebooks(df, m=2, codes=4, dim=8)
-    enc = similarity.pq_encode(df, cb, m=2, dim=8)
-    plan = similarity.pq_topk(
-        df, [0.0] * 8, k=3, m=2, codes=4, dim=8, encoded=enc
-    )._jdf.queryExecution().executedPlan().toString()
-    # with a persisted code table the query is LUT projection + top-k:
-    # no join, no python, no global sort
-    assert "Join" not in plan and "CartesianProduct" not in plan
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-    assert "TakeOrderedAndProject" in plan
-
-
-def test_ivfpq_only_scores_probed_cells(spark):
-    """IVF-PQ: candidates outside the probed coarse cells never appear,
-    however close their codes would rank."""
-    rows = [(i, [float(i % 4) * 10 + j * 0.01 for j in range(8)])
-            for i in range(16)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    out = similarity.ivfpq_topk(
-        df, rows[2][1], k=16, nprobe=1, n_centroids=4, m=2, codes=4, dim=8,
-    ).collect()
-    # centroid set = vecs 0..3 (values 0/10/20/30); query = vec 2's
-    # pattern (20.x) -> probe lands on cid 2; only i%4==2 vectors rank
-    assert {r.vec_id for r in out} == {i for i in range(16) if i % 4 == 2}
-    assert out[0].vec_id == 2 and out[0].approx_dist == 0.0
-
-
-import pytest as _pytest2
-
-
-@_pytest2.mark.parametrize("inline_max", [1024, 1])  # literal vs broadcast
-def test_ivf_assign_paths_agree(spark, inline_max):
-    """The literal-inline and broadcast-codebook assignment paths must
-    produce identical (vec_id, cid) — same max-cosine argmax, same
-    highest-cid tie-break (VERDICT r05 item 8)."""
-    import random
-
-    rng = random.Random(7)
-    rows = [
-        (i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(60)
-    ]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    cents = similarity.ivf_centroids(emb, k=6)
-    got = {
-        r.vec_id: r.cid
-        for r in similarity.ivf_assign(
-            emb, cents, inline_max=inline_max
-        ).collect()
-    }
-    want = {
-        r.vec_id: r.cid
-        for r in similarity.ivf_assign(emb, cents, inline_max=1024).collect()
-    }
-    assert got == want
-    # keep_vec variant also agrees and carries the vector through
-    kv = similarity.ivf_assign(
-        emb, cents, keep_vec=True, inline_max=inline_max
-    ).collect()
-    assert {r.vec_id: r.cid for r in kv} == want
-    assert all(len(r.embedding) == 8 for r in kv)
-
-
-@_pytest2.mark.parametrize("inline_max", [1024, 1])
-def test_pq_paths_agree(spark, inline_max):
-    """pq_encode and pq_topk: literal vs broadcast codebook/LUT paths
-    produce identical codes and identical ADC rankings."""
-    import random
-
-    rng = random.Random(11)
-    rows = [
-        (i, [rng.uniform(-1, 1) for _ in range(16)]) for i in range(50)
-    ]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    cb = similarity.pq_codebooks(emb, m=4, codes=4, dim=16)
-    enc_a = {tuple([r.vec_id] + list(r.codes)) for r in
-             similarity.pq_encode(emb, cb, m=4, dim=16,
-                                  inline_max=inline_max).collect()}
-    enc_b = {tuple([r.vec_id] + list(r.codes)) for r in
-             similarity.pq_encode(emb, cb, m=4, dim=16,
-                                  inline_max=1024).collect()}
-    assert enc_a == enc_b
-    q = [rng.uniform(-1, 1) for _ in range(16)]
-    top_a = [(r.vec_id, r.approx_dist) for r in
-             similarity.pq_topk(emb, q, k=10, m=4, codes=4, dim=16,
-                                inline_max=inline_max).collect()]
-    top_b = [(r.vec_id, r.approx_dist) for r in
-             similarity.pq_topk(emb, q, k=10, m=4, codes=4, dim=16,
-                                inline_max=1024).collect()]
-    assert top_a == top_b
-
-
-def test_huge_codebook_no_literal_blowup(spark):
-    """At k=16384 centroids the assignment plan must stay constant-size
-    (broadcast codebook), not inline 16k vectors as literals."""
-    emb = spark.range(200).select(
-        F.col("id").alias("vec_id"),
-        F.array(*[(F.col("id") * (i + 1) % 97 + 1).cast("double")
-                  for i in range(8)]).alias("embedding"),
-    )
-    cents = spark.range(16384).select(
-        F.col("id").alias("cid"),
-        F.array(*[(F.col("id") * (i + 3) % 89 + 1).cast("double")
-                  for i in range(8)]).alias("cvec"),
-    )
-    out = similarity.ivf_assign(emb, cents)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert len(plan) < 100_000, len(plan)
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
-    # and it actually runs: every vector gets some centroid
-    assert out.count() == 200
-    assert out.filter(F.col("cid") < 0).count() == 0
-
-
 def test_normalize_text_rules(spark):
     """Each rule: control chars stripped (tab/newline survive as
     whitespace), space/tab runs collapse, 3+ newlines squeeze to a
@@ -1050,63 +798,6 @@ def test_hashed_classifier_margin_hand_computed(spark):
     assert out[2] == 0.25
 
 
-def test_knn_graph_hand_computed(spark):
-    """Orthogonal-ish vectors: a and its scaled copy share a bucket and
-    rank each other first; the lone-bucket vector emits no edges; rank
-    respects round-before-order ties broken by dst."""
-    import numpy as np
-
-    dim = 64
-    base = np.zeros(dim); base[0] = 1.0
-    near = base * 2.0                      # cosine 1.0 with base
-    mid = np.zeros(dim); mid[0] = 1.0; mid[1] = 1.0   # cos ~0.7071
-    rows = [
-        (1, base.tolist(), 0), (2, near.tolist(), 0), (3, mid.tolist(), 0),
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>, label int")
-    out = similarity.knn_graph(df, k=2, n_planes=2, dim=dim).collect()
-    got = {(r.src, r.rank): (r.dst, r.cos_sim) for r in out}
-    # all three share sign pattern → same bucket for 2 planes? compute:
-    # plane coefficients only involve dims 0/1 here; base/near project
-    # identically, so they MUST be co-bucketed and mutual rank-1 at cos 1.0
-    assert got[(1, 1)] == (2, 1.0)
-    assert got[(2, 1)] == (1, 1.0)
-    if (3, 1) in got:  # mid co-bucketed → its nearest is either, cos 0.7071
-        assert got[(3, 1)][1] == 0.7071
-
-
-def test_prototype_prune_hand_computed(spark):
-    """Two 2-member clusters, keep_frac=0.5 → exactly the hardest
-    (lowest-cosine) member of each survives; hard_first=False flips the
-    keeper to the prototype itself."""
-    import numpy as np
-
-    dim = 64
-    e0 = np.zeros(dim); e0[0] = 1.0
-    e1 = np.zeros(dim); e1[1] = 1.0
-    m0 = e0 * 0.9; m0[1] = 0.2      # near c0, cos < 1
-    m1 = e1 * 0.9; m1[0] = 0.3      # near c1, cos < 1
-    rows = [(0, e0.tolist(), 0), (1, e1.tolist(), 0),
-            (2, m0.tolist(), 0), (3, m1.tolist(), 0)]
-    df = spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>, label int"
-    )
-    cents = similarity.ivf_centroids(df, 2)
-    out = {r.vec_id: r for r in
-           similarity.prototype_prune(df, cents, keep_frac=0.5).collect()}
-    assert {v: out[v].cid for v in out} == {0: 0, 1: 1, 2: 0, 3: 1}
-    assert out[0].proto_score == 1.0 and out[1].proto_score == 1.0
-    # hardest-first: the imperfect member ranks 1 and is kept
-    assert (out[2].rank, out[2].kept) == (1, True)
-    assert (out[0].rank, out[0].kept) == (2, False)
-    assert (out[3].kept, out[1].kept) == (True, False)
-
-    easy = {r.vec_id: r.kept for r in
-            similarity.prototype_prune(
-                df, cents, keep_frac=0.5, hard_first=False).collect()}
-    assert easy == {0: True, 1: True, 2: False, 3: False}
-
-
 def test_bpe_pair_counts_hand_computed(spark):
     """'aab aab ab' → word table {aab:2, ab:1}; pairs: (a,a)×2,
     (a,b)×3; single-char words contribute nothing."""
@@ -1181,150 +872,7 @@ def test_cluster_size_histogram_hand_computed(spark):
     assert got == {3: (1, 3), 2: (1, 2), 1: (1, 1)}
 
 
-def test_cosine_topk_gemm_matches_hof(spark):
-    """The GEMM exact path returns exactly what the HOF baseline
-    returns (same rounding, same tie order), including with a zero
-    vector in the corpus (NULL cosine → excluded) and k larger than any
-    single batch's survivors."""
-    import random
-
-    rng = random.Random(7)
-    rows = [(i, [rng.uniform(-1, 1) for _ in range(64)]) for i in range(200)]
-    rows.append((201, rows[5][1]))      # exact duplicate of id 5
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    q = rows[5][1]
-    want = [(r.vec_id, r.cos_sim)
-            for r in similarity.cosine_topk(emb, q, k=12).collect()]
-    got = [(r.vec_id, r.cos_sim)
-           for r in similarity.cosine_topk_gemm(emb, q, k=12).collect()]
-    assert got == want
-    assert got[0][0] == 5 and got[1][0] == 201  # dup ties break by id
-
-    # zero-norm vectors: the GEMM path excludes them (the HOF baseline
-    # raises under ANSI division-by-zero, so no comparison there)
-    with_zero = emb.unionByName(spark.createDataFrame(
-        [(200, [0.0] * 64)], "vec_id long, embedding array<double>"
-    ))
-    got_z = [(r.vec_id, r.cos_sim)
-             for r in similarity.cosine_topk_gemm(with_zero, q, k=12).collect()]
-    assert got_z == want
-
-
 # --- MIPS + Gram/PCA (r8) ----------------------------------------------------
-
-def _rand_emb(spark, n=60, dim=8, seed=7):
-    import random
-
-    rnd = random.Random(seed)
-    rows = [(i, [rnd.uniform(-2, 2) for _ in range(dim)]) for i in range(n)]
-    return rows, spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>"
-    )
-
-
-def test_mips_topk_matches_numpy(spark):
-    import numpy as np
-
-    rows, df = _rand_emb(spark)
-    q = rows[0][1]
-    got = [r.vec_id for r in similarity.mips_topk(df, q, k=5).collect()]
-    m = np.array([v for _, v in rows])
-    ips = np.round(m @ np.array(q), 4)
-    want = sorted(range(len(rows)), key=lambda i: (-ips[i], i))[:5]
-    assert got == want
-
-
-def test_mips_augment_reduces_to_cosine(spark):
-    """Cosine order on the norm-augmented space must equal inner-product
-    order on the original space (exact columns, no rounding)."""
-    rows, df = _rand_emb(spark, n=40)
-    q = rows[3][1]
-    aug, m = similarity.mips_augment(df)
-    qa = similarity.mips_query_augment(q)
-    qcol = F.array(*[F.lit(float(x)) for x in qa])
-    by_cos = [
-        r.vec_id
-        for r in aug.select(
-            "vec_id",
-            similarity.cosine(F.col("embedding"), qcol).alias("c"),
-        ).orderBy(F.col("c").desc(), "vec_id").collect()
-    ]
-    by_ip = [
-        r.vec_id
-        for r in df.select(
-            "vec_id",
-            similarity.dot(F.col("embedding"),
-                           F.array(*[F.lit(float(x)) for x in q])).alias("d"),
-        ).orderBy(F.col("d").desc(), "vec_id").collect()
-    ]
-    assert by_cos == by_ip
-    # augmented vectors all have norm M
-    import numpy as np
-
-    for r in aug.collect():
-        assert math.isclose(np.linalg.norm(r.embedding), m, rel_tol=1e-9)
-
-
-def test_gram_matrix_matches_numpy(spark):
-    import numpy as np
-
-    rows, df = _rand_emb(spark, n=50, dim=6)
-    m = np.array([v for _, v in rows])
-    for center in (False, True):
-        x = m - m.mean(axis=0) if center else m
-        want = x.T @ x
-        got = np.zeros((6, 6))
-        for r in similarity.gram_matrix(df, dim=6, center=center).collect():
-            got[r.i, r.j] = r.val
-            got[r.j, r.i] = r.val
-        assert np.allclose(got, want, atol=1e-8), center
-
-
-def test_pca_fit_project_properties(spark):
-    import numpy as np
-
-    rows, df = _rand_emb(spark, n=80, dim=6, seed=11)
-    model = similarity.pca_fit(df, n_components=3, dim=6)
-    comps = np.array(model["components"])
-    ev = model["explained_variance"]
-    # orthonormal rows, descending variance
-    assert np.allclose(comps @ comps.T, np.eye(3), atol=1e-9)
-    assert ev[0] >= ev[1] >= ev[2] > 0
-    # matches numpy eigh on the sample covariance
-    m = np.array([v for _, v in rows])
-    cov = np.cov(m, rowvar=False, bias=True)
-    vals = np.sort(np.linalg.eigvalsh(cov))[::-1]
-    assert np.allclose(ev, vals[:3], atol=1e-8)
-
-    proj = similarity.pca_project(df, model)
-    p = np.array([r.pca for r in proj.collect()])
-    # projected covariance is diag(explained_variance)
-    pcov = np.cov(p, rowvar=False, bias=True)
-    assert np.allclose(pcov, np.diag(ev), atol=1e-8)
-    assert np.allclose(p.mean(axis=0), 0, atol=1e-9)
-    # whitened projection has identity covariance
-    pw = np.array([
-        r.pca for r in similarity.pca_project(df, model, whiten=True).collect()
-    ])
-    assert np.allclose(np.cov(pw, rowvar=False, bias=True), np.eye(3), atol=1e-7)
-
-
-def test_pca_fit_survives_large_mean_offset(spark):
-    """The centered-gram form keeps precision when the embedding mean
-    dwarfs the variance (g/n − μμᵀ would cancel the variance away)."""
-    import numpy as np
-    import random
-
-    rnd = random.Random(3)
-    rows = [
-        (i, [1e6 + rnd.uniform(-1, 1) for _ in range(4)]) for i in range(60)
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    model = similarity.pca_fit(df, n_components=2, dim=4)
-    m = np.array([v for _, v in rows])
-    want = np.sort(np.linalg.eigvalsh(np.cov(m, rowvar=False, bias=True)))[::-1]
-    got = model["explained_variance"]
-    assert np.allclose(got, want[:2], rtol=1e-6)
 
 
 def test_paragraph_dedup_null_id_and_empty_doc(spark):
@@ -1504,33 +1052,6 @@ def test_bpe_train_encode_composition(spark):
         assert "".join(out[i]) == want.replace(" ", ""), (i, out[i])
 
 
-def test_knn_density_matches_brute_force(spark):
-    """knn_density = mean of the knn_graph edge cosines per source,
-    half-up on the 1e-4 grid — verified against a NumPy brute-force
-    recomputation restricted to the same LSH buckets."""
-    import numpy as np
-
-    rng = np.random.default_rng(7)
-    vecs = rng.normal(size=(40, 64)).astype(float)
-    emb = spark.createDataFrame(
-        [(i, [float(x) for x in vecs[i]]) for i in range(40)],
-        "vec_id long, embedding array<double>",
-    )
-    g = {(r.src, r.dst): r.cos_sim
-         for r in similarity.knn_graph(emb, k=3, n_planes=4).collect()}
-    out = {r.vec_id: (r.k_found, r.density)
-           for r in similarity.knn_density(emb, k=3, n_planes=4).collect()}
-    assert out  # buckets of >1 exist at 4 planes / 40 vectors
-    by_src: dict[int, list[float]] = {}
-    for (s, _d), c in g.items():
-        by_src.setdefault(s, []).append(c)
-    assert set(out) == set(by_src)
-    for s, sims in by_src.items():
-        s_e4 = sum(round(c * 10000) for c in sims)
-        want = math.floor((10.0 * s_e4 / len(sims) + 5.0) / 10.0) / 10000.0
-        assert out[s] == (len(sims), want), s
-
-
 def test_novelty_scores_hand_computed(spark):
     """novelty = fraction of a doc's distinct trigrams first seen in it:
     originals score 1, exact dups 0, partial overlap in between;
@@ -1637,126 +1158,6 @@ def test_hyperplane_family_has_no_aliased_planes():
         assert any(c > 0 for c in pl) and any(c < 0 for c in pl), j
 
 
-def test_knn_density_complete_scores_residue(spark):
-    """knn_density_complete covers EVERY vector exactly once: graph-scored
-    rows are bit-identical to knn_density, residue rows are exactly the
-    no-edge set, and each residue score equals a NumPy brute-force top-k
-    against the n_probe lowest-id vectors (round-half-up 4-decimal
-    cosine, exact-integer half-up mean — the engine's stated grid)."""
-    from decimal import ROUND_HALF_UP, Decimal
-
-    import numpy as np
-
-    rng = np.random.default_rng(11)
-    vecs = rng.normal(size=(40, 64))
-    emb = spark.createDataFrame(
-        [(i, [float(x) for x in vecs[i]]) for i in range(40)],
-        "vec_id long, embedding array<double>",
-    )
-    kw = dict(k=3, n_planes=6, max_bucket=4, approx_n=40)
-    dens = {r.vec_id: (r.k_found, r.density)
-            for r in similarity.knn_density(emb, **kw).collect()}
-    out = similarity.knn_density_complete(emb, n_probe=8, **kw).collect()
-    assert sorted(r.vec_id for r in out) == list(range(40))
-    res = {r.vec_id: (r.k_found, r.density) for r in out if r.residue}
-    assert set(res) == set(range(40)) - set(dens)
-    assert res, "fixture must actually exercise the fallback"
-    assert {r.vec_id: (r.k_found, r.density)
-            for r in out if not r.residue} == dens
-
-    def cos4(a, b):
-        c = float(np.dot(a, b) / (np.linalg.norm(a) * np.linalg.norm(b)))
-        return float(Decimal(repr(c)).quantize(Decimal("0.0001"), ROUND_HALF_UP))
-
-    for rid, (kf, d) in res.items():
-        sims = sorted(
-            ((cos4(vecs[rid], vecs[p]), p) for p in range(8) if p != rid),
-            key=lambda t: (-t[0], t[1]),
-        )[:3]
-        e4 = sum(round(c * 10000) for c, _ in sims)
-        want = math.floor((10.0 * e4 / len(sims) + 5.0) / 10.0) / 10000.0
-        assert (kf, d) == (len(sims), want), rid
-
-
-def test_cluster_purity_hand_computed(spark):
-    """Two orthogonal clusters with a known label mix: purity is the
-    exact majority fraction on the 1e-4 grid; majority ties break to
-    the lowest label."""
-    import numpy as np
-
-    dim = 64
-    e0 = np.zeros(dim); e0[0] = 1.0
-    e1 = np.zeros(dim); e1[1] = 1.0
-    rows = [(0, e0.tolist(), 7), (1, e1.tolist(), 9)]
-    # 3 more near c0: labels 7,7,3 -> purity 3/4; 1 near c1 label 9 -> 2/2
-    for i, lab in [(2, 7), (3, 7), (4, 3)]:
-        v = e0 * 0.9; v[1] = 0.1
-        rows.append((i, v.tolist(), lab))
-    v = e1 * 0.9; v[0] = 0.1
-    rows.append((5, v.tolist(), 9))
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>, label int")
-    out = {r.cid: r for r in similarity.cluster_purity(
-        df, similarity.ivf_centroids(df, 2)).collect()}
-    assert (out[0].n, out[0].majority_label, out[0].n_majority, out[0].purity) == (4, 7, 3, 0.75)
-    assert (out[1].n, out[1].majority_label, out[1].n_majority, out[1].purity) == (2, 9, 2, 1.0)
-
-
-def test_pq_distortion_zero_for_codebook_vectors(spark):
-    """Vectors that ARE codebook entries quantize losslessly (mse 0);
-    adding one vector at a known L2² from every entry raises each
-    subspace's mean by exactly dist/n on the half-up grid."""
-    import numpy as np
-
-    dim, m, codes = 64, 4, 2
-    rng = np.random.default_rng(5)
-    base = rng.normal(size=(codes, dim))
-    rows = [(i, base[i].tolist()) for i in range(codes)]
-    df0 = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    out0 = {r.sub: (r.n, r.mse) for r in
-            similarity.pq_distortion(df0, m=m, codes=codes, dim=dim).collect()}
-    assert out0 == {s: (codes, 0.0) for s in range(m)}
-
-    off = base[0].copy(); off[0] += 2.0  # +4.0 L2^2 in subspace 0 only
-    df1 = spark.createDataFrame(rows + [(2, off.tolist())],
-                                "vec_id long, embedding array<double>")
-    out1 = {r.sub: (r.n, r.mse) for r in
-            similarity.pq_distortion(df1, m=m, codes=codes, dim=dim).collect()}
-    assert out1[0] == (3, round(4.0 / 3, 4))
-    assert all(out1[s] == (3, 0.0) for s in range(1, m))
-
-
-def test_rp_project_matches_numpy_replay(spark):
-    """rp_project equals the NumPy replay of the sign family and
-    √k-normalization, rounded half-up to 4 decimals; distinct input
-    vectors land on distinct projections (the sign rows are distinct
-    by the guarded family)."""
-    from decimal import ROUND_HALF_UP, Decimal
-
-    import numpy as np
-
-    k, dim = 16, 64
-    rng = np.random.default_rng(3)
-    vecs = rng.normal(size=(20, dim))
-    df = spark.createDataFrame(
-        [(i, vecs[i].tolist()) for i in range(20)],
-        "vec_id long, embedding array<double>",
-    )
-    out = {r.vec_id: r.proj for r in similarity.rp_project(df, k=k, dim=dim).collect()}
-    signs = np.array([
-        [1.0 if ((i + 64 * j) * 2654435761 % 97 - 48) >= 0 else -1.0
-         for i in range(dim)]
-        for j in range(k)
-    ])
-    for vid in range(20):
-        want = (signs @ vecs[vid]) / np.sqrt(k)
-        got = out[vid]
-        for j in range(k):
-            w = float(Decimal(repr(float(want[j]))).quantize(
-                Decimal("0.0001"), ROUND_HALF_UP))
-            assert got[j] == w, (vid, j)
-    assert len({tuple(p) for p in out.values()}) == 20
-
-
 def test_lexical_diversity_hand_computed(spark):
     """'a b a c' → 4 tokens, 3 types, 2 hapax (b, c), ttr 0.75,
     hapax_frac 0.6667; null/empty text scores zeros."""
@@ -1770,51 +1171,6 @@ def test_lexical_diversity_hand_computed(spark):
     assert out[1] == (0, 0, 0, 0.0, 0.0)
     assert out[2] == (0, 0, 0, 0.0, 0.0)
     assert out[3] == (3, 1, 0, round(1 / 3 + 1e-9, 4), 0.0)
-
-
-def test_sign_signature_and_hamming_family(spark):
-    """sign_signature equals the bit-by-bit Python replay (exact BIGINT
-    powers — a double accumulator would lose bits past 2^53, so check a
-    vector with high bits set); sign_hamming_topk ranks by
-    xor-popcount with id ties; sign_neardup_pairs (banded, exact
-    coverage) equals brute-force hamming ≤ h on vectors built with
-    known small flips."""
-    import numpy as np
-
-    rng = np.random.default_rng(9)
-    base = rng.normal(size=64)
-    base[58] = abs(base[58])  # ensure a high bit is SET (2^58 > 2^53)
-    rows = [(0, base.tolist())]
-    # 1-2 sign flips from base: guaranteed hamming<=3 partners
-    for i, flips in [(1, [3]), (2, [10, 40]), (3, [5, 20, 59])]:
-        v = base.copy()
-        for f in flips:
-            v[f] = -v[f] if v[f] != 0 else -1.0
-        rows.append((i, v.tolist()))
-    far = -base  # hamming ~60 from base
-    rows.append((4, far.tolist()))
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-
-    sig = {r.vec_id: r.simhash for r in similarity.sign_signature(df).collect()}
-    for vid, vec in rows:
-        want = sum(1 << i for i in range(60) if vec[i] >= 0)
-        assert sig[vid] == want, vid
-    assert sig[0] >> 53  # the high-bit regime is actually exercised
-
-    got = [(r.vec_id, r.hamming)
-           for r in similarity.sign_hamming_topk(df, rows[0][1], k=5).collect()]
-    assert got[0] == (0, 0) and got[1] == (1, 1)
-    assert [v for v, _ in got[:4]] == [0, 1, 2, 3]
-
-    pairs = {(r.id_a, r.id_b): r.hamming
-             for r in similarity.sign_neardup_pairs(df, max_hamming=3).collect()}
-    brute = {}
-    for i in range(len(rows)):
-        for j in range(i + 1, len(rows)):
-            h = bin(sig[i] ^ sig[j]).count("1")
-            if h <= 3:
-                brute[(i, j)] = h
-    assert pairs == brute and (0, 1) in pairs
 
 
 def test_canonical_by_quality_hand_computed(spark):
@@ -1901,98 +1257,6 @@ def test_fim_split_roundtrip_and_python_replay(spark):
     assert n_fim > 0
 
 
-def _round4_half_up(c: float) -> float:
-    """F.round semantics (HALF_UP, away from zero) on the 1e-4 grid."""
-    s = -1.0 if c < 0 else 1.0
-    return s * math.floor(abs(c) * 10000.0 + 0.5) / 10000.0
-
-
-def test_ann_recall_matches_numpy(spark):
-    """ann_recall's per-query hit counts equal a NumPy replication of
-    BOTH retrieval paths (exact: round-4 cosine desc then id; IVF:
-    assign ties to highest cid, probe ties to lowest cid)."""
-    import numpy as np
-
-    rng = np.random.default_rng(11)
-    n, dim, k, nprobe, n_cent, n_q = 60, 64, 5, 2, 8, 4
-    vecs = rng.normal(size=(n, dim))
-    emb = spark.createDataFrame(
-        [(i, [float(x) for x in vecs[i]]) for i in range(n)],
-        "vec_id long, embedding array<double>",
-    )
-    queries = [(i, [float(x) for x in vecs[i]]) for i in range(n_q)]
-    out = {
-        r.qid: (r.hits, r.k, r.recall)
-        for r in similarity.ann_recall(
-            emb, queries, k=k, nprobe=nprobe, n_centroids=n_cent
-        ).collect()
-    }
-
-    def cos(a, b):
-        return float(np.dot(a, b) / (np.linalg.norm(a) * np.linalg.norm(b)))
-
-    for qid in range(n_q):
-        q = vecs[qid]
-        exact = sorted(
-            range(n), key=lambda i: (-_round4_half_up(cos(vecs[i], q)), i)
-        )[:k]
-        # assignment: max (cos, cid) — ties to HIGHER cid
-        assign = {
-            i: max(range(n_cent), key=lambda c: (cos(vecs[i], vecs[c]), c))
-            for i in range(n)
-        }
-        # probes: cos desc, cid ASC on ties
-        probes = sorted(range(n_cent), key=lambda c: (-cos(vecs[c], q), c))[:nprobe]
-        cand = [i for i in range(n) if assign[i] in probes]
-        ann = sorted(
-            cand, key=lambda i: (-_round4_half_up(cos(vecs[i], q)), i)
-        )[:k]
-        hits = len(set(exact) & set(ann))
-        assert out[qid] == (hits, k, round(hits / k, 4)), qid
-    # sanity: the sample must actually exercise an imperfect index
-    assert any(h < k for h, _, _ in out.values())
-    assert any(h > 0 for h, _, _ in out.values())
-
-
-def test_matryoshka_overlap_numpy_and_identity(spark):
-    """matryoshka_overlap at dims=64 is exactly 1.0 for every query
-    (truncation to full width is the identity); at dims=8 the hit
-    counts match a NumPy replication of both rankings."""
-    import numpy as np
-
-    rng = np.random.default_rng(5)
-    n, dim, k, n_q = 50, 64, 6, 3
-    vecs = rng.normal(size=(n, dim))
-    emb = spark.createDataFrame(
-        [(i, [float(x) for x in vecs[i]]) for i in range(n)],
-        "vec_id long, embedding array<double>",
-    )
-    queries = [(i, [float(x) for x in vecs[i]]) for i in range(n_q)]
-
-    full = similarity.matryoshka_overlap(emb, queries, k=k, dims=dim).collect()
-    assert {(r.dims, r.overlap) for r in full} == {(dim, 1.0)}
-
-    out = {
-        r.qid: r.hits
-        for r in similarity.matryoshka_overlap(emb, queries, k=k, dims=8).collect()
-    }
-
-    def cos(a, b):
-        return float(np.dot(a, b) / (np.linalg.norm(a) * np.linalg.norm(b)))
-
-    for qid in range(n_q):
-        q = vecs[qid]
-        fk = sorted(
-            range(n), key=lambda i: (-_round4_half_up(cos(vecs[i], q)), i)
-        )[:k]
-        tk = sorted(
-            range(n),
-            key=lambda i: (-_round4_half_up(cos(vecs[i][:8], q[:8])), i),
-        )[:k]
-        assert out[qid] == len(set(fk) & set(tk)), qid
-    assert any(h < k for h in out.values())  # truncation must cost something
-
-
 def test_cross_source_report_hand_computed(spark):
     """cross_source_report: canonicalized source pairs, exact counts,
     and the integer-arithmetic mean jaccard."""
@@ -2075,58 +1339,6 @@ def test_bigram_nll_cross_corpus_unseen(spark):
     assert out[11][1] > out[10][1]
 
 
-def test_gemm_multi_equals_per_query_topk(spark):
-    """cosine_topk_gemm_multi returns exactly the per-query cosine_topk
-    result for every query (rounding, ties, zero-norm exclusion), and
-    the use_gemm forms of ann_recall / matryoshka_overlap equal their
-    HOF forms row-for-row."""
-    import numpy as np
-
-    rng = np.random.default_rng(17)
-    n, dim, k = 70, 64, 7
-    vecs = rng.normal(size=(n, dim))
-    vecs[33] = 0.0  # zero-norm: excluded by the GEMM path contract
-    emb = spark.createDataFrame(
-        [(i, [float(x) for x in vecs[i]]) for i in range(n)],
-        "vec_id long, embedding array<double>",
-    )
-    queries = [(i, [float(x) for x in vecs[i]]) for i in range(4)]
-
-    multi = similarity.cosine_topk_gemm_multi(emb, queries, k=k)
-    got = {(r.qid, r.vec_id, r.cos_sim) for r in multi.collect()}
-    want = set()
-    emb_nz = emb.filter(F.col("vec_id") != 33)
-    for qid, qv in queries:
-        for r in similarity.cosine_topk(emb_nz, qv, k=k).collect():
-            want.add((qid, r.vec_id, r.cos_sim))
-    assert got == want
-
-    # zero-norm-free frame for the composed forms: the HOF cosine inside
-    # ivf_assign raises under ANSI on zero vectors however the frame is
-    # pre-filtered (Catalyst merges the pushed filters and may evaluate
-    # the divide first) — the documented contract is that zero-norm
-    # vectors never reach the index builders
-    clean = emb.filter(F.col("vec_id") != 33)
-    clean = spark.createDataFrame(clean.collect(), clean.schema)
-    a1 = {tuple(r) for r in similarity.ann_recall(clean, queries, k=k).collect()}
-    a2 = {
-        tuple(r)
-        for r in similarity.ann_recall(clean, queries, k=k, use_gemm=True).collect()
-    }
-    assert a1 == a2
-    m1 = {
-        tuple(r)
-        for r in similarity.matryoshka_overlap(clean, queries, k=k, dims=8).collect()
-    }
-    m2 = {
-        tuple(r)
-        for r in similarity.matryoshka_overlap(
-            clean, queries, k=k, dims=8, use_gemm=True
-        ).collect()
-    }
-    assert m1 == m2
-
-
 def test_vocab_coverage_hand_computed(spark):
     """vocab_coverage with a tie exactly at the cutoff boundary: the
     lexicographically smaller term wins the last slot in both the
@@ -2142,34 +1354,6 @@ def test_vocab_coverage_hand_computed(spark):
     assert out[2] == (7, 11, round(7 / 11, 6))      # a + b (tie-break)
     assert out[3] == (10, 11, round(10 / 11, 6))    # a + b + c
     assert out[100] == (11, 11, 1.0)                # cutoff past vocab
-
-
-def test_recall_sweep_monotone_and_saturates(spark):
-    """ann_recall_sweep: recall is non-decreasing in nprobe for every
-    query (probing more cells can only add candidates), and at
-    nprobe = n_centroids the ANN side IS brute force — recall exactly
-    1.0 everywhere."""
-    import numpy as np
-
-    rng = np.random.default_rng(23)
-    vecs = rng.normal(size=(50, 64))
-    emb = spark.createDataFrame(
-        [(i, [float(x) for x in vecs[i]]) for i in range(50)],
-        "vec_id long, embedding array<double>",
-    )
-    queries = [(i, [float(x) for x in vecs[i]]) for i in range(4)]
-    out = similarity.ann_recall_sweep(
-        emb, queries, k=8, nprobes=[1, 2, 4, 8], n_centroids=8
-    ).collect()
-    by_q: dict[int, dict[int, float]] = {}
-    for r in out:
-        by_q.setdefault(r.qid, {})[r.nprobe] = r.recall
-    assert set(by_q) == {0, 1, 2, 3}
-    for qid, curve in by_q.items():
-        seq = [curve[np_] for np_ in (1, 2, 4, 8)]
-        assert all(a <= b for a, b in zip(seq, seq[1:])), (qid, seq)
-        assert seq[-1] == 1.0, (qid, seq)
-    assert any(curve[1] < 1.0 for curve in by_q.values())
 
 
 def test_minhash_calibration_hand_computed(spark):
@@ -2208,43 +1392,5 @@ def test_minhash_calibration_hand_computed(spark):
         assert r.mean_jaccard == round(sj / (len(js) * 10000.0), 4)
         assert r.mean_abs_err == round(se / (len(js) * 10000.0), 4)
         assert r.est_jaccard == round(ag / 16.0, 4)
-
-
-def test_embedding_drift_hand_computed(spark):
-    """embedding_drift with two constructed clusters: counts/shares per
-    cell; identical cell means give centroid_cos 1.0; a rotated B-side
-    cell mean gives cos < 1; a cell empty on one side emits NULL."""
-    import numpy as np
-
-    def vec(axis, eps=0.0, axis2=1):
-        v = np.zeros(64)
-        v[axis] = 1.0
-        v[axis2] += eps
-        return [float(x) for x in v]
-
-    # centroids: ids 0 (axis 0) and 1 (axis 1)
-    cents_rows = [(0, vec(0)), (1, vec(1))]
-    a_rows = cents_rows + [(2, vec(0)), (3, vec(1, 0.0, 2))]
-    b_rows = [(10, vec(0)), (11, vec(0)), (12, vec(1, 0.4, 2)), (13, vec(1, 0.4, 2))]
-    emb_a = spark.createDataFrame(a_rows, "vec_id long, embedding array<double>")
-    emb_b = spark.createDataFrame(b_rows, "vec_id long, embedding array<double>")
-    cents = similarity.ivf_centroids(emb_a, 2)
-    out = {r.cid: r for r in
-           similarity.embedding_drift(emb_a, emb_b, cents).collect()}
-    assert out[0].count_a == 2 and out[0].count_b == 2
-    assert out[1].count_a == 2 and out[1].count_b == 2
-    assert out[0].share_a == 0.5 and out[0].share_b == 0.5
-    # cell 0: identical means on both sides -> cosine exactly 1
-    assert out[0].centroid_cos == 1.0
-    # cell 1: B mean rotated toward axis 2 -> strictly below 1
-    assert out[1].centroid_cos < 1.0
-
-    # a side-empty cell: only A occupies axis-1 cell
-    b_only0 = spark.createDataFrame(
-        [(20, vec(0))], "vec_id long, embedding array<double>"
-    )
-    out2 = {r.cid: r for r in
-            similarity.embedding_drift(emb_a, b_only0, cents).collect()}
-    assert out2[1].count_b == 0 and out2[1].centroid_cos is None
 
 

@@ -29,7 +29,6 @@ ENTRY_POINTS = [
 # removed from this list together with its module
 KNOWN_UNREACHABLE = {
     "operators.dedup",
-    "operators.similarity",
     "operators.text",
     "operators.png",
     "operators.mp3",

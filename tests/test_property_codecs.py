@@ -174,22 +174,6 @@ def test_portable_hash_prefix_widths_and_independence():
     assert all(v >> 28 == w for v, w in zip(h60, h32))
 
 
-def test_pq_subspace_slices_tile_dim_exactly():
-    """The PQ subspace decomposition (similarity.pq_codebooks /
-    pq_encode: subspace s = slice(v, s·d+1, d), d = dim//m): the m
-    slices must tile [1, dim] with no overlap and no gap for every m
-    the engine's contract queries use — a misaligned slice would score
-    ADC distances against the wrong coordinates and the oracle (which
-    replays the same slicing) could never see it."""
-    for dim, m in [(64, 4), (64, 8), (64, 16), (48, 4)]:
-        d = dim // m
-        assert d * m == dim, (dim, m)
-        covered = []
-        for s in range(m):
-            covered.extend(range(s * d + 1, s * d + 1 + d))  # 1-based slice
-        assert covered == list(range(1, dim + 1)), (dim, m)
-
-
 def test_ivf_and_cluster_seed_sets_distinct():
     """Deterministic 'seed' sets (ivf_centroids / pq_codebooks /
     cluster_sample draw ids from vec_id < k): the construction is

@@ -1,4 +1,4 @@
-"""Property-based invariants for the text, dedup and similarity
+"""Property-based invariants for the text and dedup
 operators against independent pure-Python models: random corpora, any
 divergence is an operator bug."""
 
@@ -101,96 +101,6 @@ def test_c4_clean_matches_model(spark, docs):
         kept = [l for l in lines if keep(l)]
         assert got[i] == (len(lines), len(kept), len(kept) >= 3,
                           "\n".join(kept))
-
-
-@settings(max_examples=20, deadline=None)
-@given(
-    n=st.integers(min_value=2, max_value=8),
-    k=st.integers(min_value=1, max_value=4),
-    seed=st.integers(0, 2**32 - 1),
-)
-def test_knn_graph_single_bucket_is_exact_topk(spark, n, k, seed):
-    """With n_planes=0 every vector shares one bucket, so knn_graph must
-    equal brute-force per-source top-k under the same round-before-rank
-    tie order. Integer vectors keep the cosine arithmetic exactly
-    replicable in plain Python (in-order fold, IEEE sqrt/divide)."""
-    import numpy as np
-
-    from bgpexplorer_spark.operators.similarity import knn_graph
-
-    rng = np.random.default_rng(seed)
-    dim = 64
-    vecs = {}
-    while len(vecs) < n:
-        v = rng.integers(-3, 4, dim)
-        if np.any(v):  # zero vector has no cosine
-            vecs[len(vecs)] = [float(x) for x in v]
-    df = spark.createDataFrame(
-        [(i, v) for i, v in vecs.items()], "vec_id long, embedding array<double>"
-    )
-    got = {
-        (r.src, r.rank): (r.dst, r.cos_sim)
-        for r in knn_graph(df, k=k, n_planes=0, dim=dim).collect()
-    }
-
-    def cos(a, b):
-        dot = 0.0
-        na = 0.0
-        nb = 0.0
-        for x, y in zip(a, b):  # in-order fold, matching F.aggregate
-            dot += x * y
-        for x in a:
-            na += x * x
-        for y in b:
-            nb += y * y
-        return round(dot / (na ** 0.5 * nb ** 0.5), 4)
-
-    for s_id, sv in vecs.items():
-        ranked = sorted(
-            ((cos(sv, dv), d) for d, dv in vecs.items() if d != s_id),
-            key=lambda t: (-t[0], t[1]),
-        )[:k]
-        for r, (c, d) in enumerate(ranked, start=1):
-            assert got[(s_id, r)] == (d, c)
-    assert len(got) == n * min(k, n - 1)
-
-
-@settings(max_examples=15, deadline=None)
-@given(
-    n=st.integers(min_value=3, max_value=12),
-    frac=st.sampled_from([0.25, 0.5, 0.75, 1.0]),
-    seed=st.integers(0, 2**32 - 1),
-)
-def test_prototype_prune_quota_invariants(spark, n, frac, seed):
-    """Every cluster keeps exactly ceil(frac * cluster_size) members,
-    ranks are a contiguous 1..size permutation, and kept is always the
-    rank prefix."""
-    import math
-
-    import numpy as np
-
-    from bgpexplorer_spark.operators.similarity import (
-        ivf_centroids, prototype_prune,
-    )
-
-    rng = np.random.default_rng(seed)
-    rows = []
-    for i in range(n):
-        v = rng.normal(size=64)
-        rows.append((i, [float(x) for x in v]))
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    out = prototype_prune(df, ivf_centroids(df, 2), keep_frac=frac).collect()
-    assert len(out) == n
-    by_cid: dict[int, list] = {}
-    for r in out:
-        by_cid.setdefault(r.cid, []).append(r)
-    for members in by_cid.values():
-        size = len(members)
-        ranks = sorted(m.rank for m in members)
-        assert ranks == list(range(1, size + 1))
-        quota = math.ceil(frac * size)
-        assert sum(1 for m in members if m.kept) == quota
-        assert all(m.kept == (m.rank <= quota) for m in members)
 
 
 @settings(max_examples=15, deadline=None)

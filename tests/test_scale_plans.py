@@ -123,35 +123,6 @@ def test_mrt_decode_no_shuffle_before_parse(spark, tmp_path):
     before_map = plan.split("MapInPandas")[-1]  # subtree beneath the decode
     assert "Exchange" not in before_map
 
-def test_ivf_at_rest_partition_pruning(spark, tmp_path):
-    """The at-rest IVF index: probing must surface as PartitionFilters on
-    cid (unprobed inverted lists never opened), and results must equal
-    the in-memory path."""
-    from bgpexplorer_spark.operators.similarity import (
-        ivf_topk, write_ivf_index, ivf_topk_at_rest,
-    )
-
-    rows = [
-        (0, [1.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0]),
-        (2, [0.9, 0.1, 0.0]), (3, [0.8, 0.0, 0.1]),
-        (4, [0.1, 0.9, 0.0]), (5, [0.0, 0.8, 0.2]),
-    ]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    path = str(tmp_path / "ivf")
-    write_ivf_index(emb, path, n_centroids=2)
-
-    q = [1.0, 0.05, 0.0]
-    at_rest = ivf_topk_at_rest(spark, path, q, k=10, nprobe=1, n_centroids=2)
-    plan = _plan(at_rest)
-    assert "PartitionFilters" in plan
-    assert "cid" in plan.split("PartitionFilters")[1][:160]
-
-    got = [(r.vec_id, r.cos_sim) for r in at_rest.collect()]
-    want = [
-        (r.vec_id, r.cos_sim)
-        for r in ivf_topk(emb, q, k=10, nprobe=1, n_centroids=2).collect()
-    ]
-    assert got == want and [v for v, _ in got] == [0, 2, 3]
 
 def test_rib_asof_cutoff_pushes_down_to_scan(spark):
     from bgpexplorer_spark.operators.analytics import rib_asof
@@ -298,19 +269,6 @@ def test_repetition_and_bogon_are_map_side(spark):
     assert "Exchange" not in _plan(bogon_asns(routes))
     assert "Exchange" not in _plan(martian_prefixes(routes))
 
-def test_semantic_dedup_no_cartesian_no_udf(spark):
-    """SemDeDup's quadratic stage is intra-cluster only: the plan has no
-    CartesianProduct (assignment is a literal-centroid projection, pairs
-    join on cid) and no Python eval in the pair path."""
-    from bgpexplorer_spark.operators.similarity import semantic_dedup
-
-    emb = spark.createDataFrame(
-        [(i, [float((i * 7 + j) % 5) for j in range(4)]) for i in range(40)],
-        "vec_id long, embedding array<double>",
-    )
-    plan = _plan(semantic_dedup(emb, threshold=0.9, n_clusters=4))
-    assert "CartesianProduct" not in plan
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 def test_cleaning_rules_are_map_side(spark):
     """C4 line filters, Gopher shape gates, and PII scrub are per-row
@@ -565,34 +523,6 @@ def test_subprefix_hijacks_plan_no_cartesian(spark):
         assert bad not in plan, bad
 
 
-def test_gram_matrix_single_small_shuffle(spark):
-    """The Gram reduction's only Exchange carries the per-batch partial
-    rows (O(batches × dim²)) — never the corpus; the scan side reads only
-    the vector column."""
-    from bgpexplorer_spark.operators.similarity import gram_matrix
-
-    df = spark.createDataFrame(
-        [(i, [float(i), float(i + 1)]) for i in range(50)],
-        "vec_id long, embedding array<double>",
-    )
-    plan = _plan(gram_matrix(df, dim=2))
-    assert plan.count("Exchange") == 1          # the i,j rollup only
-    assert "vec_id" not in plan.split("MapInPandas")[0]  # column pruned
-
-
-def test_mips_topk_is_scan_plus_takeordered(spark):
-    from bgpexplorer_spark.operators.similarity import mips_topk
-
-    df = spark.createDataFrame(
-        [(i, [float(i), 1.0]) for i in range(50)],
-        "vec_id long, embedding array<double>",
-    )
-    plan = _plan(mips_topk(df, [1.0, 2.0], k=5))
-    assert "TakeOrderedAndProject" in plan
-    assert "Exchange" not in plan.split("TakeOrderedAndProject")[1]
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-
-
 def test_heavy_hitters_shares_one_exchange(spark):
     """The window total (partition by win) and the rank (partition by
     win, ordered) must reuse ONE hash partitioning — a second Exchange
@@ -783,60 +713,6 @@ def test_neardup_corpus_frames_never_broadcast(spark):
     assert "zip_with" not in plan_c
 
 
-def test_knn_selfjoin_and_shed_broadcast_bound(spark):
-    """The kNN family's corpus-derived frames never build a hash
-    relation: candidates come from the ONE-exchange in-bucket pair
-    explode (r11 — no self-join at all, so no AQE-broadcast exposure;
-    previously a merge-pinned SMJ), and the over-cap shed broadcasts
-    ONLY while the n/(cap+1) list bound is provably small — with a
-    large approx_n it falls back to a merge-pinned shuffled anti-join
-    (the adaptive-plane recipe keeps a constant FRACTION of buckets
-    over cap, so the list grows with the corpus)."""
-    from bgpexplorer_spark.operators import similarity
-
-    emb = spark.createDataFrame(
-        [(i, [float((i * j) % 7 - 3) for j in range(64)]) for i in range(30)],
-        "vec_id long, embedding array<double>",
-    )
-    plan = _plan(similarity.knn_graph(emb, k=3, n_planes=4))
-    assert "SortMergeJoin" not in plan and plan.count("BroadcastHashJoin") == 0
-    # the bucketed frame is planned once (no per-side duplication)
-    assert plan.count("hyperplane") <= 1 or plan.count("InMemoryTableScan") >= 1
-    # small corpus: only broadcasts are the LeftAnti shed
-    plan_c = _plan(similarity.knn_graph(emb, k=3, n_planes=4, max_bucket=5, approx_n=30))
-    bhj = [ln for ln in plan_c.splitlines() if "BroadcastHashJoin" in ln]
-    assert bhj and all("LeftAnti" in ln for ln in bhj), bhj
-    # corpus past the bound: zero broadcasts anywhere, shed still anti
-    plan_m = _plan(
-        similarity.knn_graph(emb, k=3, n_planes=4, max_bucket=5, approx_n=10**9)
-    )
-    assert plan_m.count("BroadcastHashJoin") == 0
-    assert "LeftAnti" in plan_m
-
-
-def test_knn_residue_fallback_plan_shapes(spark):
-    """knn_density_complete's fallback: the corpus-derived scored-id set
-    leaves via a merge-pinned SortMergeJoin LeftAnti (never broadcast),
-    while the LITERAL-bounded probe set is the broadcast side of one
-    nested-loop pass over the residue."""
-    from bgpexplorer_spark.operators import similarity
-
-    emb = spark.createDataFrame(
-        [(i, [float((i * j) % 7 - 3) for j in range(64)]) for i in range(30)],
-        "vec_id long, embedding array<double>",
-    )
-    plan = _plan(
-        similarity.knn_density_complete(
-            emb, k=3, n_planes=4, max_bucket=5, approx_n=30, n_probe=8
-        )
-    )
-    assert "BroadcastNestedLoopJoin" in plan
-    anti = [ln for ln in plan.splitlines() if "LeftAnti" in ln]
-    smj_anti = [ln for ln in anti if "SortMergeJoin" in ln]
-    assert smj_anti, anti
-    assert not any("BroadcastHashJoin" in ln and "_bucket" not in ln for ln in anti)
-
-
 def test_banded_candidates_one_exchange_no_selfjoin(spark):
     """Candidate generation must be the ONE-exchange shape (r10 verdict
     What's-wrong #2, counter-adjudicated r11: identical pair sets, CPU
@@ -861,29 +737,15 @@ def test_banded_candidates_one_exchange_no_selfjoin(spark):
 
 
 def test_r11_diagnostics_plan_shapes(spark):
-    """The r11 diagnostic operators keep their declared scale shapes:
-    rp_project and lexical_diversity are pure projections (ZERO
-    exchanges, zero joins); cluster_purity's literal-codebook assignment
-    never joins the corpus (aggregate + cells×labels window only);
-    pq_distortion is projection + one aggregate, no joins."""
-    from bgpexplorer_spark.operators import similarity, text
+    """The r11 diagnostic operator lexical_diversity keeps its declared
+    scale shape: a pure projection (ZERO exchanges, zero joins)."""
+    from bgpexplorer_spark.operators import text
 
-    emb = spark.createDataFrame(
-        [(i, [float((i * j) % 7 - 3) for j in range(64)], i % 3)
-         for i in range(20)],
-        "vec_id long, embedding array<double>, label int",
-    )
     docs = spark.createDataFrame(
         [(i, f"w{i} w{i % 3} x") for i in range(10)], "doc_id long, text string"
     )
-    p = _plan(similarity.rp_project(emb))
-    assert "Exchange" not in p and "Join" not in p
     p = _plan(text.lexical_diversity(docs))
     assert "Exchange" not in p and "Join" not in p
-    p = _plan(similarity.cluster_purity(emb, similarity.ivf_centroids(emb, 2)))
-    assert "Join" not in p
-    p = _plan(similarity.pq_distortion(emb, m=4, codes=2, dim=64))
-    assert "Join" not in p and "partial_count" in p
 
 
 def test_r11_second_wave_plan_shapes(spark):

@@ -15,6 +15,8 @@ from pyspark.sql import functions as F
 
 from bgpexplorer_spark import api
 from bgpexplorer_spark.api import BgpExplorerService
+from bgpexplorer_spark.config import SvcConfig
+from bgpexplorer_spark.daemon import BgpExplorerDaemon
 from bgpexplorer_spark.operators.ingest import build_history
 from bgpexplorer_spark.operators.query import SLOT_COL, serving_copy
 from bgpexplorer_spark.snapshotd import SnapshotKeeper, load_snapshot_dir
@@ -161,6 +163,29 @@ def _jobs(spark, request) -> tuple[int, dict]:
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     return len(sc.statusTracker().getJobIdsForGroup(group)), resp
+
+
+def test_daemon_state_bump_runs_no_job(spark, tmp_path):
+    """The daemon's history provider reads the table through its known
+    schema, so the ingest sink's state bump and the as-of view run no
+    schema-inference job, and their frames have the schema Spark would
+    infer. The bump still sees each new batch."""
+    table = str(tmp_path / "table")
+    _append(spark, table, [u("10.0.0.0/24", t=1), u("2c0a::/32", rib="ipv6u", t=2)])
+    daemon = BgpExplorerDaemon(
+        spark, SvcConfig(table_path=table), str(tmp_path), http=False
+    )
+    svc = BgpExplorerService(daemon._history())
+    svc.history_provider = daemon._history
+    _append(spark, table, [u("10.0.1.0/24", t=3)])
+    jobs, _ = _jobs(spark, svc.bump_state_version)
+    assert jobs == 0
+    jobs, asof = _jobs(spark, daemon._history_with_partitions)
+    assert jobs == 0
+    inferred = spark.read.parquet(table)
+    assert asof.schema == inferred.schema
+    assert svc.history.schema == inferred.drop("ts_date").schema
+    assert svc.history.count() == 3
 
 
 def test_index_answered_request_runs_no_job(spark, tmp_path):
